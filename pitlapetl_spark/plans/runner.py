@@ -11,10 +11,16 @@ What Airflow provided and what replaces it here:
   (keyed MERGE or staged overwrite), so overlapping or replayed ticks
   converge instead of corrupting — the same property the reference
   leans on (SURVEY.md §2.12 "freshness by re-running").
-- **Task isolation** -> per-job try/except with bounded retry: one
-  failing pipeline neither blocks nor poisons the others; the runner
-  raises AFTER the sweep so the scheduler sees a nonzero exit while
-  healthy sinks stay fresh.
+- **Task isolation** -> one driver thread per job, each with its own
+  try/except and bounded retry, the way Airflow runs the seven DAGs
+  side by side. The jobs write disjoint sinks (job names are unique
+  and each holds its own ``_writer_lock`` lease), so they overlap on
+  the executors; each thread inherits the caller's Spark job group
+  and local properties, so every job stays attributed to the tick
+  that fired it. One failing pipeline neither blocks nor poisons the
+  others; the runner raises AFTER the sweep so the scheduler sees a
+  nonzero exit while healthy sinks stay fresh. Records come back in
+  manifest order whatever order the jobs finish in.
 - **Metadata DB** -> an append-only parquet run ledger (job, attempt,
   status, rows, wall seconds, error) — queryable with the same engine,
   no extra service.
@@ -38,6 +44,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import QUERIES, load_all
+from ..session import run_in_driver_threads
 from ..sinks import merge_upsert_write, overwrite
 from ..sources import parquet_row_count
 
@@ -108,6 +115,47 @@ def _persist(spec: JobSpec, df: DataFrame, out_dir: str) -> int:
     return parquet_row_count(path)
 
 
+def _run_job(
+    spark: SparkSession,
+    spec: JobSpec,
+    fns: dict[str, Callable],
+    sf_dir: str,
+    out_dir: str,
+    max_attempts: int,
+) -> list[RunRecord]:
+    """Every attempt of one job, up to its first success."""
+    records: list[RunRecord] = []
+    for attempt in range(1, max_attempts + 1):
+        t0 = time.perf_counter()
+        try:
+            n = _persist(spec, fns[spec.query](spark, sf_dir), out_dir)
+        except Exception:
+            records.append(
+                RunRecord(
+                    spec.name, attempt, "failed", 0,
+                    time.perf_counter() - t0,
+                    traceback.format_exc(limit=-5),  # innermost frames: the error site
+                )
+            )
+            continue
+        records.append(
+            RunRecord(spec.name, attempt, "ok", n, time.perf_counter() - t0, None)
+        )
+        break
+    return records
+
+
+def _append_ledger(spark: SparkSession, rows: list[tuple], ddl: str, path: str) -> None:
+    """Append ``rows`` (one tuple per record, in ``ddl`` column order)
+    to the parquet ledger at ``path`` as one file. The frame is built
+    from pandas so the conversion runs through Arrow in the driver; a
+    Python list would start a Python-worker job on every append."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=[c.split()[0] for c in ddl.split(",")])
+    spark.createDataFrame(pdf, ddl).coalesce(1).write.mode("append").parquet(path)
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -117,44 +165,36 @@ def run_pipeline(
     query_fns: dict[str, Callable] | None = None,
     write_ledger: bool = True,
 ) -> list[RunRecord]:
-    """One scheduler tick: run every job, persist each through its
-    idempotent sink, append the attempts to the run ledger, and raise
-    AFTER the sweep if any job exhausted its retries. ``query_fns``
-    lets tests inject flaky jobs without touching the registry."""
+    """One scheduler tick: run every job concurrently, one driver
+    thread each, persist each through its idempotent sink, append the
+    attempts to the run ledger in manifest order, and raise AFTER the
+    sweep if any job exhausted its retries. ``query_fns`` lets tests
+    inject flaky jobs without touching the registry."""
     if max_attempts < 1:
         # range(1, 1) would run ZERO jobs yet exit 0 — a misconfigured
         # scheduler tick must fail loudly, not record a clean no-op
         raise ValueError(f"max_attempts must be >= 1, got {max_attempts}")
+    names = [spec.name for spec in jobs]
+    repeated = sorted({n for n in names if names.count(n) > 1})
+    if repeated:
+        # a job's name is its sink path: two concurrent jobs with one
+        # name would race on one table (ConcurrentWriterError mid-sweep)
+        raise ValueError(f"job names must be unique, repeated: {repeated}")
     load_all()
     fns = query_fns if query_fns is not None else QUERIES
-    records: list[RunRecord] = []
-    for spec in jobs:
-        for attempt in range(1, max_attempts + 1):
-            t0 = time.perf_counter()
-            try:
-                n = _persist(spec, fns[spec.query](spark, sf_dir), out_dir)
-            except Exception:
-                records.append(
-                    RunRecord(
-                        spec.name, attempt, "failed", 0,
-                        time.perf_counter() - t0,
-                        traceback.format_exc(limit=-5),  # innermost frames: the error site
-                    )
-                )
-                continue
-            records.append(
-                RunRecord(
-                    spec.name, attempt, "ok", n,
-                    time.perf_counter() - t0, None,
-                )
-            )
-            break
+    per_job = run_in_driver_threads(
+        lambda spec=spec: _run_job(spark, spec, fns, sf_dir, out_dir, max_attempts)
+        for spec in jobs
+    )
+    records = [r for job_records in per_job for r in job_records]
     if write_ledger:
-        spark.createDataFrame(
+        _append_ledger(
+            spark,
             [(r.job, r.attempt, r.status, r.rows, r.seconds, r.error) for r in records],
             "job STRING, attempt INT, status STRING, rows LONG, "
             "seconds DOUBLE, error STRING",
-        ).coalesce(1).write.mode("append").parquet(f"{out_dir}/_run_ledger")
+            f"{out_dir}/_run_ledger",
+        )
     dead = sorted(
         {r.job for r in records if r.status == "failed"}
         - {r.job for r in records if r.status == "ok"}
@@ -239,13 +279,12 @@ def run_backfill(
                                traceback.format_exc(limit=-5))
             )
     if write_ledger:
-        spark.createDataFrame(
-            [(r.job, r.day, r.status, r.rows, r.seconds, r.error)
-             for r in records],
+        _append_ledger(
+            spark,
+            [(r.job, r.day, r.status, r.rows, r.seconds, r.error) for r in records],
             "job STRING, day STRING, status STRING, rows LONG, "
             "seconds DOUBLE, error STRING",
-        ).coalesce(1).write.mode("append").parquet(
-            f"{out_dir}/_backfill_ledger"
+            f"{out_dir}/_backfill_ledger",
         )
     dead = sorted(r.day for r in records if r.status == "failed")
     if dead:

@@ -62,3 +62,39 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_in_driver_threads(thunks) -> list:
+    """Call every zero-argument thunk on its own driver thread and
+    return the results in input order. Independent Spark jobs submitted
+    from separate threads overlap on the executors instead of stacking
+    their driver floors one after another. Each thread is a
+    ``pyspark.InheritableThread``, so it starts with its own copy of
+    the caller's local properties (job group, description, scheduler
+    pool): jobs fired inside stay attributed to the caller's group. A
+    plain ``threading.Thread`` or ``ThreadPoolExecutor`` worker starts
+    with empty properties and would drop them. Every thread is joined
+    before the first exception raised is re-raised."""
+    from pyspark import InheritableThread
+
+    thunks = list(thunks)
+    results: list = [None] * len(thunks)
+    errs: list[BaseException] = []
+
+    def run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errs.append(e)
+
+    threads = [
+        InheritableThread(target=run, args=(i,), daemon=True)
+        for i in range(len(thunks))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errs:
+        raise errs[0]
+    return results

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import run_in_driver_threads
 from ..sources import load_table
 
 DAY_S = 86400
@@ -612,39 +613,29 @@ def _run_pipelined_stages(stages, n_batches: int) -> None:
     is released and the first error re-raised."""
     import threading
 
-    from pyspark import InheritableThread
-
     done = [
         [threading.Event() for _ in range(n_batches)] for _ in stages
     ]
-    errs: list[BaseException] = []
+    failed: list[int] = []
 
     def runner(s: int) -> None:
         try:
             for i in range(n_batches):
                 if s > 0:
                     done[s - 1][i].wait()
-                if errs:
+                if failed:
                     return
                 stages[s](i)
                 done[s][i].set()
-        except BaseException as e:  # noqa: BLE001 — re-raised below
-            errs.append(e)
+        except BaseException:
+            failed.append(s)
+            raise
         finally:
             # release downstream waiters even on failure/early return
             for ev in done[s]:
                 ev.set()
 
-    threads = [
-        InheritableThread(target=runner, args=(s,), daemon=True)
-        for s in range(len(stages))
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errs:
-        raise errs[0]
+    run_in_driver_threads(lambda s=s: runner(s) for s in range(len(stages)))
 
 
 def _prefetch_frame(build):

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import run_in_driver_threads
 from ..sinks import merge_upsert_write
 from ..sources import EVENTS, EVENTS_RAW, parquet_ts_unit
 
@@ -549,24 +550,7 @@ def _parallel_writes(*thunks) -> None:
     (each sink's standing argument), so concurrency does not change
     the recovery contract. Any failure propagates after all threads
     finish — the batch fails exactly as a sequential write would."""
-    from pyspark import InheritableThread
-
-    errs: list[BaseException] = []
-    threads = []
-    for thunk in thunks:
-        def run(thunk=thunk):
-            try:
-                thunk()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-
-        t = InheritableThread(target=run, daemon=True)
-        t.start()
-        threads.append(t)
-    for t in threads:
-        t.join()
-    if errs:
-        raise errs[0]
+    run_in_driver_threads(thunks)
 
 
 def _cached_schema_read(spark, path: str, box: dict) -> DataFrame:
@@ -575,11 +559,18 @@ def _cached_schema_read(spark, path: str, box: dict) -> DataFrame:
     fixed by the sink's own writes): skips the per-batch footer
     sampling + schema merge, driver work that grows with the store's
     partition count. The ``batch`` partition column stays inferred
-    from the directory layout either way."""
+    from the directory layout either way.
+
+    Only a schema carrying ``src_batch`` is cached: a first read of a
+    legacy pre-provenance store would otherwise freeze a schema without
+    it, and every later read would drop the real provenance the sink's
+    own writes add (``_with_src_batch`` would re-stamp it, as NULL on
+    generation partitions)."""
     if path in box:
         return spark.read.schema(box[path]).parquet(path)
     df = spark.read.parquet(path)
-    box[path] = df.schema
+    if "src_batch" in df.columns:
+        box[path] = df.schema
     return df
 
 

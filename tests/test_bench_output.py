@@ -87,9 +87,16 @@ def test_prev_driver_names_reads_the_latest_committed_round():
     """The protected set comes from the highest-numbered committed
     BENCH_r<N>.json with a parsed query map (the c8 scaling run and
     other non-round files must not match)."""
-    names = bench._prev_driver_names()
-    latest = json.load(open(Path(bench._REPO, "BENCH_r12.json")))
-    assert names == set(latest["parsed"]["queries"])
+    import re
+
+    rounds = {}
+    for p in Path(bench._REPO).glob("BENCH_r*.json"):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", p.name)
+        if m and (json.loads(p.read_text()).get("parsed") or {}).get("queries"):
+            rounds[int(m.group(1))] = p
+    assert rounds, "no committed BENCH_r<N>.json with a parsed query map"
+    latest = json.loads(rounds[max(rounds)].read_text())
+    assert bench._prev_driver_names() == set(latest["parsed"]["queries"])
 
 
 def test_budget_is_inside_the_driver_capture_window():

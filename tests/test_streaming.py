@@ -2326,6 +2326,32 @@ def test_ingest_probe_migrates_legacy_store_without_src_batch(spark, tmp_path):
     assert kept == [11], "legacy store row failed to dedup the re-crawl"
 
 
+def test_cached_schema_read_does_not_freeze_a_legacy_schema(spark, tmp_path):
+    """The schema cache must not freeze a legacy store's schema: the
+    first read finds no src_batch, then the sink's own write (here a
+    fold into a generation partition, rows from batches 0 and 1) adds
+    it. Later reads through the same cache must carry the real
+    provenance, not the NULL ``_with_src_batch`` stamps on legacy
+    generation rows."""
+    import shutil
+
+    from pitlapetl_spark.streaming.runtime import _cached_schema_read, _with_src_batch
+
+    store = str(tmp_path / "store")
+    spark.createDataFrame([(1, "a")], "doc_id long, url string").write.parquet(
+        f"{store}/batch=0"
+    )
+    box: dict = {}
+    assert "src_batch" not in _cached_schema_read(spark, store, box).columns
+    shutil.rmtree(f"{store}/batch=0")
+    spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 1)], "doc_id long, url string, src_batch long"
+    ).write.parquet(f"{store}/batch=-1")
+    for _ in range(2):  # the re-read, then a read from the cached schema
+        got = _with_src_batch(_cached_schema_read(spark, store, box)).collect()
+        assert {r.doc_id: r.src_batch for r in got} == {1: 0, 2: 1}
+
+
 def test_with_src_batch_stamps_null_for_legacy_generations(spark):
     """_with_src_batch's two migration cases (its docstring, ADVICE
     r11): an uncompacted legacy partition (batch >= 0) gets its TRUE
