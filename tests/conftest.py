@@ -59,7 +59,6 @@ _SLOW_NODEIDS = frozenset(
         "test_streaming.py::test_compact_partition_store_heals_crash_leftovers",
         "test_streaming.py::test_dedup_ingest_compaction_folds_store_and_keeps_dedup_exact",
         "test_streaming.py::test_dedup_ingest_compaction_replay_safe_from_shared_checkpoint",
-        "test_streaming.py::test_dedup_ingest_replay_and_intra_batch",
         "test_streaming.py::test_dedup_ingest_reprocess_after_compaction_no_self_drop",
         "test_streaming.py::test_dedup_ingest_sink_drops_store_dups_and_grows_store",
         "test_streaming.py::test_foreachbatch_upsert_idempotent",

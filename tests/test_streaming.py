@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -2656,3 +2657,83 @@ def test_chained_pipeline_span_cut_changes_minhash_verdict(spark, tmp_path):
         "fixture sanity: on raw text the boilerplate must make doc "
         "10 a minhash near-dup of doc 1"
     )
+
+
+def _join_within(fn, timeout_s: float = 30) -> None:
+    """Run ``fn`` on a daemon thread and fail, instead of hanging, if it
+    has not returned within ``timeout_s``; re-raise what it raised."""
+    box: dict = {}
+
+    def target() -> None:
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            box["err"] = e
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(timeout_s)
+    assert not t.is_alive(), f"still running after {timeout_s} s"
+    if "err" in box:
+        raise box["err"]
+
+
+def test_pipelined_stages_run_batches_in_order_and_hand_off():
+    """``_run_pipelined_stages`` (the chained ingest driver): every
+    stage sees its batches in order, batch i of stage s starts only
+    after batch i of stage s-1 ended, and the stages overlap — stage 0
+    runs batch 1 while stage 1 runs batch 0. No Spark needed."""
+    from pitlapetl_spark.streaming.batch_windows import _run_pipelined_stages
+
+    n_stages, n_batches = 3, 4
+    log: list[tuple[str, int, int]] = []
+    lock = threading.Lock()
+    overlap = threading.Barrier(2, timeout=10)
+
+    def stage(s):
+        def run(i):
+            with lock:
+                log.append(("start", s, i))
+            if (s, i) in ((0, 1), (1, 0)):
+                overlap.wait()
+            with lock:
+                log.append(("end", s, i))
+
+        return run
+
+    _join_within(
+        lambda: _run_pipelined_stages(
+            [stage(s) for s in range(n_stages)], n_batches
+        )
+    )
+    for s in range(n_stages):
+        starts = [i for ev, st, i in log if ev == "start" and st == s]
+        assert starts == list(range(n_batches))
+    for s in range(1, n_stages):
+        for i in range(n_batches):
+            assert log.index(("end", s - 1, i)) < log.index(("start", s, i))
+
+
+def test_pipelined_stage_failure_releases_downstream_and_reraises():
+    """Stage 1 finishes batch 0 and waits on batch 1 of stage 0, which
+    then fails: the failure must release stage 1 instead of leaving it
+    blocked, stage 1 must run no batch that stage 0 did not finish, and
+    the error is re-raised."""
+    from pitlapetl_spark.streaming.batch_windows import _run_pipelined_stages
+
+    ran: dict[int, list[int]] = {0: [], 1: []}
+    stage1_did_batch0 = threading.Event()
+
+    def stage0(i):
+        if i == 1:
+            assert stage1_did_batch0.wait(10)
+            raise RuntimeError("stage 0 failed on batch 1")
+        ran[0].append(i)
+
+    def stage1(i):
+        ran[1].append(i)
+        stage1_did_batch0.set()
+
+    with pytest.raises(RuntimeError, match="stage 0 failed on batch 1"):
+        _join_within(lambda: _run_pipelined_stages([stage0, stage1], 3))
+    assert ran == {0: [0], 1: [0]}

@@ -2,8 +2,9 @@
 entry(), then every queries()[name] vs oracle_sql()[name] at sf0.01.
 Writes per-query results to PARITY_LOCAL.json — the artifact
 tools/gen_coverage.py folds into COVERAGE.md's generated status table."""
-import sys, hashlib, json
-sys.path.insert(0, "/root/repo")
+import hashlib, json, os, sys
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -30,8 +31,7 @@ con = duckdb.connect()
 for t in TABLES:
     con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
 
-import os as _os
-sys.path.insert(0, _os.path.dirname(_os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from contract_canon import canon_hash  # shared with parity_subset.py
 
 qs, oracles = e.queries(), e.oracle_sql()
@@ -61,7 +61,7 @@ for name, fn in qs.items():
         results[name] = {"status": "err", "err": f"{type(ex).__name__}: {str(ex)[:200]}"}
         print(f"{name}: ERR {type(ex).__name__}: {str(ex)[:200]}", flush=True)
 
-with open("/root/repo/PARITY_LOCAL.json", "w") as f:
+with open(os.path.join(REPO, "PARITY_LOCAL.json"), "w") as f:
     json.dump({"sf": SF, "results": results}, f, indent=1)
 print(f"\n{len(qs)} queries, {len(fails)} failing: {fails}")
 sys.exit(1 if fails else 0)
