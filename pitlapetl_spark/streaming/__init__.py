@@ -10,5 +10,9 @@ real incremental surface over the ``events`` table:
   correctness anchor for the streaming semantics.
 - ``runtime``: the same aggregations as Structured Streaming plans
   (``readStream`` -> watermark -> windowed agg -> ``foreachBatch``
-  upsert), exercised by tests with the availableNow trigger.
+  upsert), exercised by tests with the availableNow trigger, plus the
+  crawl-ingest and monitor sinks.
+- ``store``: the batch-scoped store those sinks keep their state in,
+  and the one statement of its exactly-once, crash and provenance
+  contract.
 """

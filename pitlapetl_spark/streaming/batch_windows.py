@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..session import run_in_driver_threads
 from ..sources import load_table
+from .store import _compact_partition_store, numbered_dirs
 
 DAY_S = 86400
 SESSION_GAP = "4 hours"
@@ -307,7 +308,7 @@ def stream_error_rate_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------- pHash ingest-store compaction parity
 # VERDICT r8 item 5 extension, registered as a query: the media
 # ingest sink's BAND STORE now folds committed batch partitions into
-# generation partitions (_compact_partition_store — runtime.py), and
+# generation partitions (_compact_partition_store — store.py), and
 # this query PROVES the fold is content-preserving at the driver's
 # value-hash level. It simulates the sink's store lifecycle with the
 # real production pieces — phash_frame / phash_band_rows build the
@@ -358,12 +359,10 @@ def stream_phash_compacted_parity(
     the real compactor (plus a crash-leftover heal pass), and return
     the per-band fold of the compacted store alongside a parity
     check against the pre-write frame (block comment above)."""
-    import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
 
     from ..operators.multimodal import phash_band_rows, phash_frame
-    from .runtime import _compact_partition_store
 
     docs = load_table(spark, sf_dir, "documents")
     bands = phash_band_rows(phash_frame(docs)).localCheckpoint(eager=True)
@@ -395,24 +394,10 @@ def stream_phash_compacted_parity(
         batched.withColumnRenamed("b", "batch").write.partitionBy(
             "batch"
         ).mode("overwrite").parquet(store)
-        for d in _os.listdir(store):
-            if d.startswith("batch="):
-                open(f"{store}/{d}/_SUCCESS", "w").close()
-        # steady-state fold: all committed batches -> one generation
-        _compact_partition_store(
-            spark, store, current_batch=N_SIM_INGEST_BATCHES, threshold=2
-        )
-        # crash-window leftover: a sealed source whose rows already
-        # live inside the generation (the write-then-delete gap);
-        # the next compaction must fold it away via full-row dedup
-        batched.filter(F.col("b") == 1).drop("b").write.mode(
-            "overwrite"
-        ).parquet(f"{store}/batch=1")
-        _compact_partition_store(
-            spark, store, current_batch=N_SIM_INGEST_BATCHES + 1, threshold=1
-        )
-        n_parts = len(
-            [d for d in _os.listdir(store) if d.startswith("batch=")]
+        for p in numbered_dirs(store).values():
+            open(f"{p}/_SUCCESS", "w").close()
+        n_parts = _compact_with_crash_leftover(
+            spark, store, N_SIM_INGEST_BATCHES
         )
         after = spark.read.parquet(store).drop("batch")
         pre = fold(bands, "pre_")
@@ -475,6 +460,29 @@ def stream_phash_compacted_parity(
 # own batch-partitioned parquet layout + amortized-O(1) compaction);
 # the parity fold is one aggregation at the label grain.
 
+def _compact_with_crash_leftover(
+    spark: SparkSession, store: str, current_batch: int
+) -> int:
+    """The compaction crash drill of the parity queries: fold every
+    committed partition into a generation (steady state), restore the
+    lowest pre-fold partition as a crash-window leftover (its rows now
+    live in both the generation and the source, the write-then-delete
+    gap), and heal it with a second fold, whose full-row dedup must
+    drop the copy. The capture/fold/restore/fold ORDER is
+    load-bearing, which is why it lives here once. Returns the store's
+    partition count after the heal."""
+    written = numbered_dirs(store)
+    # the leftover must be a partition the ingest loop actually WROTE
+    # (an empty batch writes no directory)
+    assert written, f"parity drill: no store partitions under {store}"
+    leftover_path = written[min(written)]
+    leftover = spark.read.parquet(leftover_path).localCheckpoint(eager=True)
+    _compact_partition_store(spark, store, current_batch, threshold=2)
+    leftover.write.mode("overwrite").parquet(leftover_path)
+    _compact_partition_store(spark, store, current_batch + 1, threshold=1)
+    return len(numbered_dirs(store))
+
+
 def _drive_compacted_ingest(
     spark: SparkSession,
     src: DataFrame,
@@ -487,13 +495,8 @@ def _drive_compacted_ingest(
     span — one copy, three consumers, after the round-11 review
     flagged the drift risk of the crash-heal choreography living in
     each query): drive a sink's real per-batch body over id-ordered
-    micro-batches of ``src``, then run the real compactor TWICE —
-    steady state (all committed batches fold into a generation), then
-    a simulated crash-window leftover (batch 1's sealed partition
-    restored AFTER the fold, so its rows live in both the generation
-    and the leftover source) that the second compaction must heal via
-    full-row dedup. The capture/fold/restore/fold ORDER is
-    load-bearing — that is exactly why it lives here once.
+    micro-batches of ``src``, then run the compaction crash drill
+    (``_compact_with_crash_leftover``).
 
     ``make_ingest`` maps (store_path, corpus_path) to the per-batch
     body. Returns (pre, after, corpus, n_parts): the store read minus
@@ -504,11 +507,8 @@ def _drive_compacted_ingest(
     frame is eagerly materialized (localCheckpoint) so callers keep
     using them after the temp dir is removed."""
     import math as _math
-    import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
-
-    from .runtime import _compact_partition_store
 
     # One eager lineage cut of the batch source before the loop: every
     # per-batch action (the sink body's isEmpty take, its lazy
@@ -553,35 +553,7 @@ def _drive_compacted_ingest(
             .drop("batch")
             .localCheckpoint(eager=True)
         )
-        # the crash-leftover partition must be one the ingest loop
-        # actually WROTE (an empty middle batch early-returns without
-        # writing its directory — hard-coding batch=1 would then
-        # crash the read; ADVICE r11)
-        written = sorted(
-            int(d.split("=", 1)[1])
-            for d in _os.listdir(store)
-            if d.startswith("batch=")
-        )
-        assert written, (
-            "ingest-parity harness: no store partitions were written "
-            f"by {n_batches} batches over {max_id + 1} ids"
-        )
-        leftover_id = written[0]
-        leftover = spark.read.parquet(
-            f"{store}/batch={leftover_id}"
-        ).localCheckpoint(eager=True)
-        _compact_partition_store(
-            spark, store, current_batch=n_batches, threshold=2
-        )
-        leftover.write.mode("overwrite").parquet(
-            f"{store}/batch={leftover_id}"
-        )
-        _compact_partition_store(
-            spark, store, current_batch=n_batches + 1, threshold=1
-        )
-        n_parts = len(
-            [d for d in _os.listdir(store) if d.startswith("batch=")]
-        )
+        n_parts = _compact_with_crash_leftover(spark, store, n_batches)
         after = (
             spark.read.parquet(store)
             .drop("batch")
@@ -1230,7 +1202,7 @@ def _pipeline_parity_oracle() -> str:
     prev = "s0"
     for i in range(1, N_PIPE_BATCHES):
         replay.append(
-            f"""x{i} AS (
+            f"""x{i} AS MATERIALIZED (
         SELECT DISTINCT nb.doc_id
         FROM bands cb
         JOIN bands nb ON cb.band_idx = nb.band_idx
@@ -1243,11 +1215,11 @@ def _pipeline_parity_oracle() -> str:
     )"""
         )
         replay.append(
-            f"s{i} AS (SELECT doc_id FROM k0 WHERE b = {i} "
+            f"s{i} AS MATERIALIZED (SELECT doc_id FROM k0 WHERE b = {i} "
             f"AND doc_id NOT IN (SELECT doc_id FROM x{i}))"
         )
         replay.append(
-            f"sacc{i} AS (SELECT doc_id FROM {prev} "
+            f"sacc{i} AS MATERIALIZED (SELECT doc_id FROM {prev} "
             f"UNION ALL SELECT doc_id FROM s{i})"
         )
         prev = f"sacc{i}"
@@ -1271,7 +1243,7 @@ def _pipeline_parity_oracle() -> str:
     ),
     sh0 AS ({oracle_shingles_cte(SHINGLE_K, "cdocs")}),
     shb AS (SELECT doc_id, {oracle_minhash_base_sql()} FROM sh0),
-    sig AS (
+    sig AS MATERIALIZED (
         SELECT doc_id, {oracle_minhash_sig_cols(N_HASHES)}
         FROM shb GROUP BY doc_id
     ),
@@ -1280,12 +1252,12 @@ def _pipeline_parity_oracle() -> str:
                AS width
         FROM documents
     ),
-    sigb AS (
+    sigb AS MATERIALIZED (
         SELECT sig.*, CAST(sig.doc_id // wd.width AS INT) AS b
         FROM sig, wd
     ),
-    bands AS ({band_rows}),
-    intra AS (
+    bands AS MATERIALIZED ({band_rows}),
+    intra AS MATERIALIZED (
         SELECT DISTINCT bb.doc_id
         FROM bands a
         JOIN bands bb ON a.b = bb.b AND a.band_idx = bb.band_idx
@@ -1294,7 +1266,7 @@ def _pipeline_parity_oracle() -> str:
         JOIN sig sy ON sy.doc_id = bb.doc_id
         WHERE {est("sx", "sy")} >= {DEDUP_INGEST_EST_THRESHOLD}
     ),
-    k0 AS (
+    k0 AS MATERIALIZED (
         SELECT sigb.doc_id, sigb.b FROM sigb
         WHERE sigb.doc_id NOT IN (SELECT doc_id FROM intra)
     ),

@@ -18,6 +18,10 @@ tests/test_streaming.py pins both sides of this contract.) The
 foreachBatch upsert MERGEs each micro-batch into the target table
 (sinks.merge_upsert_write), so batch and streaming loads are
 interchangeable and replay-idempotent.
+
+The crawl-ingest and monitor sinks keep their state in batch-scoped
+stores (store.py, which also states their exactly-once, crash and
+provenance contract); each sink here is only its per-batch kernel.
 """
 
 from __future__ import annotations
@@ -26,9 +30,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..session import run_in_driver_threads
 from ..sinks import merge_upsert_write
 from ..sources import EVENTS, EVENTS_RAW, parquet_ts_unit
+from .store import (
+    BatchStore,
+    _compact_partition_store,
+    _quantizer_versions,
+    batch_body,
+    quantizer_path,
+    start,
+    write,
+)
 
 
 def read_events_stream(
@@ -378,22 +390,16 @@ def _merge_stream(df: DataFrame, checkpoint: str, merge_batch) -> StreamingQuery
     the heavy streams these sinks exist for (the multi-action
     foreachBatch pattern Spark's own docs prescribe)."""
 
+    guarded = batch_body(lambda b, _batch_id: merge_batch(b))
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            if batch_df.isEmpty():
-                return
-            merge_batch(batch_df)
+            guarded(batch_df, batch_id)
         finally:
             batch_df.unpersist()
 
-    return (
-        df.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(df, write_batch, checkpoint, "update")
 
 
 def run_upsert_sink_scoped(
@@ -439,177 +445,6 @@ DEDUP_INGEST_EST_THRESHOLD = 0.7  # minhash-estimate accept threshold
 DEDUP_INGEST_COMPACT_EVERY = 150
 
 
-def _compact_partition_store(
-    spark: SparkSession,
-    root: str,
-    current_batch: int,
-    threshold: int,
-) -> None:
-    """Fold committed ``batch=<id>`` partitions of a batch-scoped
-    store into one compacted GENERATION partition (``batch=-g``) once
-    ``threshold`` of them accumulate, keeping the per-batch store scan
-    O(generations + recent batches) instead of O(all batches ever).
-
-    Replay safety (the invariant the ingest sinks rely on): only
-    non-negative partitions other than ``current_batch`` are folded.
-    Structured Streaming replays at most the one batch whose commit is
-    missing from the checkpoint — every older batch is durable — so a
-    folded batch can never be replayed, and a replay of the CURRENT
-    batch still sees exactly the first run's view: the ingest sinks'
-    probes filter on the per-row ``src_batch`` origin id (stamped at
-    write time, preserved verbatim through this fold), which
-    excludes the replayed batch's own rows and later-arrived rows
-    even after they land inside a negative generation partition.
-
-    Crash safety: the generation directory is written FIRST (Spark's
-    ``_SUCCESS`` marker is the commit point), sources are deleted
-    after. A crash between the two leaves duplicate rows across
-    generation + leftover sources — harmless to the dedup joins
-    (candidates are ``distinct``-ed) and healed by the next
-    compaction, whose read ``dropDuplicates``-es on the FULL ROW
-    (never a key subset: crash duplicates are literal file copies,
-    bit-identical, while a key that legitimately recurs across
-    batches with a different payload — e.g. a re-delivered doc_id
-    whose edited text cleared the dedup threshold — must keep both
-    rows exactly as the uncompacted store would; ADVICE r8). The
-    leaf-directory read sees no ``batch`` partition column, so the
-    full row IS the payload identity. Readers that fold the store
-    from its ROOT (where partition discovery adds ``batch``) instead
-    dedup on the src_batch provenance key — see ``read_histogram`` /
-    ``read_oov_rate``.
-    A crash mid-write leaves a marker-less generation dir that the
-    retry simply overwrites from the still-present sources. On an
-    object store, swap the directory delete for the committer-based
-    equivalent; the write-then-delete ordering is the portable part.
-    """
-    import os as _os
-    import shutil as _shutil
-
-    committed, gens = _foldable_partitions(root, current_batch)
-    if committed is None or len(committed) < threshold:
-        return
-    sources = list(committed.values()) + list(gens.values())
-    target = _os.path.join(root, f"batch={min(gens, default=0) - 1}")
-    merged = spark.read.parquet(*sources).dropDuplicates()
-    merged.write.mode("overwrite").parquet(target)
-    for p in sources:
-        _shutil.rmtree(p, ignore_errors=True)
-
-
-def _foldable_partitions(
-    root: str, current_batch: int
-) -> tuple[dict[int, str] | None, dict[int, str]]:
-    """Shared partition-listing step of the store folds (generation
-    compaction above, quantizer relabeling below): enumerate
-    ``batch=<id>`` partitions, remove crashed marker-less GENERATION
-    dirs (their rows all still live in the sources they were folding,
-    so a partial dir mistaken for a foldable source would lose data on
-    source deletion), and return the fold-eligible sets —
-    ``(committed, generations)``. Only sealed partitions are
-    eligible: the current batch's dir is about to be overwritten by
-    this very run, and a marker-less positive dir belongs to an
-    uncommitted batch that Structured Streaming will replay (its
-    replay overwrites the dir in place). Returns ``(None, {})`` when
-    the store does not exist."""
-    import os as _os
-    import shutil as _shutil
-
-    if not _os.path.exists(root):
-        return None, {}
-    parts: dict[int, str] = {}
-    for d in _os.listdir(root):
-        if d.startswith("batch="):
-            try:
-                parts[int(d.split("=", 1)[1])] = _os.path.join(root, d)
-            except ValueError:
-                continue
-
-    def _sealed(path: str) -> bool:
-        return _os.path.exists(_os.path.join(path, "_SUCCESS"))
-
-    for b, p in list(parts.items()):
-        if b < 0 and not _sealed(p):
-            _shutil.rmtree(p, ignore_errors=True)
-            del parts[b]
-    committed = {
-        b: p for b, p in parts.items() if 0 <= b != current_batch and _sealed(p)
-    }
-    gens = {b: p for b, p in parts.items() if b < 0}
-    return committed, gens
-
-
-def _parallel_writes(*thunks) -> None:
-    """Run a batch body's independent final write jobs concurrently
-    from driver threads (guide §2.6 overlap independent jobs): by
-    write time every shared dependency is an already-materialized (or
-    block-manager-deduplicated lazy) localCheckpoint, so the writes
-    only re-scan cached blocks plus their own small tails — running
-    them sequentially just stacks job floors and per-write Catalyst
-    planning on an idle cluster. The writes are batch-scoped
-    overwrites, replay-idempotent at ANY crash point in ANY order
-    (each sink's standing argument), so concurrency does not change
-    the recovery contract. Any failure propagates after all threads
-    finish — the batch fails exactly as a sequential write would."""
-    run_in_driver_threads(thunks)
-
-
-def _cached_schema_read(spark, path: str, box: dict) -> DataFrame:
-    """Per-sink-instance store read with the parquet schema inferred
-    ONCE and reused for every later micro-batch (the store schema is
-    fixed by the sink's own writes): skips the per-batch footer
-    sampling + schema merge, driver work that grows with the store's
-    partition count. The ``batch`` partition column stays inferred
-    from the directory layout either way.
-
-    Only a schema carrying ``src_batch`` is cached: a first read of a
-    legacy pre-provenance store would otherwise freeze a schema without
-    it, and every later read would drop the real provenance the sink's
-    own writes add (``_with_src_batch`` would re-stamp it, as NULL on
-    generation partitions)."""
-    if path in box:
-        return spark.read.schema(box[path]).parquet(path)
-    df = spark.read.parquet(path)
-    if "src_batch" in df.columns:
-        box[path] = df.schema
-    return df
-
-
-def _with_src_batch(df):
-    """Ensure the row-level provenance column on a store read, with
-    the one-time legacy migration the sink docstrings promise.
-    Without this, upgrading a long-lived deployment would crash the
-    first probe on UNRESOLVED_COLUMN. Two legacy cases:
-
-    - An UNCOMPACTED legacy partition (``batch >= 0``) holds exactly
-      the rows its own batch wrote, so ``src_batch = batch`` is the
-      TRUE origin — the migration is exact.
-    - A legacy GENERATION partition (``batch < 0``) mixes rows from
-      every batch the pre-provenance fold swallowed; their origin is
-      unrecoverable. Stamping the partition id here would be a
-      forgery: ``-g`` passes every ``src_batch < current`` probe
-      filter, so on a fresh-checkpoint reprocess the replayed
-      batch's OWN folded rows would re-enter its probe and
-      self-match everything (estimate 1.0 / hamming 0 / cosine 1.0),
-      overwriting the corpus partition empty — the exact bug the
-      provenance column closed (ADVICE r11). These rows are stamped
-      NULL (= origin unknown) instead; the three pre-provenance-era
-      probes (minhash / pHash / semantic) admit NULL rows under the
-      pre-provenance SELF-KEY guard (``store.key != batch.key``),
-      which restores the old semantics for old rows: self-rows are
-      excluded exactly, but rows that originally arrived LATER than
-      the replayed batch are visible on reprocess (the documented
-      pre-provenance inexactness) until the store is rewritten with
-      real provenance. Sinks born WITH provenance (URL, span) never
-      have legacy generations; their probes drop NULL rows outright
-      (the ``src_batch < current`` conjunct is null-rejecting)."""
-    if "src_batch" in df.columns:
-        return df
-    return df.withColumn(
-        "src_batch",
-        F.when(F.col("batch") >= 0, F.col("batch")).cast("long"),
-    )
-
-
 # --------------------------- corpus-sized quantizer (SemDeDup K rule)
 # A frozen K-centroid quantizer makes the semantic sink's per-batch
 # candidate mass grow linearly with the store: candidates per batch
@@ -623,12 +458,11 @@ def _with_src_batch(df):
 # - At deterministic schedule batches (batch_id % compact_every == 0)
 #   the sink counts the store's earlier-arrived DISTINCT vectors; when
 #   that exceeds target x K_active it fits a new quantizer with
-#   K = ceil(n / target) and RELABELS the whole store under it via a
-#   super-compaction (same write-generation-then-delete-sources commit
-#   protocol as _compact_partition_store, so a crash at any point
-#   heals on replay; old-label/new-label crash duplicates collapse
-#   because the fold recomputes labels BEFORE its full-row
-#   dropDuplicates).
+#   K = ceil(n / target) and RELABELS the whole store under it: a
+#   fold through _compact_partition_store with the relabel as its
+#   rewrite (store.py's commit protocol, so a crash at any point heals
+#   on replay; old-label/new-label crash duplicates collapse because
+#   the fold recomputes labels BEFORE its full-row dropDuplicates).
 # - Fitted quantizers persist under ``{store}/_quantizer/qbatch=<N>``
 #   (underscore prefix = invisible to the store's own partition
 #   discovery); the ACTIVE quantizer at batch N is the newest sealed
@@ -656,33 +490,10 @@ def _with_src_batch(df):
 # and the usual SemDeDup straddle-miss class (mitigated by top-2
 # assignment), never the verify arithmetic.
 
-_QUANTIZER_DIR = "_quantizer"
-
 # requantize only once the distinct-vector count exceeds this factor
 # times target x K_active: a geometric growth schedule, so the sum of
 # all relabel rewrites over a store's lifetime is O(final store size)
 _REQUANT_GROWTH = 2
-
-
-def _quantizer_versions(store_path: str) -> dict[int, str]:
-    """Sealed persisted quantizer versions: {qbatch: path}."""
-    import os as _os
-
-    qroot = _os.path.join(store_path, _QUANTIZER_DIR)
-    if not _os.path.exists(qroot):
-        return {}
-    out: dict[int, str] = {}
-    for d in _os.listdir(qroot):
-        if not d.startswith("qbatch="):
-            continue
-        try:
-            b = int(d.split("=", 1)[1])
-        except ValueError:
-            continue
-        p = _os.path.join(qroot, d)
-        if _os.path.exists(_os.path.join(p, "_SUCCESS")):
-            out[b] = p
-    return out
 
 
 def _fit_quantizer(vecs: DataFrame, k: int) -> DataFrame:
@@ -754,70 +565,53 @@ def _fit_quantizer(vecs: DataFrame, k: int) -> DataFrame:
 def _relabel_store(
     spark: SparkSession, store_path: str, current_batch: int, cent: DataFrame
 ) -> None:
-    """Rewrite every fold-eligible store partition with top-2 labels
-    recomputed under ``cent`` — a super-compaction sharing
-    _compact_partition_store's commit protocol (write the new
-    generation, _SUCCESS is the commit point, delete sources after).
-    Labels are recomputed BEFORE the full-row dropDuplicates, so a
-    crash-window copy labeled under the previous quantizer collapses
-    with its relabeled twin instead of surviving as a phantom row."""
-    import os as _os
-    import shutil as _shutil
-
+    """Rewrite every fold-eligible store partition into one generation
+    with top-2 labels recomputed under ``cent``. Labels are recomputed
+    BEFORE the full-row dropDuplicates, so a crash-window copy labeled
+    under the previous quantizer collapses with its relabeled twin
+    instead of surviving as a phantom row."""
     from ..operators.similarity import rank_against_centroids
 
-    committed, gens = _foldable_partitions(store_path, current_batch)
-    if committed is None:
-        return
-    sources = list(committed.values()) + list(gens.values())
-    if not sources:
-        return
-    base = spark.read.parquet(*sources)
-    if "src_batch" not in base.columns:
-        # leaf-path reads carry no ``batch`` partition column, so the
-        # _with_src_batch migration cannot recover per-batch origins
-        # here; a provenance-less store relabels under the NULL =
-        # origin-unknown semantics (the probes' legacy self-key guard)
-        base = base.withColumn("src_batch", F.lit(None).cast("long"))
-    base = base.drop("label").dropDuplicates()
-    # re-assign per physical row; the rank window keys on the row's
-    # own identity (vec_id, origin batch, vector) so a legitimately
-    # re-delivered vec_id with a different vector ranks independently
-    scored = (
-        base.alias("q")
-        .join(F.broadcast(cent).alias("c"))
-        .select(
-            "q.*",
-            F.col("c.label").alias("label"),
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(q.v, c.cv, (x, y) -> x * y), 0D,"
-                    " (acc, x) -> acc + x)"
-                )
-                / (F.col("q.nrm") * F.col("c.cnrm")),
-                6,
-            ).alias("ccos"),
+    def relabel(base: DataFrame) -> DataFrame:
+        # a legacy store's rows relabel with NULL = origin unknown
+        # (the probes' self-key guard; store.py)
+        base = base.drop("label").dropDuplicates()
+        # re-assign per physical row; the rank window keys on the
+        # row's own identity (vec_id, origin batch, vector) so a
+        # legitimately re-delivered vec_id with a different vector
+        # ranks independently
+        scored = (
+            base.alias("q")
+            .join(F.broadcast(cent).alias("c"))
+            .select(
+                "q.*",
+                F.col("c.label").alias("label"),
+                F.round(
+                    F.expr(
+                        "aggregate(zip_with(q.v, c.cv, (x, y) -> x * y), 0D,"
+                        " (acc, x) -> acc + x)"
+                    )
+                    / (F.col("q.nrm") * F.col("c.cnrm")),
+                    6,
+                ).alias("ccos"),
+            )
         )
-    )
-    w = Window.partitionBy("vec_id", "src_batch", "v").orderBy(
-        F.col("ccos").desc(), "label"
-    )
-    relabeled = (
-        scored.withColumn("crk", F.row_number().over(w))
-        .filter(F.col("crk") <= 2)
-        .select("vec_id", "label", "v", "nrm", "kept", "src_batch")
-        .dropDuplicates()
-    )
-    target = _os.path.join(store_path, f"batch={min(gens, default=0) - 1}")
-    relabeled.write.mode("overwrite").parquet(target)
-    for p in sources:
-        if p != target:
-            _shutil.rmtree(p, ignore_errors=True)
+        w = Window.partitionBy("vec_id", "src_batch", "v").orderBy(
+            F.col("ccos").desc(), "label"
+        )
+        return (
+            scored.withColumn("crk", F.row_number().over(w))
+            .filter(F.col("crk") <= 2)
+            .select("vec_id", "label", "v", "nrm", "kept", "src_batch")
+            .dropDuplicates()
+        )
+
+    _compact_partition_store(spark, store_path, current_batch, 0, rewrite=relabel)
 
 
 def _maybe_requantize(
     spark: SparkSession,
-    store_path: str,
+    store: BatchStore,
     batch_id: int,
     frozen: DataFrame,
     target: int,
@@ -830,10 +624,9 @@ def _maybe_requantize(
     ``k_cache`` memoizes loaded versions across the closure's batches
     ({version_id: checkpointed frame}); version -1 is the frozen
     fallback."""
-    import os as _os
     import shutil as _shutil
 
-    versions = _quantizer_versions(store_path)
+    versions = _quantizer_versions(store.root)
     # fresh-checkpoint reprocess guard: versions fitted by a FUTURE
     # first-run batch are stale here — relabel the store back under
     # the version active at this batch and drop them (the reprocess
@@ -846,7 +639,7 @@ def _maybe_requantize(
             if versions
             else frozen
         )
-        _relabel_store(spark, store_path, batch_id, active)
+        _relabel_store(spark, store.root, batch_id, active)
         for p in stale.values():
             _shutil.rmtree(p, ignore_errors=True)
         k_cache.clear()
@@ -867,16 +660,13 @@ def _maybe_requantize(
         # version. Re-run the relabel (idempotent on an already
         # relabeled store) before probing.
         active = _load_active()
-        _relabel_store(spark, store_path, batch_id, active)
+        _relabel_store(spark, store.root, batch_id, active)
         return active
     if batch_id <= 0 or batch_id % check_every != 0:
         return _load_active()
-    if not _os.path.exists(store_path):
+    earlier = store.earlier(spark, batch_id)
+    if earlier is None:
         return _load_active()
-    earlier = _with_src_batch(spark.read.parquet(store_path)).filter(
-        (F.col("batch") < batch_id)
-        & ((F.col("src_batch") < batch_id) | F.col("src_batch").isNull())
-    )
     vecs = earlier.select("vec_id", "v", "nrm").dropDuplicates(
         ["vec_id", "v"]
     )
@@ -890,11 +680,9 @@ def _maybe_requantize(
     fitted = _fit_quantizer(
         vecs.localCheckpoint(eager=True), k_new
     ).localCheckpoint(eager=True)
-    qdir = _os.path.join(
-        store_path, _QUANTIZER_DIR, f"qbatch={batch_id}"
-    )
+    qdir = quantizer_path(store.root, batch_id)
     fitted.write.mode("overwrite").parquet(qdir)
-    _relabel_store(spark, store_path, batch_id, fitted)
+    _relabel_store(spark, store.root, batch_id, fitted)
     k_cache.clear()
     k_cache[batch_id] = fitted
     versions[batch_id] = qdir
@@ -919,26 +707,15 @@ def _dedup_ingest_batch(
     compact_every: int = DEDUP_INGEST_COMPACT_EVERY,
 ):
     """Build the per-micro-batch body of the minhash ingest sink
-    (run_dedup_ingest_sink's docstring). Exposed as a factory —
-    the same device as _semantic_ingest_batch / _url_ingest_batch /
-    _span_ingest_batch — so the composed crawl-ingest pipeline
-    parity query can drive the EXACT production code path with
-    deterministic id-ordered batches, while the streaming wrapper
-    hands the same function to foreachBatch."""
-    import os as _os
-
+    (run_dedup_ingest_sink's docstring). Exposed as a factory, like
+    every ingest sink's ``_*_ingest_batch``, so the parity queries
+    can drive the EXACT production code path with deterministic
+    id-ordered batches, while the streaming wrapper hands the same
+    function to foreachBatch."""
     from ..operators.dedup import N_HASHES, _band_rows, minhash_signatures
 
-    _schemas: dict = {}
-
-    def _read_if_exists(spark, path):
-        # None only when the store genuinely does not exist yet; an
-        # existing-but-unreadable store must raise, not bypass dedup
-        return (
-            _cached_schema_read(spark, path, _schemas)
-            if _os.path.exists(path)
-            else None
-        )
+    sigs = BatchStore(store_path, admit_unknown=True)
+    band_store = BatchStore(f"{store_path}_bands", admit_unknown=True)
 
     def _est(left_prefix: str, right_prefix: str):
         return sum(
@@ -948,18 +725,8 @@ def _dedup_ingest_batch(
             for j in range(N_HASHES)
         ) / F.lit(N_HASHES)
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def kernel(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # fold committed store partitions first, so THIS batch's probe
-        # already scans the compacted layout (full-row dedup heals any
-        # duplicate rows a crash between compaction write and source
-        # delete left behind, without collapsing a legitimately
-        # re-delivered doc_id whose payload differs — ADVICE r8)
-        bands_path = f"{store_path}_bands"
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
-        _compact_partition_store(spark, bands_path, batch_id, compact_every)
         # lazy lineage cuts (each frame has 2+ consumers): the frames
         # materialize once inside their first consumer's job instead
         # of as three separate eager jobs per micro-batch
@@ -1003,52 +770,22 @@ def _dedup_ingest_batch(
         )
         sig_kept = sig.join(in_dups, "doc_id", "left_anti")
 
-        # (c) probe the persisted band table — band values were
-        # computed once at append time, nothing store-side re-hashes
-        store = _read_if_exists(spark, store_path)
-        if store is not None:
-            # earlier-arrived ROWS only: on a replay the store
-            # already holds the batch's prior output, and dedup
-            # against itself would empty `survivors` — the overwrite
-            # below would then erase the batch instead of converging.
-            # The partition filter (batch < current) prunes whole
-            # directories; the row filter (src_batch < current) is
-            # the exact contract — inside a folded generation
-            # (batch = -g, always < current) it excludes the
-            # replayed batch's own rows AND later-arrived rows, so a
-            # fresh-checkpoint reprocess sees exactly the first
-            # run's view (docstring).
-            # NULL src_batch = legacy generation row of unknown
-            # origin (_with_src_batch): admitted, but only under the
-            # pre-provenance self-key guard in the pair join below
-            store = _with_src_batch(store).filter(
-                (F.col("batch") < batch_id)
-                & (
-                    (F.col("src_batch") < batch_id)
-                    | F.col("src_batch").isNull()
-                )
-            )
-        if store is None:
+        # (c) probe the earlier-arrived band rows — band values were
+        # computed once at append time, nothing store-side re-hashes.
+        # No earlier rows in either store means no earlier batch
+        # committed (each batch writes both), so nothing to probe.
+        store = sigs.earlier(spark, batch_id)
+        store_bands = band_store.earlier(spark, batch_id)
+        if store is None or store_bands is None:
             survivors = sig_kept.select("doc_id")
         else:
-            store_bands = _with_src_batch(
-                _cached_schema_read(spark, bands_path, _schemas)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (
-                    (F.col("src_batch") < batch_id)
-                    | F.col("src_batch").isNull()
-                )
-            )
             cand = (
                 store_bands.alias("c")
                 .join(
                     F.broadcast(bands.alias("x")),
                     (F.col("c.band_idx") == F.col("x.band_idx"))
                     & (F.col("c.band_val") == F.col("x.band_val"))
-                    # legacy rows (origin unknown) get the
-                    # pre-provenance self-key guard instead of the
-                    # provenance filter (_with_src_batch docstring)
+                    # legacy rows: the self-key guard (store.py)
                     & (
                         F.col("c.src_batch").isNotNull()
                         | (F.col("c.doc_id") != F.col("x.doc_id"))
@@ -1089,31 +826,17 @@ def _dedup_ingest_batch(
             )
         keep = F.broadcast(survivors.localCheckpoint(eager=True))
 
-        # (d) batch-scoped overwrite writes: replay-idempotent at any
-        # crash point in any order, and independent given `keep`
-        # (eager) plus the batch/sig/bands lazy checkpoints, all
-        # already materialized inside the survivors job — run the
-        # three concurrently. Store rows carry their origin batch id
-        # (src_batch) so the probe's row-level provenance filter
-        # survives generation folds (docstring); the corpus needs no
-        # stamp — it is never probed and its batch layout is already
-        # the directory name
-        sub = f"batch={batch_id}"
-        _parallel_writes(
-            lambda: batch.join(keep, "doc_id", "left_semi")
-            .write.mode("overwrite")
-            .parquet(f"{corpus_path}/{sub}"),
-            lambda: sig.join(keep, "doc_id", "left_semi")
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(f"{store_path}/{sub}"),
-            lambda: bands.join(keep, "doc_id", "left_semi")
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(f"{bands_path}/{sub}"),
+        # (d) the three writes are independent given `keep` (eager)
+        # plus the batch/sig/bands lazy checkpoints, all already
+        # materialized inside the survivors job
+        write(
+            batch_id,
+            (corpus_path, batch.join(keep, "doc_id", "left_semi")),
+            (sigs, sig.join(keep, "doc_id", "left_semi")),
+            (band_store, bands.join(keep, "doc_id", "left_semi")),
         )
 
-    return ingest_batch
+    return batch_body(kernel, (sigs, band_store), compact_every)
 
 
 def run_dedup_ingest_sink(
@@ -1143,68 +866,92 @@ def run_dedup_ingest_sink(
     KV store would cut those scans to O(collisions), which is the
     stated migration path at corpus sizes where the scans dominate.
 
-    Exactly-once: every output (corpus rows, signatures, bands) is
-    written to a batch-scoped partition directory
-    (``<path>/batch=<id>``) with overwrite semantics, and every store
-    read admits only EARLIER-ARRIVED partitions (``batch < current``;
-    generations are negative, so always earlier) — so a replayed
-    batch (including one that crashed BETWEEN the three writes)
-    recomputes against exactly what its first run saw and overwrites
-    its own directories to the first run's exact result, instead of
-    append-duplicating or self-matching to empty (the previous append-based design documented a
-    self-healing property that did not survive a crash between the
-    corpus and store appends). Every store row additionally carries
-    its ORIGIN batch id as a ``src_batch`` data column — stamped at
-    write time and preserved verbatim through generation folds — and
-    the probe filters ``src_batch < current`` alongside the
-    partition filter (the partition filter stays purely for
-    pruning): a generation partition (negative ``batch``) may hold
-    rows from ANY folded batch, including the replayed batch's own
-    rows (fresh-checkpoint reprocess against a retained, compacted
-    store — the disaster-recovery path) and rows that originally
-    arrived LATER, and the row-level provenance filter excludes
-    exactly the rows the first run never saw — so a full
-    from-scratch reprocess against a FOLDED store reproduces the
-    first run's output bit-exactly (regression-tested in
-    test_streaming; the semantic sink's reprocess test demonstrates
-    the later-arrival divergence the filter closes). This subsumes
-    the round-10 same-doc_id probe guard, which over-excluded: a
-    legitimately re-delivered doc_id with edited text (the
-    recurrence ``_compact_partition_store``'s docstring calls
-    legitimate) was never compared to its own earlier version
-    (ADVICE r10); under the provenance filter it dedups like any
-    other earlier-arrived row. Stores persisted before the src_batch
-    column existed are migrated ON READ (``_with_src_batch``):
-    uncompacted legacy partitions get their true origin stamped;
-    legacy GENERATION rows (origin unrecoverable) are stamped NULL
-    and probed under the pre-provenance self-key guard — exact
-    self-exclusion, but reprocess-vs-first-run exactness for those
-    rows only returns once the store is rewritten with real
-    provenance (the _with_src_batch docstring, ADVICE r11). The store
-    read is existence-checked-then-strict: a transient READ failure
-    on an existing store raises instead of silently bootstrapping a
-    dedup-free batch.
-
-    Store growth: the signature and band stores gain one partition per
-    batch; once ``compact_every`` committed partitions accumulate they
-    are folded into a negative-id generation partition
-    (``_compact_partition_store`` — write-then-delete, replay-safe
-    because folded batches are checkpoint-committed and can never be
-    replayed). The CORPUS is deliberately left un-compacted: its
+    Exactly-once, crash, provenance and legacy-store semantics are the
+    batch-scoped store's (store.py). The probe compares a batch doc
+    with every earlier-arrived row, so a re-delivered doc_id with
+    edited text dedups against its own earlier version like any other
+    row. The signature store and its ``<store>_bands`` sibling fold
+    into generations once ``compact_every`` committed partitions
+    accumulate; the CORPUS is deliberately left un-compacted: its
     batch layout is a downstream consumer contract, and it is never
     scanned by the ingest path."""
-    return (
-        docs.writeStream.foreachBatch(
-            _dedup_ingest_batch(store_path, corpus_path, compact_every)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        docs, _dedup_ingest_batch(store_path, corpus_path, compact_every), checkpoint
     )
 
 
 # -------------------------------------- media phash ingest sink
+
+
+def _phash_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
+    """Build the per-micro-batch body of the media pHash ingest sink
+    (run_media_phash_ingest_sink's docstring); a factory like the
+    other ``_*_ingest_batch`` bodies."""
+    from ..operators.multimodal import (
+        PHASH_HAM_MAX,
+        phash_band_rows,
+        phash_frame,
+    )
+
+    store = BatchStore(store_path, admit_unknown=True)
+
+    def ham(a, b):
+        return F.bit_count(a.bitwiseXOR(b))
+
+    def kernel(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.localCheckpoint(eager=True)
+        bands = phash_band_rows(
+            phash_frame(batch.select("doc_id", "text"))
+        ).localCheckpoint(eager=True)
+
+        # (b) intra-batch dedup
+        a, b = bands.alias("a"), bands.alias("b")
+        in_dups = (
+            a.join(
+                b,
+                (F.col("a.band_id") == F.col("b.band_id"))
+                & (F.col("a.band_val") == F.col("b.band_val"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .filter(ham(F.col("a.phash"), F.col("b.phash")) <= PHASH_HAM_MAX)
+            .select(F.col("b.doc_id").alias("doc_id"))
+            .distinct()
+        )
+        kept = bands.join(in_dups, "doc_id", "left_anti")
+
+        # (c) probe the earlier-arrived band rows
+        earlier = store.earlier(batch_df.sparkSession, batch_id)
+        survivors = kept.select("doc_id").distinct()
+        if earlier is not None:
+            dups = (
+                earlier.alias("c")
+                .join(
+                    F.broadcast(kept.alias("x")),
+                    (F.col("c.band_id") == F.col("x.band_id"))
+                    & (F.col("c.band_val") == F.col("x.band_val"))
+                    # legacy rows: the self-key guard (store.py)
+                    & (
+                        F.col("c.src_batch").isNotNull()
+                        | (F.col("c.doc_id") != F.col("x.doc_id"))
+                    ),
+                )
+                .filter(
+                    ham(F.col("c.phash"), F.col("x.phash")) <= PHASH_HAM_MAX
+                )
+                .select(F.col("x.doc_id").alias("doc_id"))
+                .distinct()
+            )
+            survivors = survivors.join(dups, "doc_id", "left_anti")
+        keep = F.broadcast(survivors.localCheckpoint(eager=True))
+
+        # (d) survivors' rows and band rows
+        write(
+            batch_id,
+            (corpus_path, batch.join(keep, "doc_id", "left_semi")),
+            (store, bands.join(keep, "doc_id", "left_semi")),
+        )
+
+    return batch_body(kernel, (store,), compact_every)
 
 
 def run_media_phash_ingest_sink(
@@ -1227,120 +974,16 @@ def run_media_phash_ingest_sink(
     is no separate signature table — the verify join reads the same
     store rows the candidate join matched.
 
-    Exactly-once: the minhash sink's device verbatim — batch-scoped
-    overwrite partitions (``batch=<id>``), store reads admit only
-    earlier-arrived ROWS (partition filter ``batch < current`` for
-    pruning, row-level ``src_batch < current`` provenance for
-    exactness through generation folds; see the minhash sink's
-    docstring), so a replay at ANY crash point — including a full
-    fresh-checkpoint reprocess against a folded store — recomputes
-    exactly what the first run saw and overwrites to the first
-    run's exact result. Per-batch cost: O(batch) hashing + one band-store
-    scan (equi-join on the precomputed band key); the same
+    Exactly-once, crash and provenance semantics are the batch-scoped
+    store's (store.py). Per-batch cost: O(batch) hashing + one
+    band-store scan (equi-join on the precomputed band key); the same
     bucket-pruning / KV migration noted on the minhash sink applies
-    when the store scan dominates. The BAND store's committed
-    partitions fold into generation partitions via
-    ``_compact_partition_store`` once ``compact_every`` accumulate
-    (same store shape and replay/crash analysis as the minhash sink —
-    VERDICT r8 item 5); the corpus stays un-compacted for the same
-    consumer-contract reason."""
-    import os as _os
-
-    from ..operators.multimodal import (
-        PHASH_HAM_MAX,
-        phash_band_rows,
-        phash_frame,
-    )
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
-        batch = batch_df.localCheckpoint(eager=True)
-        bands = phash_band_rows(
-            phash_frame(batch.select("doc_id", "text"))
-        ).localCheckpoint(eager=True)
-
-        def ham(a, b):
-            return F.bit_count(a.bitwiseXOR(b))
-
-        # (b) intra-batch dedup
-        a, b = bands.alias("a"), bands.alias("b")
-        in_dups = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .filter(ham(F.col("a.phash"), F.col("b.phash")) <= PHASH_HAM_MAX)
-            .select(F.col("b.doc_id").alias("doc_id"))
-            .distinct()
-        )
-        kept = bands.join(in_dups, "doc_id", "left_anti")
-
-        # (c) probe the persisted band store — earlier-arrived ROWS
-        # only: the partition filter (batch < current) prunes whole
-        # directories, and the row-level provenance filter
-        # (src_batch < current) makes reprocess-after-compaction
-        # exact — inside a folded generation it excludes both the
-        # replayed batch's own rows (which would hamming-match
-        # themselves at distance 0 and empty the corpus partition)
-        # and later-arrived rows the first run never saw (the
-        # minhash sink's docstring analysis, identical here)
-        if _os.path.exists(store_path):
-            # NULL src_batch = legacy generation row (origin
-            # unknown): admitted under the pre-provenance self-key
-            # guard in the join below (_with_src_batch docstring)
-            store = _with_src_batch(
-                spark.read.parquet(store_path)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (
-                    (F.col("src_batch") < batch_id)
-                    | F.col("src_batch").isNull()
-                )
-            )
-            dups = (
-                store.alias("c")
-                .join(
-                    F.broadcast(kept.alias("x")),
-                    (F.col("c.band_id") == F.col("x.band_id"))
-                    & (F.col("c.band_val") == F.col("x.band_val"))
-                    & (
-                        F.col("c.src_batch").isNotNull()
-                        | (F.col("c.doc_id") != F.col("x.doc_id"))
-                    ),
-                )
-                .filter(
-                    ham(F.col("c.phash"), F.col("x.phash")) <= PHASH_HAM_MAX
-                )
-                .select(F.col("x.doc_id").alias("doc_id"))
-                .distinct()
-            )
-            survivors = kept.select("doc_id").distinct().join(
-                dups, "doc_id", "left_anti"
-            )
-        else:
-            survivors = kept.select("doc_id").distinct()
-        keep = F.broadcast(survivors.localCheckpoint(eager=True))
-
-        # (d) batch-scoped overwrite writes: replay-idempotent
-        sub = f"batch={batch_id}"
-        batch.join(keep, "doc_id", "left_semi").write.mode("overwrite").parquet(
-            f"{corpus_path}/{sub}"
-        )
-        bands.join(keep, "doc_id", "left_semi").withColumn(
-            "src_batch", F.lit(batch_id)
-        ).write.mode("overwrite").parquet(f"{store_path}/{sub}")
-
-    return (
-        docs.writeStream.foreachBatch(ingest_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    when the store scan dominates. The band store folds into
+    generations once ``compact_every`` committed partitions
+    accumulate; the corpus stays un-compacted for the same
+    consumer-contract reason as the minhash sink's."""
+    return start(
+        docs, _phash_ingest_batch(store_path, corpus_path, compact_every), checkpoint
     )
 
 
@@ -1388,11 +1031,10 @@ def run_media_phash_ingest_sink(
 # never shuffled; no candidate pair ever becomes a JVM row (the old
 # plan's per-pair wide rows + pre-score dropDuplicates exchange were
 # the measured per-batch wall, OPTIMIZATION_r12.md).
-# The store gains one partition per batch and folds into generation
-# partitions via _compact_partition_store once compact_every commit
-# (same write-then-delete, replay-safe analysis as the other two
-# sinks); the corpus stays un-compacted for the same consumer-
-# contract reason.
+# The store is a batch-scoped store (store.py: exactly-once, crash,
+# provenance); it folds into generations once compact_every commit,
+# and the corpus stays un-compacted for the minhash sink's
+# consumer-contract reason.
 
 
 def read_embeddings_stream(
@@ -1499,8 +1141,6 @@ def _semantic_ingest_batch(
     None keeps the frozen-quantizer contract exactly (the registered
     parity query's mode); the two modes share one store schema but a
     given store should run under one mode for its lifetime."""
-    import os as _os
-
     from ..operators.similarity import (
         SEMDEDUP_TAU,
         cluster_pair_scores,
@@ -1514,17 +1154,14 @@ def _semantic_ingest_batch(
         )
     cent = centroids.localCheckpoint(eager=True)
     k_cache: dict = {}
-    _schemas: dict = {}
+    store = BatchStore(store_path, admit_unknown=True)
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def kernel(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
         active = (
             _maybe_requantize(
                 spark,
-                store_path,
+                store,
                 batch_id,
                 cent,
                 requantize_target,
@@ -1568,49 +1205,19 @@ def _semantic_ingest_batch(
             .distinct()
         )
 
-        # cross-batch: probe the store's EARLIER-ARRIVED rows only,
-        # kept and dropped alike — precedence is arrival order, so a
-        # replay of batch N reads exactly what the first run read
-        # even when later batches' partitions already exist. The
-        # partition filter (batch < current) prunes whole
-        # directories; the row-level provenance filter
-        # (src_batch < current) is the exact contract: a folded
-        # generation partition is negative, passes the partition
-        # filter unconditionally, and may hold BOTH the replayed
-        # batch's own rows (which would pair with themselves at
-        # cosine 1.0 and overwrite the corpus partition EMPTY —
-        # round-10 review catch) and rows that originally arrived
-        # LATER (which would make a disaster-recovery from-scratch
-        # reprocess drop vectors the first run kept). Filtering on
-        # the per-row origin batch id — stamped at write time,
-        # preserved through folds — excludes exactly the rows the
-        # first run never saw, so full reprocess against a folded
-        # store is bit-exact (regression-tested in test_streaming).
-        # The former same-vec_id guard is subsumed and its
-        # over-exclusion removed: a re-delivered vec_id now dedups
-        # against its own earlier version like any other
-        # earlier-arrived row (ADVICE r10).
-        if _os.path.exists(store_path):
-            # NULL src_batch = legacy generation row (origin
-            # unknown): admitted under the pre-provenance self-key
-            # guard in the join below (_with_src_batch docstring)
-            store = _with_src_batch(
-                _cached_schema_read(spark, store_path, _schemas)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (
-                    (F.col("src_batch") < batch_id)
-                    | F.col("src_batch").isNull()
-                )
-            )
-            # one mapInArrow pass over the pruned store scan: each
-            # store row is dotted against the batch's per-label
-            # assignment matrices (closure-shipped — bounded by the
-            # micro-batch, the same rows the old plan broadcast);
-            # the store is never shuffled and no candidate pair
-            # becomes a JVM row (_semantic_store_probe_fn)
+        # cross-batch: probe the store's earlier-arrived rows, kept
+        # and dropped alike — precedence is arrival order, so a
+        # replay of batch N reads exactly what the first run read.
+        # One mapInArrow pass over the pruned store scan: each store
+        # row is dotted against the batch's per-label assignment
+        # matrices (closure-shipped — bounded by the micro-batch, the
+        # same rows the old plan broadcast); the store is never
+        # shuffled and no candidate pair becomes a JVM row
+        # (_semantic_store_probe_fn)
+        earlier = store.earlier(spark, batch_id)
+        if earlier is not None:
             x_dups = (
-                store.select("vec_id", "label", "v", "nrm", "src_batch")
+                earlier.select("vec_id", "label", "v", "nrm", "src_batch")
                 .mapInArrow(
                     _semantic_store_probe_fn(
                         assign.collect(), SEMDEDUP_TAU
@@ -1624,37 +1231,26 @@ def _semantic_ingest_batch(
             dropped = in_dups
         dropped = F.broadcast(dropped.localCheckpoint(eager=True))
 
-        # batch-scoped overwrite writes: replay-idempotent at any
-        # crash point between them, and independent given the eager
-        # batch/assign/dropped checkpoints — run concurrently.
-        # Corpus gets survivors only; the store gets EVERY
-        # assignment row with the verdict flag.
-        sub = f"batch={batch_id}"
-        _parallel_writes(
-            lambda: batch.join(dropped, "vec_id", "left_anti")
-            .write.mode("overwrite")
-            .parquet(f"{corpus_path}/{sub}"),
-            lambda: assign.join(
-                dropped.withColumn("is_dup", F.lit(True)),
-                "vec_id",
-                "left",
-            )
-            .select(
-                "vec_id",
-                "label",
-                "v",
-                "nrm",
-                F.coalesce(~F.col("is_dup"), F.lit(True)).alias("kept"),
-                # origin batch id: the probe's row-level provenance
-                # filter reads this through generation folds (block
-                # comment above)
-                F.lit(batch_id).alias("src_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{store_path}/{sub}"),
+        # corpus gets survivors only; the store gets EVERY assignment
+        # row with the verdict flag
+        write(
+            batch_id,
+            (corpus_path, batch.join(dropped, "vec_id", "left_anti")),
+            (
+                store,
+                assign.join(
+                    dropped.withColumn("is_dup", F.lit(True)), "vec_id", "left"
+                ).select(
+                    "vec_id",
+                    "label",
+                    "v",
+                    "nrm",
+                    F.coalesce(~F.col("is_dup"), F.lit(True)).alias("kept"),
+                ),
+            ),
         )
 
-    return ingest_batch
+    return batch_body(kernel, (store,), compact_every)
 
 
 def run_semantic_ingest_sink(
@@ -1674,20 +1270,16 @@ def run_semantic_ingest_sink(
     with generation compaction from day one. ``requantize_target``
     opts into the corpus-sized quantizer (_semantic_ingest_batch
     docstring); default None = frozen quantizer."""
-    return (
-        emb.writeStream.foreachBatch(
-            _semantic_ingest_batch(
-                centroids,
-                store_path,
-                corpus_path,
-                compact_every,
-                requantize_target=requantize_target,
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        emb,
+        _semantic_ingest_batch(
+            centroids,
+            store_path,
+            corpus_path,
+            compact_every,
+            requantize_target=requantize_target,
+        ),
+        checkpoint,
     )
 
 
@@ -1718,12 +1310,9 @@ def run_semantic_ingest_sink(
 # stated migration is the same bucket-pruned layout / KV probe the
 # minhash sink documents.
 #
-# Exactly-once: the family's device verbatim — batch-scoped
-# overwrite partitions, store reads admit only earlier-arrived ROWS
-# (partition filter for pruning + row-level src_batch provenance for
-# exactness through generation folds; the minhash sink's docstring
-# has the full analysis), generation compaction via
-# _compact_partition_store. With id-ordered arrival,
+# Exactly-once, crash and provenance: the batch-scoped store's
+# (store.py); the store never held legacy rows, so its probe drops
+# rows of unknown origin. With id-ordered arrival,
 # "first-seen canonical URL wins" is exactly the batch gate's
 # keep-lowest-doc_id rule — what the registered parity query
 # (stream_url_gate_compacted_parity, batch_windows.py) pins at the
@@ -1738,21 +1327,15 @@ def _url_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
     hands the same function to foreachBatch. Input batches must
     carry ``doc_id`` and a raw ``url_raw`` column; all other columns
     ride through to the corpus."""
-    import os as _os
-
     from ..operators.webgate import (
         BLOCKED_SITES,
         canonicalize_url,
         extract_site,
     )
 
-    _schemas: dict = {}
+    store = BatchStore(store_path)
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
+    def kernel(batch_df: DataFrame, batch_id: int) -> None:
         # (a)+(b): canonicalize, site-gate — one narrow map stage
         batch = (
             batch_df.withColumn(
@@ -1778,15 +1361,10 @@ def _url_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         # broadcast back for the anti-join — the store is never
         # shuffled (block comment). ``seen`` is consumed exactly once
         # by the broadcast build, so it needs no checkpoint.
-        if _os.path.exists(store_path):
-            store = _with_src_batch(
-                _cached_schema_read(spark, store_path, _schemas)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (F.col("src_batch") < batch_id)
-            )
+        earlier = store.earlier(batch_df.sparkSession, batch_id)
+        if earlier is not None:
             seen = (
-                store.join(
+                earlier.join(
                     F.broadcast(kept.select("url_canon")),
                     "url_canon",
                     "left_semi",
@@ -1796,24 +1374,14 @@ def _url_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
             )
             kept = kept.join(F.broadcast(seen), "url_canon", "left_anti")
             kept = kept.localCheckpoint(eager=False)
-        # (e) batch-scoped overwrite writes: replay-idempotent, and
-        # independent given the shared checkpoint — run concurrently
-        sub = f"batch={batch_id}"
-        _parallel_writes(
-            lambda: kept.write.mode("overwrite").parquet(
-                f"{corpus_path}/{sub}"
-            ),
-            lambda: kept.select(
-                "url_canon",
-                "site",
-                "doc_id",
-                F.lit(batch_id).alias("src_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{store_path}/{sub}"),
+        # (e) both writes share the lazy checkpoint
+        write(
+            batch_id,
+            (corpus_path, kept),
+            (store, kept.select("url_canon", "site", "doc_id")),
         )
 
-    return ingest_batch
+    return batch_body(kernel, (store,), compact_every)
 
 
 def run_url_ingest_sink(
@@ -1827,14 +1395,8 @@ def run_url_ingest_sink(
     and blocklist gating — the batch URL pre-gate
     (operators/webgate.py) run continuously (block comment above).
     ``docs`` must carry ``doc_id`` and ``url_raw``."""
-    return (
-        docs.writeStream.foreachBatch(
-            _url_ingest_batch(store_path, corpus_path, compact_every)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        docs, _url_ingest_batch(store_path, corpus_path, compact_every), checkpoint
     )
 
 
@@ -1871,11 +1433,9 @@ def run_url_ingest_sink(
 # fixed lifecycle cost; re-probe when a deployment's store passes
 # ~10^8 grams.
 #
-# Exactly-once: the family device verbatim — batch-scoped overwrite
-# partitions, store reads admit only earlier-arrived ROWS (partition
-# filter for pruning + row-level src_batch provenance for exactness
-# through generation folds; the minhash sink's docstring has the
-# full analysis). gram hashes are xxhash64 (the production twin's
+# Exactly-once, crash and provenance: the batch-scoped store's
+# (store.py), null-rejecting like the URL sink's. gram hashes are
+# xxhash64 (the production twin's
 # hash): cut decisions are a function of gram EQUALITY only, so any
 # injective hash yields the same cuts — the md5/xxhash64 twin
 # argument from the batch queries, which is also why the parity
@@ -1889,18 +1449,12 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
     deterministic id-ordered batches, while the streaming wrapper
     hands the same function to foreachBatch. Input batches must
     carry ``doc_id`` and ``text``."""
-    import os as _os
-
     from ..functions.text import norm_text
     from ..operators.dedup import SPAN_K, span_cut_apply
 
-    _schemas: dict = {}
+    store = BatchStore(store_path)
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
+    def kernel(batch_df: DataFrame, batch_id: int) -> None:
         # lazy lineage cuts: toks feeds the gram extraction AND the
         # final cut, grams feeds the store probe AND the occurrence
         # window — each materializes once inside its first consumer's
@@ -1943,15 +1497,10 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         # cross-batch: grams the store has already seen — broadcast
         # the batch's (bounded) distinct gram keys against the store,
         # broadcast the matches back; the store is never shuffled.
-        if _os.path.exists(store_path):
-            store = _with_src_batch(
-                _cached_schema_read(spark, store_path, _schemas)
-            ).filter(
-                (F.col("batch") < batch_id)
-                & (F.col("src_batch") < batch_id)
-            )
+        earlier = store.earlier(batch_df.sparkSession, batch_id)
+        if earlier is not None:
             seen = (
-                store.join(
+                earlier.join(
                     F.broadcast(firsts.select("g")),
                     "g",
                     "left_semi",
@@ -1991,33 +1540,25 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
                 (F.col("pos") + SPAN_K).cast("long").alias("e"),
             )
         )
-        # new first-seen grams enter the store (provenance columns
-        # ride along for debuggability; src_batch is the probe's
-        # row-level filter key)
+        # new first-seen grams enter the store (their first
+        # occurrence rides along for debuggability)
         new_firsts = firsts.filter(F.col("_seen").isNull()).select(
             "g",
             F.col("f.doc_id").alias("doc_id"),
             F.col("f.pos").alias("pos"),
-            F.lit(batch_id).alias("src_batch"),
         )
-        # batch-scoped overwrite writes: replay-idempotent, and
-        # independent given the shared lazy checkpoints (grams /
-        # firsts — the block manager computes each checkpointed
-        # partition once and the other write's job reads the block).
-        # The cleaned frame is consumed only by its write — it
-        # streams straight into the parquet sink with no pre-write
-        # checkpoint (the write IS its materialization).
-        sub = f"batch={batch_id}"
-        _parallel_writes(
-            lambda: span_cut_apply(toks, removable)
-            .write.mode("overwrite")
-            .parquet(f"{corpus_path}/{sub}"),
-            lambda: new_firsts.write.mode("overwrite").parquet(
-                f"{store_path}/{sub}"
-            ),
+        # the writes share the lazy checkpoints (grams / firsts — the
+        # block manager computes each checkpointed partition once and
+        # the other write's job reads the block). The cleaned frame is
+        # consumed only by its write — it streams straight into the
+        # parquet sink with no pre-write checkpoint.
+        write(
+            batch_id,
+            (corpus_path, span_cut_apply(toks, removable)),
+            (store, new_firsts),
         )
 
-    return ingest_batch
+    return batch_body(kernel, (store,), compact_every)
 
 
 def run_span_dedup_ingest_sink(
@@ -2032,14 +1573,8 @@ def run_span_dedup_ingest_sink(
     above). ``docs`` must carry ``doc_id`` and ``text``; the corpus
     output is the cleaned per-doc frame (n_tokens_before/after,
     n_spans_cut, cleaned_text)."""
-    return (
-        docs.writeStream.foreachBatch(
-            _span_ingest_batch(store_path, corpus_path, compact_every)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        docs, _span_ingest_batch(store_path, corpus_path, compact_every), checkpoint
     )
 
 
@@ -2072,8 +1607,6 @@ def run_cdc_sink(
     from ..sinks import read_or_none, staged_swap
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         cols = ["user_id", "ts", "event_type", "value", "event_id"]
         w = Window.partitionBy("user_id").orderBy(
@@ -2112,12 +1645,7 @@ def run_cdc_sink(
         )
         staged_swap(final, store_path)
 
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(events, batch_body(apply_batch), checkpoint)
 
 
 def cdc_store_state(spark: SparkSession, store_path: str) -> DataFrame:
@@ -2232,7 +1760,32 @@ def debounce_stream(events: DataFrame, watermark: str = "2 days") -> DataFrame:
     )
 
 
-# --------------------------------------------- streaming CMS sketch
+# --------------------------------------------------- monitor sinks
+# Seven sinks keep a monitor current over a stream: each micro-batch
+# reduces to a PARTIAL of additive sufficient statistics (cell counts,
+# decimal sums and counts, bin counts, extrema), and the reader folds
+# the partials through the SAME tail the batch operator uses, so the
+# monitor is bit-equal to its batch twin by construction. Additive
+# state cannot be re-added on replay; the batch-scoped store makes a
+# replay rewrite its partial instead, and the readers' ``fold`` dedups
+# on the provenance key, so neither a replay nor a crash during
+# compaction double counts (store.py). Partials are tiny, so each
+# batch's is written as one file; the partition count, not the rows,
+# is the growth term, and ``compact_every`` bounds it (SCALE.md
+# "Monitor-sink store growth").
+
+
+def _run_monitor(
+    df: DataFrame, root: str, checkpoint: str, compact_every: int, partial
+) -> StreamingQuery:
+    """Start a monitor sink: every batch writes ``partial(batch_df)``
+    as its partition of the store at ``root``."""
+    store = BatchStore(root)
+
+    def kernel(batch_df: DataFrame, batch_id: int) -> None:
+        write(batch_id, (store, partial(batch_df).coalesce(1)))
+
+    return start(df, batch_body(kernel, (store,), compact_every), checkpoint, "update")
 
 
 def run_cms_sink(
@@ -2242,53 +1795,24 @@ def run_cms_sink(
     compact_every: int = DEDUP_INGEST_COMPACT_EVERY,
 ) -> StreamingQuery:
     """Streaming count-min sketch maintenance: every micro-batch
-    computes ITS OWN d x w cell counts (a bounded-size aggregate —
-    CMS_D x CMS_W rows regardless of batch size) and writes them to a
-    batch-scoped partition (``batch=<id>``, overwrite). The live
-    sketch is the cell-wise SUM over batch partitions — the
-    mergeability that makes CMS the streaming-native frequency
-    structure (operators/stats.py agg_heavy_hitters_cms is the batch
-    twin; ``read_cms_estimates`` below probes the merged sketch with
-    the identical hash family, so stream-maintained estimates are
-    bit-equal to a batch build over the same rows).
-
-    Exactly-once: additive state CANNOT be idempotently re-added, so
-    a replayed batch must not merge-add twice — the batch-scoped
-    overwrite makes replay rewrite the same partition to the same
-    bytes instead (the dedup-ingest sink's device, applied to the
-    additive-sketch case). Store size is O(batches x d x w) tiny
-    rows; committed partitions fold into generation partitions via
-    ``_compact_partition_store`` once ``compact_every`` accumulate
-    (VERDICT r8 item 5). Because cell counts are ADDITIVE, every
-    partial carries its ``src_batch`` id: full-row dedup then folds
-    only bit-identical crash copies (two batches that legitimately
-    produced equal cell counts differ on src_batch), and the read
-    fold dedups on the provenance key — the OOV sink's
-    double-count-proof discipline."""
+    writes ITS OWN d x w cell counts (a bounded-size aggregate —
+    CMS_D x CMS_W rows regardless of batch size). The live sketch is
+    the cell-wise SUM over batch partitions — the mergeability that
+    makes CMS the streaming-native frequency structure
+    (operators/stats.py agg_heavy_hitters_cms is the batch twin;
+    ``read_cms_estimates`` below probes the merged sketch with the
+    identical hash family, so stream-maintained estimates are
+    bit-equal to a batch build over the same rows)."""
     from ..operators.stats import cms_hash_explode
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, store_path, batch_id, compact_every
-        )
-        cells = (
-            cms_hash_explode(batch_df, "user_id")
-            .groupBy("j", "bucket")
-            .agg(F.count(F.lit(1)).alias("cell_cnt"))
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        cells.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_monitor(
+        events,
+        store_path,
+        checkpoint,
+        compact_every,
+        lambda b: cms_hash_explode(b, "user_id")
+        .groupBy("j", "bucket")
+        .agg(F.count(F.lit(1)).alias("cell_cnt")),
     )
 
 
@@ -2301,17 +1825,12 @@ def read_cms_estimates(spark: SparkSession, store_path: str, keys: DataFrame) ->
     as 0 — left join + coalesce, never an inner join that would
     inflate the min over populated cells only or drop the key from
     the output (review r5 round 2 #3; a CMS must never report an
-    unseen key above its collision mass).
-
-    Dedups on the ``(src_batch, j, bucket)`` provenance key before
-    summing — the crash window between a compaction's generation
-    write and its source delete (or a concurrent read mid-compaction)
-    exposes the same partial twice (ADVICE r8; read_histogram)."""
+    unseen key above its collision mass)."""
     from ..operators.stats import cms_hash_explode
 
     merged = (
-        spark.read.parquet(store_path)
-        .dropDuplicates(["src_batch", "j", "bucket"])
+        BatchStore(store_path)
+        .fold(spark, ["j", "bucket"])
         .groupBy("j", "bucket")
         .agg(F.sum("cell_cnt").alias("cell_cnt"))
     )
@@ -2327,9 +1846,6 @@ def read_cms_estimates(spark: SparkSession, store_path: str, keys: DataFrame) ->
     )
 
 
-# ------------------------------------------------ CUSUM level monitor
-
-
 def run_cusum_sink(
     events: DataFrame,
     store_path: str,
@@ -2338,53 +1854,23 @@ def run_cusum_sink(
 ) -> StreamingQuery:
     """Streaming CUSUM change-point maintenance: every micro-batch
     writes its (event_type, day) PARTIAL moments — exact DECIMAL
-    value-sum and row count — to a batch-scoped partition
-    (``batch=<id>``, overwrite). Daily means are NEVER computed per
+    value-sum and row count. Daily means are NEVER computed per
     batch: a day split across micro-batches must contribute one mean
     computed from the MERGED sum/count, so the stored state is the
-    algebraic partial (the same sufficient-statistics discipline as
-    the sketch MVs), and ``read_cusum_changepoints`` below folds the
+    algebraic partial, and ``read_cusum_changepoints`` below folds the
     partitions and hands the merged daily frame to the SAME
-    ``cusum_from_daily`` tail the batch operator uses — bit-equal by
-    construction, not by tolerance.
-
-    Exactly-once: additive partials cannot be idempotently re-added,
-    so replay safety comes from the batch-scoped overwrite (the
-    run_cms_sink device) — a replayed batch rewrites its own
-    partition to the same bytes. Store size is O(batches x types x
-    days-touched-per-batch) tiny rows; committed partitions fold into
-    generation partitions via ``_compact_partition_store`` once
-    ``compact_every`` accumulate (VERDICT r8 item 5), with the
-    additive-partial provenance discipline: every partial carries its
-    ``src_batch`` id so full-row dedup folds only bit-identical crash
-    copies, and the read side dedups on the provenance key."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, store_path, batch_id, compact_every
-        )
-        partial = (
-            batch_df.groupBy(
-                "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-            )
-            .agg(
-                F.sum(F.round("value", 8).cast("decimal(18,8)")).alias("sv"),
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        partial.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    ``cusum_from_daily`` tail the batch operator uses."""
+    return _run_monitor(
+        events,
+        store_path,
+        checkpoint,
+        compact_every,
+        lambda b: b.groupBy(
+            "event_type", F.date_trunc("day", F.col("ts")).alias("day")
+        ).agg(
+            F.sum(F.round("value", 8).cast("decimal(18,8)")).alias("sv"),
+            F.count(F.lit(1)).alias("cnt"),
+        ),
     )
 
 
@@ -2392,15 +1878,12 @@ def read_cusum_changepoints(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stream-maintained daily partials and run the shared
     batch CUSUM tail: merge = decimal-sum of sums + sum of counts per
     (event_type, day), mean = round(merged_sum/merged_cnt, 8) — the
-    identical expression the batch operator computes from raw rows.
-    Dedups on the ``(src_batch, event_type, day)`` provenance key
-    first (crash-window / concurrent-reader double-count protection —
-    ADVICE r8; read_histogram)."""
+    identical expression the batch operator computes from raw rows."""
     from ..operators.stats import cusum_from_daily
 
     merged = (
-        spark.read.parquet(store_path)
-        .dropDuplicates(["src_batch", "event_type", "day"])
+        BatchStore(store_path)
+        .fold(spark, ["event_type", "day"])
         .groupBy("event_type", "day")
         .agg(F.sum("sv").alias("sv"), F.sum("cnt").alias("cnt"))
         .select(
@@ -2417,9 +1900,6 @@ def read_cusum_changepoints(spark: SparkSession, store_path: str) -> DataFrame:
     return cusum_from_daily(merged)
 
 
-# ------------------------------------------------ PSI drift monitor
-
-
 def run_psi_sink(
     events: DataFrame,
     ref: DataFrame,
@@ -2432,56 +1912,30 @@ def run_psi_sink(
     model's view of the world — exactly the batch operator's
     fit-on-reference-only rule, made explicit by the API), written
     once to ``<store>/ref``; every micro-batch then bins its values
-    against those fences and writes its (bin, n) PARTIAL counts to a
-    batch-scoped overwrite partition under ``<store>/cur``. Bin counts
-    are additive sufficient statistics, so the live current
-    distribution is the fold over batch partitions — the
-    run_cusum_sink discipline applied to the drift family.
+    against those fences and writes its (bin, n) PARTIAL counts to
+    the ``<store>/cur`` store.
 
     ``read_psi_drift`` folds the partitions and hands (bin, nr, nc)
     to the SAME ``psi_from_bin_counts`` tail the batch query uses:
     feeding the sink ref = first half / stream = second half of a
     table reproduces ``stats_psi_drift`` on that table BIT-EQUALLY
-    (pinned in test_streaming). Replay safety: batch-scoped overwrite,
-    never merge-add. The ``cur`` store's committed partitions fold
-    into generation partitions via ``_compact_partition_store`` once
-    ``compact_every`` accumulate (VERDICT r8 item 5), with the
-    additive-partial ``src_batch`` provenance discipline (run_oov_sink
-    docstring); the one-off ``ref`` write never grows."""
+    (pinned in test_streaming). The one-off ``ref`` write never
+    grows."""
     from ..operators.stats import psi_bin_expr, psi_decile_cuts
 
     cuts = psi_decile_cuts(ref.filter(F.col("value").isNotNull()))
-    ref_cnt = (
-        ref.filter(F.col("value").isNotNull())
-        .select(psi_bin_expr(cuts).alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    ref_cnt.coalesce(1).write.mode("overwrite").parquet(f"{store_path}/ref")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, f"{store_path}/cur", batch_id, compact_every
-        )
-        cells = (
-            batch_df.filter(F.col("value").isNotNull())
+    def bin_counts(df: DataFrame) -> DataFrame:
+        return (
+            df.filter(F.col("value").isNotNull())
             .select(psi_bin_expr(cuts).alias("bin"))
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        cells.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/cur/batch={batch_id}"
         )
 
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    bin_counts(ref).coalesce(1).write.mode("overwrite").parquet(f"{store_path}/ref")
+    return _run_monitor(
+        events, f"{store_path}/cur", checkpoint, compact_every, bin_counts
     )
 
 
@@ -2490,10 +1944,7 @@ def read_psi_drift(spark: SparkSession, store_path: str) -> DataFrame:
     reference counts and emit the batch operator's exact output
     columns (shared psi_from_bin_counts tail). Bins seen by only one
     side appear with a zero on the other (full outer + coalesce),
-    matching the batch query's bins-with-any-row semantics. The cur
-    fold dedups on the ``(src_batch, bin)`` provenance key first
-    (crash-window / concurrent-reader double-count protection —
-    ADVICE r8; read_histogram)."""
+    matching the batch query's bins-with-any-row semantics."""
     from ..operators.stats import psi_from_bin_counts
 
     ref_cnt = (
@@ -2502,8 +1953,8 @@ def read_psi_drift(spark: SparkSession, store_path: str) -> DataFrame:
         .agg(F.sum("n").alias("nr"))
     )
     cur_cnt = (
-        spark.read.parquet(f"{store_path}/cur")
-        .dropDuplicates(["src_batch", "bin"])
+        BatchStore(f"{store_path}/cur")
+        .fold(spark, ["bin"])
         .groupBy("bin")
         .agg(F.sum("n").alias("nc"))
     )
@@ -2518,9 +1969,6 @@ def read_psi_drift(spark: SparkSession, store_path: str) -> DataFrame:
     return psi_from_bin_counts(cnt)
 
 
-# -------------------------------------------- k-anonymity release gate
-
-
 def run_kanonymity_sink(
     customers: DataFrame,
     store_path: str,
@@ -2532,42 +1980,19 @@ def run_kanonymity_sink(
     current so a release gate can be checked at any time without
     re-scanning the accumulated corpus. Every micro-batch writes its
     (nationkey, mktsegment, band) PARTIAL counts — the algebraic
-    grain ``kanonymity_band_counts`` defines — to a batch-scoped
-    overwrite partition: counts merge by addition and distinct
-    sensitive bands are rows at the stored grain, so the audit is a
-    pure fold (the run_cusum_sink sufficient-statistics discipline
-    applied to the privacy family).
+    grain ``kanonymity_band_counts`` defines: counts merge by
+    addition and distinct sensitive bands are rows at the stored
+    grain, so the audit is a pure fold.
 
     ``read_kanonymity_audit`` folds the partitions through the SAME
     ``kanonymity_from_band_counts`` tail the batch operator uses —
     streaming a table in any batch slicing reproduces
     ``privacy_k_anonymity`` on that table bit-equally (pinned in
-    test_streaming). Replay safety: batch-scoped overwrite, never
-    merge-add. Store size: O(batches x QI-groups x bands touched per
-    batch); committed partitions fold into generation partitions via
-    ``_compact_partition_store`` once ``compact_every`` accumulate
-    (VERDICT r8 item 5), with the additive-partial ``src_batch``
-    provenance discipline (run_oov_sink docstring)."""
+    test_streaming)."""
     from ..operators.quality import kanonymity_band_counts
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, store_path, batch_id, compact_every
-        )
-        kanonymity_band_counts(batch_df).withColumn(
-            "src_batch", F.lit(batch_id)
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-
-    return (
-        customers.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_monitor(
+        customers, store_path, checkpoint, compact_every, kanonymity_band_counts
     )
 
 
@@ -2575,21 +2000,16 @@ def read_kanonymity_audit(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stream-maintained band-count partials and run the
     shared audit tail: merged cnt per (QI, band), then group_size /
     l_sensitive / threshold flags — identical expressions to the
-    batch query's. Dedups on the full provenance key first
-    (crash-window / concurrent-reader double-count protection —
-    ADVICE r8; read_histogram)."""
+    batch query's."""
     from ..operators.quality import kanonymity_from_band_counts
 
     merged = (
-        spark.read.parquet(store_path)
-        .dropDuplicates(["src_batch", "nationkey", "mktsegment", "band"])
+        BatchStore(store_path)
+        .fold(spark, ["nationkey", "mktsegment", "band"])
         .groupBy("nationkey", "mktsegment", "band")
         .agg(F.sum("cnt").alias("cnt"))
     )
     return kanonymity_from_band_counts(merged)
-
-
-# ---------------------------------------------- OOV drift monitor
 
 
 def run_histogram_sink(
@@ -2600,73 +2020,41 @@ def run_histogram_sink(
 ) -> StreamingQuery:
     """Streaming value-distribution monitor: each micro-batch writes
     its (event_type, bin, n, lo_raw, hi_raw) equi-width histogram
-    PARTIAL to a batch-scoped overwrite partition; ``read_histogram``
-    folds partitions into exactly the batch operator's output
-    (operators/breadth.py agg_histogram_equi_width) — counts add,
-    extrema take min/max, so the fold is bit-equal by construction.
-    The drift use: diff today's folded histogram against a reference
-    release to see value-distribution shift at bin grain (the PSI
-    sink's sibling with the raw distribution retained, not just the
-    divergence scalar).
-
-    Exactly-once and growth: the OOV sink's devices verbatim —
-    batch-scoped overwrite partitions for replay safety, additive
-    partials carrying their ``src_batch`` provenance id, and
-    generation compaction via ``_compact_partition_store`` dedup-ing
-    on (src_batch, event_type, bin)."""
+    PARTIAL; ``read_histogram`` folds partitions into exactly the
+    batch operator's output (operators/breadth.py
+    agg_histogram_equi_width) — counts add, extrema take min/max, so
+    the fold is bit-equal by construction. The drift use: diff
+    today's folded histogram against a reference release to see
+    value-distribution shift at bin grain (the PSI sink's sibling
+    with the raw distribution retained, not just the divergence
+    scalar)."""
     from ..operators.breadth import HIST_HI, HIST_LO, N_HIST_BINS
 
     width = (HIST_HI - HIST_LO) / N_HIST_BINS
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _compact_partition_store(spark, store_path, batch_id, compact_every)
-        bin_ = F.least(
-            F.floor((F.col("value") - HIST_LO) / width),
-            F.lit(N_HIST_BINS - 1),
-        ).cast("int")
-        partial = (
-            batch_df.groupBy("event_type", bin_.alias("bin"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("value").alias("lo_raw"),
-                F.max("value").alias("hi_raw"),
-            )
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        partial.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch={batch_id}"
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    bin_ = F.least(
+        F.floor((F.col("value") - HIST_LO) / width),
+        F.lit(N_HIST_BINS - 1),
+    ).cast("int")
+    return _run_monitor(
+        events,
+        store_path,
+        checkpoint,
+        compact_every,
+        lambda b: b.groupBy("event_type", bin_.alias("bin")).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("value").alias("lo_raw"),
+            F.max("value").alias("hi_raw"),
+        ),
     )
 
 
 def read_histogram(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stream-maintained histogram partials to the batch
     operator's exact output: counts sum, extrema min/max, THEN the
-    round(4) — rounding per-partial first would break bit-equality.
-
-    The fold first dedups on the ``(src_batch, event_type, bin)``
-    provenance key, mirroring the compactor: between the generation
-    write (``_SUCCESS`` sealed) and the source-directory delete —
-    i.e. after a crash in that window, or for any concurrent reader
-    during compaction — the same partial exists in BOTH the
-    generation and its original batch partition, and an undeduped sum
-    would double-count n until the next compaction healed the store
-    (ADVICE r8). The key (not the full row) is required here because
-    this read is from the store ROOT, where partition discovery adds
-    a ``batch`` column that DIFFERS between the two copies."""
+    round(4) — rounding per-partial first would break bit-equality."""
     return (
-        spark.read.parquet(store_path)
-        .dropDuplicates(["src_batch", "event_type", "bin"])
+        BatchStore(store_path)
+        .fold(spark, ["event_type", "bin"])
         .groupBy("event_type", "bin")
         .agg(
             F.sum("n").alias("n"),
@@ -2688,27 +2076,12 @@ def run_oov_sink(
     tokenizer's world view — the run_psi_sink fit-on-reference rule
     applied to text), written once to ``<store>/vocab``; every
     micro-batch of incoming documents then writes its (in_vocab,
-    token_count) PARTIAL sums to a batch-scoped overwrite partition.
-    Token counts are additive sufficient statistics, so the live OOV
-    rate is a pure fold — when it climbs, the fixed tokenizer is
-    shredding fresh text into bytes and the vocab (or the upstream
-    filter) needs attention.
-
-    ``read_oov_rate`` folds the partitions into the corpus-level
-    (n_tokens, n_oov, oov_rate); replay safety is the batch-scoped
-    overwrite (never merge-add). Store: O(batches) two-long rows —
-    but the measured growth term was the PARTITION count (file
-    listing + per-partition scan, ~6 ms/batch, crossover ~150-200
-    batches — SCALE.md), so committed partitions fold into generation
-    partitions via ``_compact_partition_store`` once ``compact_every``
-    accumulate. Because the partials are ADDITIVE, a bare sum can't
-    heal a crash between generation write and source delete (two
-    equal partials may be legitimate); every partial therefore
-    carries its ``src_batch`` id, compaction's full-row dedup folds
-    crash copies (src_batch included in the row), and the READ fold
-    (``read_oov_rate``) dedups on the provenance key too — so the
-    monitor is double-count-proof at every crash point AND for
-    concurrent readers mid-compaction (ADVICE r8)."""
+    token_count) PARTIAL sums to the ``<store>/cur`` store. Token
+    counts are additive sufficient statistics, so the live OOV rate
+    is a pure fold — when it climbs, the fixed tokenizer is shredding
+    fresh text into bytes and the vocab (or the upstream filter)
+    needs attention. ``read_oov_rate`` folds the partitions into the
+    corpus-level (n_tokens, n_oov, oov_rate)."""
     from ..operators.text import OOV_VOCAB_K
     from ..functions.text import tokens as _tokens
 
@@ -2722,45 +2095,28 @@ def run_oov_sink(
     )
     vocab.coalesce(1).write.mode("overwrite").parquet(f"{store_path}/vocab")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _compact_partition_store(
-            spark, f"{store_path}/cur", batch_id, compact_every
-        )
-        v = spark.read.parquet(f"{store_path}/vocab").withColumn(
+    def token_counts(batch_df: DataFrame) -> DataFrame:
+        v = batch_df.sparkSession.read.parquet(f"{store_path}/vocab").withColumn(
             "in_vocab", F.lit(True)
         )
         toks = batch_df.select(F.explode(_tokens(F.col("text"))).alias("w"))
-        partial = toks.join(F.broadcast(v), "w", "left").agg(
+        return toks.join(F.broadcast(v), "w", "left").agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0)).alias("n_oov"),
         )
-        partial.withColumn("src_batch", F.lit(batch_id)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/cur/batch={batch_id}")
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_monitor(
+        docs, f"{store_path}/cur", checkpoint, compact_every, token_counts
     )
 
 
 def read_oov_rate(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the stream-maintained token partials into the corpus OOV
     rate — same n_oov/n_tokens expression as the batch operator's
-    per-doc column, at corpus grain.
-
-    Dedups on the ``src_batch`` provenance key before summing, for
-    the same crash-window / concurrent-reader double-count reason as
-    ``read_histogram`` (ADVICE r8)."""
+    per-doc column, at corpus grain."""
     return (
-        spark.read.parquet(f"{store_path}/cur")
-        .dropDuplicates(["src_batch"])
+        BatchStore(f"{store_path}/cur")
+        .fold(spark, [])
         .agg(F.sum("n_tokens").alias("n_tokens"), F.sum("n_oov").alias("n_oov"))
         .select(
             F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -2784,9 +2140,6 @@ def error_rate_wilson_stream(
     return wilson_error_rate_agg(events.withWatermark("ts", watermark))
 
 
-# ------------------------------------------- sequential SPRT monitor
-
-
 def run_sprt_sink(
     events: DataFrame,
     store_path: str,
@@ -2794,53 +2147,27 @@ def run_sprt_sink(
     compact_every: int = DEDUP_INGEST_COMPACT_EVERY,
 ) -> StreamingQuery:
     """Streaming sequential-test monitor: every micro-batch folds its
-    events to per-day (trials, successes) PARTIALS — additive
-    sufficient statistics, the run_psi_sink discipline — and writes
-    them to a batch-scoped overwrite partition. The cumulative LLR
-    and Wald decision are computed at READ time by the same
-    ``sprt_from_day_counts`` tail the batch query uses
-    (breadth7f.py), so the monitor's view of the experiment is
-    bit-equal to the batch replay by construction. Replay safety:
-    batch-scoped overwrite, never merge-add. The ``days`` store's
-    committed partitions fold into generation partitions via
-    ``_compact_partition_store`` once ``compact_every`` accumulate
-    (VERDICT r8 item 5), with the additive-partial ``src_batch``
-    provenance discipline (run_oov_sink docstring)."""
+    events to per-day (trials, successes) PARTIALS in the
+    ``<store>/days`` store. The cumulative LLR and Wald decision are
+    computed at READ time by the same ``sprt_from_day_counts`` tail
+    the batch query uses (breadth7f.py), so the monitor's view of the
+    experiment is bit-equal to the batch replay by construction."""
     from ..operators.breadth7f import sprt_day_counts
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _compact_partition_store(
-            batch_df.sparkSession, f"{store_path}/days", batch_id, compact_every
-        )
-        sprt_day_counts(batch_df).withColumn(
-            "src_batch", F.lit(batch_id)
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/days/batch={batch_id}"
-        )
-
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_monitor(
+        events, f"{store_path}/days", checkpoint, compact_every, sprt_day_counts
     )
 
 
 def read_sprt_decision(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the per-batch day partials and hand the totals to the
     SAME SPRT tail the batch query uses — identical output columns,
-    bit-equal to ``ab_sequential_sprt`` over the same events. Dedups
-    on the ``(src_batch, day)`` provenance key first (crash-window /
-    concurrent-reader double-count protection — ADVICE r8;
-    read_histogram)."""
+    bit-equal to ``ab_sequential_sprt`` over the same events."""
     from ..operators.breadth7f import sprt_from_day_counts
 
     days = (
-        spark.read.parquet(f"{store_path}/days")
-        .dropDuplicates(["src_batch", "day"])
+        BatchStore(f"{store_path}/days")
+        .fold(spark, ["day"])
         .groupBy("day")
         .agg(
             F.sum("trials").alias("trials"),

@@ -35,8 +35,6 @@ _SLOW_NODEIDS = frozenset(
         "test_cli.py::test_pipeline_subcommand_runs_manifest",
         "test_graph_cluster.py::test_fast_cc_path_graph_round_divergence",
         "test_headroom_gate.py::test_every_oracle_has_rounding_headroom",
-        "test_nonvacuous.py::test_oracle_nonvacuous_at_driver_scale"
-        "[stream_ingest_pipeline_parity]",
         "test_oracle_parity.py::test_parity[stream_ingest_pipeline_parity]",
         "test_properties.py::test_binned_range_join_equals_nested_loop",
         "test_properties.py::test_merge_upsert_equals_dict_union",
@@ -63,7 +61,6 @@ _SLOW_NODEIDS = frozenset(
         "test_streaming.py::test_dedup_ingest_sink_drops_store_dups_and_grows_store",
         "test_streaming.py::test_foreachbatch_upsert_idempotent",
         "test_streaming.py::test_media_phash_ingest_compaction_matches_uncompacted",
-        "test_streaming.py::test_media_phash_ingest_dedups_across_batches_and_replays_exactly",
         "test_streaming.py::test_monitor_sinks_compaction_preserves_reads",
         "test_streaming.py::test_phash_ingest_reprocess_after_compaction_no_self_drop",
         "test_streaming.py::test_scoped_upsert_sink_touches_only_batch_partitions",
@@ -75,7 +72,6 @@ _SLOW_NODEIDS = frozenset(
         "test_streaming.py::test_streaming_csv_ingest_preserves_micros_and_batches",
         "test_streaming.py::test_upsert_sink_no_data_loss_across_batches",
         "test_streaming.py::test_url_ingest_shared_checkpoint_restart_and_post_fold_dedup",
-        "test_streaming.py::test_url_ingest_sink_dedups_blocks_and_replays",
         "test_streaming.py::test_watermark_drops_late_rows",
     )
 )

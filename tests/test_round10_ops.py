@@ -159,10 +159,8 @@ def test_semantic_ingest_replay_after_compaction_no_self_drop(spark, tmp_path):
     the corpus partition EMPTY (round-10 review catch). Vectors here
     live in distinct clusters with no cross matches, so the replay
     must reproduce the batch exactly."""
-    from pitlapetl_spark.streaming.runtime import (
-        _compact_partition_store,
-        _semantic_ingest_batch,
-    )
+    from pitlapetl_spark.streaming.runtime import _semantic_ingest_batch
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     schema = "vec_id long, embedding array<float>, label int"
     rows0 = [(0, [1.0, 0.0, 0.0, 0.0], 0)]

@@ -21,11 +21,8 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from pitlapetl_spark.streaming.runtime import (
-    _QUANTIZER_DIR,
-    _quantizer_versions,
-    _semantic_ingest_batch,
-)
+from pitlapetl_spark.streaming.runtime import _semantic_ingest_batch
+from pitlapetl_spark.streaming.store import _QUANTIZER_DIR, _quantizer_versions
 
 EMB = "vec_id long, embedding array<float>, label int"
 DIM = 8
@@ -268,7 +265,7 @@ def test_streaming_requant_with_checkpoint_restart(spark, tmp_path):
     assert verdicts[40] is False and verdicts[41] is False
 
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 
@@ -281,6 +278,9 @@ from hypothesis import strategies as st
 @settings(
     max_examples=4, deadline=None, suppress_health_check=list(HealthCheck)
 )
+# plants (106 <- 3), (5 <- 4), (3 <- 1): the third would overwrite the
+# source of the first, leaving 106 a copy of nothing
+@example(seed=11761, n_batches=3, vecs_per_batch=7, n_dups=3)
 def test_requant_verdicts_sound_and_exact_dups_complete(
     spark, seed, n_batches, vecs_per_batch, n_dups
 ):
@@ -309,15 +309,21 @@ def test_requant_verdicts_sound_and_exact_dups_complete(
             while sum(x * x for x in v) < 1e-3:
                 v = [rng.uniform(-1.0, 1.0) for _ in range(dim)]
             pos.append((b * 100 + i, v))
-    # plant exact copies of earlier vectors at later positions
-    planted = set()
+    # plant exact copies of earlier vectors at later positions; a
+    # plant may not overwrite an earlier plant's source, or that
+    # plant would stop being a copy
+    planted, sources = set(), set()
     for _ in range(n_dups):
         j = rng.randrange(1, len(pos))
         i = rng.randrange(0, j)
-        if pos[j][0] in planted or pos[i][0] in planted:
+        if pos[j][0] in planted | sources or pos[i][0] in planted:
             continue
         pos[j] = (pos[j][0], list(pos[i][1]))
         planted.add(pos[j][0])
+        sources.add(pos[i][0])
+    for j, (vid, v) in enumerate(pos):
+        if vid in planted:
+            assert any(pos[i][1] == v for i in range(j)), vid
 
     d = tempfile.mkdtemp(prefix="pitlap_requant_prop_")
     ingest = _semantic_ingest_batch(

@@ -1622,7 +1622,7 @@ def test_compact_partition_store_heals_crash_leftovers(spark, tmp_path):
     duplicating rows."""
     import os
 
-    from pitlapetl_spark.streaming.runtime import _compact_partition_store
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     root = str(tmp_path / "store")
 
@@ -1743,7 +1743,7 @@ def test_oov_sink_compaction_preserves_fold_and_provenance(spark, tmp_path):
     # compaction, or any read before the next compaction heals the
     # store, sees both copies
     assert fold("store_c") == before
-    from pitlapetl_spark.streaming.runtime import _compact_partition_store
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     _compact_partition_store(spark, f"{tmp_path}/store_c/cur", 10**6, 1)
     assert fold("store_c") == before
@@ -1969,10 +1969,10 @@ def test_dedup_ingest_reprocess_after_compaction_no_self_drop(spark, tmp_path):
 
     from pitlapetl_spark.sources import load_table
     from pitlapetl_spark.streaming.runtime import (
-        _compact_partition_store,
         read_documents_stream,
         run_dedup_ingest_sink,
     )
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     base = load_table(spark, SF_SMOKE, "documents").limit(12).collect()
     b0 = [(r.doc_id, r.text, r.lang, r.source, r.n_chars) for r in base[:6]]
@@ -2027,10 +2027,10 @@ def test_phash_ingest_reprocess_after_compaction_no_self_drop(spark, tmp_path):
 
     from pitlapetl_spark.sources import load_table
     from pitlapetl_spark.streaming.runtime import (
-        _compact_partition_store,
         read_documents_stream,
         run_media_phash_ingest_sink,
     )
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     base = load_table(spark, SF_SMOKE, "documents").limit(12).collect()
     b0 = [(r.doc_id, r.text, r.lang, r.source, r.n_chars) for r in base[:6]]
@@ -2082,10 +2082,10 @@ def test_semantic_ingest_full_reprocess_after_fold_is_exact(spark, tmp_path):
 
     from pitlapetl_spark.sources import EMBEDDINGS
     from pitlapetl_spark.streaming.runtime import (
-        _compact_partition_store,
         read_embeddings_stream,
         run_semantic_ingest_sink,
     )
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     cent = spark.createDataFrame(
         [(0, [1.0, 1.0], 2.0**0.5)], "label int, cv array<double>, cnrm double"
@@ -2148,10 +2148,8 @@ def test_url_ingest_sink_dedups_blocks_and_replays(spark, tmp_path):
     import os
     import time
 
-    from pitlapetl_spark.streaming.runtime import (
-        _compact_partition_store,
-        run_url_ingest_sink,
-    )
+    from pitlapetl_spark.streaming.runtime import run_url_ingest_sink
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     b0 = [
         (1, "https://src0.example.com/a?utm_source=x&q=1"),
@@ -2224,10 +2222,8 @@ def test_span_dedup_ingest_cuts_across_batches_and_replays(spark, tmp_path):
     import os
     import time
 
-    from pitlapetl_spark.streaming.runtime import (
-        _compact_partition_store,
-        run_span_dedup_ingest_sink,
-    )
+    from pitlapetl_spark.streaming.runtime import run_span_dedup_ingest_sink
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     phrase = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     b0 = [
@@ -2336,7 +2332,7 @@ def test_cached_schema_read_does_not_freeze_a_legacy_schema(spark, tmp_path):
     generation rows."""
     import shutil
 
-    from pitlapetl_spark.streaming.runtime import _cached_schema_read, _with_src_batch
+    from pitlapetl_spark.streaming.store import _cached_schema_read, _with_src_batch
 
     store = str(tmp_path / "store")
     spark.createDataFrame([(1, "a")], "doc_id long, url string").write.parquet(
@@ -2362,7 +2358,7 @@ def test_with_src_batch_stamps_null_for_legacy_generations(spark):
     ``src_batch < current`` probe filter and re-admits a replayed
     batch's own folded rows (the self-match-to-empty bug the
     provenance column exists to close)."""
-    from pitlapetl_spark.streaming.runtime import _with_src_batch
+    from pitlapetl_spark.streaming.store import _with_src_batch
 
     df = spark.createDataFrame(
         [(1, 0), (2, 3), (3, -1), (4, -2)], "doc_id long, batch int"
@@ -2378,6 +2374,51 @@ def test_with_src_batch_stamps_null_for_legacy_generations(spark):
     assert _with_src_batch(stamped) is stamped
 
 
+def test_store_earlier_admits_only_earlier_rows(spark, tmp_path):
+    """BatchStore.earlier is the probe contract of every ingest sink
+    (store.py): from a generation holding rows of the current, an
+    earlier and a later batch plus a legacy row of unknown origin,
+    only the earlier row comes back, and the unknown one only where
+    the store admits it. Positive partitions at or after the batch are
+    pruned by the partition filter alone: their rows claim an earlier
+    origin, so the row filter would keep them. A partition stamped by
+    the store's own write and a legacy one without ``src_batch`` read
+    back as one INT column."""
+    from pitlapetl_spark.streaming.store import BatchStore, write
+
+    root, b = str(tmp_path / "store"), 5
+    schema = "doc_id long, src_batch int"
+    spark.createDataFrame(
+        [(1, b), (2, b - 1), (3, b + 1), (4, None)], schema
+    ).write.parquet(f"{root}/batch=-1")
+    for part, doc in ((b - 1, 5), (b, 6), (b + 1, 7)):
+        spark.createDataFrame([(doc, 0)], schema).write.parquet(
+            f"{root}/batch={part}"
+        )
+
+    def ids(store):
+        return sorted(r.doc_id for r in store.earlier(spark, b).collect())
+
+    assert ids(BatchStore(root, admit_unknown=True)) == [2, 4, 5]
+    assert ids(BatchStore(root)) == [2, 5]
+    plan = (
+        BatchStore(root).earlier(spark, b)._jdf.queryExecution()
+        .executedPlan().toString()
+    )
+    assert "PartitionFilters: [isnotnull(batch" in plan and f"< {b})" in plan
+    assert BatchStore(str(tmp_path / "absent")).earlier(spark, b) is None
+
+    mixed = BatchStore(str(tmp_path / "mixed"), admit_unknown=True)
+    spark.createDataFrame([(2,)], "doc_id long").write.parquet(
+        f"{mixed.root}/batch=-1"
+    )
+    assert dict(mixed.earlier(spark, 1).dtypes)["src_batch"] == "int"
+    write(0, (mixed, spark.createDataFrame([(1,)], "doc_id long")))
+    got = mixed.earlier(spark, 1)
+    assert dict(got.dtypes)["src_batch"] == "int"
+    assert {r.doc_id: r.src_batch for r in got.collect()} == {1: 0, 2: None}
+
+
 def test_ingest_reprocess_against_legacy_compacted_store(spark, tmp_path):
     """Fresh-checkpoint reprocess against a PRE-PROVENANCE compacted
     store (ADVICE r11 medium): the generation partition holds the
@@ -2391,10 +2432,8 @@ def test_ingest_reprocess_against_legacy_compacted_store(spark, tmp_path):
     inexactness cannot fire and the assertion is exact)."""
     import os
 
-    from pitlapetl_spark.streaming.runtime import (
-        _compact_partition_store,
-        _semantic_ingest_batch,
-    )
+    from pitlapetl_spark.streaming.runtime import _semantic_ingest_batch
+    from pitlapetl_spark.streaming.store import _compact_partition_store
 
     cent = spark.createDataFrame(
         [(0, [1.0, 1.0], 2.0**0.5)], "label int, cv array<double>, cnrm double"

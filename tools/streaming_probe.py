@@ -530,7 +530,7 @@ def probe_pipeline_ingest(
                 ("sem_corpus", e_corp),
             )
         }
-        from pitlapetl_spark.streaming.runtime import _quantizer_versions
+        from pitlapetl_spark.streaming.store import _quantizer_versions
 
         qv = _quantizer_versions(f"{tmp}/es")
         counts["sem_quantizer_k"] = (
@@ -574,10 +574,8 @@ def probe_semantic_mass(
     generator — arithmetic ramps make near-parallel vectors and
     degenerate cluster geometry). Reports final store rows and
     quantizer K so the claim is measured, not assumed."""
-    from pitlapetl_spark.streaming.runtime import (
-        _quantizer_versions,
-        _semantic_ingest_batch,
-    )
+    from pitlapetl_spark.streaming.runtime import _semantic_ingest_batch
+    from pitlapetl_spark.streaming.store import _quantizer_versions
 
     cent = spark.createDataFrame(
         [
