@@ -544,9 +544,14 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     other_lines = l.select(
         F.col("l_orderkey").alias("x_orderkey"), F.col("l_suppkey").alias("x_suppkey")
     )
+    # The checkpoint carries no size, so the anti join is planned as a
+    # sort-merge join. Left to AQE, it becomes a broadcast at run time,
+    # and the converted plan (and so its generated code) depends on
+    # which of the concurrently running stages finished first. The
+    # hint keeps the scale-safe plan on every run.
     other_late = late.select(
         F.col("l_orderkey").alias("y_orderkey"), F.col("l_suppkey").alias("y_suppkey")
-    )
+    ).hint("merge")
     sole_late = (
         late.join(
             other_lines,

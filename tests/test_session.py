@@ -12,20 +12,13 @@ from tests.conftest import REPO, SF_SMOKE
 load_all()
 
 
-# its plan, and so its generated code, is not the same on every run: it
-# compiles 4-6 new classes on some passes at any cap (an open item in
-# ROADMAP), which would make a zero-compilation guard flaky
-_VARYING_PLANS = {"q21_suppliers_kept_waiting"}
-
-
 def _working_set() -> list[str]:
     """The seven runner jobs plus the benchmark's star-schema queries:
     one tick and one query pass, the plans every recurring cycle
     re-runs."""
     spec = json.loads((REPO / "perfbench" / "spec.json").read_text())
     star = spec["workloads"]["warehouse_mix"]["operations"]
-    names = dict.fromkeys([s.query for s in JOB_MANIFEST] + star)
-    return [n for n in names if n not in _VARYING_PLANS]
+    return list(dict.fromkeys([s.query for s in JOB_MANIFEST] + star))
 
 
 def _compilations(spark) -> int:
