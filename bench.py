@@ -1,6 +1,8 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Legacy headline benchmark: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line the driver records as BENCH_r{N}.json:
+The project's benchmark is ``perfbench/`` (``BENCHMARK.json``); this
+script is kept so the ``BENCH_*.json`` history stays reproducible.
+It writes the result to BENCH_FULL.json and prints it as one JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is timed end-to-end (plan + execute) and materialized with
@@ -256,65 +258,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
     }
-    # The complete per-query map always lands in BENCH_FULL.json at
-    # the repo root (committed per round) — the round-over-round
-    # regression triage reads THIS file, never the driver tail.
     Path(_REPO, "BENCH_FULL.json").write_text(json.dumps(result, indent=1))
-    print(_driver_line(result))
-
-
-# --------------------------------------------------------- --verify
-# The same-session bimodality (SCALE.md round-9 note: four clean-
-# start runs on one host spread 70.5-93.2 s, regressions scattered
-# across UNTOUCHED queries) makes any single bench number ±30%
-# ambiguous. --verify turns each round's manual triage session into
-# an artifact: re-time ONLY the queries whose fresh min-of-3 deviates
-# more than VERIFY_TOL from the committed clean-host reference
-# (BENCH_CLEAN.json — preserved as its own file so driver runs can't
-# clobber it via BENCH_FULL.json), re-run those with min-of-5 (the
-# triage protocol), and print one verdict line per query plus a JSON
-# summary (BENCH_VERIFY.json). Verdicts:
-#   ok          — fresh min within tolerance of the clean reference
-#   load        — first pass deviated but the min-of-5 re-run returns
-#                 inside tolerance (co-tenant noise, the common case)
-#   persistent  — min-of-5 still deviates: data-mass or plan change;
-#                 triage by diffing fixture constants (SCALE.md) and
-#                 .explain before touching any plan
-#   new         — query absent from the clean reference
-
-VERIFY_TOL = 0.20
-_VERIFY_RERUNS = 5
-_ABS_FLOOR = 0.15  # sub-150ms deltas are scheduler noise, never real
-
-# The session shift is estimated from this PINNED CANARY set only:
-# headline queries whose operator code has been untouched since the
-# early rounds (scan+agg, broadcast join, window, nested assembly,
-# as-of, top-k, warehouse classics). A real regression introduced by
-# a recent round — even one in a shared helper — cannot move these,
-# so it can no longer inflate the median and excuse itself (ADVICE
-# r10: with the shift taken over the whole headline, a regression
-# touching >= half the suite normalized itself away). Names must
-# stay in HEADLINE and in BENCH_CLEAN.json; missing ones are skipped.
-_SHIFT_CANARIES = (
-    "flagship_top_value_per_user",
-    "agg_pricing_summary",
-    "join_broadcast_lookup",
-    "window_standings_rank",
-    "json_doc_assembly",
-    "asof_join_last_order",
-    "topk_global",
-    "q3_shipping_priority",
-    "q6_forecast_revenue",
-    "market_basket_pairs",
-)
-
-# If even the canaries read above this, the session is either under
-# pathological co-tenant load or a change broke something the canaries
-# share (session config, the harness itself) — the tool cannot tell
-# which, so it refuses to normalize (shift falls back to 1.0), flags
-# the session unverifiable in the JSON, and every verdict from such a
-# run means "re-run on a quiet host", not "regression confirmed".
-_SHIFT_BOUND = 1.3
+    print(json.dumps(result))
 
 
 def _time_query(spark, fn, runs: int) -> float:
@@ -326,244 +271,5 @@ def _time_query(spark, fn, runs: int) -> float:
     return round(best, 3)
 
 
-def _session_shift(
-    first: dict[str, float], clean: dict[str, float]
-) -> tuple[float, float, bool, int]:
-    """Estimate the session shift from the pinned canaries: returns
-    (measured_shift, judging_shift, unverifiable, n_canaries).
-    measured = median first/clean over _SHIFT_CANARIES present in
-    both maps, clamped >= 1 (a fast session never excuses a
-    slowdown). judging = measured unless it exceeds _SHIFT_BOUND —
-    then normalization is refused (judging = 1.0) and the session is
-    flagged unverifiable. Pure so the triage-critical arithmetic is
-    unit-testable without a SparkSession (tests/test_bench_verify)."""
-    ratios = sorted(
-        first[n] / clean[n]
-        for n in _SHIFT_CANARIES
-        if n in first and clean.get(n)
-    )
-    measured = max(ratios[len(ratios) // 2] if ratios else 1.0, 1.0)
-    unverifiable = measured > _SHIFT_BOUND
-    return measured, (1.0 if unverifiable else measured), unverifiable, len(
-        ratios
-    )
-
-
-def verify() -> None:
-    clean_path = Path(_REPO, "BENCH_CLEAN.json")
-    clean = json.loads(clean_path.read_text())["queries"]
-    registry.load_all()
-    spark = get_spark(
-        app_name="pitlapetl_bench_verify",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    queries = registry.all_queries()
-
-    # PASS 1: min-of-3 for every headline query. Before judging
-    # anything, estimate the SESSION SHIFT — the median of t3/ref
-    # across all referenced queries. The clean reference is a
-    # cross-run per-query MIN, so a session in the documented slow
-    # mode (SCALE.md bimodality note: regressions scattered across
-    # UNTOUCHED queries, the co-tenant fingerprint loadavg cannot
-    # see) reads uniformly ~1.1-1.3x over it; judging raw deviations
-    # would then flag dozens of false 'persistent' verdicts. Each
-    # query is instead judged against ref * shift — only deviation
-    # BEYOND the session's global inflation counts.
-    first: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = queries.get(name)
-        if fn is not None:
-            first[name] = _time_query(spark, fn, 3)
-    # judging shift: the measured value, unless the session is
-    # unverifiable — then normalization is refused (judge raw) but
-    # the MEASURED value still goes to the JSON so triage can see
-    # whether the host read x1.31 or x5.0
-    measured_shift, shift, unverifiable, n_canaries = _session_shift(
-        first, clean
-    )
-    if unverifiable:
-        print(
-            f"UNVERIFIABLE SESSION: canary shift x{measured_shift:.3f} "
-            f"exceeds the x{_SHIFT_BOUND} bound — normalization "
-            "refused; verdicts below are judged raw and mean 're-run "
-            "on a quiet host', not 'regression confirmed'"
-        )
-    print(
-        f"session shift vs clean-min reference: x{measured_shift:.3f} "
-        f"(median over {n_canaries} canaries; judging with x{shift:.3f})"
-    )
-
-    # PASS 2: min-of-5 re-runs for the shift-adjusted deviants
-    verdicts: dict[str, dict] = {}
-    for name, t3 in first.items():
-        ref = clean.get(name)
-        # `not ref` (not `is None`): timings round to 3 dp, so a
-        # sub-0.5ms clean entry stores 0.0 — judging against it would
-        # divide by zero; treat it like a missing reference, matching
-        # pass 1's truthiness check (ADVICE r10)
-        if not ref:
-            verdicts[name] = {"verdict": "new", "min3": t3}
-            print(f"{name}: new ({t3}s, no clean reference)")
-            continue
-        adj = ref * shift
-        dev = (t3 - adj) / adj
-        if abs(t3 - adj) <= _ABS_FLOOR or abs(dev) <= VERIFY_TOL:
-            verdicts[name] = {"verdict": "ok", "min3": t3, "clean": ref}
-            continue
-        t5 = _time_query(spark, queries[name], _VERIFY_RERUNS)
-        dev5 = (t5 - adj) / adj
-        verdict = (
-            "load"
-            if (abs(t5 - adj) <= _ABS_FLOOR or abs(dev5) <= VERIFY_TOL)
-            else "persistent"
-        )
-        verdicts[name] = {
-            "verdict": verdict,
-            "min3": t3,
-            "min5": t5,
-            "clean": ref,
-            "dev": round(dev5, 3),
-        }
-        print(
-            f"{name}: {verdict} (clean {ref}s, shift-adj {adj:.3f}s, "
-            f"min3 {t3}s, min5 {t5}s, dev {dev5:+.0%})"
-        )
-    summary = {
-        "session_shift": round(measured_shift, 3),
-        "judging_shift": round(shift, 3),
-        "shift_canaries": n_canaries,
-        "unverifiable": unverifiable,
-        "metric": "bench_verify",
-        "tolerance": VERIFY_TOL,
-        "reference": "BENCH_CLEAN.json",
-        "n_ok": sum(1 for v in verdicts.values() if v["verdict"] == "ok"),
-        "n_load": sum(1 for v in verdicts.values() if v["verdict"] == "load"),
-        "n_persistent": sum(
-            1 for v in verdicts.values() if v["verdict"] == "persistent"
-        ),
-        "n_new": sum(1 for v in verdicts.values() if v["verdict"] == "new"),
-        "queries": {
-            n: v for n, v in verdicts.items() if v["verdict"] != "ok"
-        },
-        # the full pass-1 min-of-3 map: the BENCH_CLEAN fold protocol
-        # (SCALE.md) takes per-query MINs across clean-host runs, and
-        # without this the ok-verdict timings were discarded
-        "min3": first,
-    }
-    Path(_REPO, "BENCH_VERIFY.json").write_text(json.dumps(summary, indent=1))
-    # the driver captures only the LAST ~2000 chars of stdout (the
-    # _driver_line note below) — on a loaded host MANY queries
-    # deviate and the full per-query map outgrows the window, so cap
-    # the printed map at the worst offenders by |dev| (new queries
-    # first: they have no reference at all); BENCH_VERIFY.json keeps
-    # everything
-    line = dict(summary)
-    line.pop("min3", None)  # file-only; never fits the driver window
-    worst = sorted(
-        summary["queries"],
-        key=lambda n: abs(summary["queries"][n].get("dev", float("inf"))),
-        reverse=True,
-    )
-    for keep in range(len(worst), -1, -1):
-        line["queries"] = {n: summary["queries"][n] for n in worst[:keep]}
-        line["queries_omitted"] = len(worst) - keep
-        if len(json.dumps(line)) <= _DRIVER_LINE_BUDGET:
-            break
-    print(json.dumps(line))
-
-
-# The external driver records only the LAST ~2000 characters of
-# stdout and json-parses the final line (BENCH_r07.json came back
-# ``"parsed": null`` when the 67-query map outgrew that window, losing
-# the round's machine-readable totals — VERDICT r7 "What's wrong" #1).
-# The window is EXACTLY 2000 chars (the "tail" fields of
-# BENCH_r10/r11/r12.json all measure 2000), and the JSON line is the
-# last thing printed, so a line up to ~budget bytes survives whole.
-#
-# Round-13 fix (VERDICT r12 "What's wrong" #2): the old trim dropped
-# the CHEAPEST entries, so a query that got FASTER round-over-round
-# fell out of the printed map and the driver mislabeled it
-# "dropped_from_bench" (4 such artifacts in PERF_r12.json). Literal
-# loss-free name presence cannot fit: the 82 headline names alone sum
-# to ~1.83 KB, so names + JSON framing exceed the 2000-char window
-# with ZERO per-query values (~2.02 KB) — arithmetic in
-# OPTIMIZATION_r13.md. The closest achievable contract, implemented
-# here:
-#   1. entries already in the PREVIOUS driver round's parsed map
-#      (committed BENCH_r<N>.json, highest N) are PROTECTED — they
-#      never fall out, so round-over-round presence is loss-free and
-#      "dropped_from_bench" can only mean an actual drop;
-#   2. remaining slots go to the costliest entries (regression
-#      triage reads the heavy tail), values compacted to 2 decimals
-#      to fit more of them;
-#   3. the omitted remainder is declared by count, by residual
-#      seconds, and by an 8-hex md5 of the comma-joined sorted
-#      omitted names — verifiable against the committed
-#      BENCH_FULL.json full map (same commit), so omission is
-#      auditable even though the names themselves cannot fit.
-_DRIVER_LINE_BUDGET = 1960  # bytes; capture window measured at 2000
-
-
-def _prev_driver_names(repo: str = _REPO) -> set[str]:
-    """Query names the most recent driver bench round actually parsed
-    (``BENCH_r<N>.json["parsed"]["queries"]``, highest N committed).
-    These are protected from the driver-line trim: a name the driver
-    saw last round must never vanish from the printed map merely
-    because the query got cheaper."""
-    import re
-
-    best, names = -1, set()
-    for p in Path(repo).glob("BENCH_r*.json"):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", p.name)
-        if not m:
-            continue
-        try:
-            parsed = json.loads(p.read_text()).get("parsed") or {}
-        except (OSError, ValueError):
-            continue
-        qmap = parsed.get("queries") or {}
-        if qmap and int(m.group(1)) > best:
-            best, names = int(m.group(1)), set(qmap)
-    return names
-
-
-def _driver_line(result: dict, budget: int = _DRIVER_LINE_BUDGET) -> str:
-    line = json.dumps(result)
-    if len(line) <= budget:
-        return line
-    import hashlib
-
-    timings = result["queries"]
-    protected = _prev_driver_names() & set(timings)
-    order = sorted(
-        timings, key=lambda n: (n not in protected, -timings[n], n)
-    )
-    for keep in range(len(order) - 1, 0, -1):
-        kept = {n: round(timings[n], 2) for n in order[:keep]}
-        omitted = sorted(order[keep:])
-        trimmed = dict(result)
-        trimmed["queries"] = kept
-        trimmed["queries_omitted"] = len(omitted)
-        # the residual against the exact total, so kept + omitted_sec
-        # reconciles to "value" despite the 2-decimal compaction
-        trimmed["omitted_sec"] = round(
-            result["value"] - sum(kept.values()), 3
-        )
-        trimmed["omitted_md5"] = hashlib.md5(
-            ",".join(omitted).encode()
-        ).hexdigest()[:8]
-        trimmed["full_map"] = "BENCH_FULL.json"
-        line = json.dumps(trimmed, separators=(",", ":"))
-        if len(line) <= budget:
-            return line
-    return line  # single-entry map; nothing left to trim
-
-
 if __name__ == "__main__":
-    if "--verify" in sys.argv[1:]:
-        verify()
-    else:
-        main()
+    main()

@@ -23,8 +23,6 @@ in Spark and DuckDB.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -593,11 +591,9 @@ SEMDEDUP_TAU = 0.35
 # straggler/OOM. 4096 rows = a 128 MB float64 Gram per task at the
 # cap, and every fixture cluster (max ~300 rows at sf0.1) stays far
 # below it, so the default keeps the fixtures' single-group plan and
-# numerics byte-identical. Env-tunable for clusters with more memory
-# per task (and for the skew-fixture tests, which shrink it).
-SEMDEDUP_GROUP_CAP = int(
-    _os.environ.get("PITLAP_SEMDEDUP_GROUP_CAP", "4096")
-)
+# numerics byte-identical. Callers that need another bound pass
+# ``cap=`` (the skew-fixture tests shrink it that way).
+SEMDEDUP_GROUP_CAP = 4096
 
 # DuckDB CTE suite replaying the centroid scoring + per-vector rank —
 # shared by the IVF search and SemDeDup oracles. Appends to
@@ -1020,10 +1016,10 @@ def cosine_col(av: str, an: str, bv: str, bn: str):
     """Round-6 exact cosine between two (vector, norm) column pairs —
     THE verify-stage expression, shared by the batch SemDeDup rungs
     (`_semantic_topm`), the streaming semantic ingest sink
-    (streaming/runtime.py), and the top-m probe
-    (tools/semantic_topm_probe.py) so the tau gate's arithmetic can
-    never drift between the stream and its batch twin (round-10
-    review catch: three hand-copied twins of this expression)."""
+    (streaming/runtime.py), and the top-m measurements of the SCALE.md
+    round-10 ladder, so the tau gate's arithmetic can never drift
+    between the stream and its batch twin (round-10 review catch:
+    three hand-copied twins of this expression)."""
     return F.round(
         F.expr(
             f"aggregate(zip_with({av}, {bv}, (p, q) -> p * q), 0D,"
@@ -1123,7 +1119,7 @@ def dedup_semantic_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_semantic_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over OVERLAPPING top-3 centroid clusters — the next
     rung above top-2, shipped on the measured diminishing-returns
-    probe (tools/semantic_topm_probe.py, SCALE.md round-10 ladder):
+    probe (the SCALE.md round-10 ladder):
     top-3 closes 80-100% of the top-2 residual (pairs split across
     BOTH members' top-2 assignments) on every perturbation band at
     1.83-1.85x the top-2 verify-stage candidate mass — inside the

@@ -86,222 +86,6 @@ _MODULES = (
 
 _loaded = False
 
-# Driver-gate priority: the external correctness driver verifies queries
-# in the order ``all_queries()`` yields them and has a bounded budget
-# (every round so far stopped at exactly 50 entries). Names listed here
-# are yielded FIRST, in this order; everything else follows in
-# registration order.
-#
-# Round-9 policy (VERDICT.md r8 "Next round" item 2, continuing the
-# ledger arithmetic pinned at the end of round 8): after round 8 the
-# evidence board reads — 8 queries NEVER driver-verified (the round-8
-# cohort-(g) spill, window_reflected_balance .. ts_holt_linear_trend,
-# every one green in local value-level parity), ONE red latest row
-# (privacy_dp_sum_bounded, rows/schema green but hash red in r8 — the
-# rounding-headroom defect fixed this round, breadth8.py block
-# comment + tools/round_headroom_audit.py), 34 queries r2-era, and
-# everything else r3+. The 50 slots go: (g-spill) = 8 never-verified
-# first (the standing never-verified-outranks-stale policy, in force
-# since r4), then the DP-sum RETEST (a red row outranks stale
-# evidence — it is the only latest-row failure on the board), then
-# (i) queries NEW in round 9 (also never-verified; grown in place as
-# sessions add operators), then (h) the FULL 34-row r2-era refresh
-# queue in ledger order. Arithmetic: 8 + 1 + N_new + 34 = 43 + N_new,
-# so with N_new <= 7 the whole backlog fits in one 50-slot window and
-# the board's done-state is: zero never-verified, zero red, zero
-# r2-era evidence remaining. Sessions must therefore cap round-9
-# additions at 7 registered queries; an 8th would spill the last
-# r2-era refresh (window_ntile_distribution) to round 10.
-#
-# Round-9 final arithmetic: cohort (i) holds 7 new queries
-# (dedup_semantic_top2 .. stream_watermark_lateness_audit) — the cap
-# exactly — so the window = 8 spill + 1 retest + 7 new + 34 r2-era
-# = 50 of 50 slots: the entire evidence backlog clears with zero
-# slack, and round 10 opens with a clean board (no never-verified,
-# no red, nothing older than r3).
-#
-# Round-10 policy (VERDICT.md r9 "Next round" item 1): the board is
-# clean — zero never-verified, zero red — and the oldest evidence is
-# the 49-query r3-era tranche (histogram from CORRECTNESS_r01..r09:
-# 49 x r3, 50 each r4..r9). The 50 slots go: (i) queries NEW in
-# round 10 first (never-verified outranks stale, standing policy
-# since r4), then (h) the FULL 49-row r3-era refresh queue in ledger
-# order. Arithmetic: N_new + 49 = 50 exactly when N_new = 1, so
-# round-10 additions are capped at ONE registered query (the
-# embedding/semantic streaming-ingest parity query, VERDICT r9 item
-# 3 — the one genuine functional gap). A second addition would spill
-# the last r3-era refresh (scalar_regex_suite) to round 11.
-#
-# Round-10 spills (the standing spill policy) — registered this
-# round, NOT in this window, enter round 11 as the never-verified
-# cohort and lead that window; both local-parity green
-# (PARITY_LOCAL.json):
-#   dedup_semantic_top3 — shipped on the measured diminishing-
-#     returns probe (VERDICT r9 item 4: top-3 closes 80-100% of the
-#     top-2 residual at 1.83-1.85x mass, inside the <=2x ship bar);
-#   text_url_canonicalize_gate — the C4/RefinedWeb URL pre-gate
-#     (VERDICT r9 item 7), operators/webgate.py;
-#   text_quality_classifier_score — the model-APPLY half of the
-#     logreg quality gate (VERDICT r9 item 7's second candidate):
-#     shared deterministic fit, literal-weight broadcast scoring,
-#     stats.py.
-# Round-11 window arithmetic these spills imply: 3 never-verified +
-# 47 of the 50 r4-era refreshes = 50; the last 3 r4-era rows carry
-# to round 12.
-#
-# Round-11 policy (VERDICT.md r10 "Next round" item 1): the board
-# after round 10 reads — 3 queries NEVER driver-verified (the
-# round-10 spills above, all local-parity green), zero red, and the
-# oldest evidence is the 50-query r4-era tranche (histogram from
-# CORRECTNESS_r01..r10: 50 each r4..r10, recomputed this session).
-# The 50 slots go: the 3 never-verified spills first (standing
-# policy since r4), then the FIRST 47 of the 50-row r4-era refresh
-# queue in ledger order (= the order CORRECTNESS_r04.json verified
-# them). Arithmetic: 3 + 47 = 50 exactly, so the last 3 r4-era rows
-# (agg_pricing_summary, agg_cube, agg_distinct_counts) carry to
-# round 12, and any query REGISTERED in round 11 spills to round 12
-# as never-verified. Round-12 window arithmetic that implies:
-# N_new(r11) + 3 r4-era carry + (47 - N_new) of the 50 r5-era
-# refreshes = 50, so the r5-era carry to round 13 is (3 + N_new)
-# rows (those lead r13's refresh queue); N_new <= 3 bounds that
-# carry at 6. Round-11 additions are therefore capped at 3.
-#
-# Round-11 spills (registered this round, NOT in this window; enter
-# round 12 as the never-verified cohort and lead that window):
-#   stream_url_gate_compacted_parity — the streaming URL front-door
-#     sink's batch-parity query (VERDICT r10 item 5a; the fourth
-#     crawl-ingest family member, runtime.run_url_ingest_sink);
-#     local-parity green.
-#   stream_span_dedup_compacted_parity — the streaming exact-
-#     substring Lee-et-al cut's batch-parity query (the fifth family
-#     member, runtime.run_span_dedup_ingest_sink — the streaming
-#     twin of dedup_repeated_spans_apply); local-parity green.
-# N_new(r11) = 2, so round 12's window reads 2 + 3 r4-era carry +
-# 45 of the 50 r5-era refreshes = 50, with 5 r5-era rows carrying
-# to round 13 (inside the <= 3 cap).
-# (VERDICT r10 item 5b — corpus-global repeated-span dedup — turned
-# out to already exist: dedup_repeated_spans_apply, dedup.py, IS the
-# Lee-et-al cut pass, corpus-global by construction; no new
-# registration needed.)
-#
-# Round-12 policy (VERDICT.md r11 "Next round" item 1): the board
-# after round 11 reads — 2 queries NEVER driver-verified (the
-# round-11 sink-parity spills above, both local-parity green +
-# property/restart-tested), zero red, and the evidence histogram
-# (recomputed this session from CORRECTNESS_r01..r11) is 3 r4-era,
-# 50 each r5..r7, 49 r8, 50 each r9..r11. The 50 slots go: the 2
-# never-verified spills first (standing policy since r4), then the
-# 3 r4-era carries in r4 ledger order (agg_pricing_summary,
-# agg_cube, agg_distinct_counts — the exact tail the round-11
-# arithmetic predicted), then the FIRST 45 of the 50-row r5-era
-# refresh queue in ledger order (= CORRECTNESS_r05.json order).
-# Arithmetic: 2 + 3 + 45 = 50 exactly, so the last 5 r5-era rows
-# (scalar_string_math, setop_except_all, setop_intersect,
-# setop_union_all_by_name, setop_union_distinct) carry to round 13
-# and lead its refresh queue; any query REGISTERED in round 12
-# spills to round 13 as never-verified. Round-13 window arithmetic
-# that implies: N_new(r12) + 5 r5-era carry + (45 - N_new) of the
-# remaining r5/r6-era refreshes = 50, bounding round-12 additions
-# at 3 (standing cap).
-#
-# Round-12 spills (registered this round, NOT in this window; enter
-# round 13 as the never-verified cohort and lead that window):
-#   stream_ingest_pipeline_parity — the composed crawl-ingest
-#     pipeline (URL gate -> span cut -> minhash ingest) end-to-end
-#     batch-parity query (VERDICT r11 item 4); local-parity green.
-#
-# Round-13 policy (VERDICT.md r12 "Next round" item 1): this round
-# the verdict OVERRIDES the plain oldest-evidence rotation — the
-# round-12 optimization pass rewrote ~30 numerically-sensitive
-# query bodies (semantic BLAS family, winnowing, basket pairs,
-# span apply's xxhash64 keys, graph broadcast gates, scan-cut
-# sweep) of which only 5 fell inside the r12 window; the rest rest
-# on local parity only. The 50 slots therefore go: the 1 round-12
-# spill (never verified, standing policy), then the 32-query
-# rewrite cohort (every r12-touched query whose RESULT arithmetic
-# was restructured and that r12 did not verify — the verdict's
-# explicit list plus the be126d8 sweep members with plan-level
-# rewrites), then the 5 r5-era carries in r5 ledger order, then
-# the first 12 of the r6-era refresh queue (CORRECTNESS_r06.json
-# order) not already claimed by the cohort. Arithmetic: 1 + 32 +
-# 5 + 12 = 50 exactly. Evidence board
-# after r12 (recomputed this session): 1 never-verified, 5 r5-era,
-# 50 r6-era, then 50 each r7..r12 (49 at r8). The r6-era rows NOT
-# refreshed here (33 of 50, minus the 5 cohort members that are
-# themselves r6-era) lead round 14's refresh queue; round-13
-# registers no new queries (optimization round), so no spill.
-_PRIORITY: tuple[str, ...] = (
-    # (i) the round-12 spill — never driver-verified, leads the window
-    "stream_ingest_pipeline_parity",
-    # (ii) the round-12 heavy-rewrite cohort (VERDICT r12 "Next
-    # round" item 1): every numerically-sensitive r12 optimization
-    # that did NOT fall in the r12 verification window, ordered
-    # family-first the way the verdict lists them
-    "dedup_semantic_semdedup",
-    "dedup_semantic_top2",
-    "dedup_semantic_top3",
-    "stream_semantic_compacted_parity",
-    "dedup_winnowing",
-    "dedup_winnowing_fast",
-    "market_basket_pairs",
-    "rec_item_item_cosine",
-    "dedup_repeated_spans",
-    "dedup_repeated_spans_fast",
-    "dedup_repeated_spans_apply",
-    "graph_pagerank_copurchase",
-    "graph_kcore_decomposition",
-    "graph_adamic_adar",
-    "join_range_binned",
-    "window_hll_sliding_distinct",
-    "agg_theta_sketch_distinct_sum",
-    "sim_topk_pq_adc",
-    "mm_phash_hamming_near_dup",
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_preagg",
-    "dedup_incremental_minhash",
-    "ml_logreg_gradient_descent",
-    "sim_topk_lsh_ltables",
-    "text_bigram_lm_score",
-    "dedup_ngram_jaccard_capped",
-    "ml_conformal_interval",
-    "kmeans_lloyd_clusters",
-    "dq_partition_merkle_diff",
-    "text_boilerplate_lines",
-    "window_month_spine_densify",
-    "stream_phash_compacted_parity",
-    # (iii) the 5 r5-era carries, r5 ledger order (the exact tail the
-    # round-12 arithmetic predicted)
-    "scalar_string_math",
-    "setop_except_all",
-    "setop_intersect",
-    "setop_union_all_by_name",
-    "setop_union_distinct",
-    # (iv) the r6-era refresh queue, ledger order — first 12 not
-    # already claimed by the rewrite cohort above
-    "survival_kaplan_meier",
-    "analytics_gini_spend",
-    "stats_chi2_independence",
-    "stats_quantile_normalize",
-    "ml_naive_bayes_langid",
-    "text_readability_flesch",
-    "funnel_conversion_lag",
-    "agg_weighted_median",
-    "anomaly_mad_robust_zscore",
-    "window_interpolate_linear",
-    "stats_mann_whitney",
-    "stats_ks_two_sample",
-)
-
-# (The superseded round-11 and round-12 window tuples lived here;
-# git history preserves them — see the round-12/-13 ledger commits.)
-
-
-def _priority_ordered(d: dict[str, object]) -> dict:
-    """Reorder a registry dict: ``_PRIORITY`` names first, then the
-    rest in registration order."""
-    head = {n: d[n] for n in _PRIORITY if n in d}
-    return head | {n: v for n, v in d.items() if n not in head}
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query (and optionally its DuckDB oracle SQL)."""
@@ -323,23 +107,17 @@ def load_all() -> None:
     if _loaded:
         return
     for mod in _MODULES:
-        try:
-            import_module(mod)
-        except ModuleNotFoundError as e:
-            # only skip when the OPERATOR MODULE itself doesn't exist yet
-            # (incremental rounds); a missing import *inside* an existing
-            # module is a real breakage and must fail loudly, or the
-            # whole module's query set silently falls out of the registry
-            if e.name != mod:
-                raise
+        import_module(mod)
     _loaded = True
 
 
 def all_queries() -> dict[str, QueryFn]:
+    """A copy of the registry, in registration order."""
     load_all()
-    return _priority_ordered(QUERIES)
+    return dict(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
+    """A copy of the oracle map, in registration order."""
     load_all()
-    return _priority_ordered(ORACLES)
+    return dict(ORACLES)

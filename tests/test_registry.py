@@ -1,12 +1,15 @@
-"""Registry integrity: every operator module must import (the
-incremental-build ModuleNotFoundError guard in registry.load_all must
-never silently hide a broken module), every query name must be unique
-and oracle-covered unless explicitly waived."""
+"""Registry integrity: every operator module must import (load_all
+lets any import error raise, so no module's queries silently fall out
+of the registry), every query name must be unique and oracle-covered
+unless explicitly waived, and the contract yields registration order."""
 
 from __future__ import annotations
 
 from importlib import import_module
 
+import pytest
+
+import __spark_entry__ as entrymod
 from pitlapetl_spark import registry
 
 # queries intentionally without a DuckDB oracle (driver records a
@@ -29,21 +32,26 @@ def test_all_operator_modules_import():
         import_module(mod)  # raises on any breakage — no silent skip
 
 
-def test_priority_names_exist_and_lead_the_ordering():
-    """Every _PRIORITY name must be a real registered query (a typo
-    would silently waste a driver-verification slot), and the first
-    len(_PRIORITY) entries of all_queries() must be exactly the
-    priority list, in order — that's what puts the r1-unverified
-    surface inside the driver's ~50-query budget."""
-    queries = registry.all_queries()
-    missing = set(registry._PRIORITY) - set(queries)
-    assert not missing, f"_PRIORITY names not registered: {sorted(missing)}"
-    head = list(queries)[: len(registry._PRIORITY)]
-    assert head == list(registry._PRIORITY)
-    # oracles follow the same ordering for the names they cover
-    oracle_head = list(registry.all_oracles())[:10]
-    want = [n for n in registry._PRIORITY if n in registry.all_oracles()][:10]
-    assert oracle_head == want
+def test_load_all_raises_on_a_missing_operator_module(monkeypatch):
+    monkeypatch.setattr(
+        registry, "_MODULES", registry._MODULES + ("pitlapetl_spark.operators._absent",)
+    )
+    monkeypatch.setattr(registry, "_loaded", False)
+    with pytest.raises(ModuleNotFoundError, match="_absent"):
+        registry.load_all()
+    assert registry._loaded is False
+
+
+def test_contract_yields_registration_order_as_copies():
+    registry.load_all()
+    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+    assert list(queries) == list(registry.QUERIES)
+    assert list(oracles) == list(registry.ORACLES)
+    name = next(iter(queries))
+    queries.pop(name)
+    oracles.clear()
+    assert name in registry.QUERIES and name in entrymod.queries()
+    assert registry.ORACLES and entrymod.oracle_sql() == registry.ORACLES
 
 
 def test_registry_size_and_oracle_coverage():
@@ -54,90 +62,6 @@ def test_registry_size_and_oracle_coverage():
     assert not missing, f"queries without oracle or waiver: {sorted(missing)}"
     stale = set(oracles) - set(queries)
     assert not stale, f"oracles without queries: {sorted(stale)}"
-
-
-def test_round13_rotation_window_composition():
-    """The round-13 driver window (first 50 names) must follow the
-    pinned ledger (registry._PRIORITY comment). This round the
-    rotation is verdict-directed (VERDICT r12 "Next round" item 1):
-    the 1 round-12 spill leads (never-verified outranks stale,
-    standing policy since r4), then the 32-query round-12
-    heavy-rewrite cohort (numerically-restructured bodies that r12
-    did not driver-verify), then the 5 r5-era carries in
-    CORRECTNESS_r05 order, then the first 12 of the r6-era refresh
-    queue in CORRECTNESS_r06 order not already claimed by the
-    cohort. Arithmetic: 1 + 32 + 5 + 12 = 50 exactly; the remaining
-    r6-era rows lead round 14's refresh queue."""
-    pri = list(registry._PRIORITY)
-    never_verified = ["stream_ingest_pipeline_parity"]
-    rewrite_cohort = [
-        "dedup_semantic_semdedup",
-        "dedup_semantic_top2",
-        "dedup_semantic_top3",
-        "stream_semantic_compacted_parity",
-        "dedup_winnowing",
-        "dedup_winnowing_fast",
-        "market_basket_pairs",
-        "rec_item_item_cosine",
-        "dedup_repeated_spans",
-        "dedup_repeated_spans_fast",
-        "dedup_repeated_spans_apply",
-        "graph_pagerank_copurchase",
-        "graph_kcore_decomposition",
-        "graph_adamic_adar",
-        "join_range_binned",
-        "window_hll_sliding_distinct",
-        "agg_theta_sketch_distinct_sum",
-        "sim_topk_pq_adc",
-        "mm_phash_hamming_near_dup",
-        "dedup_minhash_lsh",
-        "dedup_minhash_lsh_preagg",
-        "dedup_incremental_minhash",
-        "ml_logreg_gradient_descent",
-        "sim_topk_lsh_ltables",
-        "text_bigram_lm_score",
-        "dedup_ngram_jaccard_capped",
-        "ml_conformal_interval",
-        "kmeans_lloyd_clusters",
-        "dq_partition_merkle_diff",
-        "text_boilerplate_lines",
-        "window_month_spine_densify",
-        "stream_phash_compacted_parity",
-    ]
-    r5_carries = [
-        "scalar_string_math",
-        "setop_except_all",
-        "setop_intersect",
-        "setop_union_all_by_name",
-        "setop_union_distinct",
-    ]
-    r6_era_head = [
-        "survival_kaplan_meier",
-        "analytics_gini_spend",
-        "stats_chi2_independence",
-        "stats_quantile_normalize",
-        "ml_naive_bayes_langid",
-        "text_readability_flesch",
-        "funnel_conversion_lag",
-        "agg_weighted_median",
-        "anomaly_mad_robust_zscore",
-        "window_interpolate_linear",
-        "stats_mann_whitney",
-        "stats_ks_two_sample",
-    ]
-    assert pri == never_verified + rewrite_cohort + r5_carries + r6_era_head
-    assert len(pri) == 50
-    # every ledger name must actually be registered (a typo here
-    # would silently drop a pinned slot from the driver window)
-    queries = registry.all_queries()
-    missing = [n for n in pri if n not in queries]
-    assert not missing, missing
-    # and the driver window is exactly the ledger head plus
-    # registration-order overflow for any spare slots
-    first50 = list(queries)[:50]
-    assert first50[: len(pri)] == pri
-    for name in first50[len(pri) :]:
-        assert name not in pri
 
 
 def test_coverage_totals_match_artifacts():

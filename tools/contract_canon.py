@@ -1,8 +1,7 @@
 """THE canonicalization for Spark-vs-DuckDB frame comparison, shared
-by tools/drive_contract.py (the contract run) and
-tools/parity_subset.py (the fast-iteration subset) so the two tools
-can never apply different pass/fail criteria (review catch: the
-subset tool used to carry its own copy of these rules).
+by tools/drive_contract.py (the contract run, whole or a named subset)
+and perfbench/harness.py (the benchmark's correctness gate) so the two
+can never apply different pass/fail criteria.
 
 Rules (mirroring the external driver): sort columns by name,
 stringify objects, round floats to 9 dp, strip timezones, sort the
