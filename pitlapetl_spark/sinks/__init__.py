@@ -215,6 +215,16 @@ def _fail_on_merge_debris(path: str) -> None:
         )
 
 
+def _partition_values(df: DataFrame, part_col: str) -> list:
+    """The sorted distinct ``part_col`` values of ``df``. A null one
+    raises ValueError: it names no partition directory, so a
+    partition-scoped write would rewrite nothing for its rows."""
+    vals = [r[0] for r in df.select(part_col).distinct().collect()]
+    if any(v is None for v in vals):
+        raise ValueError(f"{part_col} must be non-null in every row")
+    return sorted(vals)
+
+
 def upsert_partitioned(df: DataFrame, path: str, key_cols: list[str]) -> None:
     """K1/K2 keyed upsert: replace exactly the (key...) partitions
     present in ``df``, leave all others untouched."""
@@ -372,8 +382,7 @@ def merge_upsert_partition_scoped(
     here. Returns the list of partition values rewritten."""
     spark = updates.sparkSession
     _fail_on_merge_debris(path)
-    vals = sorted(r[0] for r in updates.select(part_col).distinct().collect())
-    assert all(v is not None for v in vals), "part_col must be non-null"
+    vals = _partition_values(updates, part_col)
     part_strs = [str(v) for v in vals]
     if not os.path.exists(path):
         # bootstrap through the SAME staged+validated path as every
@@ -584,10 +593,9 @@ def delete_keys_partition_scoped(
     Idempotent: re-running the same delete is a no-op rewrite.
     Returns the partition values touched ([] for an empty request)."""
     _fail_on_merge_debris(path)
-    vals = sorted(r[0] for r in keys.select(part_col).distinct().collect())
+    vals = _partition_values(keys, part_col)
     if not vals:
         return []
-    assert all(v is not None for v in vals), "part_col must be non-null"
     part_strs = [str(v) for v in vals]
     unsafe = [
         v for v in part_strs

@@ -12,6 +12,12 @@ rather than DuckDB's Monday-anchored time_bucket.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from functools import partial, reduce
+from operator import and_
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -305,6 +311,223 @@ def stream_error_rate_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wilson_error_rate_agg(events)
 
 
+# ------------------------------------ shared ingest-parity helpers
+# One implementation each of the steps the five parity queries below
+# share: the compaction crash drill, the id-ordered micro-batch
+# driver, the pre-vs-post-compaction fold parity and the
+# stream-vs-batch mismatch count.
+
+
+def _compact_with_crash_leftover(
+    spark: SparkSession, store: str, current_batch: int
+) -> int:
+    """The compaction crash drill of the parity queries: fold every
+    committed partition into a generation (steady state), restore the
+    lowest pre-fold partition as a crash-window leftover (its rows now
+    live in both the generation and the source, the write-then-delete
+    gap), and heal it with a second fold, whose full-row dedup must
+    drop the copy. The capture/fold/restore/fold ORDER is
+    load-bearing, which is why it lives here once. Returns the store's
+    partition count after the heal."""
+    written = numbered_dirs(store)
+    # the leftover must be a NON-final partition the ingest loop
+    # actually WROTE (an empty batch writes no directory)
+    assert len(written) >= 2, f"parity drill: under 2 partitions in {store}"
+    leftover_path = written[min(written)]
+    leftover = spark.read.parquet(leftover_path).localCheckpoint(eager=True)
+    _compact_partition_store(spark, store, current_batch, threshold=2)
+    leftover.write.mode("overwrite").parquet(leftover_path)
+    _compact_partition_store(spark, store, current_batch + 1, threshold=1)
+    return len(numbered_dirs(store))
+
+
+def _run_pipelined_stages(stages, n_batches: int) -> None:
+    """Run a chained multi-stage ingest simulation with one driver
+    thread per stage: stage s processes its batches strictly in
+    order, and batch i of stage s starts only after batch i of stage
+    s-1 finished (the corpus-partition handoff). Equivalent to the
+    sequential nested loop — same writes, same order within every
+    store — but the per-batch driver floors of different stages
+    overlap (guide §2.6). On any stage failure every downstream wait
+    is released and the first error re-raised."""
+    import threading
+
+    done = [
+        [threading.Event() for _ in range(n_batches)] for _ in stages
+    ]
+    failed: list[int] = []
+
+    def runner(s: int) -> None:
+        try:
+            for i in range(n_batches):
+                if s > 0:
+                    done[s - 1][i].wait()
+                if failed:
+                    return
+                stages[s](i)
+                done[s][i].set()
+        except BaseException:
+            failed.append(s)
+            raise
+        finally:
+            # release downstream waiters even on failure/early return
+            for ev in done[s]:
+                ev.set()
+
+    run_in_driver_threads(lambda s=s: runner(s) for s in range(len(stages)))
+
+
+def _drive_id_ordered(
+    src: DataFrame, id_col: str, n_batches: int, ingest, *downstream
+) -> None:
+    """Feed ``src`` to ``ingest(batch_df, i)`` as ``n_batches``
+    micro-batches of consecutive ``id_col`` ranges, and run each
+    ``downstream`` stage as ``stage(i)`` after the stage before it
+    finished batch ``i`` (``_run_pipelined_stages``). Arrival order
+    must equal id order for the stream-vs-batch equivalence (each
+    query's block comment). An empty source raises ValueError: every
+    parity query needs a non-empty fixture."""
+    # One eager lineage cut of the source before the loop: every
+    # per-batch action (the sink body's isEmpty take, its lazy
+    # checkpoint compiles, its writes) otherwise re-analyzes and
+    # re-scans the full source lineage — for the URL and pipeline
+    # queries that is the deep derived_raw_url expression tree, once
+    # per batch (guide §1.2 fewer passes; profiled as the lifecycle
+    # queries' inter-action driver floor). The cut happens INSIDE the
+    # timed query, computed fresh from parquet per invocation.
+    src = src.localCheckpoint(eager=True)
+    # the max-id scalar is a bounded one-row collect
+    max_id = src.agg(F.max(id_col)).collect()[0][0]
+    if max_id is None:
+        raise ValueError(
+            f"ingest-parity driver: source has no rows (max({id_col}) "
+            "is NULL) — every parity query needs a non-empty fixture"
+        )
+    # integer ceil((max_id + 1) / n_batches) — exact on both engines
+    # (the pipeline oracle's wd CTE)
+    width = (max_id + n_batches) // n_batches
+
+    def first(i: int) -> None:
+        ids = F.col(id_col)
+        ingest(src.filter((ids >= i * width) & (ids < (i + 1) * width)), i)
+
+    _run_pipelined_stages([first, *downstream], n_batches)
+
+
+def _drive_compacted_ingest(
+    spark: SparkSession,
+    src: DataFrame,
+    id_col: str,
+    make_ingest,
+    n_batches: int,
+    twin,
+    read_corpus: bool = False,
+):
+    """Shared harness of the semantic, URL and span parity queries:
+    drive a sink's real per-batch body over id-ordered micro-batches
+    of ``src`` (``_drive_id_ordered``), then run the compaction crash
+    drill (``_compact_with_crash_leftover``). ``make_ingest`` is the
+    sink's body factory, called as ``(store_path, corpus_path,
+    compact_every)``.
+
+    ``twin()`` builds the batch side the stream is compared against.
+    It is independent of the ingest loop, whose wall is mostly
+    single-threaded driver work (per-batch Catalyst analysis, store
+    listings) that leaves the executors idle, so it runs on a second
+    driver thread (``run_in_driver_threads``) and hides almost
+    entirely (guide §2.6 overlap independent jobs).
+
+    Returns (twin, pre, after, corpus, n_parts): the batch side, the
+    store read minus the partition column before/after compaction,
+    the corpus read (None unless ``read_corpus`` — the semantic query
+    never reads its corpus, and materializing it would change that
+    query's measured work), and the post-heal partition count. Every
+    returned frame is eagerly materialized (localCheckpoint) so
+    callers keep using them after the temp dir is removed."""
+    def read(path: str) -> DataFrame:
+        return spark.read.parquet(path).drop("batch").localCheckpoint(eager=True)
+
+    root = tempfile.mkdtemp(prefix="pitlap_ingest_parity_")
+    store, corpus_path = f"{root}/store", f"{root}/corpus"
+
+    def ingest_and_compact():
+        # compaction off mid-run: the crash drill below owns it
+        ingest = make_ingest(store, corpus_path, 10 * n_batches)
+        _drive_id_ordered(src, id_col, n_batches, ingest)
+        pre = read(store)
+        n_parts = _compact_with_crash_leftover(spark, store, n_batches)
+        return pre, read(store), read(corpus_path) if read_corpus else None, n_parts
+
+    try:
+        batch, stream = run_in_driver_threads(
+            [lambda: twin().localCheckpoint(eager=True), ingest_and_compact]
+        )
+        return (batch, *stream)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _parity_fold(pre: DataFrame, after: DataFrame, grain, **aggs) -> DataFrame:
+    """Pre-vs-post-compaction parity of a store: fold both sides with
+    ``aggs`` ({output name: aggregate}) per ``grain`` column and join
+    the folds on it. A row carries the grain, the after-side
+    aggregates and ``compacted_parity``. An empty grain folds each
+    side to one row.
+
+    FULL OUTER join: an inner join would
+    silently DROP a group compaction lost entirely (the after fold has
+    no row for it) and every surviving row would still read
+    parity=true — whole-group loss must instead surface as a row with
+    the after-side aggregates zeroed and compacted_parity=false.
+    eqNullSafe makes a one-sided null fail the equality instead of
+    null-propagating to a null flag."""
+
+    def fold(df: DataFrame, prefix: str) -> DataFrame:
+        return df.groupBy(*grain).agg(
+            *[agg.alias(prefix + name) for name, agg in aggs.items()]
+        )
+
+    after_f, pre_f = fold(after, ""), fold(pre, "pre_")
+    joined = (
+        after_f.join(pre_f, grain, "full")
+        if grain
+        else after_f.crossJoin(F.broadcast(pre_f))
+    )
+    parity = reduce(
+        and_, [F.col(n).eqNullSafe(F.col(f"pre_{n}")) for n in aggs]
+    )
+    return joined.select(
+        *grain,
+        *[F.coalesce(name, F.lit(0)).alias(name) for name in aggs],
+        parity.alias("compacted_parity"),
+    )
+
+
+def _mismatch_count(
+    stream: DataFrame, batch: DataFrame, key: str, *payload
+) -> DataFrame:
+    """One-row frame of ``n_mismatch``: the distinct ``key`` values
+    present on one side only, or whose ``payload`` columns differ
+    (NULL-safe), between the stream's output and its batch twin. Zero
+    is stream-vs-batch parity."""
+
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        return df.select(
+            key, F.lit(1).alias(tag), *[F.col(c).alias(tag + c) for c in payload]
+        ).distinct()
+
+    same = reduce(
+        and_,
+        [F.col(f"_s{c}").eqNullSafe(F.col(f"_b{c}")) for c in payload],
+        F.col("_s").isNotNull() & F.col("_b").isNotNull(),
+    )
+    return (
+        side(stream, "_s")
+        .join(side(batch, "_b"), key, "full")
+        .agg(F.count(F.when(~same, 1)).alias("n_mismatch"))
+    )
+
+
 # ----------------------- pHash ingest-store compaction parity
 # VERDICT r8 item 5 extension, registered as a query: the media
 # ingest sink's BAND STORE now folds committed batch partitions into
@@ -359,25 +582,12 @@ def stream_phash_compacted_parity(
     the real compactor (plus a crash-leftover heal pass), and return
     the per-band fold of the compacted store alongside a parity
     check against the pre-write frame (block comment above)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from ..operators.multimodal import phash_band_rows, phash_frame
 
     docs = load_table(spark, sf_dir, "documents")
     bands = phash_band_rows(phash_frame(docs)).localCheckpoint(eager=True)
 
-    def fold(df: DataFrame, prefix: str = "") -> DataFrame:
-        return df.groupBy("band_id").agg(
-            F.count(F.lit(1)).cast("long").alias(f"{prefix}n_rows"),
-            F.countDistinct("doc_id").cast("long").alias(f"{prefix}n_docs"),
-            F.countDistinct("band_val")
-            .cast("long")
-            .alias(f"{prefix}n_band_vals"),
-            F.sum("phash").cast("long").alias(f"{prefix}sum_phash"),
-        )
-
-    root = _tempfile.mkdtemp(prefix="pitlap_phash_parity_")
+    root = tempfile.mkdtemp(prefix="pitlap_phash_parity_")
     store = f"{root}/store"
     try:
         batched = bands.withColumn(
@@ -399,32 +609,28 @@ def stream_phash_compacted_parity(
         n_parts = _compact_with_crash_leftover(
             spark, store, N_SIM_INGEST_BATCHES
         )
-        after = spark.read.parquet(store).drop("batch")
-        pre = fold(bands, "pre_")
-        parity = (
-            (F.col("n_rows") == F.col("pre_n_rows"))
-            & (F.col("n_docs") == F.col("pre_n_docs"))
-            & (F.col("n_band_vals") == F.col("pre_n_band_vals"))
-            & (F.col("sum_phash") == F.col("pre_sum_phash"))
-        )
-        result = (
-            fold(after)
-            .join(pre, "band_id")
-            .select(
-                "band_id",
-                "n_rows",
-                "n_docs",
-                "n_band_vals",
-                "sum_phash",
-                F.lit(n_parts).cast("int").alias("store_partitions"),
-                parity.alias("compacted_parity"),
-            )
+        result = _parity_fold(
+            bands,
+            spark.read.parquet(store).drop("batch"),
+            ["band_id"],
+            n_rows=F.count(F.lit(1)).cast("long"),
+            n_docs=F.countDistinct("doc_id").cast("long"),
+            n_band_vals=F.countDistinct("band_val").cast("long"),
+            sum_phash=F.sum("phash").cast("long"),
+        ).select(
+            "band_id",
+            "n_rows",
+            "n_docs",
+            "n_band_vals",
+            "sum_phash",
+            F.lit(n_parts).cast("int").alias("store_partitions"),
+            "compacted_parity",
         )
         # materialize before the temp dir is removed (the standing
         # roundtrip-query device, sinks_query.py)
         return result.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # ----------------- semantic ingest-store stream-vs-batch parity
@@ -460,189 +666,7 @@ def stream_phash_compacted_parity(
 # own batch-partitioned parquet layout + amortized-O(1) compaction);
 # the parity fold is one aggregation at the label grain.
 
-def _compact_with_crash_leftover(
-    spark: SparkSession, store: str, current_batch: int
-) -> int:
-    """The compaction crash drill of the parity queries: fold every
-    committed partition into a generation (steady state), restore the
-    lowest pre-fold partition as a crash-window leftover (its rows now
-    live in both the generation and the source, the write-then-delete
-    gap), and heal it with a second fold, whose full-row dedup must
-    drop the copy. The capture/fold/restore/fold ORDER is
-    load-bearing, which is why it lives here once. Returns the store's
-    partition count after the heal."""
-    written = numbered_dirs(store)
-    # the leftover must be a partition the ingest loop actually WROTE
-    # (an empty batch writes no directory)
-    assert written, f"parity drill: no store partitions under {store}"
-    leftover_path = written[min(written)]
-    leftover = spark.read.parquet(leftover_path).localCheckpoint(eager=True)
-    _compact_partition_store(spark, store, current_batch, threshold=2)
-    leftover.write.mode("overwrite").parquet(leftover_path)
-    _compact_partition_store(spark, store, current_batch + 1, threshold=1)
-    return len(numbered_dirs(store))
-
-
-def _drive_compacted_ingest(
-    spark: SparkSession,
-    src: DataFrame,
-    id_col: str,
-    make_ingest,
-    n_batches: int,
-    read_corpus: bool = False,
-):
-    """Shared harness for the ingest-parity queries (semantic / URL /
-    span — one copy, three consumers, after the round-11 review
-    flagged the drift risk of the crash-heal choreography living in
-    each query): drive a sink's real per-batch body over id-ordered
-    micro-batches of ``src``, then run the compaction crash drill
-    (``_compact_with_crash_leftover``).
-
-    ``make_ingest`` maps (store_path, corpus_path) to the per-batch
-    body. Returns (pre, after, corpus, n_parts): the store read minus
-    the partition column before/after compaction, the corpus read
-    (None unless ``read_corpus`` — the semantic query never reads its
-    corpus, and materializing it would change that benched query's
-    measured work), and the post-heal partition count. Every returned
-    frame is eagerly materialized (localCheckpoint) so callers keep
-    using them after the temp dir is removed."""
-    import math as _math
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    # One eager lineage cut of the batch source before the loop: every
-    # per-batch action (the sink body's isEmpty take, its lazy
-    # checkpoint compiles, both writes) otherwise re-analyzes and
-    # re-scans the full source lineage — for the URL query that is the
-    # deep derived_raw_url expression tree, N_batches times over
-    # (guide §1.2 fewer passes; profiled as the lifecycle queries'
-    # inter-action driver floor). The cut happens INSIDE the timed
-    # query, computed fresh from parquet per invocation.
-    src = src.localCheckpoint(eager=True)
-    # id-ordered ranges (arrival order must equal id order for the
-    # stream-vs-batch equivalence — each query's block comment); the
-    # max-id scalar is a bounded one-row collect
-    max_id = src.agg(F.max(id_col)).collect()[0][0]
-    if max_id is None:
-        raise ValueError(
-            f"ingest-parity harness: source has no rows (max({id_col}) "
-            "is NULL) — every parity query needs a non-empty fixture"
-        )
-    if n_batches < 2:
-        raise ValueError(
-            "ingest-parity harness needs n_batches >= 2: the "
-            "crash-window heal step restores a non-final committed "
-            "partition after the fold"
-        )
-    width = _math.ceil((max_id + 1) / n_batches)
-
-    root = _tempfile.mkdtemp(prefix="pitlap_ingest_parity_")
-    store, corpus_path = f"{root}/store", f"{root}/corpus"
-    try:
-        ingest = make_ingest(store, corpus_path)
-        for i in range(n_batches):
-            ingest(
-                src.filter(
-                    (F.col(id_col) >= i * width)
-                    & (F.col(id_col) < (i + 1) * width)
-                ),
-                i,
-            )
-        pre = (
-            spark.read.parquet(store)
-            .drop("batch")
-            .localCheckpoint(eager=True)
-        )
-        n_parts = _compact_with_crash_leftover(spark, store, n_batches)
-        after = (
-            spark.read.parquet(store)
-            .drop("batch")
-            .localCheckpoint(eager=True)
-        )
-        corpus = (
-            spark.read.parquet(corpus_path)
-            .drop("batch")
-            .localCheckpoint(eager=True)
-            if read_corpus
-            else None
-        )
-        return pre, after, corpus, n_parts
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
-
-
 N_SEM_INGEST_BATCHES = 3
-
-
-def _run_pipelined_stages(stages, n_batches: int) -> None:
-    """Run a chained multi-stage ingest simulation with one driver
-    thread per stage: stage s processes its batches strictly in
-    order, and batch i of stage s starts only after batch i of stage
-    s-1 finished (the corpus-partition handoff). Equivalent to the
-    sequential nested loop — same writes, same order within every
-    store — but the per-batch driver floors of different stages
-    overlap (guide §2.6). On any stage failure every downstream wait
-    is released and the first error re-raised."""
-    import threading
-
-    done = [
-        [threading.Event() for _ in range(n_batches)] for _ in stages
-    ]
-    failed: list[int] = []
-
-    def runner(s: int) -> None:
-        try:
-            for i in range(n_batches):
-                if s > 0:
-                    done[s - 1][i].wait()
-                if failed:
-                    return
-                stages[s](i)
-                done[s][i].set()
-        except BaseException:
-            failed.append(s)
-            raise
-        finally:
-            # release downstream waiters even on failure/early return
-            for ev in done[s]:
-                ev.set()
-
-    run_in_driver_threads(lambda s=s: runner(s) for s in range(len(stages)))
-
-
-def _prefetch_frame(build):
-    """Build and eagerly localCheckpoint a DataFrame on a background
-    driver thread, returning a zero-arg handle that joins the thread
-    and yields the materialized frame (re-raising any failure).
-
-    The parity queries' batch-twin side (the batch dedup/gate rerun
-    the stream is compared against) is INDEPENDENT of the ingest
-    loop, and the loop's wall is mostly single-threaded driver work
-    (per-batch Catalyst analysis, store listings) that leaves the
-    executors idle — so computing the twin concurrently hides it
-    almost entirely (guide §2.6 overlap independent jobs; VERDICT
-    r12 item 5). InheritableThread keeps job-description/group
-    thread-locals correct under concurrent driver threads."""
-    from pyspark import InheritableThread
-
-    box: dict = {}
-
-    def run() -> None:
-        try:
-            box["df"] = build().localCheckpoint(eager=True)
-        except BaseException as e:  # noqa: BLE001 — surfaced at join
-            box["err"] = e
-
-    t = InheritableThread(target=run, daemon=True)
-    t.start()
-
-    def handle() -> DataFrame:
-        t.join()
-        if "err" in box:
-            raise box["err"]
-        return box["df"]
-
-    return handle
 
 
 def _semantic_parity_oracle() -> str:
@@ -699,87 +723,40 @@ def stream_semantic_compacted_parity(
     )
     from .runtime import _semantic_ingest_batch
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    # batch-twin drop set, prefetched concurrently with the ingest
-    # loop below (independent work; _prefetch_frame docstring)
-    b_drop_handle = _prefetch_frame(
-        lambda: dedup_semantic_top2(spark, sf_dir)
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-    )
-    pre, after, _, n_parts = _drive_compacted_ingest(
+    b_drop, pre, after, _, n_parts = _drive_compacted_ingest(
         spark,
-        emb,
+        load_table(spark, sf_dir, "embeddings"),
         "vec_id",
-        lambda store, corpus: _semantic_ingest_batch(
-            _centroid_frame(spark, sf_dir),
-            store,
-            corpus,
-            compact_every=10 * N_SEM_INGEST_BATCHES,  # no fold mid-run
-        ),
+        partial(_semantic_ingest_batch, _centroid_frame(spark, sf_dir)),
         N_SEM_INGEST_BATCHES,
+        twin=lambda: dedup_semantic_top2(spark, sf_dir).select(
+            F.col("vec_b").alias("vec_id")
+        ),
     )
-
-    def fold(df: DataFrame, prefix: str = "") -> DataFrame:
-        ndrop = F.when(~F.col("kept"), F.col("vec_id"))
-        return df.groupBy("label").agg(
-            F.count(F.lit(1)).cast("long").alias(f"{prefix}n_rows"),
-            F.countDistinct("vec_id")
-            .cast("long")
-            .alias(f"{prefix}n_docs"),
-            F.countDistinct(ndrop)
-            .cast("long")
-            .alias(f"{prefix}n_dropped"),
-            F.sum(F.coalesce(ndrop, F.lit(0)))
-            .cast("long")
-            .alias(f"{prefix}sum_dropped_ids"),
-        )
-
-    # stream-vs-batch drop-set equality: symmetric difference of
-    # the two vec_id sets must be empty (one-row scalar)
-    s_drop = after.filter(~F.col("kept")).select("vec_id").distinct()
-    b_drop = b_drop_handle()
-    mism = (
-        s_drop.withColumn("s", F.lit(1))
-        .join(b_drop.withColumn("b", F.lit(1)), "vec_id", "full")
-        .agg(
-            F.count(
-                F.when(F.col("s").isNull() | F.col("b").isNull(), 1)
-            ).alias("n_mismatch")
-        )
-    )
-
-    # FULL OUTER fold join: an inner join would silently DROP a
-    # label compaction lost entirely (fold(after) has no row for
-    # it) and every surviving row would still read parity=true —
-    # whole-label loss must instead surface as a row with the
-    # after-side counts zeroed and compacted_parity=false
-    # (round-10 review catch). eqNullSafe makes a one-sided null
-    # fail the equality instead of null-propagating to a null
-    # flag.
-    parity = (
-        F.col("n_rows").eqNullSafe(F.col("pre_n_rows"))
-        & F.col("n_docs").eqNullSafe(F.col("pre_n_docs"))
-        & F.col("n_dropped").eqNullSafe(F.col("pre_n_dropped"))
-        & F.col("sum_dropped_ids").eqNullSafe(
-            F.col("pre_sum_dropped_ids")
-        )
-    )
+    # stream-vs-batch drop-set equality: the symmetric difference of
+    # the two vec_id sets must be empty
+    mism = _mismatch_count(after.filter(~F.col("kept")), b_drop, "vec_id")
+    ndrop = F.when(~F.col("kept"), F.col("vec_id"))
     result = (
-        fold(after)
-        .join(fold(pre, "pre_"), "label", "full")
+        _parity_fold(
+            pre,
+            after,
+            ["label"],
+            n_rows=F.count(F.lit(1)).cast("long"),
+            n_docs=F.countDistinct("vec_id").cast("long"),
+            n_dropped=F.countDistinct(ndrop).cast("long"),
+            sum_dropped_ids=F.sum(F.coalesce(ndrop, F.lit(0))).cast("long"),
+        )
         .crossJoin(F.broadcast(mism))
         .select(
             "label",
-            F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
-            F.coalesce("n_docs", F.lit(0)).alias("n_docs"),
-            F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
-            F.coalesce("sum_dropped_ids", F.lit(0)).alias(
-                "sum_dropped_ids"
-            ),
+            "n_rows",
+            "n_docs",
+            "n_dropped",
+            "sum_dropped_ids",
             F.lit(n_parts).cast("int").alias("store_partitions"),
             (F.col("n_mismatch") == 0).alias("stream_batch_parity"),
-            parity.alias("compacted_parity"),
+            "compacted_parity",
         )
     )
     # the inputs are all eagerly materialized by the harness (the
@@ -863,76 +840,46 @@ def stream_url_gate_compacted_parity(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", derived_raw_url().alias("url_raw")
     )
-    # batch-twin kept set, prefetched concurrently with the ingest
-    # loop below (independent work; _prefetch_frame docstring)
-    b_kept_handle = _prefetch_frame(
-        lambda: text_url_canonicalize_gate(spark, sf_dir)
-        .filter(F.col("kept"))
-        .select("doc_id")
-        .distinct()
-    )
-    pre, after, corpus, n_parts = _drive_compacted_ingest(
+    b_kept, pre, after, corpus, n_parts = _drive_compacted_ingest(
         spark,
         docs,
         "doc_id",
-        lambda store, corp: _url_ingest_batch(
-            store, corp, compact_every=10 * N_URL_INGEST_BATCHES
-        ),
+        _url_ingest_batch,
         N_URL_INGEST_BATCHES,
+        twin=lambda: text_url_canonicalize_gate(spark, sf_dir)
+        .filter(F.col("kept"))
+        .select("doc_id"),
         read_corpus=True,
     )
-
-    def fold(df: DataFrame, prefix: str = "") -> DataFrame:
-        return df.groupBy("site").agg(
-            F.countDistinct("url_canon")
-            .cast("long")
-            .alias(f"{prefix}n_urls"),
-            F.count(F.lit(1)).cast("long").alias(f"{prefix}n_rows"),
-            F.sum("doc_id").cast("long").alias(f"{prefix}sum_ids"),
-        )
-
-    # stream-vs-batch kept-set equality: symmetric difference of
-    # the corpus doc_ids and the batch gate's kept doc_ids must
-    # be empty (one-row scalar)
-    s_kept = corpus.select("doc_id").distinct()
-    b_kept = b_kept_handle()
-    mism = (
-        s_kept.withColumn("s", F.lit(1))
-        .join(b_kept.withColumn("b", F.lit(1)), "doc_id", "full")
-        .agg(
-            F.count(
-                F.when(F.col("s").isNull() | F.col("b").isNull(), 1)
-            ).alias("n_mismatch")
-        )
-    )
+    # stream-vs-batch kept-set equality: the symmetric difference of
+    # the corpus doc_ids and the batch gate's kept doc_ids must be
+    # empty
+    mism = _mismatch_count(corpus, b_kept, "doc_id")
     # corpus fold at the site grain (n_kept): the store fold
     # supplies n_urls/sum_kept_ids — two independent artifacts
     # cross-checking each other
     corp = corpus.groupBy("site").agg(
         F.count(F.lit(1)).cast("long").alias("n_kept")
     )
-
-    # FULL OUTER fold join (the semantic parity query's
-    # round-10 review catch): whole-site loss in compaction must
-    # surface as compacted_parity=false, not vanish
-    parity = (
-        F.col("n_urls").eqNullSafe(F.col("pre_n_urls"))
-        & F.col("n_rows").eqNullSafe(F.col("pre_n_rows"))
-        & F.col("sum_ids").eqNullSafe(F.col("pre_sum_ids"))
-    )
     result = (
-        fold(after)
-        .join(fold(pre, "pre_"), "site", "full")
+        _parity_fold(
+            pre,
+            after,
+            ["site"],
+            n_urls=F.countDistinct("url_canon").cast("long"),
+            n_rows=F.count(F.lit(1)).cast("long"),
+            sum_ids=F.sum("doc_id").cast("long"),
+        )
         .join(corp, "site", "full")
         .crossJoin(F.broadcast(mism))
         .select(
             "site",
-            F.coalesce("n_urls", F.lit(0)).alias("n_urls"),
+            "n_urls",
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("sum_ids", F.lit(0)).alias("sum_kept_ids"),
+            F.col("sum_ids").alias("sum_kept_ids"),
             F.lit(n_parts).cast("int").alias("store_partitions"),
             (F.col("n_mismatch") == 0).alias("stream_batch_parity"),
-            parity.alias("compacted_parity"),
+            "compacted_parity",
         )
     )
     # inputs eagerly materialized by the harness; checkpoint the
@@ -1005,87 +952,40 @@ def stream_span_dedup_compacted_parity(
     from ..operators.dedup import dedup_repeated_spans_apply
     from .runtime import _span_ingest_batch
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # batch-twin cleaned corpus, prefetched concurrently with the
-    # ingest loop below (independent work; _prefetch_frame docstring)
-    batch_out_handle = _prefetch_frame(
-        lambda: dedup_repeated_spans_apply(spark, sf_dir)
-    )
-    pre, after, corpus, n_parts = _drive_compacted_ingest(
+    batch_out, pre, after, corpus, n_parts = _drive_compacted_ingest(
         spark,
-        docs,
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         "doc_id",
-        lambda store, corp: _span_ingest_batch(
-            store, corp, compact_every=10 * N_SPAN_INGEST_BATCHES
-        ),
+        _span_ingest_batch,
         N_SPAN_INGEST_BATCHES,
+        twin=lambda: dedup_repeated_spans_apply(spark, sf_dir),
         read_corpus=True,
     )
-
-    def fold(df: DataFrame, prefix: str = "") -> DataFrame:
-        # one-row scalar fold of the gram store (no small natural
-        # grain exists on a gram store; sums are DECIMAL so long
-        # hash values cannot overflow)
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias(f"{prefix}n_rows"),
-            F.countDistinct("g").cast("long").alias(f"{prefix}n_g"),
-            F.sum(F.col("g").cast("decimal(38,0)")).alias(
-                f"{prefix}sum_g"
-            ),
-            F.sum("doc_id").cast("long").alias(f"{prefix}sum_doc"),
-            F.sum("pos").cast("long").alias(f"{prefix}sum_pos"),
-        )
-
-    comp = (
-        fold(after)
-        .crossJoin(F.broadcast(fold(pre, "pre_")))
-        .select(
-            (
-                F.col("n_rows").eqNullSafe(F.col("pre_n_rows"))
-                & F.col("n_g").eqNullSafe(F.col("pre_n_g"))
-                & F.col("sum_g").eqNullSafe(F.col("pre_sum_g"))
-                & F.col("sum_doc").eqNullSafe(F.col("pre_sum_doc"))
-                & F.col("sum_pos").eqNullSafe(F.col("pre_sum_pos"))
-            ).alias("compacted_ok")
-        )
-    )
-
-    # stream-vs-batch cleaned-corpus equality: full outer on
-    # doc_id over every output column (one-row scalar)
-    stream_out = corpus
-    batch_out = batch_out_handle()
-    s = stream_out.select(
+    # one-row scalar fold of the gram store (no small natural grain
+    # exists on a gram store; sums are DECIMAL so long hash values
+    # cannot overflow)
+    comp = _parity_fold(
+        pre,
+        after,
+        [],
+        n_rows=F.count(F.lit(1)).cast("long"),
+        n_g=F.countDistinct("g").cast("long"),
+        sum_g=F.sum(F.col("g").cast("decimal(38,0)")),
+        sum_doc=F.sum("doc_id").cast("long"),
+        sum_pos=F.sum("pos").cast("long"),
+    ).select("compacted_parity")
+    # stream-vs-batch cleaned-corpus equality over every output column
+    mism = _mismatch_count(
+        corpus,
+        batch_out,
         "doc_id",
-        F.col("n_tokens_before").alias("s_b"),
-        F.col("n_tokens_after").alias("s_a"),
-        F.col("n_spans_cut").alias("s_c"),
-        F.col("cleaned_text").alias("s_t"),
-    )
-    b = batch_out.select(
-        "doc_id",
-        F.col("n_tokens_before").alias("b_b"),
-        F.col("n_tokens_after").alias("b_a"),
-        F.col("n_spans_cut").alias("b_c"),
-        F.col("cleaned_text").alias("b_t"),
-    )
-    mism = (
-        s.join(b, "doc_id", "full")
-        .agg(
-            F.count(
-                F.when(
-                    ~(
-                        F.col("s_b").eqNullSafe(F.col("b_b"))
-                        & F.col("s_a").eqNullSafe(F.col("b_a"))
-                        & F.col("s_c").eqNullSafe(F.col("b_c"))
-                        & F.col("s_t").eqNullSafe(F.col("b_t"))
-                    ),
-                    1,
-                )
-            ).alias("n_mismatch")
-        )
+        "n_tokens_before",
+        "n_tokens_after",
+        "n_spans_cut",
+        "cleaned_text",
     )
     result = (
-        stream_out.crossJoin(F.broadcast(mism))
+        corpus.crossJoin(F.broadcast(mism))
         .crossJoin(F.broadcast(comp))
         .select(
             "doc_id",
@@ -1095,7 +995,7 @@ def stream_span_dedup_compacted_parity(
             F.md5("cleaned_text").alias("cleaned_fp"),
             F.lit(n_parts).cast("int").alias("store_partitions"),
             (F.col("n_mismatch") == 0).alias("stream_batch_parity"),
-            F.col("compacted_ok").alias("compacted_parity"),
+            "compacted_parity",
         )
     )
     # inputs eagerly materialized by the harness; checkpoint the
@@ -1305,10 +1205,6 @@ def stream_ingest_pipeline_parity(
     the previous stage's batch-scoped corpus partition — and return
     the per-document outcome of every stage (block comment
     above)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from ..operators.similarity import _centroid_frame
     from ..operators.webgate import derived_raw_url
     from .runtime import (
@@ -1318,20 +1214,7 @@ def stream_ingest_pipeline_parity(
         _url_ingest_batch,
     )
 
-    # one eager lineage cut before the loop (the harness device —
-    # _drive_compacted_ingest's block comment): per-batch actions
-    # otherwise re-analyze the derived_raw_url tree and re-scan the
-    # documents parquet once per stage action
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", derived_raw_url().alias("url_raw"))
-        .localCheckpoint(eager=True)
-    )
-    max_id = docs.agg(F.max("doc_id")).collect()[0][0]
-    # integer ceil — exact on both engines (the oracle's wd CTE)
-    width = (max_id + N_PIPE_BATCHES) // N_PIPE_BATCHES
-
-    root = _tempfile.mkdtemp(prefix="pitlap_pipeline_parity_")
+    root = tempfile.mkdtemp(prefix="pitlap_pipeline_parity_")
     never = 10 * N_PIPE_BATCHES  # compaction off: the per-sink
     # parity queries own the compaction choreography; this query
     # pins the CHAIN
@@ -1356,49 +1239,17 @@ def stream_ingest_pipeline_parity(
             eager=False
         )
 
-        # each stage early-returns (writing nothing) on an empty
-        # batch, so downstream stages gate on partition existence
-        def _url_stage(i: int) -> None:
-            url_ing(
-                docs.filter(
-                    (F.col("doc_id") >= i * width)
-                    & (F.col("doc_id") < (i + 1) * width)
-                ),
-                i,
-            )
+        def fed_by(corpus: str, ingest, prepare):
+            """The stage that runs ``ingest`` on batch i of the stage
+            above's ``corpus``. A stage writes nothing on an empty
+            batch, so the one below gates on partition existence."""
 
-        def _span_stage(i: int) -> None:
-            p = f"{u_corp}/batch={i}"
-            if _os.path.exists(p):
-                span_ing(
-                    spark.read.parquet(p).select("doc_id", "text"), i
-                )
+            def stage(i: int) -> None:
+                p = f"{corpus}/batch={i}"
+                if os.path.exists(p):
+                    ingest(prepare(spark.read.parquet(p)), i)
 
-        def _mh_stage(i: int) -> None:
-            p = f"{s_corp}/batch={i}"
-            if _os.path.exists(p):
-                mh_ing(
-                    spark.read.parquet(p).select(
-                        "doc_id", F.col("cleaned_text").alias("text")
-                    ),
-                    i,
-                )
-
-        def _sem_stage(i: int) -> None:
-            p = f"{m_corp}/batch={i}"
-            if _os.path.exists(p):
-                # stage 4: semantic dedup over the minhash survivors'
-                # embeddings (vec_id == doc_id, the fixture contract)
-                sem_ing(
-                    emb.join(
-                        spark.read.parquet(p)
-                        .select(F.col("doc_id").alias("vec_id"))
-                        .distinct(),
-                        "vec_id",
-                        "left_semi",
-                    ),
-                    i,
-                )
+            return stage
 
         # Software-pipelined chain (guide §2.6 overlap independent
         # jobs): stage s of batch i depends ONLY on stage s-1 of
@@ -1413,37 +1264,48 @@ def stream_ingest_pipeline_parity(
         # per-batch driver floors (Catalyst per-frame analysis) on an
         # idle cluster; the pipeline overlaps them to ~(4 + N - 1)
         # slots.
-        _run_pipelined_stages(
-            [_url_stage, _span_stage, _mh_stage, _sem_stage],
+        _drive_id_ordered(
+            load_table(spark, sf_dir, "documents").select(
+                "doc_id", "text", derived_raw_url().alias("url_raw")
+            ),
+            "doc_id",
             N_PIPE_BATCHES,
+            url_ing,
+            fed_by(u_corp, span_ing, lambda df: df.select("doc_id", "text")),
+            fed_by(
+                s_corp,
+                mh_ing,
+                lambda df: df.select(
+                    "doc_id", F.col("cleaned_text").alias("text")
+                ),
+            ),
+            # stage 4: semantic dedup over the minhash survivors'
+            # embeddings (vec_id == doc_id, the fixture contract)
+            fed_by(
+                m_corp,
+                sem_ing,
+                lambda df: emb.join(
+                    df.select(F.col("doc_id").alias("vec_id")).distinct(),
+                    "vec_id",
+                    "left_semi",
+                ),
+            ),
         )
-        # eager reads — the temp stores are removed in finally
-        g = (
-            spark.read.parquet(u_corp)
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
-        sp = (
-            spark.read.parquet(s_corp)
-            .select("doc_id", "n_tokens_after")
-            .localCheckpoint(eager=True)
-        )
-        mh = (
-            spark.read.parquet(m_corp)
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-            if _os.path.exists(m_corp)
-            else spark.createDataFrame([], "doc_id long")
-        )
-        sem = (
-            spark.read.parquet(e_corp)
-            .select(F.col("vec_id").alias("doc_id"))
-            .localCheckpoint(eager=True)
-            if _os.path.exists(e_corp)
-            else spark.createDataFrame([], "doc_id long")
-        )
+
+        def read(corpus: str, *cols) -> DataFrame:
+            # eager: the temp stores are removed in finally
+            if not os.path.exists(corpus):
+                return spark.createDataFrame([], "doc_id long")
+            return spark.read.parquet(corpus).select(*cols).localCheckpoint(
+                eager=True
+            )
+
+        g = read(u_corp, "doc_id")
+        sp = read(s_corp, "doc_id", "n_tokens_after")
+        mh = read(m_corp, "doc_id")
+        sem = read(e_corp, F.col("vec_id").alias("doc_id"))
     finally:
-        _shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     result = (
         load_table(spark, sf_dir, "documents")

@@ -573,8 +573,6 @@ def _relabel_store(
     from ..operators.similarity import rank_against_centroids
 
     def relabel(base: DataFrame) -> DataFrame:
-        # a legacy store's rows relabel with NULL = origin unknown
-        # (the probes' self-key guard; store.py)
         base = base.drop("label").dropDuplicates()
         # re-assign per physical row; the rank window keys on the
         # row's own identity (vec_id, origin batch, vector) so a
@@ -714,8 +712,8 @@ def _dedup_ingest_batch(
     function to foreachBatch."""
     from ..operators.dedup import N_HASHES, _band_rows, minhash_signatures
 
-    sigs = BatchStore(store_path, admit_unknown=True)
-    band_store = BatchStore(f"{store_path}_bands", admit_unknown=True)
+    sigs = BatchStore(store_path)
+    band_store = BatchStore(f"{store_path}_bands")
 
     def _est(left_prefix: str, right_prefix: str):
         return sum(
@@ -784,12 +782,7 @@ def _dedup_ingest_batch(
                 .join(
                     F.broadcast(bands.alias("x")),
                     (F.col("c.band_idx") == F.col("x.band_idx"))
-                    & (F.col("c.band_val") == F.col("x.band_val"))
-                    # legacy rows: the self-key guard (store.py)
-                    & (
-                        F.col("c.src_batch").isNotNull()
-                        | (F.col("c.doc_id") != F.col("x.doc_id"))
-                    ),
+                    & (F.col("c.band_val") == F.col("x.band_val")),
                 )
                 .select(
                     F.col("x.doc_id").alias("doc_new"),
@@ -866,7 +859,7 @@ def run_dedup_ingest_sink(
     KV store would cut those scans to O(collisions), which is the
     stated migration path at corpus sizes where the scans dominate.
 
-    Exactly-once, crash, provenance and legacy-store semantics are the
+    Exactly-once, crash and provenance semantics are the
     batch-scoped store's (store.py). The probe compares a batch doc
     with every earlier-arrived row, so a re-delivered doc_id with
     edited text dedups against its own earlier version like any other
@@ -893,7 +886,7 @@ def _phash_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         phash_frame,
     )
 
-    store = BatchStore(store_path, admit_unknown=True)
+    store = BatchStore(store_path)
 
     def ham(a, b):
         return F.bit_count(a.bitwiseXOR(b))
@@ -928,12 +921,7 @@ def _phash_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
                 .join(
                     F.broadcast(kept.alias("x")),
                     (F.col("c.band_id") == F.col("x.band_id"))
-                    & (F.col("c.band_val") == F.col("x.band_val"))
-                    # legacy rows: the self-key guard (store.py)
-                    & (
-                        F.col("c.src_batch").isNotNull()
-                        | (F.col("c.doc_id") != F.col("x.doc_id"))
-                    ),
+                    & (F.col("c.band_val") == F.col("x.band_val")),
                 )
                 .filter(
                     ham(F.col("c.phash"), F.col("x.phash")) <= PHASH_HAM_MAX
@@ -1051,7 +1039,7 @@ def read_embeddings_stream(
 
 def _semantic_store_probe_fn(assign_rows, tau: float):
     """Factory for the cross-batch store probe: a ``mapInArrow``
-    function over (vec_id, label, v, nrm, src_batch) STORE rows that
+    function over (vec_id, label, v, nrm) STORE rows that
     emits the micro-batch vec_ids having some store row in a shared
     cluster with round-6 cosine >= ``tau``.
 
@@ -1063,11 +1051,6 @@ def _semantic_store_probe_fn(assign_rows, tau: float):
     scanned once, never shuffled, and no candidate pair is ever
     materialized as a JVM row (guide §8: decide with small rows —
     the heavy side moves zero times).
-
-    Legacy guard (pre-provenance rows): a store row with NULL
-    ``src_batch`` must not match the batch row with its own vec_id
-    (the old join's ``s.src_batch IS NOT NULL OR s.vec_id !=
-    x.vec_id`` condition, bit-for-bit).
 
     Numeric contract: same floor(x*1e6+0.5)/1e6 == HALF_UP rounding
     as `_cluster_pair_score_fn` (similarity.py) — see its docstring
@@ -1092,12 +1075,8 @@ def _semantic_store_probe_fn(assign_rows, tau: float):
             n = rb.num_rows
             if n == 0:
                 continue
-            s_ids = rb.column("vec_id").to_numpy(zero_copy_only=False)
             s_lbl = rb.column("label").to_numpy(zero_copy_only=False)
             s_nrm = rb.column("nrm").to_numpy(zero_copy_only=False)
-            legacy = pa.compute.is_null(rb.column("src_batch")).to_numpy(
-                zero_copy_only=False
-            )
             s_v = rb.column("v").to_numpy(zero_copy_only=False)
             for lbl in np.unique(s_lbl):
                 hit = mats.get(lbl)
@@ -1108,9 +1087,6 @@ def _semantic_store_probe_fn(assign_rows, tau: float):
                 sv = np.stack(s_v[m])
                 cos = (sv @ xv.T) / np.outer(s_nrm[m], xn)
                 ge = np.floor(cos * 1e6 + 0.5) / 1e6 >= tau
-                leg = legacy[m]
-                if leg.any():
-                    ge &= ~(leg[:, None] & (s_ids[m][:, None] == xi[None, :]))
                 matched.update(xi[ge.any(axis=0)].tolist())
         if matched:
             yield pa.RecordBatch.from_arrays(
@@ -1154,7 +1130,7 @@ def _semantic_ingest_batch(
         )
     cent = centroids.localCheckpoint(eager=True)
     k_cache: dict = {}
-    store = BatchStore(store_path, admit_unknown=True)
+    store = BatchStore(store_path)
 
     def kernel(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1217,7 +1193,7 @@ def _semantic_ingest_batch(
         earlier = store.earlier(spark, batch_id)
         if earlier is not None:
             x_dups = (
-                earlier.select("vec_id", "label", "v", "nrm", "src_batch")
+                earlier.select("vec_id", "label", "v", "nrm")
                 .mapInArrow(
                     _semantic_store_probe_fn(
                         assign.collect(), SEMDEDUP_TAU
@@ -1311,8 +1287,7 @@ def run_semantic_ingest_sink(
 # minhash sink documents.
 #
 # Exactly-once, crash and provenance: the batch-scoped store's
-# (store.py); the store never held legacy rows, so its probe drops
-# rows of unknown origin. With id-ordered arrival,
+# (store.py). With id-ordered arrival,
 # "first-seen canonical URL wins" is exactly the batch gate's
 # keep-lowest-doc_id rule — what the registered parity query
 # (stream_url_gate_compacted_parity, batch_windows.py) pins at the
@@ -1434,8 +1409,7 @@ def run_url_ingest_sink(
 # ~10^8 grams.
 #
 # Exactly-once, crash and provenance: the batch-scoped store's
-# (store.py), null-rejecting like the URL sink's. gram hashes are
-# xxhash64 (the production twin's
+# (store.py). gram hashes are xxhash64 (the production twin's
 # hash): cut decisions are a function of gram EQUALITY only, so any
 # injective hash yields the same cuts — the md5/xxhash64 twin
 # argument from the batch queries, which is also why the parity

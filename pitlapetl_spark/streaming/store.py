@@ -66,19 +66,8 @@ such a crash or for a reader running during a fold. On an object store,
 swap the directory delete for the committer-based equivalent; the
 write-then-delete order is the portable part.
 
-Legacy stores. Stores written before ``src_batch`` existed are migrated
-on read (``_with_src_batch``). A legacy positive partition holds only
-its own batch's rows, so ``src_batch = batch`` is the true origin. A
-legacy generation mixes rows of unrecoverable origin; they get NULL,
-because stamping the generation id would pass every ``src_batch < b``
-filter and re-admit a replayed batch's own folded rows. A store opened
-with ``admit_unknown`` (minhash, pHash and semantic, the sinks older
-than provenance) admits NULL rows, and its kernel excludes them from
-matching the batch row with the same key, the pre-provenance self-key
-guard: self rows are excluded exactly, but rows that arrived later stay
-visible on reprocess until the store is rewritten with provenance. The
-URL and span stores were born with provenance; their null-rejecting
-filter drops NULL rows outright.
+Every store row carries ``src_batch`` (``write`` stamps it, every fold
+keeps it), and a store without the column is not one this module reads.
 """
 
 from __future__ import annotations
@@ -142,13 +131,10 @@ def write(batch_id: int, *outputs) -> None:
 
 
 class BatchStore:
-    """One store root. ``admit_unknown`` lets ``earlier`` return
-    legacy rows of unknown origin (NULL ``src_batch``); see the module
-    docstring."""
+    """One store root."""
 
-    def __init__(self, root: str, admit_unknown: bool = False):
+    def __init__(self, root: str):
         self.root = root
-        self.admit_unknown = admit_unknown
         self._schemas: dict = {}
 
     def compact(self, spark: SparkSession, batch_id: int, threshold: int) -> None:
@@ -161,11 +147,10 @@ class BatchStore:
         never passes for an empty store."""
         if not os.path.exists(self.root):
             return None
-        seen = F.col("src_batch") < batch_id
-        if self.admit_unknown:
-            seen = seen | F.col("src_batch").isNull()
-        rows = _with_src_batch(_cached_schema_read(spark, self.root, self._schemas))
-        return rows.filter((F.col("batch") < batch_id) & seen)
+        rows = _cached_schema_read(spark, self.root, self._schemas)
+        return rows.filter(
+            (F.col("batch") < batch_id) & (F.col("src_batch") < batch_id)
+        )
 
     def fold(self, spark: SparkSession, keys) -> DataFrame:
         """Every row of the store once, for a reader that folds it:
@@ -205,9 +190,7 @@ def _compact_partition_store(
     accumulate (module docstring: which partitions fold, the
     write-then-delete order, the full-row crash heal). ``rewrite``
     replaces the full-row dedup with the caller's own transform of the
-    source rows (the semantic sink relabels its store through it);
-    those rows always carry ``src_batch``, NULL on a legacy store,
-    whose leaf reads have no ``batch`` column to recover it from."""
+    source rows (the semantic sink relabels its store through it)."""
     committed, gens = _foldable_partitions(root, current_batch)
     if committed is None or len(committed) < threshold:
         return
@@ -215,12 +198,7 @@ def _compact_partition_store(
     if not sources:
         return
     rows = spark.read.parquet(*sources)
-    if rewrite is None:
-        rows = rows.dropDuplicates()
-    else:
-        if "src_batch" not in rows.columns:
-            rows = rows.withColumn("src_batch", F.lit(None).cast("int"))
-        rows = rewrite(rows)
+    rows = rows.dropDuplicates() if rewrite is None else rewrite(rows)
     rows.write.mode("overwrite").parquet(
         os.path.join(root, f"batch={min(gens, default=0) - 1}")
     )
@@ -253,28 +231,12 @@ def _foldable_partitions(
 def _cached_schema_read(spark: SparkSession, path: str, box: dict) -> DataFrame:
     """Read a store with its parquet schema inferred once per store
     instance and reused for every later batch (the sink's own writes
-    fix it), skipping per-batch footer sampling. Only a schema carrying
-    ``src_batch`` is cached: a first read of a legacy store would
-    otherwise freeze a schema without it, and later reads would drop
-    the provenance the sink's own writes add."""
+    fix it), skipping per-batch footer sampling."""
     if path in box:
         return spark.read.schema(box[path]).parquet(path)
     df = spark.read.parquet(path)
-    if "src_batch" in df.columns:
-        box[path] = df.schema
+    box[path] = df.schema
     return df
-
-
-def _with_src_batch(df: DataFrame) -> DataFrame:
-    """Add ``src_batch`` to a root read of a legacy store: the
-    partition id on positive partitions, NULL on generations (module
-    docstring, "Legacy stores"). INT, like the column the sinks
-    stamp, so a stamped and a legacy partition read as one type."""
-    if "src_batch" in df.columns:
-        return df
-    return df.withColumn(
-        "src_batch", F.when(F.col("batch") >= 0, F.col("batch")).cast("int")
-    )
 
 
 def quantizer_path(root: str, qbatch: int) -> str:

@@ -751,3 +751,29 @@ def test_bootstrap_rename_failure_leaves_no_debris(spark, tmp_path, monkeypatch)
     # and the table is writable afterwards
     merge_upsert_partition_scoped(base, path, ["k"], "day")
     assert spark.read.parquet(path).count() == 1
+
+
+@pytest.mark.parametrize("days", [[None], ["d1", None]], ids=["all_null", "mixed"])
+def test_partition_scoped_sinks_reject_null_partition_values(spark, tmp_path, days):
+    """A null ``part_col`` value names no partition directory, so both
+    partition-scoped sinks raise ValueError for it, alone or mixed with
+    other values, before touching the table. The check is a raise, not
+    an assert, so it also holds under ``python -O``, where an all-null
+    delete must not report ``[None]`` as erased."""
+    from pitlapetl_spark.sinks import (
+        delete_keys_partition_scoped,
+        merge_upsert_partition_scoped,
+    )
+
+    path = str(tmp_path / "t")
+    schema = "day string, k int, v double"
+    merge_upsert_partition_scoped(
+        spark.createDataFrame([("d1", 1, 1.0)], schema), path, ["k"], "day"
+    )
+    before = _snapshot(spark, path)
+    bad = spark.createDataFrame([(d, i, 2.0) for i, d in enumerate(days)], schema)
+    with pytest.raises(ValueError, match="non-null"):
+        merge_upsert_partition_scoped(bad, path, ["k"], "day")
+    with pytest.raises(ValueError, match="non-null"):
+        delete_keys_partition_scoped(spark, path, bad.select("day", "k"), ["k"], "day")
+    assert _snapshot(spark, path) == before

@@ -2289,200 +2289,30 @@ def test_span_dedup_ingest_cuts_across_batches_and_replays(spark, tmp_path):
     assert run("ckpt3") == got, "reprocess diverged against the generation"
 
 
-def test_ingest_probe_migrates_legacy_store_without_src_batch(spark, tmp_path):
-    """A store persisted BEFORE the src_batch provenance column
-    existed must not crash the upgraded probe (UNRESOLVED_COLUMN
-    inside foreachBatch would kill the stream on the first batch
-    after an upgrade — round-11 review catch): _with_src_batch stamps
-    src_batch = batch on read for UNCOMPACTED legacy partitions (the
-    true origin — each positive partition holds only its own batch's
-    writes), so dedup still applies exactly."""
-    import os
-
-    from pitlapetl_spark.streaming.runtime import _url_ingest_batch
-
-    store, corpus = str(tmp_path / "store"), str(tmp_path / "corpus")
-    # a legacy batch-0 store partition: NO src_batch column
-    spark.createDataFrame(
-        [("https://src0.example.com/a", "src0.example.com", 1)],
-        "url_canon string, site string, doc_id long",
-    ).write.mode("overwrite").parquet(f"{store}/batch=0")
-
-    ingest = _url_ingest_batch(store, corpus, compact_every=10**6)
-    batch = spark.createDataFrame(
-        [
-            (10, "https://src0.example.com/a"),  # dup of the legacy row
-            (11, "https://src1.example.com/new"),
-        ],
-        "doc_id long, url_raw string",
-    )
-    ingest(batch, 1)  # must not raise
-    kept = sorted(
-        r.doc_id for r in spark.read.parquet(f"{corpus}/batch=1").collect()
-    )
-    assert kept == [11], "legacy store row failed to dedup the re-crawl"
-
-
-def test_cached_schema_read_does_not_freeze_a_legacy_schema(spark, tmp_path):
-    """The schema cache must not freeze a legacy store's schema: the
-    first read finds no src_batch, then the sink's own write (here a
-    fold into a generation partition, rows from batches 0 and 1) adds
-    it. Later reads through the same cache must carry the real
-    provenance, not the NULL ``_with_src_batch`` stamps on legacy
-    generation rows."""
-    import shutil
-
-    from pitlapetl_spark.streaming.store import _cached_schema_read, _with_src_batch
-
-    store = str(tmp_path / "store")
-    spark.createDataFrame([(1, "a")], "doc_id long, url string").write.parquet(
-        f"{store}/batch=0"
-    )
-    box: dict = {}
-    assert "src_batch" not in _cached_schema_read(spark, store, box).columns
-    shutil.rmtree(f"{store}/batch=0")
-    spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 1)], "doc_id long, url string, src_batch long"
-    ).write.parquet(f"{store}/batch=-1")
-    for _ in range(2):  # the re-read, then a read from the cached schema
-        got = _with_src_batch(_cached_schema_read(spark, store, box)).collect()
-        assert {r.doc_id: r.src_batch for r in got} == {1: 0, 2: 1}
-
-
-def test_with_src_batch_stamps_null_for_legacy_generations(spark):
-    """_with_src_batch's two migration cases (its docstring, ADVICE
-    r11): an uncompacted legacy partition (batch >= 0) gets its TRUE
-    origin stamped; a legacy GENERATION partition (batch < 0) mixes
-    rows of unrecoverable origin and must be stamped NULL — stamping
-    the partition id would forge a value that passes every
-    ``src_batch < current`` probe filter and re-admits a replayed
-    batch's own folded rows (the self-match-to-empty bug the
-    provenance column exists to close)."""
-    from pitlapetl_spark.streaming.store import _with_src_batch
-
-    df = spark.createDataFrame(
-        [(1, 0), (2, 3), (3, -1), (4, -2)], "doc_id long, batch int"
-    )
-    got = {
-        r.doc_id: r.src_batch for r in _with_src_batch(df).collect()
-    }
-    assert got == {1: 0, 2: 3, 3: None, 4: None}
-    # already-provenanced frames pass through untouched
-    stamped = spark.createDataFrame(
-        [(1, -1, 5)], "doc_id long, batch int, src_batch int"
-    )
-    assert _with_src_batch(stamped) is stamped
-
-
 def test_store_earlier_admits_only_earlier_rows(spark, tmp_path):
     """BatchStore.earlier is the probe contract of every ingest sink
     (store.py): from a generation holding rows of the current, an
-    earlier and a later batch plus a legacy row of unknown origin,
-    only the earlier row comes back, and the unknown one only where
-    the store admits it. Positive partitions at or after the batch are
-    pruned by the partition filter alone: their rows claim an earlier
-    origin, so the row filter would keep them. A partition stamped by
-    the store's own write and a legacy one without ``src_batch`` read
-    back as one INT column."""
-    from pitlapetl_spark.streaming.store import BatchStore, write
+    earlier and a later batch, only the earlier row comes back.
+    Positive partitions at or after the batch are pruned by the
+    partition filter alone: their rows claim an earlier origin, so the
+    row filter would keep them."""
+    from pitlapetl_spark.streaming.store import BatchStore
 
     root, b = str(tmp_path / "store"), 5
     schema = "doc_id long, src_batch int"
     spark.createDataFrame(
-        [(1, b), (2, b - 1), (3, b + 1), (4, None)], schema
+        [(1, b), (2, b - 1), (3, b + 1)], schema
     ).write.parquet(f"{root}/batch=-1")
     for part, doc in ((b - 1, 5), (b, 6), (b + 1, 7)):
         spark.createDataFrame([(doc, 0)], schema).write.parquet(
             f"{root}/batch={part}"
         )
 
-    def ids(store):
-        return sorted(r.doc_id for r in store.earlier(spark, b).collect())
-
-    assert ids(BatchStore(root, admit_unknown=True)) == [2, 4, 5]
-    assert ids(BatchStore(root)) == [2, 5]
-    plan = (
-        BatchStore(root).earlier(spark, b)._jdf.queryExecution()
-        .executedPlan().toString()
-    )
+    earlier = BatchStore(root).earlier(spark, b)
+    assert sorted(r.doc_id for r in earlier.collect()) == [2, 5]
+    plan = earlier._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(batch" in plan and f"< {b})" in plan
     assert BatchStore(str(tmp_path / "absent")).earlier(spark, b) is None
-
-    mixed = BatchStore(str(tmp_path / "mixed"), admit_unknown=True)
-    spark.createDataFrame([(2,)], "doc_id long").write.parquet(
-        f"{mixed.root}/batch=-1"
-    )
-    assert dict(mixed.earlier(spark, 1).dtypes)["src_batch"] == "int"
-    write(0, (mixed, spark.createDataFrame([(1,)], "doc_id long")))
-    got = mixed.earlier(spark, 1)
-    assert dict(got.dtypes)["src_batch"] == "int"
-    assert {r.doc_id: r.src_batch for r in got.collect()} == {1: 0, 2: None}
-
-
-def test_ingest_reprocess_against_legacy_compacted_store(spark, tmp_path):
-    """Fresh-checkpoint reprocess against a PRE-PROVENANCE compacted
-    store (ADVICE r11 medium): the generation partition holds the
-    replayed batch's own folded rows WITHOUT src_batch. The forged
-    ``src_batch = batch`` stamp would let every vector self-match at
-    cosine 1.0 and overwrite its corpus partition EMPTY — exactly the
-    round-10 bug the provenance column closed. Under the NULL stamp +
-    pre-provenance self-key guard, self rows are excluded and the
-    reprocess reproduces the first run (the fixture keeps cross-batch
-    cosines below tau, so the documented legacy later-arrival
-    inexactness cannot fire and the assertion is exact)."""
-    import os
-
-    from pitlapetl_spark.streaming.runtime import _semantic_ingest_batch
-    from pitlapetl_spark.streaming.store import _compact_partition_store
-
-    cent = spark.createDataFrame(
-        [(0, [1.0, 1.0], 2.0**0.5)], "label int, cv array<double>, cnrm double"
-    )
-    store, corpus = str(tmp_path / "store"), str(tmp_path / "corpus")
-    emb = "vec_id long, embedding array<float>, label int"
-    b0 = spark.createDataFrame(
-        [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0)], emb
-    )
-    # cosine vs both batch-0 vectors below tau (0.35): 0.316 vs A,
-    # -0.949 vs D — all three keep
-    b1 = spark.createDataFrame([(10, [1.0, -3.0], 0)], emb)
-
-    def drive():
-        ingest = _semantic_ingest_batch(
-            cent, store, corpus, compact_every=10**6
-        )
-        ingest(b0, 0)
-        ingest(b1, 1)
-        return sorted(r.vec_id for r in spark.read.parquet(corpus).collect())
-
-    got = drive()
-    assert got == [1, 2, 10], "fixture sanity: no dups anywhere"
-
-    # fold everything into one generation, then simulate a
-    # PRE-PROVENANCE fold by stripping src_batch from it
-    _compact_partition_store(spark, store, current_batch=10**6, threshold=1)
-    gens = [
-        d for d in os.listdir(store) if d.startswith("batch=-")
-    ]
-    assert gens == ["batch=-1"]
-    gen = f"{store}/batch=-1"
-    legacy = (
-        spark.read.parquet(gen).localCheckpoint(eager=True).drop("src_batch")
-    )
-    legacy.write.mode("overwrite").parquet(gen)
-
-    # from-scratch reprocess (fresh "checkpoint" = rerun the bodies):
-    # must converge to the first run, not self-annihilate to empty
-    again = drive()
-    assert again == got, (
-        "reprocess against a legacy (pre-provenance) generation "
-        "diverged — self-rows re-entered the probe"
-    )
-    # and specifically: the corpus partitions are NON-empty (the
-    # failure mode is overwrite-to-empty, which a lenient >=0-row
-    # check would miss)
-    for b in (0, 1):
-        assert spark.read.parquet(f"{corpus}/batch={b}").count() > 0
 
 
 def test_url_ingest_shared_checkpoint_restart_and_post_fold_dedup(
@@ -2776,3 +2606,59 @@ def test_pipelined_stage_failure_releases_downstream_and_reraises():
     with pytest.raises(RuntimeError, match="stage 0 failed on batch 1"):
         _join_within(lambda: _run_pipelined_stages([stage0, stage1], 3))
     assert ran == {0: [0], 1: [0]}
+
+
+def test_parity_fold_surfaces_a_group_lost_by_compaction(spark):
+    """``_parity_fold`` joins the pre and post-compaction folds FULL
+    OUTER: a grain group missing on the after side comes back with its
+    aggregates zeroed and ``compacted_parity`` false instead of
+    vanishing, and an empty grain folds each side to one row."""
+    from pitlapetl_spark.streaming.batch_windows import _parity_fold
+
+    pre = spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "g string, x long")
+    after = pre.filter(F.col("g") == "a")
+    aggs = dict(n=F.count(F.lit(1)).cast("long"), s=F.sum("x").cast("long"))
+    got = {tuple(r) for r in _parity_fold(pre, after, ["g"], **aggs).collect()}
+    assert got == {("a", 2, 3, True), ("b", 0, 0, False)}
+    assert [tuple(r) for r in _parity_fold(pre, after, [], **aggs).collect()] == [
+        (2, 3, False)
+    ]
+    assert _parity_fold(pre, pre, [], **aggs).collect()[0].compacted_parity
+
+
+def test_mismatch_count_counts_one_sided_keys_and_payload_diffs(spark):
+    """``_mismatch_count``: zero only when both sides hold the same
+    keys with NULL-safe equal payloads."""
+    from pitlapetl_spark.streaming.batch_windows import _mismatch_count
+
+    schema = "k long, p string"
+    base = spark.createDataFrame([(1, "x"), (2, None)], schema)
+
+    def n(stream, batch, *payload):
+        return _mismatch_count(stream, batch, "k", *payload).collect()[0].n_mismatch
+
+    assert n(base, base, "p") == 0
+    assert n(base, spark.createDataFrame([(1, "x"), (2, "y")], schema), "p") == 1
+    assert n(base, base.filter("k = 1")) == 1
+    assert n(spark.createDataFrame([(3, "z")], schema), base) == 3
+
+
+def test_drive_id_ordered_splits_by_id_and_rejects_an_empty_source(spark):
+    """``_drive_id_ordered`` feeds consecutive id ranges in order
+    (width ceil((max_id + 1) / n)) and runs the downstream stage after
+    each; an empty source raises ValueError."""
+    from pitlapetl_spark.streaming.batch_windows import _drive_id_ordered
+
+    seen, after = [], []
+    src = spark.range(7).withColumnRenamed("id", "doc_id")
+    _drive_id_ordered(
+        src,
+        "doc_id",
+        3,
+        lambda df, i: seen.append((i, sorted(r.doc_id for r in df.collect()))),
+        after.append,
+    )
+    assert seen == [(0, [0, 1, 2]), (1, [3, 4, 5]), (2, [6])]
+    assert after == [0, 1, 2]
+    with pytest.raises(ValueError, match="no rows"):
+        _drive_id_ordered(src.filter("doc_id < 0"), "doc_id", 3, lambda df, i: None)
