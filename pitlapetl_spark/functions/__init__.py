@@ -2,11 +2,11 @@
 
 The reference implements these as per-row Python functions
 (SURVEY.md §2.10/§2.13): ``format_laptime`` (qualifyingdag.py:49-51,
-practicedag.py:54-60), ``format_date`` (scheduledag.py:35-40), casts
-and conditional defaults (driverstandings.py:24-39). Re-expressed here
-as column expressions they stay inside whole-stage codegen — the JVM
-evaluates them over Tungsten columnar batches, so they cost nothing
-extra at 100 TB, versus a per-row Python round-trip in the reference.
+practicedag.py:54-60) and ``format_date`` (scheduledag.py:35-40).
+Re-expressed here as column expressions they stay inside whole-stage
+codegen — the JVM evaluates them over Tungsten columnar batches, so
+they cost nothing extra at 100 TB, versus a per-row Python round-trip
+in the reference.
 """
 
 from __future__ import annotations
@@ -55,14 +55,3 @@ def composite_key(*cols: Column | str, sep: str = "_") -> Column:
     ``str(round)+'-'+str(year)`` (scheduledag.py:43).
     """
     return F.concat_ws(sep, *[F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols])
-
-
-def int_or_default(col: Column, sentinel: str = "Unknown", default: int = 0) -> Column:
-    """``int(x) if x != sentinel else default`` — driverstandings.py:36."""
-    return F.when(col != sentinel, col.cast("int")).otherwise(F.lit(default))
-
-
-def coalesce_default(col: Column, default) -> Column:
-    """Missing-field default — ``.get(key, default)`` semantics
-    (driverstandings.py:24-33) over schema-on-read NULLs."""
-    return F.coalesce(col, F.lit(default))

@@ -26,7 +26,9 @@ Scale design (the whole point at 100 TB):
 
 Cross-engine determinism: every hash is md5-hex (Spark md5 == DuckDB
 md5), min-ed lexicographically; every ratio is round(6)-ed before
-thresholding on BOTH sides. Swap md5 for xxhash64 in production.
+thresholding on BOTH sides. Swap md5 for xxhash64 in production only
+where the result does not depend on the hash (winnowing's does: see
+WINNOW_FAST_MIN_LEN).
 """
 
 from __future__ import annotations
@@ -822,15 +824,16 @@ WINNOW_MIN_SHARED = 10
 WINNOW_RATIO = 0.5
 
 _WNORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+# the per-k-gram hash (``i`` is the 1-based position in the transform)
+_WINNOW_HASH = f"md5(substring(norm, i, {WINNOW_K}))"
 
 
 
 def _winnow_oracle(min_len: int, pairs_only: bool) -> str:
-    """ONE oracle formulation for BOTH winnowing twins (md5 parity and
-    xxhash64-with-md5-replay), parameterized by the length floor and
-    the projection — so the two registered SQL strings cannot drift.
-    A drift would silently invalidate the fast path's cross-hash
-    equivalence argument (WINNOW_FAST_MIN_LEN note below)."""
+    """ONE oracle formulation for BOTH winnowing queries (the full md5
+    twin and the length-floored pairs projection), parameterized by
+    the length floor and the projection — so the two registered SQL
+    strings cannot drift from each other or from ``_winnow_pairs``."""
     projection = (
         "SELECT s.doc_a, s.doc_b"
         if pairs_only
@@ -918,27 +921,22 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped-Jaccard shingle join — hot boilerplate fingerprints are
     dropped as stop-grams before any pairing. No stage is ever
     corpus-quadratic. The md5-per-position cost is the cross-engine
-    determinism tax (module docstring): ``dedup_winnowing_fast`` below
-    is the production path on xxhash64 (~60% cheaper extraction,
-    long-typed fingerprints shuffle 4x less data than 32-char md5
-    strings); this md5 twin stays registered as the full-fidelity
-    oracle row."""
-    return _winnow_pairs(spark, sf_dir, f"md5(substring(norm, i, {WINNOW_K}))")
+    determinism tax (module docstring)."""
+    return _winnow_pairs(spark, sf_dir)
 
 
-# Hash-independent size floor for the fast path's contract: which
-# k-gram each window ELECTS is a function of the hash, so decisions
-# within ~1 fingerprint of the accept thresholds can differ between
-# md5 and xxhash64 (observed: a 49-char doc with exactly
-# WINNOW_MIN_SHARED=10 distinct md5 fingerprints at ratio 1.0 fell to
-# 9 under xxhash64). Docs >= 120 normalized chars carry ~40+
-# fingerprints, so true copies land at n_shared ~4x the floor and
-# ratio >= ~0.78 vs the 0.5 threshold — no decision sits near a
-# boundary and the pair set is hash-invariant (asserted identical to
-# the md5 twin's at sf0.001/0.01/0.1 by tests/test_llm_ops.py).
-# Production story: text LENGTH is deterministic, so the sub-floor
-# tail routes to the exact tiny-doc path (cheap by definition) while
-# the bulk corpus takes this path.
+# Length floor of ``dedup_winnowing_fast``: docs >= 120 normalized
+# chars carry ~40+ fingerprints, so true copies land far above the
+# accept thresholds, and the short tail (cheap by definition) can be
+# routed to the full query. The floor does NOT make the pair set
+# hash-invariant: which k-gram each window elects depends on the hash,
+# and the DF cap and n_shared floor act on fingerprint counts, so a
+# different hash moves pairs across the thresholds at any length (an
+# xxhash64 variant of this query returned 1519 pairs where the md5
+# oracle returns 1543 on the benchmark generator's 1000-doc corpus,
+# seed 2). Every
+# winnowing query therefore hashes with md5, the one hash DuckDB
+# replays bit-for-bit.
 WINNOW_FAST_MIN_LEN = 120
 
 
@@ -946,43 +944,23 @@ WINNOW_FAST_MIN_LEN = 120
     "dedup_winnowing_fast",
     # Same formulation as dedup_winnowing (one shared builder — the
     # strings CANNOT drift) with the length floor applied and the
-    # projection cut to the accepted PAIRS only. DuckDB cannot
-    # evaluate Spark's xxhash64, so the oracle replays the md5
-    # formulation — a REAL cross-hash equivalence check, valid because
-    # the floor keeps every decision far from the thresholds (see
-    # WINNOW_FAST_MIN_LEN note). n_shared and overlap_ratio DO depend
-    # on which k-grams win their windows, so they are deliberately
-    # not part of this query's contract.
+    # projection cut to the accepted PAIRS only.
     oracle=_winnow_oracle(WINNOW_FAST_MIN_LEN, pairs_only=True),
 )
 def dedup_winnowing_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production winnowing: identical plan shape to
-    ``dedup_winnowing`` with the per-position hash swapped from md5 to
-    ``xxhash64`` — the dominant extraction stage gets ~60% cheaper and
-    the fingerprint column is a long instead of a 32-char string, so
-    every downstream shuffle (distinct, DF cap, inverted-index pair
-    join) moves 4x less data. Scoped to docs >= WINNOW_FAST_MIN_LEN
-    normalized chars so the accept decision is hash-invariant (see
-    the constant's note). Returns the accepted near-dup PAIRS — the
-    decision a dedup pipeline acts on; similarity magnitudes live on
-    the md5 twin where DuckDB can replay them exactly."""
-    pairs = _winnow_pairs(
-        spark,
-        sf_dir,
-        f"xxhash64(substring(norm, i, {WINNOW_K}))",
-        min_len=WINNOW_FAST_MIN_LEN,
+    """Bulk-corpus winnowing: ``dedup_winnowing``'s pipeline scoped to
+    docs >= WINNOW_FAST_MIN_LEN normalized chars (see the constant's
+    note), returning only the accepted near-dup PAIRS — the decision
+    a dedup pipeline acts on."""
+    return _winnow_pairs(spark, sf_dir, min_len=WINNOW_FAST_MIN_LEN).select(
+        "doc_a", "doc_b"
     )
-    return pairs.select("doc_a", "doc_b")
 
 
-def _winnow_pairs(
-    spark: SparkSession, sf_dir: str, hash_expr: str, min_len: int = WINNOW_K
-) -> DataFrame:
-    """Shared winnowing pipeline, parameterized by the per-k-gram hash
-    expression (``i`` is the 1-based position variable in scope inside
-    the ``transform`` lambda; the expression must be orderable — the
-    window elects its MIN hash as the fingerprint) and the minimum
-    normalized-text length admitted to the corpus."""
+def _winnow_pairs(spark: SparkSession, sf_dir: str, min_len: int = WINNOW_K) -> DataFrame:
+    """Shared winnowing pipeline over the docs of at least ``min_len``
+    normalized chars; every k-gram is hashed with md5 (``_WINNOW_HASH``),
+    and each window elects its MIN hash as the fingerprint."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", norm_text(F.col("text")).alias("norm")
     )
@@ -1012,7 +990,7 @@ def _winnow_pairs(
         (F.length("norm") - WINNOW_K + 1).alias("n_pos"),
         F.expr(
             f"transform(sequence(1, length(norm) - {WINNOW_K} + 1), "
-            f"i -> {hash_expr})"
+            f"i -> {_WINNOW_HASH})"
         ).alias("hs"),
     )
     # Stage B: winnowing election as a doc-local sliding min —

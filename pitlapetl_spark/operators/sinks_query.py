@@ -49,7 +49,7 @@ UPSERT_TYPES = ("click", "error")
     """,
 )
 def sink_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write base snapshot -> dynamic-partition upsert of two keys ->
+    """Write base snapshot -> partition-swap upsert of two keys ->
     read back the final table state."""
     events = load_table(spark, sf_dir, "events")
 
@@ -64,10 +64,10 @@ def sink_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = tempfile.mkdtemp(prefix="pitlap_upsert_") + "/table"
     try:
-        upsert_partitioned(base, path, ["event_type"])
-        upsert_partitioned(updates, path, ["event_type"])
+        upsert_partitioned(base, path, "event_type")
+        upsert_partitioned(updates, path, "event_type")
         # run the upsert AGAIN — idempotency: final state must not change
-        upsert_partitioned(updates, path, ["event_type"])
+        upsert_partitioned(updates, path, "event_type")
         final = spark.read.parquet(path)
         result = final.select("user_id", "n_events", "max_value", "event_type")
         # materialize executor-side before the temp dir is removed:
@@ -198,7 +198,7 @@ def sink_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = tempfile.mkdtemp(prefix="pitlap_delete_") + "/table"
     try:
-        upsert_partitioned(base, path, ["event_type"])
+        upsert_partitioned(base, path, "event_type")
         keys = (
             base.filter(
                 F.col("event_type").isin(*DELETE_TYPES)

@@ -8,11 +8,13 @@ an EMPTY collection if the insert fails mid-way).
 
 Spark-first restatement over parquet:
 
-- K1/K2 -> dynamic partition overwrite keyed on the upsert key
-  columns: idempotent (re-running a load replaces exactly its own
-  partitions) and atomic per partition via the staged commit protocol.
-  At 100 TB this is the only sane upsert: touched partitions rewrite,
-  untouched ones are never read.
+- K1/K2 -> ``upsert_partitioned``: replace exactly the partitions the
+  load carries through the staged partition swap every
+  partition-scoped sink shares (``_rewrite_partitions``): idempotent
+  (re-running a load replaces exactly its own partitions) and
+  crash-safe per partition (old copies are displaced, never deleted,
+  until every new one is installed). At 100 TB this is the only sane
+  upsert: touched partitions rewrite, untouched ones are never read.
 - K3 -> ``overwrite()``: same full-refresh semantics but STAGED — the
   new table is written to a side directory and swapped into place by
   renames, so the old data survives a mid-write failure (the window
@@ -225,19 +227,14 @@ def _partition_values(df: DataFrame, part_col: str) -> list:
     return sorted(vals)
 
 
-def upsert_partitioned(df: DataFrame, path: str, key_cols: list[str]) -> None:
-    """K1/K2 keyed upsert: replace exactly the (key...) partitions
-    present in ``df``, leave all others untouched."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        with _writer_lock(path):
-            df.write.mode("overwrite").partitionBy(*key_cols).parquet(path)
-    finally:
-        # scope the dynamic mode to THIS write: leaking it session-wide
-        # silently turns later full-refresh overwrites into partial ones
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+def upsert_partitioned(df: DataFrame, path: str, part_col: str) -> list:
+    """K1/K2 keyed upsert: replace exactly the ``part_col`` partitions
+    present in ``df`` with its rows, leave all others untouched.
+    Same partition-value constraints as the other partition-scoped
+    sinks (non-null, filesystem-safe); an empty ``df`` touches
+    nothing. Returns the partition values rewritten."""
+    vals = _partition_values(df, part_col)
+    return _rewrite_partitions(df.sparkSession, path, part_col, vals, lambda _: df)
 
 
 def staged_swap(df: DataFrame, path: str) -> None:
@@ -260,16 +257,10 @@ def staged_swap(df: DataFrame, path: str) -> None:
 
 
 def _staged_swap_locked(df: DataFrame, path: str) -> None:
-    """``staged_swap`` body without the lease, for callers that must
-    hold ``_writer_lock`` across a WIDER span than the write itself —
-    ``merge_upsert_write`` and ``compact`` read the table they are
-    about to replace, and taking the lease only at swap time leaves
-    the read-merge window unprotected: two concurrent merges could
-    both pass the read phase, and the loser would die mid-stage-write
-    with FileNotFound (the winner's swap removed the files it was
-    reading) instead of the promised ConcurrentWriterError (ADVICE
-    r5 #2). flock is not reentrant per-fd-pair, so the outer caller
-    passes control here rather than re-acquiring."""
+    """``staged_swap`` body without the lease, for ``rewrite_table``,
+    which holds ``_writer_lock`` across the read as well (flock is not
+    reentrant per-fd-pair, so the outer caller passes control here
+    rather than re-acquiring)."""
     old = f"{path}__old"
     if not os.path.exists(path) and os.path.exists(old):
         # crashed between the two renames of a previous swap:
@@ -293,6 +284,20 @@ def _staged_swap_locked(df: DataFrame, path: str) -> None:
         os.rename(path, old)
     os.rename(stage, path)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def rewrite_table(spark: SparkSession, path: str, build, schema=None) -> None:
+    """The one whole-table read-modify-write: under the writer lease,
+    read the table (``read_or_none``; None when it does not exist yet)
+    and swap ``build(existing)`` into place. The lease covers the READ
+    as well as the swap (ADVICE r5 #2): ``read_or_none`` resolves the
+    file listing eagerly, so a lease taken only at swap time would let
+    two writers both pass the read phase — the loser then fails
+    mid-stage-write with FileNotFound instead of
+    ConcurrentWriterError, and its result would be built on a listing
+    the winner already replaced."""
+    with _writer_lock(path):
+        _staged_swap_locked(build(read_or_none(spark, path, schema=schema)), path)
 
 
 def overwrite(df: DataFrame, path: str) -> None:
@@ -325,20 +330,13 @@ def merge_upsert(
 
 def merge_upsert_write(updates: DataFrame, path: str, key_cols: list[str]) -> None:
     """MERGE ``updates`` into the table at ``path`` and persist the
-    result via ``staged_swap`` (the merged plan lazily reads ``path``,
-    so the write must go to a staging dir — overwriting in place would
-    read the table being deleted). Rejects duplicate keys in
-    ``updates`` up front: the anti-join+union emulation would insert
-    ALL copies, silently breaking the one-row-per-key invariant the
-    table's consumers rely on.
-
-    The writer lease covers the WHOLE read+merge+swap span (ADVICE
-    r5 #2): ``read_or_none`` resolves the table's file listing (and
-    probes a row) eagerly, so acquiring the lease only inside the
-    swap would let two concurrent merges both pass the read phase —
-    the loser then fails mid-stage-write with FileNotFound instead of
-    the module-contract ConcurrentWriterError, and its merge result
-    would be based on a listing the winner already replaced."""
+    result through ``rewrite_table`` (the merged plan lazily reads
+    ``path``, so the write must go to a staging dir — overwriting in
+    place would read the table being deleted; the lease covers the
+    read). Rejects duplicate keys in ``updates`` up front: the
+    anti-join+union emulation would insert ALL copies, silently
+    breaking the one-row-per-key invariant the table's consumers rely
+    on."""
     spark = updates.sparkSession
     dup = (
         updates.groupBy(*key_cols)
@@ -353,9 +351,12 @@ def merge_upsert_write(updates: DataFrame, path: str, key_cols: list[str]) -> No
             f"e.g. {tuple(dup[0][k] for k in key_cols)} — aggregate the "
             f"batch to one row per key before merging"
         )
-    with _writer_lock(path):
-        existing = read_or_none(spark, path, schema=updates.schema)
-        _staged_swap_locked(merge_upsert(existing, updates, key_cols), path)
+    rewrite_table(
+        spark,
+        path,
+        lambda existing: merge_upsert(existing, updates, key_cols),
+        schema=updates.schema,
+    )
 
 
 def merge_upsert_partition_scoped(
@@ -380,71 +381,50 @@ def merge_upsert_partition_scoped(
     insert in the new one, not a delete from the old — same as every
     partition-scoped MERGE emulation). Single-writer, like every sink
     here. Returns the list of partition values rewritten."""
-    spark = updates.sparkSession
-    _fail_on_merge_debris(path)
-    vals = _partition_values(updates, part_col)
-    part_strs = [str(v) for v in vals]
-    if not os.path.exists(path):
-        # bootstrap through the SAME staged+validated path as every
-        # later merge: the old direct write accepted a hive-escapable
-        # part_col value at table creation (day='d:1' -> day=d%3A1 on
-        # disk) that every SUBSEQUENT merge then rejects — validating
-        # clean on batch 1 and failing permanently from batch 2 — and
-        # a mid-write crash left a partial table the next call treated
-        # as a valid existing one. Stage, validate, single rename.
-        bootstrapped = False
-        with _writer_lock(path):
-            # re-check under the lease: another writer may have
-            # bootstrapped between the unlocked check and lock acquire
-            # (review r5 #2) — if so, fall through to the merge path
-            if not os.path.exists(path):
-                stage = f"{path}__mergestage_{uuid.uuid4().hex[:8]}"
-                try:
-                    updates.write.partitionBy(part_col).parquet(stage)
-                    expected = {f"{part_col}={v}" for v in part_strs}
-                    staged = {
-                        d for d in os.listdir(stage) if d.startswith(f"{part_col}=")
-                    }
-                    missing = expected - staged
-                    if missing:
-                        raise ValueError(
-                            f"staged bootstrap write is missing partition dir(s) "
-                            f"{sorted(missing)} (staged: {sorted(staged)}): the "
-                            f"part_col value is escaped by the hive layout — "
-                            f"pre-sanitize partition values to filesystem-safe "
-                            f"scalars (docstring constraint)"
-                        )
-                    # the rename lives INSIDE the cleanup scope: if it
-                    # fails, the stage must not survive as phantom
-                    # crash debris that wedges every later write
-                    # (review r5 #2)
-                    os.rename(stage, path)
-                except BaseException:
-                    shutil.rmtree(stage, ignore_errors=True)
-                    raise
-                bootstrapped = True
-        if bootstrapped:
-            return vals
-    # filter on the NATIVE partition column (directory pruning), then
-    # realign column types to the updates schema — hive partition-type
-    # inference may read the partition column back as a different type.
-    # The lease covers the READ too (ADVICE r5 #2, same as
-    # merge_upsert_write): spark.read.parquet resolves the file
-    # listing at analysis, and a concurrent writer swapping partitions
-    # between that listing and our rewrite would either kill this
-    # merge mid-stage with FileNotFound or base it on rows the winner
-    # already replaced.
-    with _writer_lock(path):
-        scoped = (
-            spark.read.parquet(path)
-            .filter(F.col(part_col).isin(vals))
-            .select(
+
+    def build(scoped: DataFrame | None) -> DataFrame:
+        if scoped is not None:
+            # hive partition-type inference may read the partition
+            # column back as a different type: realign to the updates
+            scoped = scoped.select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in updates.schema.fields]
             )
+        return merge_upsert(scoped, updates, key_cols)
+
+    vals = _partition_values(updates, part_col)
+    return _rewrite_partitions(updates.sparkSession, path, part_col, vals, build)
+
+
+def _rewrite_partitions(
+    spark: SparkSession,
+    path: str,
+    part_col: str,
+    vals: list,
+    build,
+    allow_vanished: bool = False,
+) -> list:
+    """The one partition-replace path of every partition-scoped sink:
+    under the writer lease, fail on crashed-swap debris, read the
+    table pruned to the ``part_col`` partitions in ``vals`` (directory
+    pruning; None when the table does not exist yet), and swap
+    ``build(scoped)`` in for exactly those partitions
+    (``_staged_partition_rewrite``). The lease covers the READ too
+    (ADVICE r5 #2): spark.read.parquet resolves the file listing at
+    analysis, and a concurrent writer swapping partitions between that
+    listing and our rewrite would either kill this write mid-stage
+    with FileNotFound or base it on rows the winner already replaced.
+    With no values the table is left alone. Returns ``vals``."""
+    if not vals:
+        return []
+    with _writer_lock(path):
+        _fail_on_merge_debris(path)
+        scoped = (
+            spark.read.parquet(path).filter(F.col(part_col).isin(vals))
+            if os.path.exists(path)
+            else None
         )
-        merged = merge_upsert(scoped, updates, key_cols)
         _staged_partition_rewrite(
-            merged, path, part_col, part_strs, allow_vanished=False
+            build(scoped), path, part_col, [str(v) for v in vals], allow_vanished
         )
     return vals
 
@@ -456,10 +436,11 @@ def _staged_partition_rewrite(
     part_strs: list[str],
     allow_vanished: bool,
 ) -> None:
-    """Shared crash-safe partition-swap protocol for the
-    partition-scoped MERGE and DELETE sinks: write ``result`` staged,
-    validate, then swap each touched partition into the table by
-    rename, with full rollback on mid-swap failure.
+    """Crash-safe partition-swap protocol behind ``_rewrite_partitions``
+    (called under its lease): write ``result`` staged, validate, then
+    swap each touched partition into the table by rename, with full
+    rollback on mid-swap failure. A table that does not exist yet is
+    created by one rename of the validated stage.
 
     ``allow_vanished``: a touched partition value absent from the
     staged write is an ERROR for merge (updates carry rows for every
@@ -467,53 +448,40 @@ def _staged_partition_rewrite(
     would be silently dropped) but LEGITIMATE for delete (every row
     of the partition was deleted — the swap then removes the old
     partition dir and installs nothing)."""
-    _fail_on_merge_debris(path)
     token = uuid.uuid4().hex[:8]
     stage = f"{path}__mergestage_{token}"
     trash = f"{path}__mergeold_{token}"
-    os.makedirs(trash)
     try:
         result.write.partitionBy(part_col).parquet(stage)
-        # Every touched partition value SHOULD appear in the staged
-        # write under exactly the hand-built ``col=value`` name: a
-        # value Spark hive-escapes in directory names (space, ':',
-        # '=', '%', ...) would not match, and the old code's silent
-        # ``continue`` dropped those updates while still reporting the
-        # value as rewritten. Fail loudly instead, naming what was
-        # staged — except where ``allow_vanished`` makes absence a
-        # legitimate full-partition delete. The escape hazard is then
-        # handled by the caller validating against dirs that DID stage
-        # (an escaped value that stages under a different name still
-        # trips the check whenever any of its rows survive).
+        # every touched value must stage under exactly the hand-built
+        # ``col=value`` name: a value Spark hive-escapes in directory
+        # names (space, ':', '=', '%', ...) would not, and swapping by
+        # name would silently drop its rows (absence alone is a
+        # legitimate full-partition delete under ``allow_vanished``;
+        # the delete sink checks its alphabet up front for that case)
         expected = {f"{part_col}={v}" for v in part_strs}
-        staged = {
-            d for d in os.listdir(stage) if d.startswith(f"{part_col}=")
-        }
-        missing = expected - staged
-        if missing and not allow_vanished:
+        staged = {d for d in os.listdir(stage) if d.startswith(f"{part_col}=")}
+        if staged - expected or (expected - staged and not allow_vanished):
             raise ValueError(
-                f"staged merge write is missing partition dir(s) "
-                f"{sorted(missing)} (staged: {sorted(staged)}): the "
-                f"part_col value is escaped by the hive layout — "
-                f"pre-sanitize partition values to filesystem-safe "
-                f"scalars (docstring constraint)"
+                f"staged partition dir(s) {sorted(staged)} do not match the "
+                f"touched set {sorted(expected)}: a part_col value is escaped "
+                f"by the hive layout — pre-sanitize partition values to "
+                f"filesystem-safe scalars"
             )
-        unexpected = staged - expected
-        if unexpected:
-            raise ValueError(
-                f"staged write produced partition dir(s) {sorted(unexpected)} "
-                f"outside the touched set {sorted(expected)}: a part_col "
-                f"value is escaped by the hive layout — pre-sanitize "
-                f"partition values to filesystem-safe scalars"
-            )
+        if not os.path.exists(path):
+            # first write: the rename lives INSIDE this cleanup scope,
+            # so a failed one leaves no stage behind as phantom crash
+            # debris that would wedge every later write
+            os.rename(stage, path)
+            return
     except BaseException:
         # nothing has been swapped yet — the table is untouched, so the
         # staging debris is safe to remove
         shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)
         raise
     installed: list[str] = []  # partition dirs swapped into the table
     try:
+        os.makedirs(trash)
         for sub in sorted(expected):
             src = os.path.join(stage, sub)
             dst = os.path.join(path, sub)
@@ -525,18 +493,14 @@ def _staged_partition_rewrite(
             # else: full-partition delete — old copy now in trash,
             # nothing to install (only reachable with allow_vanished)
     except BaseException:
-        # Mid-swap failure: roll the table back to its pre-merge state.
+        # Mid-swap failure: roll the table back to its pre-write state.
         # Two cases per touched partition: (a) it had an old copy —
         # restore it from trash (the OLD copies in trash are the only
-        # ones in existence, which is why they must never be rmtree'd
-        # on this path; the pre-fix code did exactly that and a
-        # mid-swap crash lost data permanently); (b) it was NEWLY
-        # created by this merge — remove it, otherwise a partially
-        # applied merge stays visible (new partitions that sort before
-        # the failing rename would otherwise survive the rollback; the
-        # new data is reproducible by re-running the merge). If a
-        # restore itself fails, stage and trash are left on disk for
-        # manual recovery.
+        # ones in existence, so they are never rmtree'd on this path);
+        # (b) it was NEWLY created by this write — remove it, or a
+        # partially applied write stays visible (the new data is
+        # reproducible by re-running the write). If a restore itself
+        # fails, stage and trash are left on disk for manual recovery.
         restore_failed = False
         for sub in sorted(expected):
             dst = os.path.join(path, sub)
@@ -592,7 +556,6 @@ def delete_keys_partition_scoped(
     the merge sink's documented constraint, enforced eagerly here.
     Idempotent: re-running the same delete is a no-op rewrite.
     Returns the partition values touched ([] for an empty request)."""
-    _fail_on_merge_debris(path)
     vals = _partition_values(keys, part_col)
     if not vals:
         return []
@@ -620,10 +583,8 @@ def delete_keys_partition_scoped(
             f"but {len(part_strs)} partition value(s) were requested for "
             f"erasure — refusing to report an erasure that did not happen"
         )
-    # lease covers the read phase too (ADVICE r5 #2; see the merge
-    # sibling above for the race this closes)
-    with _writer_lock(path):
-        scoped = spark.read.parquet(path).filter(F.col(part_col).isin(vals))
+
+    def build(scoped: DataFrame) -> DataFrame:
         join_cols = [*key_cols, part_col]
         # align the keys frame's join-column types to the table's (hive
         # partition-type inference may differ from the caller's frame)
@@ -631,11 +592,11 @@ def delete_keys_partition_scoped(
         keyed = keys.select(
             *[F.col(c).cast(sch[c]).alias(c) for c in join_cols]
         ).distinct()
-        kept = scoped.join(F.broadcast(keyed), on=join_cols, how="left_anti").select(
+        return scoped.join(F.broadcast(keyed), on=join_cols, how="left_anti").select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in scoped.schema.fields]
         )
-        _staged_partition_rewrite(kept, path, part_col, part_strs, allow_vanished=True)
-    return vals
+
+    return _rewrite_partitions(spark, path, part_col, vals, build, allow_vanished=True)
 
 
 def compact(spark: SparkSession, path: str, target_files: int) -> int:
@@ -646,16 +607,16 @@ def compact(spark: SparkSession, path: str, target_files: int) -> int:
     parallelism and NameNode/listing cost; periodic compaction with
     ``repartition`` (full shuffle, even sizes) is the standard cure —
     use ``coalesce`` instead when skew is acceptable to avoid the
-    shuffle. Returns the file count after compaction. Like
-    ``merge_upsert_write``, the lease covers the read too: the file
-    listing resolved by ``spark.read`` must be the one the swap
-    replaces (ADVICE r5 #2)."""
-    with _writer_lock(path):
-        df = spark.read.parquet(path)
-        _staged_swap_locked(df.repartition(target_files), path)
-    import glob
+    shuffle. Returns the file count after compaction. Goes through
+    ``rewrite_table``, so the lease covers the read too."""
 
-    return len(glob.glob(f"{path}/part-*"))
+    def build(df: DataFrame | None) -> DataFrame:
+        if df is None:
+            raise FileNotFoundError(f"compact: table {path!r} does not exist")
+        return df.repartition(target_files)
+
+    rewrite_table(spark, path, build)
+    return len(_glob.glob(f"{path}/part-*"))
 
 
 def read_or_none(spark: SparkSession, path: str, schema=None) -> DataFrame | None:

@@ -1578,10 +1578,9 @@ def run_cdc_sink(
     store is a hive-partitioned table and this merge runs
     partition-scoped (sinks.merge_upsert_partition_scoped's pruning
     contract); cost is O(touched partitions), not O(store)."""
-    from ..sinks import read_or_none, staged_swap
+    from ..sinks import rewrite_table
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         cols = ["user_id", "ts", "event_type", "value", "event_id"]
         w = Window.partitionBy("user_id").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
@@ -1592,32 +1591,33 @@ def run_cdc_sink(
             .filter("_rn = 1")
             .drop("_rn")
         )
-        store = read_or_none(spark, store_path)
-        if store is None:
-            contenders = batch_latest
-            untouched = None
-        else:
-            store = store.select(*cols)
-            keys = batch_latest.select("user_id")
-            untouched = store.join(keys, "user_id", "left_anti")
-            contenders = store.join(keys, "user_id", "left_semi").unionByName(
-                batch_latest
+
+        def build(store: DataFrame | None) -> DataFrame:
+            if store is None:
+                contenders = batch_latest
+                untouched = None
+            else:
+                store = store.select(*cols)
+                keys = batch_latest.select("user_id")
+                untouched = store.join(keys, "user_id", "left_anti")
+                contenders = store.join(keys, "user_id", "left_semi").unionByName(
+                    batch_latest
+                )
+            winners = (
+                contenders.withColumn("_rn", F.row_number().over(w))
+                .filter("_rn = 1")
+                .drop("_rn")
             )
-        winners = (
-            contenders.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
-        # tombstone winners STAY in the store as rows (Kafka-compaction
-        # semantics) and are filtered at read time: physically deleting
-        # the key would forget the tombstone's ts, and an out-of-order
-        # OLDER event in a later batch would then resurrect the key
-        # with stale state (observed exactly that in the multi-batch
-        # parity test before this retention was added)
-        final = (
-            winners if untouched is None else untouched.unionByName(winners)
-        )
-        staged_swap(final, store_path)
+            # tombstone winners STAY in the store as rows (Kafka-compaction
+            # semantics) and are filtered at read time: physically deleting
+            # the key would forget the tombstone's ts, and an out-of-order
+            # OLDER event in a later batch would then resurrect the key
+            # with stale state (observed exactly that in the multi-batch
+            # parity test before this retention was added)
+            return winners if untouched is None else untouched.unionByName(winners)
+
+        # the lease covers the store read as well as the swap
+        rewrite_table(batch_df.sparkSession, store_path, build)
 
     return start(events, batch_body(apply_batch), checkpoint)
 

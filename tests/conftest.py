@@ -52,7 +52,9 @@ _SLOW_NODEIDS = frozenset(
         "test_semantic_requant.py::test_requantize_triggers_grows_k_and_relabels",
         "test_semantic_requant.py::test_streaming_requant_with_checkpoint_restart",
         "test_session_archive.py::test_first_launch_records_and_publishes_later_launches_map",
-        "test_sinks.py::test_merge_partition_scoped_crash_matrix",
+        "test_sinks.py::test_merge_partition_scoped_crash_matrix[delete]",
+        "test_sinks.py::test_merge_partition_scoped_crash_matrix[merge]",
+        "test_sinks.py::test_merge_partition_scoped_crash_matrix[upsert]",
         "test_smoke.py::test_every_query_runs_at_smoke_sf",
         "test_streaming.py::test_chained_pipeline_span_cut_changes_minhash_verdict",
         "test_streaming.py::test_compact_partition_store_heals_crash_leftovers",

@@ -6,6 +6,8 @@ performance bugs even when results stay correct."""
 
 from __future__ import annotations
 
+import re
+
 from pitlapetl_spark import registry
 from tests.conftest import SF_SMOKE
 
@@ -296,16 +298,11 @@ def test_winnowing_and_basket_no_cartesian(spark):
         # honestly timed it was ~2x slower and leaked cache entries;
         # see the _winnow_pairs materialization comment.)
         assert "Scan ExistingRDD" in plan, q
-    # the fast path must actually hash with xxhash64: its fingerprint
-    # column is a LONG (rendered fp#<id>L in the checkpointed scan —
-    # the extraction itself is behind the localCheckpoint), where the
-    # md5 twin's is a string
-    import re
-
-    plan = _plan(Q["dedup_winnowing_fast"](spark, SF_SMOKE))
-    assert re.search(r"fp#\d+L", plan), plan
-    plan = _plan(Q["dedup_winnowing"](spark, SF_SMOKE))
-    assert not re.search(r"fp#\d+L", plan), plan
+        # both hash with md5, the hash the DuckDB oracle replays: the
+        # fingerprint column is a string, not a LONG (a long renders
+        # fp#<id>L in the checkpointed scan — the extraction itself is
+        # behind the localCheckpoint)
+        assert not re.search(r"fp#\d+L", plan), q
 
     plan = _plan(Q["market_basket_pairs"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan

@@ -23,9 +23,9 @@ def test_upsert_idempotent(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     agg = events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
-    upsert_partitioned(agg, path, ["event_type"])
+    upsert_partitioned(agg, path, "event_type")
     once = _snapshot(spark, path)
-    upsert_partitioned(agg, path, ["event_type"])
+    upsert_partitioned(agg, path, "event_type")
     twice = _snapshot(spark, path)
     assert once == twice
 
@@ -36,13 +36,13 @@ def test_upsert_touches_only_its_partitions(spark, sf_dir):
         F.count(F.lit(1)).alias("n")
     )
     path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
-    upsert_partitioned(agg, path, ["event_type"])
+    upsert_partitioned(agg, path, "event_type")
     before = {t for (t,) in spark.read.parquet(path).select("event_type").distinct().collect()}
     # upsert only 'click' with a sentinel value
     clicks = agg.filter(F.col("event_type") == "click").withColumn(
         "n", F.lit(-1).cast("long")
     )
-    upsert_partitioned(clicks, path, ["event_type"])
+    upsert_partitioned(clicks, path, "event_type")
     after = spark.read.parquet(path)
     assert {t for (t,) in after.select("event_type").distinct().collect()} == before
     assert after.filter((F.col("event_type") == "click") & (F.col("n") != -1)).count() == 0
@@ -174,8 +174,9 @@ def test_merge_partition_scoped_escaped_value_fails_loudly(spark):
     """A part_col value Spark hive-escapes in directory names (':' ->
     %3A) cannot be swapped by the hand-built ``col=value`` rename; the
     old code silently dropped those updates while reporting the value
-    as rewritten (ADVICE r3). It must now fail loudly, leave the table
-    byte-identical, and leave no staging debris."""
+    as rewritten (ADVICE r3). The MERGE and the upsert, which share the
+    swap, must now fail loudly, leave the table byte-identical, and
+    leave no staging debris."""
     import glob
 
     from pitlapetl_spark.sinks import merge_upsert_partition_scoped
@@ -190,6 +191,8 @@ def test_merge_partition_scoped_escaped_value_fails_loudly(spark):
     bad = spark.createDataFrame([("d:1", 9, 90.0)], "day string, k int, v double")
     with pytest.raises(ValueError, match="escaped"):
         merge_upsert_partition_scoped(bad, path, ["k"], "day")
+    with pytest.raises(ValueError, match="escaped"):
+        upsert_partitioned(bad, path, "day")
     assert {r.k: (r.day, r.v) for r in spark.read.parquet(path).collect()} == before
     assert not glob.glob(f"{path}__merge*")
 
@@ -272,51 +275,93 @@ def test_merge_partition_scoped_midswap_failure_recovers(spark, monkeypatch):
     assert got == {1: ("d1", 99.0), 2: ("d2", 88.0), 3: ("d3", 30.0)}
 
 
-def test_merge_partition_scoped_crash_matrix(spark, monkeypatch):
-    """Inject a failure at EVERY rename call index in the swap, one
-    run per index: after each injected crash the table must read back
-    exactly its pre-merge state (full rollback), and a clean replay
-    must then converge to the merged state. This is the exhaustive
-    version of the single-point midswap test above."""
-    import glob
-    import os as _os
-    import shutil as _shutil
+_CRASH_SCHEMA = "day string, k int, v double"
+_CRASH_BASE = [("d1", 1, 10.0), ("d1", 4, 40.0), ("d2", 2, 20.0), ("d3", 3, 30.0)]
+# 'a0' is a brand-new partition that sorts BEFORE every existing one:
+# it installs first, so a later rename failure must roll it back by
+# REMOVAL (there is no old copy to restore); 'd4' covers the
+# trailing-new case
+_CRASH_UPD = [("a0", 8, 80.0), ("d1", 1, 99.0), ("d2", 2, 88.0), ("d4", 9, 90.0)]
 
+
+def _crash_merge(spark, path):
     from pitlapetl_spark.sinks import merge_upsert_partition_scoped
 
-    base_rows = [("d1", 1, 10.0), ("d2", 2, 20.0), ("d3", 3, 30.0)]
-    # 'a0' is a brand-new partition that sorts BEFORE every existing
-    # one: it installs first, so a later rename failure must roll it
-    # back by REMOVAL (there is no old copy to restore) — the case the
-    # displaced-only rollback missed; 'd4' covers the trailing-new case
-    upd_rows = [("a0", 8, 80.0), ("d1", 1, 99.0), ("d2", 2, 88.0), ("d4", 9, 90.0)]
-    schema = "day string, k int, v double"
+    upd = spark.createDataFrame(_CRASH_UPD, _CRASH_SCHEMA)
+    merge_upsert_partition_scoped(upd, path, ["k"], "day")
+
+
+def _crash_upsert(spark, path):
+    from pitlapetl_spark.sinks import upsert_partitioned
+
+    upsert_partitioned(spark.createDataFrame(_CRASH_UPD, _CRASH_SCHEMA), path, "day")
+
+
+def _crash_delete(spark, path):
+    from pitlapetl_spark.sinks import delete_keys_partition_scoped
+
+    # d1 loses one of two rows, d2 its only row (the partition vanishes)
+    keys = spark.createDataFrame([("d1", 1), ("d2", 2)], "day string, k int")
+    delete_keys_partition_scoped(spark, path, keys, ["k"], "day")
+
+
+@pytest.mark.parametrize(
+    "write, n_min, want",
+    [
+        # 2 displaced + 4 staged moves
+        (_crash_merge, 6, {1: ("d1", 99.0), 4: ("d1", 40.0), 2: ("d2", 88.0),
+                           3: ("d3", 30.0), 8: ("a0", 80.0), 9: ("d4", 90.0)}),
+        # the whole d1 partition is replaced: k=4 goes
+        (_crash_upsert, 6, {1: ("d1", 99.0), 2: ("d2", 88.0), 3: ("d3", 30.0),
+                            8: ("a0", 80.0), 9: ("d4", 90.0)}),
+        # 2 displaced + 1 staged move
+        (_crash_delete, 3, {4: ("d1", 40.0), 3: ("d3", 30.0)}),
+    ],
+    ids=["merge", "upsert", "delete"],
+)
+def test_merge_partition_scoped_crash_matrix(spark, monkeypatch, write, n_min, want):
+    """Inject a failure at EVERY rename call index of one partition
+    sink's swap, one run per index: after each injected crash the
+    table must read back exactly its pre-write state (full rollback),
+    and a clean replay must then converge to the written state. Every
+    sink that replaces partitions shares the one swap, so each runs
+    the same matrix."""
+    import glob
+    import os as _os
+
+    from pitlapetl_spark.sinks import upsert_partitioned
+
     real_rename = _os.rename
 
-    # count the renames of a clean run (same layout every time)
-    path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
-    merge_upsert_partition_scoped(spark.createDataFrame(base_rows, schema), path, ["k"], "day")
+    def fresh_table():
+        path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
+        upsert_partitioned(spark.createDataFrame(_CRASH_BASE, _CRASH_SCHEMA), path, "day")
+        return path
+
+    def rows(path):
+        return {r.k: (r.day, r.v) for r in spark.read.parquet(path).collect()}
+
+    # count the swap's renames in a clean run (same layout every time)
+    path = fresh_table()
     calls = []
     monkeypatch.setattr(
         _os, "rename", lambda s, d: (calls.append(1), real_rename(s, d))[1]
     )
-    merge_upsert_partition_scoped(spark.createDataFrame(upd_rows, schema), path, ["k"], "day")
+    write(spark, path)
     monkeypatch.setattr(_os, "rename", real_rename)
     n_renames = len(calls)
-    assert n_renames >= 5  # 2 displaced + 3 staged moves
+    assert n_renames >= n_min
+    assert rows(path) == want
 
     for fail_at in range(n_renames):
-        path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
-        merge_upsert_partition_scoped(
-            spark.createDataFrame(base_rows, schema), path, ["k"], "day"
-        )
-        before = {r.k: (r.day, r.v) for r in spark.read.parquet(path).collect()}
+        path = fresh_table()
+        before = rows(path)
         seen = [0]
 
         def crashing(src, dst, _seen=seen, _at=fail_at):
-            # transient single fault: exactly the _at-th merge-related
-            # rename fails; the rollback's own renames then succeed (a
-            # second failure DURING rollback is the documented
+            # transient single fault: exactly the _at-th swap rename
+            # fails; the rollback's own renames then succeed (a second
+            # failure DURING rollback is the documented
             # leave-trash-for-manual-recovery case, not tested here)
             if "__merge" in str(src) or "__merge" in str(dst):
                 n = _seen[0]
@@ -327,22 +372,12 @@ def test_merge_partition_scoped_crash_matrix(spark, monkeypatch):
 
         monkeypatch.setattr(_os, "rename", crashing)
         with pytest.raises(OSError, match="injected"):
-            merge_upsert_partition_scoped(
-                spark.createDataFrame(upd_rows, schema), path, ["k"], "day"
-            )
+            write(spark, path)
         monkeypatch.setattr(_os, "rename", real_rename)
-        got = {r.k: (r.day, r.v) for r in spark.read.parquet(path).collect()}
-        assert got == before, f"rollback broken when rename #{fail_at} fails"
-        for leftover in glob.glob(f"{path}__merge*"):
-            _shutil.rmtree(leftover)
-        merge_upsert_partition_scoped(
-            spark.createDataFrame(upd_rows, schema), path, ["k"], "day"
-        )
-        got = {r.k: (r.day, r.v) for r in spark.read.parquet(path).collect()}
-        assert got == {
-            1: ("d1", 99.0), 2: ("d2", 88.0), 3: ("d3", 30.0),
-            8: ("a0", 80.0), 9: ("d4", 90.0),
-        }, f"replay after crash at #{fail_at} did not converge"
+        assert rows(path) == before, f"rollback broken when rename #{fail_at} fails"
+        assert not glob.glob(f"{path}__merge*"), "a clean rollback leaves no debris"
+        write(spark, path)
+        assert rows(path) == want, f"replay after crash at #{fail_at} did not converge"
 
 
 def test_merge_partition_scoped_prunes_scan(spark):
@@ -530,46 +565,131 @@ def test_concurrent_writer_raises_not_interleaves(spark, tmp_path):
     assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(2, "b")]
 
 
-def test_merge_and_compact_lease_covers_read_phase(spark, tmp_path, monkeypatch):
-    """ADVICE r5 #2: merge_upsert_write and compact must take the
-    writer lease BEFORE reading the table they will replace — a lease
-    scoped to the swap alone lets two merges both pass the read phase
-    and the loser dies mid-write with FileNotFound instead of the
-    contract's ConcurrentWriterError. Observable: under a held lease
-    both raise ConcurrentWriterError WITHOUT ever starting the read."""
+def _lease_merge_upsert_write(spark, path, monkeypatch):
+    from pitlapetl_spark import sinks
+
+    sinks.staged_swap(spark.createDataFrame([(1, "a")], "k int, v string"), path)
+    upd = spark.createDataFrame([(2, "b")], "k int, v string")
+    return lambda: sinks.merge_upsert_write(upd, path, ["k"]), [(1, "a"), (2, "b")]
+
+
+def _lease_compact(spark, path, monkeypatch):
+    from pitlapetl_spark import sinks
+
+    sinks.staged_swap(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), path)
+    return lambda: sinks.compact(spark, path, 1), [(1, "a"), (2, "b")]
+
+
+_LEASE_PART = "day string, k int, v string"
+
+
+def _lease_upsert_partitioned(spark, path, monkeypatch):
+    from pitlapetl_spark import sinks
+
+    sinks.upsert_partitioned(spark.createDataFrame([("d1", 1, "a")], _LEASE_PART), path, "day")
+    upd = spark.createDataFrame([("d2", 2, "b")], _LEASE_PART)
+    return (
+        lambda: sinks.upsert_partitioned(upd, path, "day"),
+        [("d1", 1, "a"), ("d2", 2, "b")],
+    )
+
+
+def _lease_merge_partition_scoped(spark, path, monkeypatch):
+    from pitlapetl_spark import sinks
+
+    sinks.upsert_partitioned(spark.createDataFrame([("d1", 1, "a")], _LEASE_PART), path, "day")
+    upd = spark.createDataFrame([("d1", 2, "b")], _LEASE_PART)
+    return (
+        lambda: sinks.merge_upsert_partition_scoped(upd, path, ["k"], "day"),
+        [("d1", 1, "a"), ("d1", 2, "b")],
+    )
+
+
+def _lease_delete_partition_scoped(spark, path, monkeypatch):
+    from pitlapetl_spark import sinks
+
+    base = spark.createDataFrame([("d1", 1, "a"), ("d1", 2, "b")], _LEASE_PART)
+    sinks.upsert_partitioned(base, path, "day")
+    keys = spark.createDataFrame([("d1", 1)], "day string, k int")
+    return (
+        lambda: sinks.delete_keys_partition_scoped(spark, path, keys, ["k"], "day"),
+        [("d1", 2, "b")],
+    )
+
+
+def _lease_cdc_apply(spark, path, monkeypatch):
+    """The streaming CDC sink's per-batch apply, driven directly: its
+    ``start`` is stubbed to hand back the foreachBatch body."""
+    import datetime
+
+    from pitlapetl_spark.streaming import runtime
+
+    monkeypatch.setattr(runtime, "start", lambda df, body, checkpoint: body)
+    schema = "user_id long, ts timestamp, event_type string, value double, event_id long"
+    t0 = datetime.datetime(2024, 1, 1)
+    t1 = datetime.datetime(2024, 1, 2)
+    body = runtime.run_cdc_sink(None, path, f"{path}__ckpt")
+    body(spark.createDataFrame([(1, t0, "click", 1.0, 1)], schema), 0)
+    later = spark.createDataFrame([(1, t1, "view", 2.0, 2), (2, t0, "click", 3.0, 3)], schema)
+    # rows in column-name order: event_id, event_type, ts, user_id, value
+    return lambda: body(later, 1), [(2, "view", t1, 1, 2.0), (3, "click", t0, 2, 3.0)]
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        _lease_merge_upsert_write,
+        _lease_compact,
+        _lease_upsert_partitioned,
+        _lease_merge_partition_scoped,
+        _lease_delete_partition_scoped,
+        _lease_cdc_apply,
+    ],
+    ids=[
+        "merge_upsert_write",
+        "compact",
+        "upsert_partitioned",
+        "merge_partition_scoped",
+        "delete_partition_scoped",
+        "cdc_apply",
+    ],
+)
+def test_merge_and_compact_lease_covers_read_phase(spark, tmp_path, monkeypatch, make):
+    """ADVICE r5 #2: every sink that reads the table it replaces must
+    take the writer lease BEFORE that read — a lease scoped to the
+    swap alone lets two writers both pass the read phase and the loser
+    dies mid-write with FileNotFound instead of the contract's
+    ConcurrentWriterError. Observable: under a held lease the write
+    raises ConcurrentWriterError WITHOUT ever starting a read, and it
+    succeeds once the lease clears."""
     import fcntl
     import os
 
     import pitlapetl_spark.sinks as sinks
 
     path = str(tmp_path / "t")
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    sinks.staged_swap(df, path)
+    write, want = make(spark, path, monkeypatch)
 
     reads = []
-    real_read = sinks.read_or_none
+    session = type(spark)
+    real_read = session.read
     monkeypatch.setattr(
-        sinks, "read_or_none", lambda *a, **kw: reads.append(1) or real_read(*a, **kw)
+        session, "read", property(lambda s: reads.append(1) or real_read.fget(s))
     )
     fd = os.open(f"{path}__lock", os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX)
     try:
         with pytest.raises(sinks.ConcurrentWriterError, match="live writer"):
-            sinks.merge_upsert_write(df, path, ["k"])
+            write()
         assert reads == []  # lease rejected us before the read phase
-        with pytest.raises(sinks.ConcurrentWriterError, match="live writer"):
-            sinks.compact(spark, path, 1)
     finally:
         os.close(fd)
-    # both still work once the lease clears
-    sinks.merge_upsert_write(
-        spark.createDataFrame([(2, "b")], "k int, v string"), path, ["k"]
+    write()
+    got = sorted(
+        tuple(r[c] for c in sorted(r.asDict()))
+        for r in spark.read.parquet(path).collect()
     )
-    assert sinks.compact(spark, path, 1) == 1
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == [
-        (1, "a"),
-        (2, "b"),
-    ]
+    assert got == want
 
 
 def test_cross_host_lease_fail_fast_and_release_truncation(spark, tmp_path):
@@ -714,6 +834,8 @@ def test_delete_on_missing_table_raises(spark, tmp_path):
     """ADVICE r4: a GDPR erasure aimed at a missing table path must
     raise, not report success with an empty touched list. An EMPTY
     request still returns [] (nothing to erase is not an error)."""
+    import os
+
     from pitlapetl_spark.sinks import delete_keys_partition_scoped
 
     missing = str(tmp_path / "never_created")
@@ -722,6 +844,11 @@ def test_delete_on_missing_table_raises(spark, tmp_path):
         delete_keys_partition_scoped(spark, missing, keys, ["k"], "day")
     empty = keys.filter("k < 0")
     assert delete_keys_partition_scoped(spark, missing, empty, ["k"], "day") == []
+    # an empty upsert has nothing to write: it touches nothing, not
+    # even a missing table
+    rows = spark.createDataFrame([], "day string, k int, v double")
+    assert upsert_partitioned(rows, missing, "day") == []
+    assert not os.path.exists(missing)
 
 
 def test_bootstrap_rename_failure_leaves_no_debris(spark, tmp_path, monkeypatch):
@@ -755,8 +882,8 @@ def test_bootstrap_rename_failure_leaves_no_debris(spark, tmp_path, monkeypatch)
 
 @pytest.mark.parametrize("days", [[None], ["d1", None]], ids=["all_null", "mixed"])
 def test_partition_scoped_sinks_reject_null_partition_values(spark, tmp_path, days):
-    """A null ``part_col`` value names no partition directory, so both
-    partition-scoped sinks raise ValueError for it, alone or mixed with
+    """A null ``part_col`` value names no partition directory, so every
+    partition-scoped sink raises ValueError for it, alone or mixed with
     other values, before touching the table. The check is a raise, not
     an assert, so it also holds under ``python -O``, where an all-null
     delete must not report ``[None]`` as erased."""
@@ -776,4 +903,7 @@ def test_partition_scoped_sinks_reject_null_partition_values(spark, tmp_path, da
         merge_upsert_partition_scoped(bad, path, ["k"], "day")
     with pytest.raises(ValueError, match="non-null"):
         delete_keys_partition_scoped(spark, path, bad.select("day", "k"), ["k"], "day")
+    with pytest.raises(ValueError, match="non-null"):
+        upsert_partitioned(bad, path, "day")
     assert _snapshot(spark, path) == before
+
