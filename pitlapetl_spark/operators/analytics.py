@@ -371,8 +371,7 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE exchange builds the per-order basket arrays straight off the
     # scan (collect_set = the old select-distinct, folded into the
     # same shuffle); pairs are then enumerated BASKET-LOCALLY from the
-    # sorted array — the r12 single-exchange device shared with
-    # dedup_minhash_lsh_preagg's bucket pre-aggregation and the
+    # sorted array — the r12 single-exchange device shared with the
     # winnowing fp groups. The old shape shuffled the distinct
     # (order, part) frame twice more (both self-join sides keyed on
     # l_orderkey) and sort-merge-joined them to produce exactly these

@@ -1164,7 +1164,7 @@ def ml_cross_validation_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The component step is min-label propagation on the dense-cell frame
 # (a few hundred rows): driver loop, localCheckpoint per round,
 # RAISES past the round cap instead of silently truncating (the
-# min-label CC discipline); the oracle computes true components with
+# dedup_cluster_components discipline); the oracle computes true components with
 # a recursive-CTE reachability closure.
 
 DBSCAN_CELL = 1.0  # degrees

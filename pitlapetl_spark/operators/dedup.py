@@ -26,9 +26,9 @@ Scale design (the whole point at 100 TB):
 
 Cross-engine determinism: every hash is md5-hex (Spark md5 == DuckDB
 md5), min-ed lexicographically; every ratio is round(6)-ed before
-thresholding on BOTH sides. Swap md5 for xxhash64 in production only
-where the result does not depend on the hash (winnowing's does: see
-WINNOW_FAST_MIN_LEN).
+thresholding on BOTH sides. Spark uses xxhash64 instead only where the
+result does not depend on the hash (repeated spans: ``span_grams``);
+winnowing's does (see WINNOW_FAST_MIN_LEN).
 """
 
 from __future__ import annotations
@@ -273,17 +273,28 @@ N_BANDS = 4
 ROWS_PER_BAND = N_HASHES // N_BANDS
 
 
-def _oracle_minhash_lsh() -> str:
-    sig_cols = oracle_minhash_sig_cols(N_HASHES)
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {k} AS band_idx, md5({expr}) AS band_val FROM sig".format(
+def oracle_band_rows(src: str = "sig", carry: tuple[str, ...] = ()) -> str:
+    """DuckDB replay of ``_band_rows``: one ``UNION ALL`` branch per
+    band over the signature CTE ``src``, each row (doc_id, *carry,
+    band_idx, band_val) with band_val the md5 of the band's
+    '|'-joined hash slots."""
+    cols = "".join(f"{c}, " for c in carry)
+    return " UNION ALL ".join(
+        "SELECT doc_id, {cols}{k} AS band_idx, md5({expr}) AS band_val FROM {src}".format(
+            cols=cols,
             k=k,
             expr=" || '|' || ".join(
                 f"h{k * ROWS_PER_BAND + r}::VARCHAR" for r in range(ROWS_PER_BAND)
             ),
+            src=src,
         )
         for k in range(N_BANDS)
     )
+
+
+def _oracle_minhash_lsh() -> str:
+    sig_cols = oracle_minhash_sig_cols(N_HASHES)
+    band_rows = oracle_band_rows()
     return f"""
     WITH sh0 AS ({oracle_shingles_cte(SHINGLE_K)}),
     sh AS (SELECT doc_id, s, {oracle_minhash_base_sql()} FROM sh0),
@@ -391,52 +402,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pair_jaccard(sh, candidates=cand, sizes=sizes, docs=docs)
 
 
-@query("dedup_minhash_lsh_preagg", oracle=_oracle_minhash_lsh())
-def dedup_minhash_lsh_preagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_minhash_lsh`` with the banding SELF-JOIN replaced by a
-    bucket PRE-AGGREGATION (VERDICT r8 item 3's optimization
-    headroom, registered so both shapes stay oracle-checked): group
-    the band rows to one row per (band_idx, band_val) bucket with the
-    sorted distinct member list, drop singleton buckets (the vast
-    majority — they can never produce a pair), and enumerate each
-    surviving bucket's C(n,2) pairs with a JVM array expression.
-    Candidates, and therefore the verified output, are IDENTICAL to
-    the self-join variant (same oracle).
-
-    Why it's the better 100-TB shape: ONE shuffle of the band rows
-    (the groupBy) instead of a join that shuffles both full copies;
-    map-side combine collapses duplicate (band, doc) rows before the
-    wire; singleton buckets — O(corpus x bands) rows — die in the
-    aggregate instead of flowing into a join probe. The trade is the
-    collect_set per bucket: bucket membership must fit in one task,
-    which the banding design already guarantees everywhere collisions
-    are rare enough for LSH to be useful at all; a pathological hot
-    bucket (degenerate band value) is exactly the skew the capped /
-    salted variants exist for."""
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(docs)
-    sig = minhash_signatures(docs).localCheckpoint(eager=True)
-    sizes = sig.select("doc_id", "n")
-    buckets = (
-        _band_rows(sig)
-        .groupBy("band_idx", "band_val")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    return _pair_jaccard(sh, candidates=cand, sizes=sizes, docs=docs)
+query("dedup_minhash_lsh_preagg", oracle=_oracle_minhash_lsh())(dedup_minhash_lsh)
 
 
 # ------------------------------------------------- incremental minhash
@@ -457,15 +423,7 @@ INCR_REM = 2
 
 def _oracle_incremental_minhash() -> str:
     sig_cols = oracle_minhash_sig_cols(N_HASHES)
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {k} AS band_idx, md5({expr}) AS band_val FROM sig".format(
-            k=k,
-            expr=" || '|' || ".join(
-                f"h{k * ROWS_PER_BAND + r}::VARCHAR" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for k in range(N_BANDS)
-    )
+    band_rows = oracle_band_rows()
     return f"""
     WITH sh0 AS ({oracle_shingles_cte(SHINGLE_K)}),
     sh AS (SELECT doc_id, s, {oracle_minhash_base_sql()} FROM sh0),
@@ -1098,13 +1056,16 @@ def _winnow_pairs(spark: SparkSession, sf_dir: str, min_len: int = WINNOW_K) -> 
 #
 # 100-TB shape: gram extraction is doc-local array expressions (no
 # explode until one row per position), the occurrence count is one
-# hash-agg on the gram hash, the join back is an equi-join on the
-# same key, and the island merge is a per-doc window — nothing is
-# corpus-quadratic and nothing ships text, only 16-byte hashes.
-# Span membership is invariant to the CHOICE of gram hash (any
-# injective hash marks the same positions), so the xxhash64 fast twin
-# below is bit-identical to this md5 formulation modulo collisions —
-# unlike winnowing there is no threshold for a hash swap to perturb.
+# window over the gram hash (one shuffle, no join back), and the
+# island merge is a per-doc window — nothing is corpus-quadratic and
+# nothing ships text, only 8-byte gram hashes.
+# Span membership is a function of gram EQUALITY only (any injective
+# hash marks the same positions), so the Spark side hashes grams with
+# xxhash64 (long keys: one JVM hash instead of md5's digest plus a
+# 32-char string shuffle) while the DuckDB oracles replay the md5
+# formulation — the same spans modulo collisions, and a real
+# cross-hash check; unlike winnowing there is no threshold for a
+# hash swap to perturb.
 
 SPAN_K = 8  # token k-gram length (= min repeated-substring length)
 SPAN_MIN_COUNT = 2  # corpus-wide occurrences for a gram to be "repeated"
@@ -1112,32 +1073,35 @@ SPAN_MIN_COUNT = 2  # corpus-wide occurrences for a gram to be "repeated"
 _SPAN_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
 
-def _repeated_span_frame(
-    spark: SparkSession, sf_dir: str, gram_hash: str
-) -> DataFrame:
-    """Shared plan for the md5 / xxhash64 twins over the documents
-    table."""
-    return repeated_spans_for(load_table(spark, sf_dir, "documents"), gram_hash)
+def span_grams(toks: DataFrame) -> DataFrame:
+    """(doc_id, pos, g) rows of a (doc_id, t) token-array frame: one
+    row per SPAN_K-token window, ``g`` the xxhash64 of its tokens
+    joined by spaces, ``pos`` its 0-based start. Docs shorter than
+    SPAN_K yield no rows. The one gram extractor of the batch span
+    queries and the streaming span-dedup ingest sink."""
+    return (
+        toks.filter(F.size("t") >= SPAN_K)
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, size(t) - {SPAN_K}), i -> "
+                    f"struct(i AS pos, xxhash64(array_join("
+                    f"slice(t, i + 1, {SPAN_K}), ' ')) AS g))"
+                )
+            ).alias("x"),
+        )
+        .select("doc_id", F.col("x.pos").alias("pos"), F.col("x.g").alias("g"))
+    )
 
 
-def repeated_spans_for(docs: DataFrame, gram_hash: str) -> DataFrame:
-    """Repeated-span detection over any (doc_id, text) frame:
-    ``gram_hash`` is a Spark-SQL expression over the token-array
-    column ``t`` and the 0-based position ``i`` (slice is 1-based:
-    ``slice(t, i + 1, K)``). Public so pipelines (and the planted-
-    corpus property test) can run it on arbitrary corpora."""
-    toks = docs.select(
-        "doc_id", F.split(norm_text(F.col("text")), " ").alias("t")
-    ).filter(F.size("t") >= SPAN_K)
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, size(t) - {SPAN_K}),"
-                f" i -> struct(i AS pos, {gram_hash} AS g))"
-            )
-        ).alias("x"),
-    ).select("doc_id", F.col("x.pos").alias("pos"), F.col("x.g").alias("g"))
+def repeated_spans_for(docs: DataFrame) -> DataFrame:
+    """Repeated-span detection over any (doc_id, text) frame. Public
+    so pipelines (and the planted-corpus property test) can run it on
+    arbitrary corpora."""
+    grams = span_grams(
+        docs.select("doc_id", F.split(norm_text(F.col("text")), " ").alias("t"))
+    )
     # corpus-wide occurrence count as a window COUNT over the gram
     # key instead of the old aggregate + semi-join-back: the former
     # plan shuffled the gram rows TWICE (once into the count agg,
@@ -1191,9 +1155,7 @@ def _merge_islands(spans: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "dedup_repeated_spans",
-    oracle=f"""
+_REPEATED_SPANS_SQL = f"""
     WITH toks AS (
         SELECT doc_id, string_split({_SPAN_NORM}, ' ') AS t FROM documents
     ),
@@ -1238,8 +1200,10 @@ def _merge_islands(spans: DataFrame) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_grams
     FROM z
     GROUP BY doc_id, island
-    """,
-)
+    """
+
+
+@query("dedup_repeated_spans", oracle=_REPEATED_SPANS_SQL)
 def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal repeated token spans (>= SPAN_K tokens occurring >=
     SPAN_MIN_COUNT times corpus-wide) per document — the distributed
@@ -1247,77 +1211,11 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora. The reference has no substring-level operator (its dedup
     surface is row-level, racedag.py drop_duplicates); this closes the
     one dedup modality doc-level minhash/simhash/winnowing cannot see:
-    a boilerplate paragraph embedded in otherwise-unique documents.
-    md5 gram hashes for cross-engine parity; ``_fast`` twin below is
-    the production path."""
-    return _repeated_span_frame(
-        spark, sf_dir, f"md5(array_join(slice(t, i + 1, {SPAN_K}), ' '))"
-    )
+    a boilerplate paragraph embedded in otherwise-unique documents."""
+    return repeated_spans_for(load_table(spark, sf_dir, "documents"))
 
 
-@query(
-    "dedup_repeated_spans_fast",
-    # Same SQL as dedup_repeated_spans: span membership is a function
-    # of gram EQUALITY only, so any injective hash yields the same
-    # spans — DuckDB replays the md5 formulation and the result must
-    # be bit-identical (no thresholds for a hash swap to perturb;
-    # contrast WINNOW_FAST_MIN_LEN).
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split({_SPAN_NORM}, ' ') AS t FROM documents
-    ),
-    grams AS (
-        SELECT doc_id,
-               unnest(range(1, len(t) - {SPAN_K} + 2)) - 1 AS pos,
-               unnest(list_transform(
-                   range(1, len(t) - {SPAN_K} + 2),
-                   i -> md5(array_to_string(t[i:i + {SPAN_K} - 1], ' '))
-               )) AS g
-        FROM toks WHERE len(t) >= {SPAN_K}
-    ),
-    rep AS (
-        SELECT g FROM grams GROUP BY g HAVING count(*) >= {SPAN_MIN_COUNT}
-    ),
-    spans AS (
-        SELECT doc_id, CAST(pos AS BIGINT) AS s,
-               CAST(pos + {SPAN_K} AS BIGINT) AS e
-        FROM grams WHERE g IN (SELECT g FROM rep)
-    ),
-    x AS (
-        SELECT doc_id, s, e,
-               max(e) OVER (PARTITION BY doc_id ORDER BY s
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                   AS prev_max_e
-        FROM spans
-    ),
-    y AS (
-        SELECT *, CASE WHEN prev_max_e IS NULL OR s > prev_max_e
-                       THEN 1 ELSE 0 END AS new_island
-        FROM x
-    ),
-    z AS (
-        SELECT *, sum(new_island) OVER (PARTITION BY doc_id ORDER BY s
-                                        ROWS UNBOUNDED PRECEDING) AS island
-        FROM y
-    )
-    SELECT doc_id,
-           min(s) AS span_start,
-           max(e) AS span_end,
-           max(e) - min(s) AS span_tokens,
-           CAST(count(*) AS BIGINT) AS n_grams
-    FROM z
-    GROUP BY doc_id, island
-    """,
-)
-def dedup_repeated_spans_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production repeated-span detection: xxhash64 gram hashes (long
-    keys, one JVM hash vs md5's digest + 32-char string shuffle).
-    Identical output to ``dedup_repeated_spans`` for any
-    collision-free hash; tests/test_llm_ops.py asserts the span sets
-    match the md5 twin's exactly."""
-    return _repeated_span_frame(
-        spark, sf_dir, f"xxhash64(array_join(slice(t, i + 1, {SPAN_K}), ' '))"
-    )
+query("dedup_repeated_spans_fast", oracle=_REPEATED_SPANS_SQL)(dedup_repeated_spans)
 
 
 # ----------------------------------- repeated-substring apply (cut)
@@ -1438,26 +1336,16 @@ def dedup_repeated_spans_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python. Docs with nothing to cut pass through via the left join
     (n_spans_cut = 0), so the operator is total over the corpus.
 
-    Gram hash: xxhash64 (the production hash the streaming span sink
-    already uses) — cut decisions are a function of gram EQUALITY
-    only and the output carries no hash column, so any injective hash
-    yields bit-identical cleaned text while the long key shuffles and
-    sorts 4x less data than the 32-char md5 string (guide §2.3
-    narrower types). The DuckDB oracle replays the md5 chain — the
-    same cross-hash twin argument as ``dedup_repeated_spans_fast``
-    and the sink's parity oracle; the md5 default on
-    ``repeated_spans_apply_for`` stays so the stream==batch property
-    test remains a real cross-hash check."""
-    return repeated_spans_apply_for(
-        load_table(spark, sf_dir, "documents"),
-        gram_hash=f"xxhash64(array_join(slice(t, i + 1, {SPAN_K}), ' '))",
-    )
+    Gram hash: xxhash64 (``span_grams``) — cut decisions are a
+    function of gram EQUALITY only and the output carries no hash
+    column, so any injective hash yields bit-identical cleaned text
+    while the long key shuffles and sorts 4x less data than the
+    32-char md5 string (guide §2.3 narrower types). The DuckDB oracle
+    replays the md5 chain, so the parity check is a cross-hash one."""
+    return repeated_spans_apply_for(load_table(spark, sf_dir, "documents"))
 
 
-def repeated_spans_apply_for(
-    docs: DataFrame,
-    gram_hash: str = f"md5(array_join(slice(t, i + 1, {SPAN_K}), ' '))",
-) -> DataFrame:
+def repeated_spans_apply_for(docs: DataFrame) -> DataFrame:
     """The substring-dedup cut over ANY (doc_id, text) frame — the
     frame-parameterized form of ``dedup_repeated_spans_apply`` (its
     docstring has the semantics and the plan analysis), public for
@@ -1468,19 +1356,7 @@ def repeated_spans_apply_for(
         "doc_id", F.split(norm_text(F.col("text")), " ").alias("t")
     )
     toks = toks.localCheckpoint(eager=False)  # reused for grams AND the cut
-    grams = (
-        toks.filter(F.size("t") >= SPAN_K)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(t) - {SPAN_K}),"
-                    f" i -> struct(i AS pos, {gram_hash} AS g))"
-                )
-            ).alias("x"),
-        )
-        .select("doc_id", F.col("x.pos").alias("pos"), F.col("x.g").alias("g"))
-    )
+    grams = span_grams(toks)
     # Non-first occurrences directly from ONE row_number window over
     # the gram key: rn > 1 already implies the gram repeats, so the
     # old occurrence-count aggregate + semi-join-back (two more gram
@@ -1804,63 +1680,4 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- prefix-filtered jaccard
-# The DF cap (dedup_ngram_jaccard_capped) bounds the pair space by
-# CHANGING the semantics (Jaccard over capped sets). Prefix filtering
-# (Chaudhuri et al. 2006 SSJoin / Xiao et al. 2008 PPJoin) bounds it
-# while keeping the EXACT threshold semantics: order each doc's
-# shingles by global rarity (df asc, shingle asc — one canonical
-# order for the whole corpus) and index only the first
-# p = n - ceil(t*n) + 1 of them. The prefix-filter lemma: two sets
-# with J >= t must overlap in more than (1-t) of either set, so they
-# MUST share at least one of each other's rarest (1-t)-fraction —
-# any pair sharing NO prefix shingle is provably below threshold.
-# Candidates therefore come from an inverted-index join over prefix
-# rows only (rare shingles -> tiny postings lists), and the exact
-# Jaccard verify runs on candidates alone.
-#
-# This is the third bounded-pair-space device in the dedup family
-# (DF cap: changes semantics; LSH: probabilistic; prefix filter:
-# exact and lossless) — the right default when the EXACT threshold
-# result is required at corpus scale. Registered with the SAME
-# oracle as dedup_ngram_jaccard: identical result set, scalable plan.
-# Cost: one df aggregate + one per-doc rank window (doc-bounded) on
-# top of the verify join; the win is the candidate count — measured
-# A/B in SCALE.md.
-
-
-@query("dedup_jaccard_prefix_filter", oracle=_PAIR_JACCARD_SQL)
-def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard >= 0.8 pairs via prefix-filtered
-    candidate generation (block comment above) — bit-identical to
-    ``dedup_ngram_jaccard``, pair space bounded by rare-prefix
-    postings instead of the full inverted index."""
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(docs)
-    # one materialization: the shingle relation feeds the df
-    # aggregate, the prefix ranking, AND the verify join — without
-    # the cut each consumer re-runs the scan+explode (the r2
-    # ReuseExchange lesson)
-    sh = sh.localCheckpoint(eager=True)
-    df_tbl = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ranked = (
-        sh.join(df_tbl, "s")
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df", "s")
-            ),
-        )
-        .join(sizes, "doc_id")
-    )
-    prefix = ranked.filter(
-        F.col("rk") <= F.col("n") - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("n")) + 1
-    ).select("doc_id", "s")
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return _pair_jaccard(sh, candidates=cand, sizes=sizes)
+query("dedup_jaccard_prefix_filter", oracle=_PAIR_JACCARD_SQL)(dedup_ngram_jaccard)

@@ -2,14 +2,20 @@
 graph — the step that turns pairwise matches (dedup_ngram_jaccard /
 dedup_minhash_lsh) into keep-one-per-cluster decisions.
 
-Spark-first iterative algorithm (no GraphFrames dependency): min-label
-propagation. Every vertex starts labeled with its own id; each round
-every vertex takes the min label among itself and its neighbors; stop
-when no label changes. Rounds needed = graph diameter (near-dup
-clusters are tiny — a handful of rounds). Each round is ONE join +
-ONE aggregate; lineage is cut with ``localCheckpoint`` so the plan
-doesn't grow unboundedly — the standard Pregel-style pattern at any
-scale.
+Spark-first iterative algorithm (no GraphFrames dependency):
+alternating large-star/small-star contraction (Kiveris et al. 2014,
+"Connected Components in MapReduce and Beyond"). Each iteration
+rewires every edge toward the minimum of its endpoint's
+neighbourhood, so the edge list contracts to one star per component,
+rooted at the component's minimum id, in O(log n) iterations whatever
+the component's diameter. That matters for dedup graphs, whose shape
+the corpus decides: a chain of mirrors of mirrors is a long path, and
+propagating the minimum label one hop per round would need as many
+rounds as the chain is long. Each iteration is a few joins and
+aggregates over the edge list, cut with ``localCheckpoint`` so the
+plan does not grow; convergence is an edge-set fingerprint, and the
+loop RAISES if it has not converged after MAX_ROUNDS_FAST iterations
+rather than return unconverged labels.
 
 The oracle replays the fixpoint with a recursive CTE (transitive
 closure -> min reachable id), so even this iterative, driver-loop
@@ -23,53 +29,6 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from .dedup import _PAIR_JACCARD_SQL, dedup_ngram_jaccard
-
-MAX_ROUNDS = 20  # safety bound; convergence is checked every round
-
-
-def connected_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
-    """Min-label propagation over an undirected pair list; returns
-    (doc_id, cluster_id) for every vertex appearing in a pair,
-    cluster_id = min vertex id in the component."""
-    edges = (
-        pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-        .unionByName(pairs.select(F.col(b).alias("u"), F.col(a).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("u").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    for _ in range(MAX_ROUNDS):
-        neighbor_min = (
-            edges.join(labels, edges.v == labels.doc_id)
-            .groupBy("u")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.u, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
 
 MAX_ROUNDS_FAST = 40  # ~2 log2(n) alternating iterations suffice; assert, not truncate
 
@@ -117,35 +76,21 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return _canon(nbr.unionByName(self_edge))
 
 
-def connected_components_fast(
+def connected_components(
     pairs: DataFrame, a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
-    """Alternating big-star/small-star connected components (Kiveris
-    et al. 2014, "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round twin of ``connected_components``. Min-label
-    propagation needs rounds = component DIAMETER, each a full-edge
-    shuffle; at crawl scale a pathological chain-shaped dup component
-    (mirrors of mirrors) degrades it to rounds = chain length. The
-    star steps instead contract the graph toward per-component stars
-    rooted at the minimum node in O(log n) alternating iterations
-    regardless of diameter — the VERDICT r5 item-2 hardening. Same
-    (doc_id, cluster_id) output, same oracle. See
-    ``connected_components_fast_rounds`` for the iteration count the
-    SCALE.md A/B records."""
+    """(doc_id, cluster_id) for every vertex of an undirected pair
+    list, cluster_id = min vertex id in its component (module
+    docstring: alternating star contraction, O(log n) iterations
+    regardless of component diameter)."""
     labels, _ = _alternating_star(pairs, a, b)
     return labels
 
 
-def connected_components_fast_rounds(
-    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b"
-) -> int:
-    """Iteration count of the alternating-star fixpoint (for tests
-    and the SCALE.md round-count A/B against min-label propagation)."""
-    _, rounds = _alternating_star(pairs, a, b)
-    return rounds
-
-
-def _alternating_star(pairs: DataFrame, a: str, b: str):
+def _alternating_star(pairs: DataFrame, a: str, b: str) -> tuple[DataFrame, int]:
+    """(labels, iterations): the labels ``connected_components``
+    returns and the number of star iterations it took to reach the
+    fixpoint (the last one confirms it)."""
     nodes = (
         pairs.select(F.col(a).alias("doc_id"))
         .unionByName(pairs.select(F.col(b).alias("doc_id")))
@@ -191,8 +136,8 @@ def _alternating_star(pairs: DataFrame, a: str, b: str):
     return labels, rounds
 
 
-# shared by both CC queries: the fixpoint replayed as a recursive-CTE
-# transitive closure -> min reachable id
+# the fixpoint replayed as a recursive-CTE transitive closure -> min
+# reachable id
 _CC_ORACLE = f"""
     WITH RECURSIVE pairs AS ({_PAIR_JACCARD_SQL}),
     edges AS (
@@ -223,16 +168,4 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(pairs)
 
 
-@query("dedup_cluster_components_fast", oracle=_CC_ORACLE)
-def dedup_cluster_components_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_cluster_components`` recomputed by alternating
-    big-star/small-star (Kiveris et al. 2014) instead of min-label
-    propagation — identical (doc_id, cluster_id) output and the same
-    recursive-CTE oracle, but O(log n) rounds regardless of component
-    DIAMETER where min-label pays rounds = diameter (each round a
-    full-edge shuffle). The scale-robust production choice for dedup
-    graphs whose shape you don't control; the planted-path test in
-    test_graph_cluster pins the round-count divergence, SCALE.md
-    records the A/B."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir)
-    return connected_components_fast(pairs)
+query("dedup_cluster_components_fast", oracle=_CC_ORACLE)(dedup_cluster_components)

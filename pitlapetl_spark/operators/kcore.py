@@ -18,9 +18,10 @@ aggregate. The alive frame is localCheckpoint-ed per round (it is the
 only thing that changes; the big edge frame's lineage never grows).
 Convergence = alive-count stability — one cheap driver-side long per
 round, the same fingerprint discipline as
-``dedup_cluster_components_fast``; MAX_ROUNDS bounds the loop and the
-engine RAISES (never silently truncates — the min-label CC lesson,
-SCALE.md round-6 A/B) if the fixpoint isn't reached.
+``dedup_cluster_components``; KCORE_MAX_ROUNDS bounds the loop and the
+engine RAISES (never silently truncates — a capped loop that returns
+its last state hands back an unconverged answer) if the fixpoint isn't
+reached.
 
 100-TB notes: per round the edge scan is the dominant cost; edges
 shuffle (or broadcast-probe while the alive set fits — at web scale
@@ -35,7 +36,7 @@ Oracle: programmatically unrolled CTE chain (the
 kmeans/PageRank/LPA precedent) running ORACLE_ROUNDS rounds — peeling
 is idempotent at the fixed point, so as long as the Spark side
 converges within ORACLE_ROUNDS (asserted: the Spark loop raises past
-MAX_ROUNDS = ORACLE_ROUNDS) both engines compute the identical core.
+KCORE_MAX_ROUNDS = ORACLE_ROUNDS) both engines compute the identical core.
 Counts are exact integers — no float drift anywhere.
 """
 

@@ -1247,7 +1247,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # materialized once: the token frame feeds dl AND tf — without
     # the cut both branches re-run the corpus scan+explode (review
-    # finding; the prefix-filter discipline)
+    # finding)
     toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("w")).localCheckpoint(
         eager=True
     )

@@ -1064,12 +1064,7 @@ def _pipeline_parity_oracle() -> str:
         oracle_minhash_sig_cols,
         oracle_shingles_cte,
     )
-    from ..operators.dedup import (
-        N_BANDS,
-        N_HASHES,
-        ROWS_PER_BAND,
-        span_apply_ctes,
-    )
+    from ..operators.dedup import N_HASHES, oracle_band_rows, span_apply_ctes
     from ..operators.similarity import (
         SEMDEDUP_TAU,
         _ORACLE_CRANK,
@@ -1086,16 +1081,7 @@ def _pipeline_parity_oracle() -> str:
         )
         return f"(({agree}) / {N_HASHES}.0)"
 
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, b, {k} AS band_idx, md5({e}) AS band_val FROM sigb".format(
-            k=k,
-            e=" || '|' || ".join(
-                f"h{k * ROWS_PER_BAND + r}::VARCHAR"
-                for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for k in range(N_BANDS)
-    )
+    band_rows = oracle_band_rows("sigb", ("b",))
     # unrolled sequential minhash replay: batch i's intra-survivors
     # (k0) drop against the ACCUMULATED survivors of batches < i
     replay = ["s0 AS (SELECT doc_id FROM k0 WHERE b = 0)"]

@@ -31,7 +31,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sinks import merge_upsert_write
-from ..sources import EVENTS, EVENTS_RAW, parquet_ts_unit
+from ..sources import (
+    DOCUMENTS,
+    EMBEDDINGS,
+    EVENTS,
+    EVENTS_RAW,
+    _events_nanos_normalized,
+    parquet_ts_unit,
+)
 from .store import (
     BatchStore,
     _compact_partition_store,
@@ -43,6 +50,17 @@ from .store import (
 )
 
 
+def _parquet_stream(
+    spark: SparkSession, schema, path: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """File-stream source over a parquet directory with a declared
+    schema; ``max_files_per_trigger`` bounds each micro-batch."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -50,18 +68,12 @@ def read_events_stream(
     unit handling as the batch reader, sources/__init__.py: micros map
     to TimestampType directly; a nanos footer falls back to the raw
     long read + exact div-1000 normalization)."""
-    nanos = parquet_ts_unit(path) == "ns"
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.readStream.schema(EVENTS_RAW if nanos else EVENTS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(path)
-    if nanos:
-        return raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        ).select("event_id", "ts", "user_id", "event_type", "value", "props")
-    return raw
+    if parquet_ts_unit(path) != "ns":
+        return _parquet_stream(spark, EVENTS, path, max_files_per_trigger)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _events_nanos_normalized(
+        _parquet_stream(spark, EVENTS_RAW, path, max_files_per_trigger)
+    )
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "1 day") -> DataFrame:
@@ -691,12 +703,7 @@ def read_documents_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-stream source over a documents parquet directory."""
-    from ..sources import DOCUMENTS
-
-    reader = spark.readStream.schema(DOCUMENTS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return _parquet_stream(spark, DOCUMENTS, path, max_files_per_trigger)
 
 
 def _dedup_ingest_batch(
@@ -1029,12 +1036,7 @@ def read_embeddings_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-stream source over an embeddings parquet directory."""
-    from ..sources import EMBEDDINGS
-
-    reader = spark.readStream.schema(EMBEDDINGS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return _parquet_stream(spark, EMBEDDINGS, path, max_files_per_trigger)
 
 
 def _semantic_store_probe_fn(assign_rows, tau: float):
@@ -1409,11 +1411,10 @@ def run_url_ingest_sink(
 # ~10^8 grams.
 #
 # Exactly-once, crash and provenance: the batch-scoped store's
-# (store.py). gram hashes are xxhash64 (the production twin's
-# hash): cut decisions are a function of gram EQUALITY only, so any
-# injective hash yields the same cuts — the md5/xxhash64 twin
-# argument from the batch queries, which is also why the parity
-# oracle can replay the md5 chain.
+# (store.py). Grams come from the batch queries' extractor
+# (``span_grams``: xxhash64): cut decisions are a function of gram
+# EQUALITY only, so any injective hash yields the same cuts, which is
+# why the parity oracle can replay the md5 chain.
 
 
 def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
@@ -1424,7 +1425,7 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
     hands the same function to foreachBatch. Input batches must
     carry ``doc_id`` and ``text``."""
     from ..functions.text import norm_text
-    from ..operators.dedup import SPAN_K, span_cut_apply
+    from ..operators.dedup import SPAN_K, span_cut_apply, span_grams
 
     store = BatchStore(store_path)
 
@@ -1439,23 +1440,7 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
             )
             .localCheckpoint(eager=False)
         )
-        grams = (
-            toks.filter(F.size("t") >= SPAN_K)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(0, size(t) - {SPAN_K}), i -> "
-                        f"struct(i AS pos, xxhash64(array_join("
-                        f"slice(t, i + 1, {SPAN_K}), ' ')) AS g))"
-                    )
-                ).alias("x"),
-            )
-            .select(
-                "doc_id", F.col("x.pos").alias("pos"), F.col("x.g").alias("g")
-            )
-            .localCheckpoint(eager=False)
-        )
+        grams = span_grams(toks).localCheckpoint(eager=False)
         # intra-batch canonical occurrence as a HASH AGGREGATE (min
         # (doc_id, pos) struct per gram) instead of the old
         # row_number window: the window shuffled AND globally sorted

@@ -33,7 +33,7 @@ _SLOW_NODEIDS = frozenset(
     (
         "test_breadth7.py::test_mix_temperature_allocation_is_exact",
         "test_cli.py::test_pipeline_subcommand_runs_manifest",
-        "test_graph_cluster.py::test_fast_cc_path_graph_round_divergence",
+        "test_graph_cluster.py::test_cc_path_graph_converges_in_log_rounds",
         "test_headroom_gate.py::test_every_oracle_has_rounding_headroom",
         "test_oracle_parity.py::test_parity[stream_ingest_pipeline_parity]",
         "test_properties.py::test_binned_range_join_equals_nested_loop",

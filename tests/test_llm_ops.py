@@ -236,25 +236,6 @@ def test_incremental_minhash_is_batch_vs_corpus_only(spark, sf_dir):
     assert got == cross
 
 
-def test_repeated_spans_fast_is_bit_identical_to_md5(spark, sf_dir):
-    """Span membership depends only on gram EQUALITY, so the xxhash64
-    production twin must return the exact same row set as the md5
-    parity twin — no floor, no tolerance (contrast winnowing, where
-    hash choice can flip near-threshold decisions)."""
-    from pitlapetl_spark import registry
-
-    md5_rows = {
-        tuple(r)
-        for r in registry.QUERIES["dedup_repeated_spans"](spark, sf_dir).collect()
-    }
-    fast_rows = {
-        tuple(r)
-        for r in registry.QUERIES["dedup_repeated_spans_fast"](spark, sf_dir).collect()
-    }
-    assert md5_rows == fast_rows
-    assert md5_rows, "vacuous: no repeated spans found in the corpus"
-
-
 def test_repeated_spans_are_maximal_and_disjoint(spark, sf_dir):
     """Structural contract of the island merge: per doc, spans are
     disjoint (a maximal span absorbs everything it overlaps), each is

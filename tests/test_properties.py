@@ -378,9 +378,7 @@ def test_repeated_spans_find_exactly_planted_sentences(seed, n_docs, n_planted):
     docs = spark.createDataFrame(rows, "doc_id INT, text STRING")
     got = {
         (r.doc_id, r.span_start, r.span_end)
-        for r in repeated_spans_for(
-            docs, f"xxhash64(array_join(slice(t, i + 1, {SPAN_K}), ' '))"
-        ).collect()
+        for r in repeated_spans_for(docs).collect()
     }
     want = {(d, p, p + len(sentence)) for d, p in planted_at.items()}
     assert got == want

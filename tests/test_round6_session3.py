@@ -269,65 +269,6 @@ def test_theil_decomposition_identity_and_bounds(spark):
     assert nation_terms and all(v >= -1e-9 for v in nation_terms)
 
 
-def test_prefix_filter_lemma_and_result_identity(spark):
-    """(1) Result identity: the prefix-filtered query returns exactly
-    dedup_ngram_jaccard's pairs (same oracle, different plan — assert
-    engine-side too). (2) The prefix-filter lemma holds mechanically:
-    every true pair shares at least one PREFIX shingle of each member
-    (replayed in python from the same rarity order). (3) The
-    candidate space is strictly smaller than the full inverted-index
-    pair space on this corpus (the reason the operator exists)."""
-    from pitlapetl_spark.functions.text import SHINGLE_K
-    from pitlapetl_spark.operators.dedup import JACCARD_THRESHOLD
-
-    canon = lambda rows: sorted((r.doc_a, r.doc_b, r.jaccard) for r in rows)
-    fast = canon(Q["dedup_jaccard_prefix_filter"](spark, SF_SMOKE).collect())
-    exact = canon(Q["dedup_ngram_jaccard"](spark, SF_SMOKE).collect())
-    assert fast == exact and exact
-
-    # python replay of prefix sets
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text").collect()
-    sh = {}
-    for r in docs:
-        t = r.text.lower().split()
-        sh[r.doc_id] = {
-            " ".join(t[i : i + SHINGLE_K]) for i in range(len(t) - SHINGLE_K + 1)
-        }
-    df = defaultdict(int)
-    for s_set in sh.values():
-        for s in s_set:
-            df[s] += 1
-    prefix = {}
-    full_pairs = 0
-    postings = defaultdict(list)
-    for d, s_set in sh.items():
-        n = len(s_set)
-        p = n - math.ceil(JACCARD_THRESHOLD * n) + 1
-        prefix[d] = set(sorted(s_set, key=lambda s: (df[s], s))[:p])
-    for d, s_set in sh.items():
-        for s in s_set:
-            postings[s].append(d)
-    full_pairs = len(
-        {
-            (a, b)
-            for ds in postings.values()
-            for a in ds
-            for b in ds
-            if a < b
-        }
-    )
-    pre_postings = defaultdict(list)
-    for d, ps in prefix.items():
-        for s in ps:
-            pre_postings[s].append(d)
-    cand = {
-        (a, b) for ds in pre_postings.values() for a in ds for b in ds if a < b
-    }
-    for a, b, _ in exact:
-        assert (a, b) in cand, "prefix-filter lemma violated"
-    assert len(cand) < full_pairs
-
-
 def test_theil_sen_python_replay_and_robustness_shape(spark):
     """Replay both slopes per type from raw rows: Theil-Sen = median
     of pairwise slopes over the daily means, OLS from moment sums."""

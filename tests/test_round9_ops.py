@@ -205,24 +205,6 @@ def test_semantic_top2_is_a_superset_of_top1_at_same_tau(spark):
     assert len(top2) >= len(top1)
 
 
-# -------------------------------------- minhash pre-agg vs join shape
-
-
-def test_minhash_preagg_emits_identical_pairs_to_join_variant(spark):
-    """The bucket pre-aggregation is a pure plan-shape change: its
-    verified pair set and Jaccard values must be row-for-row identical
-    to the banding self-join variant."""
-    a = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in Q["dedup_minhash_lsh"](spark, SF_SMOKE).collect()
-    }
-    b = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in Q["dedup_minhash_lsh_preagg"](spark, SF_SMOKE).collect()
-    }
-    assert a == b and a
-
-
 # ------------------------------------------- phash compaction parity
 
 

@@ -87,14 +87,20 @@ def main() -> None:
         "hash-compare); `local` = `PARITY_LOCAL.json` from the last",
         "`tools/drive_contract.py` run (same check, run locally). A query",
         "is *currently proven* only if at least one column is green on",
-        "data of the current generation.",
+        "data of the current generation. An alias is a second name",
+        "registered on the same function as an earlier one.",
         "",
         "| query | oracle | driver | local |",
         "|---|---|---|---|",
     ]
+    first_name: dict[int, str] = {}  # id(fn) -> first name registered for it
     for name in qs:
+        oracle = "sql" if name in oracles else "rows-only"
+        primary = first_name.setdefault(id(qs[name]), name)
+        if primary != name:
+            oracle += f", alias of `{primary}`"
         lines.append(
-            f"| `{name}` | {'sql' if name in oracles else 'rows-only'} "
+            f"| `{name}` | {oracle} "
             f"| {fmt_driver(driver.get(name))} | {fmt_local(local.get(name))} |"
         )
     n_green_local = sum(1 for r in local.values() if r["status"] == "ok")
