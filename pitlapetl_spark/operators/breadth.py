@@ -13,7 +13,6 @@ from ..registry import query
 from ..sources import load_table, register_views
 
 DAY_S = 86400
-HOUR_S = 3600
 
 
 @query(

@@ -584,7 +584,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(norm_text(F.col("text")), " ")).alias("w"),
+        F.explode(tokens(F.col("text"))).alias("w"),
     )
     tf = toks.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("cnt"))
     # hash each distinct (doc, term) ONCE in a projection; the 16
@@ -627,7 +627,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     clustered = dedup_simhash(spark, sf_dir)
     sized = clustered.join(
-        docs.select("doc_id", F.size(F.split(norm_text(F.col("text")), " ")).alias("n_tokens")),
+        docs.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")),
         "doc_id",
     )
     w = Window.partitionBy("simhash").orderBy(
@@ -654,15 +654,13 @@ COSINE_DUP_THRESHOLD = 0.999
 def _crawl_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simulated re-ingest: the embeddings corpus unioned with an
     id-offset copy of itself, as double vectors with L2 norms."""
+    from .similarity import embedding_vectors
+
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    crawl = emb.unionByName(
-        emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
-    )
-    return crawl.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    ).withColumn(
-        "nrm", F.sqrt(F.expr("aggregate(v, 0D, (acc, x) -> acc + x * x)"))
+    return embedding_vectors(
+        emb.unionByName(
+            emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
+        )
     )
 
 
@@ -671,6 +669,8 @@ def _cosine_pairs_in(bucketed: DataFrame) -> DataFrame:
     self-join is an EQUI-join on the bucket key (hash join, never a
     BroadcastNestedLoopJoin), so the pair space is sum over buckets of
     n_b^2 instead of n^2."""
+    from .similarity import cosine_col
+
     a = bucketed.alias("a")
     b = bucketed.alias("b")
     return (
@@ -682,13 +682,7 @@ def _cosine_pairs_in(bucketed: DataFrame) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-                )
-                / (F.col("a.nrm") * F.col("b.nrm")),
-                6,
-            ).alias("cosine"),
+            cosine_col("a.v", "a.nrm", "b.v", "b.nrm").alias("cosine"),
         )
         .filter(F.col("cosine") >= COSINE_DUP_THRESHOLD)
     )
@@ -738,9 +732,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     DEFAULT PATH IS SUB-QUADRATIC (r1's registered brute-force
     all-pairs theta join was the one dedup entry that would not
     survive 100 TB): vectors hash to a sign-LSH bucket with the same
-    deterministic md5 hyperplanes as the ANN operators
-    (operators/similarity.py), candidates come from an equi-join on
-    the bucket, and exact cosine is verified inside buckets only. At
+    deterministic md5-derived hyperplanes as the ANN operators
+    (operators/similarity.py), built once at plan time as literal
+    sign arrays (the DuckDB oracle re-derives them from md5 per
+    row), candidates come from an equi-join on the bucket, and exact
+    cosine is verified inside buckets only. At
     cosine >= 0.999 the vectors are near-identical, so per-plane
     disagreement probability is ~angle/pi ~= 0.8%; exact copies hash
     identically, so recall on true duplicates is exact-by-construction
@@ -748,15 +744,15 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     remains as the small-sf oracle cross-check
     (tests/test_llm_ops.py). Dot products are JVM-side array
     expressions (zip_with + aggregate), doubles end-to-end."""
-    from .similarity import _bucket_expr_spark
+    from .similarity import lsh_bucket
 
     # lazy lineage cut: both self-join sides consume the bucketed
     # frame — uncut, each side re-scanned embeddings twice (the union)
-    # and re-ran the cast + norm + 16-plane bucket projection
+    # and re-ran the cast + norm + 8-plane bucket projection
     # (observed: 4 embeddings scans; guide §1.2)
     bucketed = (
         _crawl_vectors(spark, sf_dir)
-        .withColumn("bucket", F.expr(_bucket_expr_spark()).cast("int"))
+        .withColumn("bucket", lsh_bucket())
         .localCheckpoint(eager=False)
     )
     return _cosine_pairs_in(bucketed)
@@ -1100,7 +1096,7 @@ def repeated_spans_for(docs: DataFrame) -> DataFrame:
     so pipelines (and the planted-corpus property test) can run it on
     arbitrary corpora."""
     grams = span_grams(
-        docs.select("doc_id", F.split(norm_text(F.col("text")), " ").alias("t"))
+        docs.select("doc_id", tokens(F.col("text")).alias("t"))
     )
     # corpus-wide occurrence count as a window COUNT over the gram
     # key instead of the old aggregate + semi-join-back: the former
@@ -1353,7 +1349,7 @@ def repeated_spans_apply_for(docs: DataFrame) -> DataFrame:
     span-ingest sink's equivalence on arbitrary corpora (the
     ``repeated_spans_for`` precedent)."""
     toks = docs.select(
-        "doc_id", F.split(norm_text(F.col("text")), " ").alias("t")
+        "doc_id", tokens(F.col("text")).alias("t")
     )
     toks = toks.localCheckpoint(eager=False)  # reused for grams AND the cut
     grams = span_grams(toks)

@@ -26,8 +26,6 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources import load_table
 
-FUNNEL_STAGES = ("view", "click", "purchase")
-
 
 def _first_after(ev: Column, stage: str, after: Column | None) -> Column:
     """Earliest event of ``stage`` strictly after ``after`` (or the

@@ -35,15 +35,6 @@ from ..sources import load_table
 FRAME_BYTES = 64  # bytes per pseudo-frame of a 'video' payload
 FRAME_STRIDE = 4  # sample every 4th frame
 
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
 def decode_media(blob: bytes, media_type: str):
     """STUB — real pixel/sample decode needs codec libraries not
     present in this container (PIL/ffmpeg). The Spark-side contract

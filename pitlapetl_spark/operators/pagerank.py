@@ -42,7 +42,6 @@ from ..sources import load_table
 
 PR_ITERS = 4
 PR_CHECKPOINT_EVERY = 3  # lineage-cut cadence (see docstring)
-PR_DAMP = 0.85
 PR_TOP = 20
 _DEC = "decimal(28,12)"
 

@@ -10,11 +10,24 @@ Scale design:
   per-row cosine is a JVM array expression (zip_with + aggregate)
   inside whole-stage codegen. Correct at any corpus size, O(Q x N).
 - **sign-LSH** hashes every vector to a b-bit bucket with
-  deterministic pseudo-random +-1 hyperplanes derived from md5 (so
-  the DuckDB oracle replays the exact same planes); search touches
-  only the query's bucket — O(Q x N / 2^b) expected. Recall is
-  traded via b and multi-probe; at production scale the same plan
-  works with learned IVF centroids in place of the hash.
+  deterministic pseudo-random +-1 hyperplanes: the sign of plane
+  ``key``'s dim d is the high bit of md5('{key}_{d}')'s first hex
+  char. The planes are computed once at plan-build time and embedded
+  as literal arrays, so a bucket is b dot products per row, not
+  b x dims md5 calls; the DuckDB oracles derive the single-table
+  planes from md5 per row, which checks the derivation independently.
+  Search touches only the query's bucket — O(Q x N / 2^b) expected.
+  Recall is traded via b, multi-probe and L tables; at production
+  scale the same plan works with learned IVF centroids in place of
+  the hash.
+
+One vector algebra serves every embedding query here, the crawl
+re-ingest dedup (dedup.py) and the semantic ingest sink
+(streaming/runtime.py): ``embedding_vectors`` builds the (vec_id, v,
+nrm) frame, ``cosine_col`` is the one scoring expression,
+``shortlist_cosines`` re-scores candidate pairs, ``top_k`` is the
+per-query tail, ``centroid_means`` fits label centroids and
+``rank_against_centroids`` assigns vectors to them.
 
 Determinism contract: cosines are computed in double and round(6)-ed
 before ranking; ranking ties break on vec_id — total order, identical
@@ -23,7 +36,7 @@ in Spark and DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -32,22 +45,92 @@ from ..sources import load_table
 N_QUERIES = 10  # vectors with vec_id < N_QUERIES are the query set
 TOP_K = 5
 LSH_PLANES = 8
+EMB_DIM = 64  # embeddings.parquet vector length (all SFs)
 _HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
 _HEX_IN = ", ".join(repr(h) for h in _HEX_HIGH)
 
 
-def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings cast to double with precomputed L2 norm (narrow)."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+def _l2(c: str) -> Column:
+    return F.sqrt(F.expr(f"aggregate({c}, 0D, (acc, x) -> acc + x * x)"))
+
+
+def embedding_vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, nrm): the ``embedding`` column of ``emb`` cast to
+    double, with its L2 norm precomputed (narrow)."""
     return emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    ).withColumn("nrm", F.sqrt(F.expr("aggregate(v, 0D, (acc, x) -> acc + x * x)")))
+    ).withColumn("nrm", _l2("v"))
 
 
-_COS = (
-    "aggregate(zip_with(q.v, c.v, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-)
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return embedding_vectors(load_table(spark, sf_dir, "embeddings"))
+
+
+def cosine_col(av: str, an: str, bv: str, bn: str) -> Column:
+    """Round-6 exact cosine between two (vector, norm) column pairs —
+    the one scoring expression of the embedding family, so the
+    arithmetic cannot drift between a query, its stream twin and the
+    tau gate. The BLAS scorers (`_cluster_pair_score_fn`, the semantic
+    sink's store probe) replay it in numpy."""
+    return F.round(
+        F.expr(
+            f"aggregate(zip_with({av}, {bv}, (x, y) -> x * y), 0D,"
+            " (acc, x) -> acc + x)"
+        )
+        / (F.col(an) * F.col(bn)),
+        6,
+    )
+
+
+def top_k(scored: DataFrame, by: str, tie: str, k: int) -> DataFrame:
+    """Each ``by`` group's first ``k`` rows of ``scored`` by (cosine
+    desc, ``tie``), with the 1-based int ``rank``."""
+    w = Window.partitionBy(by).orderBy(F.col("cosine").desc(), F.col(tie))
+    return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(
+        F.col("rank") <= k
+    )
+
+
+def shortlist_cosines(
+    pairs: DataFrame, vecs: DataFrame, a: str, b: str, broadcast_a: bool
+) -> DataFrame:
+    """Exact re-score of a candidate shortlist: attach the (vec_id, v,
+    nrm) rows of ``vecs`` to both ids of each (``a``, ``b``) pair —
+    the ``a`` side broadcast when it is the tiny query set — and score
+    it: (a, b, cosine)."""
+    av = vecs.select(
+        F.col("vec_id").alias(a), F.col("v").alias("av"), F.col("nrm").alias("an")
+    )
+    bv = vecs.select(
+        F.col("vec_id").alias(b), F.col("v").alias("bv"), F.col("nrm").alias("bn")
+    )
+    return (
+        pairs.join(F.broadcast(av) if broadcast_a else av, a)
+        .join(bv, b)
+        .select(a, b, cosine_col("av", "an", "bv", "bn").alias("cosine"))
+    )
+
+
+def _broadcast_search(
+    queries: DataFrame, vecs: DataFrame, on: Column, *carry: Column
+) -> DataFrame:
+    """Top-k search of the broadcast ``queries`` (aliased q) against
+    the corpus ``vecs`` (aliased c) over the pairs ``on`` admits, a
+    vector never its own neighbor."""
+    scored = (
+        F.broadcast(queries)
+        .alias("q")
+        .join(vecs.alias("c"), on & (F.col("q.vec_id") != F.col("c.vec_id")))
+        .select(
+            F.col("q.vec_id").alias("query_id"),
+            F.col("c.vec_id").alias("neighbor_id"),
+            *carry,
+            cosine_col("q.v", "q.nrm", "c.v", "c.nrm").alias("cosine"),
+        )
+    )
+    return top_k(scored, "query_id", "neighbor_id", TOP_K)
+
 
 _ORACLE_VECS = """
     u AS (
@@ -92,40 +175,40 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, JVM-side dot products, per-query row_number window."""
     vecs = _vectors(spark, sf_dir)
     queries = vecs.filter(F.col("vec_id") < N_QUERIES)
-    scored = (
-        F.broadcast(queries)
-        .alias("q")
-        .join(vecs.alias("c"), F.col("q.vec_id") != F.col("c.vec_id"))
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            F.round(
-                F.expr(_COS) / (F.col("q.nrm") * F.col("c.nrm")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _broadcast_search(queries, vecs, F.lit(True))
 
 
-def _bucket_expr_spark() -> str:
-    """b-bit sign-LSH bucket from md5-derived +-1 hyperplanes.
-    Plane p, dim d sign = +1 iff the first hex char of md5('p_d') has
-    its high bit set. Pure array expression, 0-based dims."""
+def _plane_signs(key: str) -> list[int]:
+    """The deterministic +-1 hyperplane named ``key``: the sign of dim
+    d is +1 iff the first hex char of md5('{key}_{d}') has its high bit
+    set. Evaluated once at plan-build time (Python hashlib) and
+    embedded as literals."""
+    import hashlib
+
+    return [
+        1 if hashlib.md5(f"{key}_{d}".encode()).hexdigest()[0] in _HEX_HIGH else -1
+        for d in range(EMB_DIM)
+    ]
+
+
+def _bucket_expr_spark(prefix: str, planes: int) -> str:
+    """b-bit sign-LSH bucket of ``v`` over the literal planes
+    '{prefix}{p}', p < ``planes``: bit p is set iff the projection on
+    plane p is positive."""
     bits = []
-    for p in range(LSH_PLANES):
+    for p in range(planes):
+        s = ", ".join(str(x) for x in _plane_signs(f"{prefix}{p}"))
         proj = (
-            f"aggregate(sequence(0, size(v) - 1), 0D, (acc, d) -> acc + "
-            f"(CASE WHEN substring(md5(concat('{p}_', d)), 1, 1) IN ({_HEX_IN}) "
-            f"THEN v[d] ELSE -v[d] END))"
+            f"aggregate(zip_with(v, array({s}), (x, s) -> x * s), 0D, "
+            f"(acc, x) -> acc + x)"
         )
         bits.append(f"(CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END)")
     return " + ".join(bits)
+
+
+def lsh_bucket() -> Column:
+    """The single-table ``LSH_PLANES``-bit bucket of a (v) frame."""
+    return F.expr(_bucket_expr_spark("", LSH_PLANES)).cast("int")
 
 
 def _bucket_expr_duck() -> str:
@@ -177,33 +260,12 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket (equi-join on bucket -> hash join, never a cross join).
     The bucket column is exactly what you'd persist + partition by
     for repeated ANN serving at 100 TB."""
-    vecs = _vectors(spark, sf_dir).withColumn(
-        "bucket", F.expr(_bucket_expr_spark()).cast("int")
-    )
-    queries = vecs.filter(F.col("vec_id") < N_QUERIES)
-    scored = (
-        F.broadcast(queries)
-        .alias("q")
-        .join(
-            vecs.alias("c"),
-            (F.col("q.bucket") == F.col("c.bucket"))
-            & (F.col("q.vec_id") != F.col("c.vec_id")),
-        )
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            F.col("q.bucket").alias("bucket"),
-            F.round(F.expr(_COS) / (F.col("q.nrm") * F.col("c.nrm")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
+    vecs = _vectors(spark, sf_dir).withColumn("bucket", lsh_bucket())
+    return _broadcast_search(
+        vecs.filter(F.col("vec_id") < N_QUERIES),
+        vecs,
+        F.col("q.bucket") == F.col("c.bucket"),
+        F.col("q.bucket").alias("bucket"),
     )
 
 
@@ -252,9 +314,7 @@ def sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a cross join — so the 100-TB cost model is unchanged:
     O(Q x (b+1) x N / 2^b) expected. A query-side explode before a
     broadcast join is the canonical Spark shape for multi-probe."""
-    vecs = _vectors(spark, sf_dir).withColumn(
-        "bucket", F.expr(_bucket_expr_spark()).cast("int")
-    )
+    vecs = _vectors(spark, sf_dir).withColumn("bucket", lsh_bucket())
     probes = [F.col("bucket")] + [
         F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(LSH_PLANES)
     ]
@@ -262,29 +322,7 @@ def sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         vecs.filter(F.col("vec_id") < N_QUERIES)
         .withColumn("probe", F.explode(F.array(*probes)))
     )
-    scored = (
-        F.broadcast(queries)
-        .alias("q")
-        .join(
-            vecs.alias("c"),
-            (F.col("q.probe") == F.col("c.bucket"))
-            & (F.col("q.vec_id") != F.col("c.vec_id")),
-        )
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            F.round(F.expr(_COS) / (F.col("q.nrm") * F.col("c.nrm")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _broadcast_search(queries, vecs, F.col("q.probe") == F.col("c.bucket"))
 
 
 # ---------------------------------------------------- L-tables LSH
@@ -301,132 +339,18 @@ def sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # candidate mass L/2^b = 0.19N vs 0.25N+ for the others).
 LSH_TABLES = 12
 LSH_TABLE_PLANES = 6
-EMB_DIM = 64  # embeddings.parquet vector length (all SFs)
-
-
-def _plane_signs(table: int, plane: int) -> list[int]:
-    """The deterministic +-1 hyperplane for (table, plane): sign of
-    dim d = high bit of the first hex char of md5('{t}_{p}_{d}') —
-    the same device as the single-table variant, but evaluated ONCE
-    at plan-build time (Python hashlib) and embedded as literals, so
-    neither engine computes rows x planes x dims md5 calls at
-    runtime."""
-    import hashlib
-
-    return [
-        1
-        if hashlib.md5(f"{table}_{plane}_{d}".encode()).hexdigest()[0]
-        in _HEX_HIGH
-        else -1
-        for d in range(EMB_DIM)
-    ]
-
-
-def _table_bucket_expr_spark(table: int, planes: int) -> str:
-    bits = []
-    for p in range(planes):
-        s = ", ".join(str(x) for x in _plane_signs(table, p))
-        proj = (
-            f"aggregate(zip_with(v, array({s}), (x, s) -> x * s), 0D, "
-            f"(acc, x) -> acc + x)"
-        )
-        bits.append(f"(CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END)")
-    return " + ".join(bits)
 
 
 def _table_bucket_expr_duck(table: int, planes: int) -> str:
     bits = []
     for p in range(planes):
-        s = ", ".join(str(x) for x in _plane_signs(table, p))
+        s = ", ".join(str(x) for x in _plane_signs(f"{table}_{p}"))
         proj = (
             f"list_sum(list_transform(range(1, len(v) + 1), "
             f"i -> v[i] * ([{s}])[i]))"
         )
         bits.append(f"(CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END)")
     return " + ".join(bits)
-
-
-def _lsh_ltables_plan(
-    spark: SparkSession, sf_dir: str, n_tables: int, planes: int
-) -> DataFrame:
-    """L-tables sign-LSH top-k, parameterized so the recall probe can
-    sweep L. Index shape is the production one: a NARROW (vec_id,
-    tbl, bucket) posting frame — L rows per vector, no vector payload
-    duplication — candidates are the distinct union of per-table
-    bucket matches, and vectors are fetched once per shortlist pair
-    for the exact cosine re-rank."""
-    vecs = _vectors(spark, sf_dir)
-    buckets = F.array(
-        *[
-            F.expr(_table_bucket_expr_spark(t, planes)).cast("int")
-            for t in range(n_tables)
-        ]
-    )
-    idx = vecs.select(
-        "vec_id", F.posexplode(buckets).alias("tbl", "bucket")
-    )
-    # the n_tables x planes interpreted dot-product projections are
-    # the dominant extraction cost, and the posting frame feeds BOTH
-    # sides of the candidate join — one lazy lineage cut makes the
-    # extraction run once instead of once per side (the mm_phash /
-    # basket repeated-subtree fix, guide §1.2); the cut frame is the
-    # NARROW (vec_id, tbl, bucket) index, L rows per vector, no
-    # vector payloads
-    idx = idx.localCheckpoint(eager=False)
-    qidx = idx.filter(F.col("vec_id") < N_QUERIES)
-    cand = (
-        F.broadcast(qidx.alias("q"))
-        .join(
-            idx.alias("c"),
-            (F.col("q.tbl") == F.col("c.tbl"))
-            & (F.col("q.bucket") == F.col("c.bucket"))
-            & (F.col("q.vec_id") != F.col("c.vec_id")),
-        )
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-        )
-        .distinct()
-    )
-    scored = (
-        cand.join(
-            F.broadcast(
-                vecs.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("v").alias("qv"),
-                    F.col("nrm").alias("qn"),
-                )
-            ),
-            "query_id",
-        )
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("cv"),
-                F.col("nrm").alias("cn"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D,"
-                    " (acc, x) -> acc + x)"
-                )
-                / (F.col("qn") * F.col("cn")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-    )
 
 
 def _ltables_oracle(n_tables: int, planes: int) -> str:
@@ -485,8 +409,42 @@ def sim_topk_lsh_ltables(spark: SparkSession, sf_dir: str) -> DataFrame:
     r7 item 5). Candidate mass stays bounded at ~L/2^b of brute
     force; the posting-list index is narrow (no vector payloads), so
     the L-times factor costs index rows, not vector copies — the
-    standard E2LSH memory/recall trade."""
-    return _lsh_ltables_plan(spark, sf_dir, LSH_TABLES, LSH_TABLE_PLANES)
+    standard E2LSH memory/recall trade. Each shortlist pair fetches
+    its two vectors once for the exact re-score."""
+    vecs = _vectors(spark, sf_dir)
+    buckets = F.array(
+        *[
+            F.expr(_bucket_expr_spark(f"{t}_", LSH_TABLE_PLANES)).cast("int")
+            for t in range(LSH_TABLES)
+        ]
+    )
+    idx = vecs.select(
+        "vec_id", F.posexplode(buckets).alias("tbl", "bucket")
+    )
+    # the L x b dot-product projections are the dominant extraction
+    # cost, and the posting frame feeds BOTH sides of the candidate
+    # join — one lazy lineage cut makes the extraction run once
+    # instead of once per side (the mm_phash / basket repeated-subtree
+    # fix, guide §1.2); the cut frame is the NARROW (vec_id, tbl,
+    # bucket) index, L rows per vector, no vector payloads
+    idx = idx.localCheckpoint(eager=False)
+    qidx = idx.filter(F.col("vec_id") < N_QUERIES)
+    cand = (
+        F.broadcast(qidx.alias("q"))
+        .join(
+            idx.alias("c"),
+            (F.col("q.tbl") == F.col("c.tbl"))
+            & (F.col("q.bucket") == F.col("c.bucket"))
+            & (F.col("q.vec_id") != F.col("c.vec_id")),
+        )
+        .select(
+            F.col("q.vec_id").alias("query_id"),
+            F.col("c.vec_id").alias("neighbor_id"),
+        )
+        .distinct()
+    )
+    scored = shortlist_cosines(cand, vecs, "query_id", "neighbor_id", True)
+    return top_k(scored, "query_id", "neighbor_id", TOP_K)
 
 
 @query(
@@ -524,46 +482,14 @@ def sim_label_centroid_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     to its nearest centroid by cosine. Centroid table is tiny ->
     broadcast; assignment is one narrow pass over the corpus. This is
     the assignment step of IVF-flat ANN restated as DataFrame ops."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id",
-        "label",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-    ).withColumn("nrm", F.sqrt(F.expr("aggregate(v, 0D, (acc, x) -> acc + x * x)")))
-    dim = F.posexplode(F.col("v"))
-    comp = vecs.select("vec_id", "label", dim.alias("i", "x"))
-    cent = comp.groupBy("label", "i").agg(F.avg("x").alias("cx"))
-    cent_vec = (
-        cent.groupBy("label")
-        .agg(
-            F.expr("transform(array_sort(collect_list(struct(i, cx))), s -> s.cx)").alias("cv")
-        )
-        .withColumn(
-            "cnrm", F.sqrt(F.expr("aggregate(cv, 0D, (acc, x) -> acc + x * x)"))
-        )
-    )
-    scored = (
-        vecs.alias("q")
-        .join(F.broadcast(cent_vec).alias("c"))
-        .select(
-            F.col("q.vec_id").alias("vec_id"),
-            F.col("c.label").alias("centroid_label"),
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(q.v, c.cv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-                )
-                / (F.col("q.nrm") * F.col("c.cnrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("centroid_label")
-    )
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .drop("rnk")
+        _centroid_ranked(spark, sf_dir)
+        .filter(F.col("crk") == 1)
+        .select(
+            "vec_id",
+            F.col("label").alias("centroid_label"),
+            F.col("ccos").alias("cosine"),
+        )
     )
 
 
@@ -622,19 +548,12 @@ _ORACLE_CRANK = """
 """
 
 
-def _centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label centroids as dense vectors: (label, cv, cnrm). K rows —
-    always broadcastable (the IVF coarse quantizer is small by
-    construction; a learned one would be loaded the same way)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    comp = emb.select(
-        "vec_id",
-        "label",
-        F.posexplode(
-            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-        ).alias("i", "x"),
-    )
-    cent = comp.groupBy("label", "i").agg(F.avg("x").alias("cx"))
+def centroid_means(rows: DataFrame) -> DataFrame:
+    """Per-label mean vectors of exploded (label, i, x) component rows
+    as the (label, cv, cnrm) quantizer frame of
+    `rank_against_centroids`. The caller explodes its own vectors, so
+    each keeps the plan it had."""
+    cent = rows.groupBy("label", "i").agg(F.avg("x").alias("cx"))
     return (
         cent.groupBy("label")
         .agg(
@@ -642,8 +561,22 @@ def _centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "transform(array_sort(collect_list(struct(i, cx))), s -> s.cx)"
             ).alias("cv")
         )
-        .withColumn(
-            "cnrm", F.sqrt(F.expr("aggregate(cv, 0D, (acc, x) -> acc + x * x)"))
+        .withColumn("cnrm", _l2("cv"))
+    )
+
+
+def _centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label centroids as dense vectors: (label, cv, cnrm). K rows —
+    always broadcastable (the IVF coarse quantizer is small by
+    construction; a learned one would be loaded the same way)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return centroid_means(
+        emb.select(
+            "vec_id",
+            "label",
+            F.posexplode(
+                F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
+            ).alias("i", "x"),
         )
     )
 
@@ -664,14 +597,7 @@ def rank_against_centroids(vecs: DataFrame, cent: DataFrame) -> DataFrame:
         .select(
             F.col("q.vec_id").alias("vec_id"),
             F.col("c.label").alias("label"),
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(q.v, c.cv, (x, y) -> x * y), 0D,"
-                    " (acc, x) -> acc + x)"
-                )
-                / (F.col("q.nrm") * F.col("c.cnrm")),
-                6,
-            ).alias("ccos"),
+            cosine_col("q.v", "q.nrm", "c.cv", "c.cnrm").alias("ccos"),
         )
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "label")
@@ -738,40 +664,15 @@ def sim_topk_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = _centroid_ranked(spark, sf_dir).localCheckpoint(eager=False)
     assign = ranked.filter(
         (F.col("crk") == 1) & (F.col("vec_id") >= N_QUERIES)
-    ).select(F.col("vec_id").alias("cand_id"), "label")
+    ).select(F.col("vec_id").alias("neighbor_id"), "label")
     probes = ranked.filter(
         (F.col("crk") <= NPROBE) & (F.col("vec_id") < N_QUERIES)
     ).select(F.col("vec_id").alias("query_id"), "label")
-    cand = F.broadcast(probes).join(assign, "label").select("query_id", "cand_id")
-    vecs = _vectors(spark, sf_dir)
-    q = vecs.select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    cand = F.broadcast(probes).join(assign, "label").select("query_id", "neighbor_id")
+    rescored = shortlist_cosines(
+        cand, _vectors(spark, sf_dir), "query_id", "neighbor_id", True
     )
-    c = vecs.select(
-        F.col("vec_id").alias("c_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-    )
-    rescored = (
-        cand.join(F.broadcast(q), cand.query_id == F.col("q_id"))
-        .join(c, cand.cand_id == F.col("c_id"))
-        .select(
-            "query_id",
-            F.col("cand_id").alias("neighbor_id"),
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D,"
-                    " (acc, x) -> acc + x)"
-                )
-                / (F.col("qn") * F.col("cn")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return rescored.withColumn("rank", F.row_number().over(w).cast("int")).filter(
-        F.col("rank") <= TOP_K
-    )
+    return top_k(rescored, "query_id", "neighbor_id", TOP_K)
 
 
 @query(
@@ -1012,24 +913,6 @@ def cluster_pair_scores(
     )
 
 
-def cosine_col(av: str, an: str, bv: str, bn: str):
-    """Round-6 exact cosine between two (vector, norm) column pairs —
-    THE verify-stage expression, shared by the batch SemDeDup rungs
-    (`_semantic_topm`), the streaming semantic ingest sink
-    (streaming/runtime.py), and the top-m measurements of the SCALE.md
-    round-10 ladder, so the tau gate's arithmetic can never drift
-    between the stream and its batch twin (round-10 review catch:
-    three hand-copied twins of this expression)."""
-    return F.round(
-        F.expr(
-            f"aggregate(zip_with({av}, {bv}, (p, q) -> p * q), 0D,"
-            " (acc, t) -> acc + t)"
-        )
-        / (F.col(an) * F.col(bn)),
-        6,
-    )
-
-
 def semdedup_pair_ctes(m: int, assign_src: str = "crank") -> str:
     """The top-m SemDeDup candidate/score CTE chain (assignm →
     cpairs → pdots → scored), shared by `_semantic_topm_oracle` and
@@ -1191,35 +1074,8 @@ def sim_knn_graph_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     production K lists, grow K ∝ √N so Σ|list|² stays ~N^1.5."""
     ranked = _centroid_ranked(spark, sf_dir).localCheckpoint(eager=False)
     assign = ranked.filter(F.col("crk") == 1).select("vec_id", "label")
-    vecs = _vectors(spark, sf_dir)
     a = assign.select(F.col("vec_id").alias("src"), "label")
     b = assign.select(F.col("vec_id").alias("dst"), F.col("label").alias("lb"))
     cand = a.join(b, (F.col("label") == F.col("lb")) & (F.col("src") != F.col("dst")))
-    q = vecs.select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    c = vecs.select(
-        F.col("vec_id").alias("c_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
-    )
-    scored = (
-        cand.join(q, cand.src == F.col("q_id"))
-        .join(c, cand.dst == F.col("c_id"))
-        .select(
-            "src",
-            "dst",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D,"
-                    " (acc, x) -> acc + x)"
-                )
-                / (F.col("qn") * F.col("cn")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("dst"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= KNNG_K)
-        .orderBy("src", "rank")
-    )
+    scored = shortlist_cosines(cand, _vectors(spark, sf_dir), "src", "dst", False)
+    return top_k(scored, "src", "dst", KNNG_K).orderBy("src", "rank")

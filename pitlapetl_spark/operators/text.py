@@ -408,7 +408,7 @@ def text_kl_domain_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     are broadcast-sized."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "lang", F.explode(F.split(norm_text(F.col("text")), " ")).alias("w")
+        "lang", F.explode(tokens(F.col("text"))).alias("w")
     )
     # the (lang, w) aggregate fans out to the per-lang totals, the
     # corpus distribution and the final KL join — the docstring's
@@ -488,7 +488,7 @@ def featurize_hashed_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry's scalar-columns-only output convention."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(F.split(norm_text(F.col("text")), " ")).alias("w")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("w")
     )
     bucket = hash_bucket("w", FEATHASH_DIM)
     counts = toks.groupBy("doc_id", bucket.alias("b")).agg(

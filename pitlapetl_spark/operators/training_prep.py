@@ -309,10 +309,8 @@ def mix_token_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row total broadcast back — no second corpus scan, no driver
     math, so the same plan prices a 100-TB corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    from ..functions.text import norm_text
-
     per_lang = docs.groupBy("lang").agg(
-        F.sum(F.size(F.split(norm_text(F.col("text")), " ")))
+        F.sum(F.size(tokens(F.col("text"))))
         .cast("long")
         .alias("avail_tokens")
     )
@@ -640,7 +638,6 @@ def curriculum_quality_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NEG_K = 4  # negative candidates drawn per anchor
 NEG_SEED = "negs-1"
-_NEG_DENOM = 16**15  # 15 md5 hex digits -> positive 60-bit int
 
 
 @query(

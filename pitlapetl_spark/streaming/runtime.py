@@ -516,7 +516,7 @@ def _fit_quantizer(vecs: DataFrame, k: int) -> DataFrame:
     verbatim for any cluster the step left empty or degenerate.
     Returns the (label, cv, cnrm) contract frame of
     rank_against_centroids."""
-    from ..operators.similarity import rank_against_centroids
+    from ..operators.similarity import centroid_means, rank_against_centroids
 
     # zero-norm vectors can neither seed nor score (cosine undefined;
     # ANSI division) — the ingest path itself rejects them loudly, so
@@ -541,25 +541,12 @@ def _fit_quantizer(vecs: DataFrame, k: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     # one Lloyd step: nearest seed (crk=1), element-wise mean
-    means = (
+    means = centroid_means(
         rank_against_centroids(vecs, seeds)
         .filter(F.col("crk") == 1)
         .join(vecs, "vec_id")
         .select("label", F.posexplode("v").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(F.avg("x").alias("cx"))
-        .groupBy("label")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(i, cx))),"
-                " s -> s.cx)"
-            ).alias("mv")
-        )
-        .withColumn(
-            "mnrm",
-            F.sqrt(F.expr("aggregate(mv, 0D, (acc, x) -> acc + x * x)")),
-        )
-    )
+    ).select("label", F.col("cv").alias("mv"), F.col("cnrm").alias("mnrm"))
     return (
         seeds.join(means, "label", "left")
         .select(
@@ -582,7 +569,7 @@ def _relabel_store(
     BEFORE the full-row dropDuplicates, so a crash-window copy labeled
     under the previous quantizer collapses with its relabeled twin
     instead of surviving as a phantom row."""
-    from ..operators.similarity import rank_against_centroids
+    from ..operators.similarity import cosine_col
 
     def relabel(base: DataFrame) -> DataFrame:
         base = base.drop("label").dropDuplicates()
@@ -596,14 +583,7 @@ def _relabel_store(
             .select(
                 "q.*",
                 F.col("c.label").alias("label"),
-                F.round(
-                    F.expr(
-                        "aggregate(zip_with(q.v, c.cv, (x, y) -> x * y), 0D,"
-                        " (acc, x) -> acc + x)"
-                    )
-                    / (F.col("q.nrm") * F.col("c.cnrm")),
-                    6,
-                ).alias("ccos"),
+                cosine_col("q.v", "q.nrm", "c.cv", "c.cnrm").alias("ccos"),
             )
         )
         w = Window.partitionBy("vec_id", "src_batch", "v").orderBy(
@@ -1122,6 +1102,7 @@ def _semantic_ingest_batch(
     from ..operators.similarity import (
         SEMDEDUP_TAU,
         cluster_pair_scores,
+        embedding_vectors,
         rank_against_centroids,
     )
 
@@ -1150,13 +1131,7 @@ def _semantic_ingest_batch(
             else cent
         )
         batch = batch_df.localCheckpoint(eager=True)
-        vecs = batch.select(
-            "vec_id",
-            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-        ).withColumn(
-            "nrm",
-            F.sqrt(F.expr("aggregate(v, 0D, (acc, x) -> acc + x * x)")),
-        )
+        vecs = embedding_vectors(batch)
         # top-2 overlapping assignment against the active quantizer —
         # the shared scorer, so stream == batch by construction
         assign = (
@@ -1424,7 +1399,7 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
     deterministic id-ordered batches, while the streaming wrapper
     hands the same function to foreachBatch. Input batches must
     carry ``doc_id`` and ``text``."""
-    from ..functions.text import norm_text
+    from ..functions.text import tokens
     from ..operators.dedup import SPAN_K, span_cut_apply, span_grams
 
     store = BatchStore(store_path)
@@ -1434,12 +1409,9 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         # final cut, grams feeds the store probe AND the occurrence
         # window — each materializes once inside its first consumer's
         # job rather than as a separate eager job of its own
-        toks = (
-            batch_df.select(
-                "doc_id", F.split(norm_text(F.col("text")), " ").alias("t")
-            )
-            .localCheckpoint(eager=False)
-        )
+        toks = batch_df.select(
+            "doc_id", tokens(F.col("text")).alias("t")
+        ).localCheckpoint(eager=False)
         grams = span_grams(toks).localCheckpoint(eager=False)
         # intra-batch canonical occurrence as a HASH AGGREGATE (min
         # (doc_id, pos) struct per gram) instead of the old

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from pitlapetl_spark import registry
 from tests.conftest import SF_SMOKE
 
@@ -119,6 +121,15 @@ def test_embedding_dedup_has_no_nested_loop_join(spark):
     plan = _plan(Q["dedup_embedding_cosine"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+@pytest.mark.parametrize("name", ["sim_topk_lsh", "sim_topk_lsh_multiprobe"])
+def test_sign_lsh_planes_are_plan_time_literals(spark, name):
+    """The sign-LSH hyperplanes are md5-derived once at plan-build time
+    and embedded as literal sign arrays: no md5 may be evaluated per
+    row (8 planes x 64 dims of md5 calls per vector)."""
+    plan = _plan(Q[name](spark, SF_SMOKE))
+    assert "md5(" not in plan, plan
 
 
 def test_capped_jaccard_shrinks_candidate_pairs(spark):

@@ -648,49 +648,6 @@ def test_cell_ring_covers_every_within_radius_pair(lat1, lon1, lat2, lon2):
         )
 
 
-# ------------------------ prefix-filter lemma over random set systems
-# The engine-side test (test_round6_session3) replays the lemma on
-# the real corpus; this drives RANDOM set systems through the same
-# (df asc, element asc) rarity order and prefix length arithmetic —
-# if any within-threshold pair failed to share a prefix element, the
-# registered query's candidate set would silently lose a true pair.
-
-
-@given(
-    st.lists(
-        st.frozensets(st.integers(min_value=0, max_value=40), min_size=1, max_size=25),
-        min_size=2,
-        max_size=12,
-    )
-)
-@settings(max_examples=300, deadline=None)
-def test_prefix_filter_lemma_on_random_set_systems(sets):
-    import math
-    from collections import defaultdict
-
-    t = 0.8
-    df = defaultdict(int)
-    for s_ in sets:
-        for e in s_:
-            df[e] += 1
-    prefixes = []
-    for s_ in sets:
-        n = len(s_)
-        p = n - math.ceil(t * n) + 1
-        prefixes.append(set(sorted(s_, key=lambda e: (df[e], e))[:p]))
-    for i in range(len(sets)):
-        for j in range(i + 1, len(sets)):
-            inter = len(sets[i] & sets[j])
-            if not inter:
-                continue
-            jac = inter / (len(sets[i]) + len(sets[j]) - inter)
-            if jac >= t:
-                assert prefixes[i] & sets[j] or prefixes[j] & sets[i], (
-                    sets[i],
-                    sets[j],
-                )
-
-
 @settings(max_examples=300, deadline=None)
 @given(
     syms=st.lists(st.sampled_from("abcd"), min_size=2, max_size=30),
