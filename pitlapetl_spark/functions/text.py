@@ -87,6 +87,11 @@ def oracle_shingles_cte(k: int = SHINGLE_K, src: str = "documents") -> str:
     """
 
 
+def sql_in(words: tuple[str, ...]) -> str:
+    """``'a', 'b', ...``: the quoted SQL in-list of ``words``."""
+    return ", ".join(f"'{w}'" for w in words)
+
+
 def stopword_count(tok_col: Column, words: tuple[str, ...]) -> Column:
     """Count of tokens in ``words`` — higher-order ``filter``, JVM-side."""
     return F.size(F.filter(tok_col, lambda x: x.isin(*words)))

@@ -42,6 +42,24 @@ def davg(col: str | Column, alias: str) -> Column:
     return (F.sum(c.cast(DEC)).cast("double") / F.count(c)).alias(alias)
 
 
+def ols_fit() -> tuple[Column, Column, Column]:
+    """Closed-form least-squares slope, intercept and r², each rounded
+    to 6 places, over the exact moment sums in columns ``n, sx, sy,
+    sxx, sxy, syy``. The sums are combined exactly, then cast to
+    double for the final divisions; a degenerate fit (constant x or
+    constant y) goes NULL through nullif, never divides by zero."""
+    n = F.col("n")
+    num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    denx = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    deny = (n * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
+    slope = num / F.nullif(denx, F.lit(0.0))
+    return (
+        F.round(slope, 6),
+        F.round((F.col("sy").cast("double") - slope * F.col("sx").cast("double")) / n, 6),
+        F.round(num * num / F.nullif(denx * deny, F.lit(0.0)), 6),
+    )
+
+
 @query(
     "agg_pricing_summary",
     oracle="""

@@ -315,6 +315,41 @@ BASKET_TOP_K = 50
 BASKET_BROADCAST_MAX_ITEMS = 10_000_000
 
 
+def _baskets(
+    spark: SparkSession, sf_dir: str, a: str, b: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The per-order sorted part arrays ``(l_orderkey, ps)`` and the
+    item counts twice, as ``(a, n_a)`` and ``(b, n_b)``, for the two
+    ends of a co-purchase pair.
+
+    ONE exchange builds the basket arrays straight off the scan
+    (collect_set = a select-distinct folded into the same shuffle), so
+    callers enumerate pairs BASKET-LOCALLY from the sorted array
+    instead of self-joining the distinct (order, part) frame, which
+    shuffled it twice more; expansion stays bounded by
+    max-basket-size² per order, and the basket-grain array frame is
+    the lineage cut. The item counts are broadcast only when the part
+    table's footer row count (an upper bound on distinct l_partkey)
+    is under BASKET_BROADCAST_MAX_ITEMS."""
+    li = load_table(spark, sf_dir, "lineitem")
+    baskets = (
+        li.select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+        .localCheckpoint(eager=False)
+    )
+    items = (
+        baskets.select(F.explode("ps").alias("l_partkey"))
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("n_item"))
+    )
+    ia = items.select(F.col("l_partkey").alias(a), F.col("n_item").alias("n_a"))
+    ib = items.select(F.col("l_partkey").alias(b), F.col("n_item").alias("n_b"))
+    if parquet_row_count(f"{sf_dir}/part.parquet") <= BASKET_BROADCAST_MAX_ITEMS:
+        ia, ib = F.broadcast(ia), F.broadcast(ib)
+    return baskets, ia, ib
+
+
 @query(
     "market_basket_pairs",
     oracle=f"""
@@ -367,29 +402,7 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the same bounded-pair-space discipline as the
     capped-Jaccard dedup, applied to the classic co-occurrence
     analytics query."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # ONE exchange builds the per-order basket arrays straight off the
-    # scan (collect_set = the old select-distinct, folded into the
-    # same shuffle); pairs are then enumerated BASKET-LOCALLY from the
-    # sorted array — the r12 single-exchange device shared with the
-    # winnowing fp groups. The old shape shuffled the distinct
-    # (order, part) frame twice more (both self-join sides keyed on
-    # l_orderkey) and sort-merge-joined them to produce exactly these
-    # C(basket_size, 2) pairs (guide §2.4: remove shuffles outright).
-    # Expansion stays bounded by max-basket-size² per order; the
-    # basket-grain array frame is the lineage cut (one row per order,
-    # narrower than the exploded pair rows ever were).
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .localCheckpoint(eager=False)
-    )
-    items = (
-        baskets.select(F.explode("ps").alias("l_partkey"))
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("n_item"))
-    )
+    baskets, ia, ib = _baskets(spark, sf_dir, "part_a", "part_b")
     tot = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     pairs = (
         baskets.select(
@@ -406,10 +419,6 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_pair"))
         .filter(F.col("n_pair") >= BASKET_MIN_PAIR)
     )
-    ia = items.select(F.col("l_partkey").alias("part_a"), F.col("n_item").alias("n_a"))
-    ib = items.select(F.col("l_partkey").alias("part_b"), F.col("n_item").alias("n_b"))
-    if parquet_row_count(f"{sf_dir}/part.parquet") <= BASKET_BROADCAST_MAX_ITEMS:
-        ia, ib = F.broadcast(ia), F.broadcast(ib)
     return (
         pairs.join(ia, "part_a")
         .join(ib, "part_b")
@@ -655,10 +664,9 @@ def analytics_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 KM_CENSOR_DAYS = 90  # no order in the trailing window => censored
 KM_BUCKET_DAYS = 30  # lifetime discretized to ~months
 
-
-@query(
-    "survival_kaplan_meier",
-    oracle=f"""
+# The customer life table both survival estimators share, as DuckDB
+# CTEs ending in `risk(t, d, n_risk)`; life_table is its Spark twin.
+LIFE_TABLE_ORACLE_CTES = f"""
     WITH cust AS (
         SELECT o_custkey,
                min(o_orderdate) AS first_o, max(o_orderdate) AS last_o
@@ -684,7 +692,46 @@ KM_BUCKET_DAYS = 30  # lifetime discretized to ~months
                    AS BIGINT) AS n_risk
         FROM grid
     ),
-    km AS (
+"""
+
+
+def life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(t, d, n_risk) per lifetime bucket: t = first-to-last order span
+    in KM_BUCKET_DAYS buckets, d = customers whose last order is more
+    than KM_CENSOR_DAYS before the dataset's end (observed events),
+    n_risk = customers with lifetime >= t (a reversed running count).
+
+    100-TB shape: the only fact-scale step is the customer-grain
+    min/max aggregate (one map-combinable shuffle); the table itself
+    lives at duration grain (~tens of rows), where the unpartitioned
+    window is free. The dataset-end scalar is a one-row broadcast."""
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
+    cust = o.groupBy("o_custkey").agg(
+        F.min("o_orderdate").alias("first_o"), F.max("o_orderdate").alias("last_o")
+    )
+    mx = o.agg(F.max("o_orderdate").alias("mxd"))
+    life = cust.crossJoin(F.broadcast(mx)).select(
+        F.floor(
+            F.datediff(F.col("last_o"), F.col("first_o")) / float(KM_BUCKET_DAYS)
+        ).alias("t"),
+        F.when(
+            F.datediff(F.col("mxd"), F.col("last_o")) > KM_CENSOR_DAYS, 1
+        )
+        .otherwise(0)
+        .alias("observed"),
+    )
+    grid = life.groupBy("t").agg(
+        F.sum("observed").alias("d"), F.count(F.lit(1)).alias("n_at_t")
+    )
+    w_desc = Window.orderBy(F.col("t").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return grid.select("t", "d", F.sum("n_at_t").over(w_desc).alias("n_risk"))
+
+
+@query(
+    "survival_kaplan_meier",
+    oracle=f"""{LIFE_TABLE_ORACLE_CTES}    km AS (
         SELECT t, d, n_risk,
                sum(CASE WHEN d < n_risk THEN
                        CAST(round(ln(1.0 - d * 1.0 / n_risk), 12)
@@ -721,33 +768,9 @@ def survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk set dies (factor 0) sets survival to exactly 0 from there on
     via an `absorbed` running flag instead of ln(0).
 
-    100-TB shape: the only fact-scale step is the customer-grain
-    min/max aggregate (one map-combinable shuffle); the KM curve
-    itself lives at duration grain (~tens of rows), where the
-    unpartitioned windows are free. The dataset-end scalar is a
-    one-row broadcast."""
-    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
-    cust = o.groupBy("o_custkey").agg(
-        F.min("o_orderdate").alias("first_o"), F.max("o_orderdate").alias("last_o")
-    )
-    mx = o.agg(F.max("o_orderdate").alias("mxd"))
-    life = cust.crossJoin(F.broadcast(mx)).select(
-        F.floor(
-            F.datediff(F.col("last_o"), F.col("first_o")) / float(KM_BUCKET_DAYS)
-        ).alias("t"),
-        F.when(
-            F.datediff(F.col("mxd"), F.col("last_o")) > KM_CENSOR_DAYS, 1
-        )
-        .otherwise(0)
-        .alias("observed"),
-    )
-    grid = life.groupBy("t").agg(
-        F.sum("observed").alias("d"), F.count(F.lit(1)).alias("n_at_t")
-    )
-    w_desc = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    risk = grid.select("t", "d", F.sum("n_at_t").over(w_desc).alias("n_risk"))
+    100-TB shape: that of life_table; the KM windows run at its
+    duration grain."""
+    risk = life_table(spark, sf_dir)
     w_asc = Window.orderBy(F.col("t").asc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1263,23 +1286,7 @@ def rec_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs at pair grain (already bounded); item counts join
     with the same footer-gated broadcast. Cosine from exact integer
     counts — no float drift."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # ONE exchange builds the per-order basket arrays (collect_set =
-    # the old select-distinct folded into the same shuffle); DIRECTED
-    # pairs are enumerated basket-locally — the same single-exchange
-    # device as market_basket_pairs above (guide §2.4), expansion
-    # still bounded by max-basket-size² per order.
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .localCheckpoint(eager=False)
-    )
-    items = (
-        baskets.select(F.explode("ps").alias("l_partkey"))
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("n_item"))
-    )
+    baskets, ia, ib = _baskets(spark, sf_dir, "item", "neighbor")
     pairs = (
         baskets.select(
             F.explode(
@@ -1295,10 +1302,6 @@ def rec_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_pair"))
         .filter(F.col("n_pair") >= CF_MIN_PAIR)
     )
-    ia = items.select(F.col("l_partkey").alias("item"), F.col("n_item").alias("n_a"))
-    ib = items.select(F.col("l_partkey").alias("neighbor"), F.col("n_item").alias("n_b"))
-    if parquet_row_count(f"{sf_dir}/part.parquet") <= BASKET_BROADCAST_MAX_ITEMS:
-        ia, ib = F.broadcast(ia), F.broadcast(ib)
     scored = (
         pairs.join(ia, "item")
         .join(ib, "neighbor")

@@ -14,7 +14,7 @@ flip a hash.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -632,9 +632,9 @@ def sample_balanced_class_downsample(spark: SparkSession, sf_dir: str) -> DataFr
 SES_ALPHA = 0.3
 
 
-@query(
-    "ts_exp_smoothing",
-    oracle=f"""
+# daily_value_series as DuckDB CTEs: `idx(i, dy, v)` numbers the days
+# in order, for the recursive folds that follow.
+DAILY_SERIES_ORACLE_CTES = """
     WITH RECURSIVE daily AS (
         SELECT date_trunc('day', ts) AS dy,
                CAST(round(CAST(sum(CAST(round(value, 8) AS DECIMAL(18,8)))
@@ -647,7 +647,29 @@ SES_ALPHA = 0.3
                dy, CAST(v AS DOUBLE) AS v
         FROM daily
     ),
-    rec AS (
+"""
+
+
+def daily_value_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row holding ``s``: the day-ordered array of (dy, v) structs,
+    v = the day's exact-decimal mean event value as a double — the
+    series the smoothing folds (SES here, Holt in breadth8) run over."""
+    from .stats import decimal_mean8
+
+    events = load_table(spark, sf_dir, "events")
+    daily = events.groupBy(F.date_trunc("day", F.col("ts")).alias("dy")).agg(
+        decimal_mean8("value").alias("vd")
+    )
+    return daily.agg(
+        F.array_sort(
+            F.collect_list(F.struct("dy", F.col("vd").cast("double").alias("v")))
+        ).alias("s")
+    )
+
+
+@query(
+    "ts_exp_smoothing",
+    oracle=f"""{DAILY_SERIES_ORACLE_CTES}    rec AS (
         SELECT i, dy, v, v AS level FROM idx WHERE i = 1
         UNION ALL
         SELECT idx.i, idx.dy, idx.v,
@@ -668,17 +690,7 @@ def ts_exp_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate(): acc holds (level, array-of-levels-so-far) so every
     intermediate level is emitted, then posexplode rejoins levels to
     their days."""
-    from .stats import decimal_mean8
-
-    events = load_table(spark, sf_dir, "events")
-    daily = events.groupBy(F.date_trunc("day", F.col("ts")).alias("dy")).agg(
-        decimal_mean8("value").alias("vd")
-    )
-    series = daily.agg(
-        F.array_sort(
-            F.collect_list(F.struct("dy", F.col("vd").cast("double").alias("v")))
-        ).alias("s")
-    )
+    series = daily_value_series(spark, sf_dir)
     # fold: acc = array of levels so far; next level from acc's last
     folded = series.select(
         "s",
@@ -1174,6 +1186,18 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 WOE_BINS = 10
 
 
+def urgent_value_rows(spark: SparkSession, sf_dir: str, *carry: Column) -> DataFrame:
+    """``(v, y, *carry)`` per order: the order value as a double and
+    the urgent-priority label (1 for 1-URGENT or 2-HIGH, else 0)."""
+    return load_table(spark, sf_dir, "orders").select(
+        F.col("o_totalprice").cast("double").alias("v"),
+        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
+        .otherwise(0)
+        .alias("y"),
+        *carry,
+    )
+
+
 @query(
     "analytics_woe_iv",
     oracle=f"""
@@ -1230,15 +1254,7 @@ def analytics_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; approx_percentile past it), one binning pass with the
     broadcast cut row, a {WOE_BINS}-row aggregate, and window folds on
     those {WOE_BINS} rows."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_totalprice").cast("double").alias("v"),
-        F.when(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-        )
-        .otherwise(0)
-        .alias("y"),
-    )
+    base = urgent_value_rows(spark, sf_dir)
     base = base.localCheckpoint(eager=False)  # cuts + binning share it
     cuts = F.broadcast(
         base.agg(
@@ -1371,6 +1387,77 @@ def analytics_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # candidates is deterministic without any rounding fence.
 
 
+STUMP_CUTS = 9  # decile cut candidates, k = 1..9
+
+# The weighted Gini of a split from its four exact counts (lp, ln:
+# left positives/negatives; rp, rn: right), as a DuckDB column; also
+# scored by breadth8's ml_cross_validation_stump.
+SPLIT_GINI_SQL = """round(
+                   (1.0 - (lp * 1.0 / (lp + ln)) * (lp * 1.0 / (lp + ln))
+                        - (ln * 1.0 / (lp + ln)) * (ln * 1.0 / (lp + ln)))
+                   * (lp + ln) / (lp + ln + rp + rn)
+                 + (1.0 - (rp * 1.0 / (rp + rn)) * (rp * 1.0 / (rp + rn))
+                        - (rn * 1.0 / (rp + rn)) * (rn * 1.0 / (rp + rn)))
+                   * (rp + rn) / (lp + ln + rp + rn), 9) AS gini"""
+
+
+def split_gini() -> Column:
+    """Weighted Gini of the split in columns lp, ln, rp, rn, rounded
+    to 9 places (SPLIT_GINI_SQL's Spark twin)."""
+    lt = F.col("lp") + F.col("ln")
+    rt = F.col("rp") + F.col("rn")
+    n = lt + rt
+    gl = (
+        F.lit(1.0)
+        - (F.col("lp") * 1.0 / lt) * (F.col("lp") * 1.0 / lt)
+        - (F.col("ln") * 1.0 / lt) * (F.col("ln") * 1.0 / lt)
+    )
+    gr = (
+        F.lit(1.0)
+        - (F.col("rp") * 1.0 / rt) * (F.col("rp") * 1.0 / rt)
+        - (F.col("rn") * 1.0 / rt) * (F.col("rn") * 1.0 / rt)
+    )
+    return F.round(gl * lt / n + gr * rt / n, 9)
+
+
+def split_counts(base: DataFrame, *keys: str) -> DataFrame:
+    """``(*keys, k, cut, lp, ln, rp, rn)``: for each of the STUMP_CUTS
+    decile cuts of ``v`` over all of ``base``, the positive and
+    negative ``y`` counts left (v <= cut) and right of it, per ``keys``
+    group. The cuts are one broadcast row; one pass emits (k, side, y)
+    for every cut via a STUMP_CUTS-element explode, so the fact scan
+    stays single where the oracles cross-join the cut list."""
+    cuts = F.broadcast(
+        base.agg(
+            *[
+                F.round(F.expr(f"percentile(v, {k / 10.0})"), 6).alias(f"c{k}")
+                for k in range(1, STUMP_CUTS + 1)
+            ]
+        )
+    )
+    exploded = base.crossJoin(cuts).select(  # one-row scalar broadcast
+        *keys,
+        "v",
+        "y",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(k).alias("k"), F.col(f"c{k}").alias("cut"))
+                    for k in range(1, STUMP_CUTS + 1)
+                ]
+            )
+        ).alias("c"),
+    )
+    return exploded.select(*keys, "v", "y", "c.k", "c.cut").groupBy(
+        *keys, "k", "cut"
+    ).agg(
+        F.sum(F.when(F.col("v") <= F.col("cut"), F.col("y")).otherwise(0)).alias("lp"),
+        F.sum(F.when(F.col("v") <= F.col("cut"), 1 - F.col("y")).otherwise(0)).alias("ln"),
+        F.sum(F.when(F.col("v") > F.col("cut"), F.col("y")).otherwise(0)).alias("rp"),
+        F.sum(F.when(F.col("v") > F.col("cut"), 1 - F.col("y")).otherwise(0)).alias("rn"),
+    )
+
+
 @query(
     "ml_decision_stump_gini",
     oracle=f"""
@@ -1381,10 +1468,10 @@ def analytics_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
     ),
     cuts AS (
-        SELECT unnest([{", ".join(str(k) for k in range(1, 10))}]) AS k,
+        SELECT unnest([{", ".join(str(k) for k in range(1, STUMP_CUTS + 1))}]) AS k,
                unnest([{", ".join(
                    f"round(quantile_cont(v, {k / 10.0}), 6)"
-                   for k in range(1, 10)
+                   for k in range(1, STUMP_CUTS + 1)
                )}]) AS cut
         FROM base
     ),
@@ -1399,13 +1486,7 @@ def analytics_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
         SELECT k, cut, lp, ln, rp, rn,
-               round(
-                   (1.0 - (lp * 1.0 / (lp + ln)) * (lp * 1.0 / (lp + ln))
-                        - (ln * 1.0 / (lp + ln)) * (ln * 1.0 / (lp + ln)))
-                   * (lp + ln) / (lp + ln + rp + rn)
-                 + (1.0 - (rp * 1.0 / (rp + rn)) * (rp * 1.0 / (rp + rn))
-                        - (rn * 1.0 / (rp + rn)) * (rn * 1.0 / (rp + rn)))
-                   * (rp + rn) / (lp + ln + rp + rn), 9) AS gini
+               {SPLIT_GINI_SQL}
         FROM split
     )
     SELECT CAST(k AS INT) AS cut_idx, cut AS cut_value,
@@ -1424,62 +1505,8 @@ def ml_decision_stump_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged (block comment above). 100-TB shape: candidate evaluation
     is ONE conditional-sum aggregate per cut over a single fact scan
     (9 cuts x 4 sums — the histogram trick); nothing iterates."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_totalprice").cast("double").alias("v"),
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-        .otherwise(0)
-        .alias("y"),
-    )
-    base = base.localCheckpoint(eager=False)  # cuts + split share it
-    cuts = F.broadcast(
-        base.agg(
-            *[
-                F.round(F.expr(f"percentile(v, {k / 10.0})"), 6).alias(f"c{k}")
-                for k in range(1, 10)
-            ]
-        )
-    )
-    # one pass: per row, emit (k, side, y) for all 9 cuts via a
-    # 9-element explode — keeps the fact scan single even though the
-    # oracle's cross-join form reads more naturally
-    exploded = (
-        base.crossJoin(cuts)  # one-row scalar broadcast
-        .select(
-            "v",
-            "y",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("k"), F.col(f"c{k}").alias("cut")
-                        )
-                        for k in range(1, 10)
-                    ]
-                )
-            ).alias("c"),
-        )
-        .select("v", "y", F.col("c.k").alias("k"), F.col("c.cut").alias("cut"))
-    )
-    split = exploded.groupBy("k", "cut").agg(
-        F.sum(F.when(F.col("v") <= F.col("cut"), F.col("y")).otherwise(0)).alias("lp"),
-        F.sum(F.when(F.col("v") <= F.col("cut"), 1 - F.col("y")).otherwise(0)).alias("ln"),
-        F.sum(F.when(F.col("v") > F.col("cut"), F.col("y")).otherwise(0)).alias("rp"),
-        F.sum(F.when(F.col("v") > F.col("cut"), 1 - F.col("y")).otherwise(0)).alias("rn"),
-    )
-    lt = F.col("lp") + F.col("ln")
-    rt = F.col("rp") + F.col("rn")
-    n = lt + rt
-    gl = (
-        F.lit(1.0)
-        - (F.col("lp") * 1.0 / lt) * (F.col("lp") * 1.0 / lt)
-        - (F.col("ln") * 1.0 / lt) * (F.col("ln") * 1.0 / lt)
-    )
-    gr = (
-        F.lit(1.0)
-        - (F.col("rp") * 1.0 / rt) * (F.col("rp") * 1.0 / rt)
-        - (F.col("rn") * 1.0 / rt) * (F.col("rn") * 1.0 / rt)
-    )
+    base = urgent_value_rows(spark, sf_dir)
+    split = split_counts(base.localCheckpoint(eager=False))  # cuts + counts share it
     scored = split.select(
         "k",
         "cut",
@@ -1487,7 +1514,7 @@ def ml_decision_stump_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ln",
         "rp",
         "rn",
-        F.round(gl * lt / n + gr * rt / n, 9).alias("gini"),
+        split_gini().alias("gini"),
     )
     w = Window.orderBy("gini", "k")
     return scored.select(
@@ -1654,13 +1681,7 @@ def dq_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Urgent-vs-other order-value QQ decile table (block comment
     above)."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_totalprice").cast("double").alias("v"),
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-        .otherwise(0)
-        .alias("y"),
-    )
+    base = urgent_value_rows(spark, sf_dir)
     agg = base.agg(
         *[
             F.round(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .community import BASKET_PAIRS_ORACLE_CTES
 
 
 # ------------------------------------------------ A/B SRM guardrail
@@ -620,14 +621,8 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_degree_assortativity",
-    oracle="""
-    WITH bk AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM bk a JOIN bk b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {BASKET_PAIRS_ORACLE_CTES},
     deg AS (
         SELECT node, CAST(count(*) AS BIGINT) AS d
         FROM (SELECT pa AS node FROM pairs

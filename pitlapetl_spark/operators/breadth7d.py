@@ -14,12 +14,12 @@ accumulation of irrational terms.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
-from .analytics import KM_BUCKET_DAYS, KM_CENSOR_DAYS
+from .analytics import LIFE_TABLE_ORACLE_CTES, life_table
 
 
 # -------------------------------------- Nelson-Aalen cumulative hazard
@@ -28,43 +28,15 @@ from .analytics import KM_BUCKET_DAYS, KM_CENSOR_DAYS
 # multiplies survival factors, NA adds hazard increments — its
 # variance behaves better at small risk sets and exp(-H) is the
 # Fleming-Harrington survival estimate, carried alongside so the two
-# estimators can be compared row by row. Identical life-table
-# machinery and censoring rule as KM (same bucket/censor constants,
-# same reversed-cumsum risk set); the cumulative sum uses the same
-# round-to-12-then-DECIMAL device so accumulation order cannot move a
-# double. Customer-grain aggregate + a bucket-grain window: the fact
-# scan is the only volume term.
+# estimators can be compared row by row. The life table is KM's own
+# (analytics.life_table and LIFE_TABLE_ORACLE_CTES); the cumulative
+# sum uses the same round-to-12-then-DECIMAL device so accumulation
+# order cannot move a double.
 
 
 @query(
     "survival_nelson_aalen",
-    oracle=f"""
-    WITH cust AS (
-        SELECT o_custkey,
-               min(o_orderdate) AS first_o, max(o_orderdate) AS last_o
-        FROM orders GROUP BY 1
-    ),
-    mx AS (SELECT max(o_orderdate) AS mxd FROM orders),
-    life AS (
-        SELECT CAST(floor(date_diff('day', first_o, last_o)
-                          / {KM_BUCKET_DAYS}.0) AS BIGINT) AS t,
-               CASE WHEN date_diff('day', last_o, mxd) > {KM_CENSOR_DAYS}
-                    THEN 1 ELSE 0 END AS observed
-        FROM cust CROSS JOIN mx
-    ),
-    grid AS (
-        SELECT t, CAST(sum(observed) AS BIGINT) AS d,
-               CAST(count(*) AS BIGINT) AS n_at_t
-        FROM life GROUP BY t
-    ),
-    risk AS (
-        SELECT t, d,
-               CAST(sum(n_at_t) OVER (ORDER BY t DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS n_risk
-        FROM grid
-    ),
-    na AS (
+    oracle=f"""{LIFE_TABLE_ORACLE_CTES}    na AS (
         SELECT t, d, n_risk,
                sum(CAST(round(d * 1.0 / n_risk, 12) AS DECIMAL(28,12)))
                    OVER (ORDER BY t ASC
@@ -81,33 +53,7 @@ from .analytics import KM_BUCKET_DAYS, KM_CENSOR_DAYS
 def survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative hazard of customer lifetime (block
     comment above)."""
-    o = load_table(spark, sf_dir, "orders")
-    cust = o.groupBy("o_custkey").agg(
-        F.min("o_orderdate").alias("first_o"),
-        F.max("o_orderdate").alias("last_o"),
-    )
-    mx = o.agg(F.max("o_orderdate").alias("mxd"))
-    life = cust.crossJoin(F.broadcast(mx)).select(  # one-row scalar broadcast
-        F.floor(
-            F.datediff("last_o", "first_o") / float(KM_BUCKET_DAYS)
-        ).alias("t"),
-        F.when(
-            F.datediff("mxd", "last_o") > KM_CENSOR_DAYS, 1
-        )
-        .otherwise(0)
-        .alias("observed"),
-    )
-    grid = life.groupBy("t").agg(
-        F.sum("observed").alias("d"), F.count(F.lit(1)).alias("n_at_t")
-    )
-    w_desc = (
-        Window.partitionBy()
-        .orderBy(F.desc("t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    risk = grid.select(
-        "t", "d", F.sum("n_at_t").over(w_desc).alias("n_risk")
-    )
+    risk = life_table(spark, sf_dir)
     w_asc = (
         Window.partitionBy()
         .orderBy(F.asc("t"))
@@ -724,6 +670,24 @@ def analytics_net_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFra
 _WILSON_Z = 1.959964
 
 
+def wilson_bounds() -> list[Column]:
+    """The error_rate, wilson_lo and wilson_hi columns of ``k`` errors
+    in ``n`` events: the share k/n and its Wilson 95% score interval,
+    each rounded to 6 places. Also the interval of the streaming twin
+    (batch_windows.wilson_error_rate_agg)."""
+    z = _WILSON_Z
+    p = F.col("k").cast("double") / F.col("n")
+    n = F.col("n")
+    center = p + z * z / (2 * n)
+    half = z * F.sqrt(p * (1 - p) / n + z * z / (4.0 * n * n))
+    denom = 1 + z * z / n
+    return [
+        F.round(p, 6).alias("error_rate"),
+        F.round((center - half) / denom, 6).alias("wilson_lo"),
+        F.round((center + half) / denom, 6).alias("wilson_hi"),
+    ]
+
+
 @query(
     "dq_error_rate_wilson",
     oracle=f"""
@@ -759,17 +723,4 @@ def dq_error_rate_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("event_type") == "error", 1)).alias("k"),
     )
-    z = _WILSON_Z
-    p = F.col("k").cast("double") / F.col("n")
-    n = F.col("n")
-    center = p + z * z / (2 * n)
-    half = z * F.sqrt(p * (1 - p) / n + z * z / (4.0 * n * n))
-    denom = 1 + z * z / n
-    return d.select(
-        "day",
-        "n",
-        "k",
-        F.round(p, 6).alias("error_rate"),
-        F.round((center - half) / denom, 6).alias("wilson_lo"),
-        F.round((center + half) / denom, 6).alias("wilson_hi"),
-    ).orderBy("day")
+    return d.select("day", "n", "k", *wilson_bounds()).orderBy("day")

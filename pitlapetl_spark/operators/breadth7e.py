@@ -13,8 +13,6 @@ key arithmetic — no cluster required to verify the claim.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -136,11 +134,11 @@ def _kappa_oracle() -> str:
     correction: pe sums row_k * col_k over the UNION of label and
     prediction classes, so a class that never lands on the diagonal
     still contributes its marginal product."""
-    from .text import _LANGS, _ORACLE_TOKS, _sql_in
-    from ..functions.text import STOPWORDS
+    from .text import _LANGS, _ORACLE_TOKS
+    from ..functions.text import STOPWORDS, sql_in
 
     scores = ", ".join(
-        f"len(list_filter(toks, x -> x IN ({_sql_in(STOPWORDS[lang])})))"
+        f"len(list_filter(toks, x -> x IN ({sql_in(STOPWORDS[lang])})))"
         f" AS s_{lang}"
         for lang in _LANGS
     )

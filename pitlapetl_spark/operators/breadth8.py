@@ -12,9 +12,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import hash_bucket, oracle_hash_bucket
+from ..functions.text import hash_bucket, oracle_hash_bucket, sql_in
 from ..registry import query
 from ..sources import load_table
+from .breadth7 import (
+    DAILY_SERIES_ORACLE_CTES,
+    SPLIT_GINI_SQL,
+    STUMP_CUTS,
+    daily_value_series,
+    split_counts,
+    split_gini,
+    urgent_value_rows,
+)
 
 # ------------------------- heavy hitters, gated two-pass (count-min)
 #
@@ -780,7 +789,7 @@ PHRASE = ("hash", "join")  # 25/28/289 hits at sf0.001/0.01/0.1
 
 
 def _phrase_oracle() -> str:
-    terms = ", ".join(f"'{t}'" for t in PHRASE)
+    terms = sql_in(PHRASE)
     joins = "\n        ".join(
         f"JOIN p t{k} ON t{k}.doc_id = t0.doc_id"
         f" AND t{k}.pos = t0.pos + {k} AND t{k}.w = '{PHRASE[k]}'"
@@ -932,15 +941,14 @@ def sessionize_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate; everything after is on <= 27 rows.
 
 CV_FOLDS = 3
-CV_CUTS = 9
 
 
 def _cv_stump_oracle() -> str:
     fold = oracle_hash_bucket("'fold:' || CAST(o_orderkey AS VARCHAR)", CV_FOLDS)
     cut_list = ", ".join(
-        f"round(quantile_cont(v, {k / 10.0}), 6)" for k in range(1, CV_CUTS + 1)
+        f"round(quantile_cont(v, {k / 10.0}), 6)" for k in range(1, STUMP_CUTS + 1)
     )
-    k_list = ", ".join(str(k) for k in range(1, CV_CUTS + 1))
+    k_list = ", ".join(str(k) for k in range(1, STUMP_CUTS + 1))
     return f"""
     WITH base AS (
         SELECT CAST(o_totalprice AS DOUBLE) AS v,
@@ -975,13 +983,7 @@ def _cv_stump_oracle() -> str:
     ),
     scored AS (
         SELECT fold, k, cut, lp, ln, rp, rn,
-               round(
-                   (1.0 - (lp * 1.0 / (lp + ln)) * (lp * 1.0 / (lp + ln))
-                        - (ln * 1.0 / (lp + ln)) * (ln * 1.0 / (lp + ln)))
-                   * (lp + ln) / (lp + ln + rp + rn)
-                 + (1.0 - (rp * 1.0 / (rp + rn)) * (rp * 1.0 / (rp + rn))
-                        - (rn * 1.0 / (rp + rn)) * (rn * 1.0 / (rp + rn)))
-                   * (rp + rn) / (lp + ln + rp + rn), 9) AS gini,
+               {SPLIT_GINI_SQL},
                CASE WHEN lp >= ln THEN 1 ELSE 0 END AS left_label,
                CASE WHEN rp >= rn THEN 1 ELSE 0 END AS right_label
         FROM train
@@ -1016,64 +1018,14 @@ def ml_cross_validation_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-out accuracy."""
     from pyspark.sql import Window
 
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_totalprice").cast("double").alias("v"),
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-        .otherwise(0)
-        .alias("y"),
-        hash_bucket(
-            F.concat(F.lit("fold:"), F.col("o_orderkey").cast("string")),
-            CV_FOLDS,
-        ).alias("fold"),
-    ).localCheckpoint(eager=False)
-    cuts_row = F.broadcast(
-        base.agg(
-            *[
-                F.round(F.expr(f"percentile(v, {k / 10.0})"), 6).alias(f"c{k}")
-                for k in range(1, CV_CUTS + 1)
-            ]
-        )
+    fold = hash_bucket(
+        F.concat(F.lit("fold:"), F.col("o_orderkey").cast("string")), CV_FOLDS
     )
-    cell = (
-        base.crossJoin(cuts_row)  # one-row scalar broadcast
-        .select(
-            "fold",
-            "y",
-            "v",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("k"), F.col(f"c{k}").alias("cut")
-                        )
-                        for k in range(1, CV_CUTS + 1)
-                    ]
-                )
-            ).alias("c"),
-        )
-        .select("fold", "y", "v", "c.k", "c.cut")
-        .groupBy("fold", "k", "cut")
-        .agg(
-            F.sum(F.when(F.col("v") <= F.col("cut"), F.col("y")).otherwise(0))
-            .cast("long")
-            .alias("lp"),
-            F.sum(
-                F.when(F.col("v") <= F.col("cut"), 1 - F.col("y")).otherwise(0)
-            )
-            .cast("long")
-            .alias("ln"),
-            F.sum(F.when(F.col("v") > F.col("cut"), F.col("y")).otherwise(0))
-            .cast("long")
-            .alias("rp"),
-            F.sum(
-                F.when(F.col("v") > F.col("cut"), 1 - F.col("y")).otherwise(0)
-            )
-            .cast("long")
-            .alias("rn"),
-        )
-        .localCheckpoint(eager=False)  # tiny; feeds tot + train + eval
+    base = urgent_value_rows(spark, sf_dir, fold.alias("fold")).localCheckpoint(
+        eager=False
     )
+    # tiny; feeds tot + train + eval
+    cell = split_counts(base, "fold").localCheckpoint(eager=False)
     tot = cell.groupBy("k").agg(
         F.sum("lp").alias("tlp"),
         F.sum("ln").alias("tln"),
@@ -1089,19 +1041,11 @@ def ml_cross_validation_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("trp") - F.col("rp")).alias("rp"),
         (F.col("trn") - F.col("rn")).alias("rn"),
     )
-    lf, lnn, rp, rn = (F.col(c) * 1.0 for c in ("lp", "ln", "rp", "rn"))
-    nl, nr = lf + lnn, rp + rn
-    n = nl + nr
-    gini = F.round(
-        (1.0 - (lf / nl) * (lf / nl) - (lnn / nl) * (lnn / nl)) * nl / n
-        + (1.0 - (rp / nr) * (rp / nr) - (rn / nr) * (rn / nr)) * nr / n,
-        9,
-    )
     scored = train.select(
         "fold",
         "k",
         "cut",
-        gini.alias("gini"),
+        split_gini().alias("gini"),
         F.when(F.col("lp") >= F.col("ln"), 1).otherwise(0).alias("left_label"),
         F.when(F.col("rp") >= F.col("rn"), 1)
         .otherwise(0)
@@ -1334,8 +1278,10 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inclusion-exclusion. This query materializes register tables for
 # two overlapping order-key sets (lines shipped before 1998 / since
 # 1997), merges them by max, and reports sketch-vs-exact for A, B,
-# A∪B, and A∩B. Every device is agg_hll_distinct's (same register
-# index, same rho, same integer harmonic sum); the union is ONE tiny
+# A∪B, and A∩B. The register rows are agg_hll_distinct's
+# (hll_rho_frame: same register index, same rho) and so is the integer
+# harmonic sum, but the estimate is the raw one: no linear-counting
+# small-range branch, on either engine. The union is ONE tiny
 # full-outer max over <= 2m register rows. The intersection's
 # inclusion-exclusion error (it can even go negative on small
 # overlaps) is the documented caveat the exact columns let you see.
@@ -1402,21 +1348,6 @@ def _hll_setops_oracle() -> str:
     """
 
 
-def _hll_regs_spark(df: DataFrame) -> DataFrame:
-    h = df.select(F.md5(F.col("l_orderkey").cast("string")).alias("hx"))
-    binstr = F.expr("conv(substring(hx, 3, 15), 16, 2)")
-    return (
-        h.select(
-            F.conv(F.substring("hx", 1, 2), 16, 10).cast("int").alias("bucket"),
-            F.when(binstr == "0", F.lit(61))
-            .otherwise(F.lit(61) - F.length(binstr))
-            .alias("rho"),
-        )
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("m_j"))
-    )
-
-
 @query("agg_hll_set_operations", oracle=_hll_setops_oracle())
 def agg_hll_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-vs-exact distinct counts for two overlapping shipping
@@ -1428,8 +1359,13 @@ def agg_hll_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pa = F.col("l_shipdate") < HLL_A_BEFORE
     pb = F.col("l_shipdate") >= HLL_B_SINCE
-    ra = _hll_regs_spark(li.filter(pa)).localCheckpoint(eager=True)
-    rb = _hll_regs_spark(li.filter(pb)).localCheckpoint(eager=True)
+    ra, rb = (
+        hll_rho_frame(li.filter(p), "l_orderkey")
+        .groupBy("bucket")
+        .agg(F.max("rho").alias("m_j"))
+        .localCheckpoint(eager=True)
+        for p in (pa, pb)
+    )
     ru = (
         ra.select(F.col("bucket").alias("ba"), F.col("m_j").alias("ma"))
         .join(
@@ -1520,20 +1456,7 @@ HOLT_BETA = 0.1
 
 @query(
     "ts_holt_linear_trend",
-    oracle=f"""
-    WITH RECURSIVE daily AS (
-        SELECT date_trunc('day', ts) AS dy,
-               CAST(round(CAST(sum(CAST(round(value, 8) AS DECIMAL(18,8)))
-                               AS DOUBLE) / count(*), 8)
-                    AS DECIMAL(18,8)) AS v
-        FROM events GROUP BY 1
-    ),
-    idx AS (
-        SELECT CAST(row_number() OVER (ORDER BY dy) AS BIGINT) AS i,
-               dy, CAST(v AS DOUBLE) AS v
-        FROM daily
-    ),
-    rec AS (
+    oracle=f"""{DAILY_SERIES_ORACLE_CTES}    rec AS (
         SELECT i, dy, v, v AS l, CAST(0.0 AS DOUBLE) AS t,
                CAST(NULL AS DOUBLE) AS fc
         FROM idx WHERE i = 1
@@ -1560,19 +1483,7 @@ def ts_holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double exponential smoothing of the daily mean event value
     (block comment above): per-day level, trend, and the one-step
     forecast the model made for that day."""
-    from .stats import decimal_mean8
-
-    events = load_table(spark, sf_dir, "events")
-    daily = events.groupBy(F.date_trunc("day", F.col("ts")).alias("dy")).agg(
-        decimal_mean8("value").alias("vd")
-    )
-    series = daily.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("dy", F.col("vd").cast("double").alias("v"))
-            )
-        ).alias("s")
-    )
+    series = daily_value_series(spark, sf_dir)
     a, b = HOLT_ALPHA, HOLT_BETA
     folded = series.select(
         "s",

@@ -218,18 +218,15 @@ def agg_theta_sketch_distinct_sum(
 # that tiny frame across its <= 7 target days + one max — the same
 # exact-vs-sketch escape-hatch pairing as the rolling-median twins.
 #
-# Determinism: agg_hll_distinct's device verbatim (md5-derived
-# bucket/rho, integer harmonic sums to one double division, linear-
-# counting small-range correction — exercised at sf0.01 where
-# windows hold ~150 users < 2.5m, while sf0.1 windows at ~1.4k users
-# exercise the raw-estimate branch; the ln is audited for rounding
-# headroom at these magnitudes).
+# Determinism: breadth8's hll_rho_frame and hll_estimate_frame
+# (md5-derived bucket/rho, integer harmonic sums to one double
+# division, linear-counting small-range correction — exercised at
+# sf0.01 where windows hold ~150 users < 2.5m, while sf0.1 windows at
+# ~1.4k users exercise the raw-estimate branch; the ln is audited for
+# rounding headroom at these magnitudes).
 
 HLL_WINDOW_DAYS = 7
 
-# single source for the register device: breadth8's module (the
-# copy-pasted-twin review catch — a fix to the shared estimator must
-# propagate to BOTH HLL queries)
 from .breadth8 import (  # noqa: E402
     hll_estimate_cte_sql,
     hll_estimate_frame,

@@ -173,16 +173,18 @@ def basket_pair_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "graph_triangle_count",
-    oracle=f"""
-    WITH bk AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+# The distinct part-part co-purchase pairs (pa < pb) as DuckDB CTEs,
+# the oracle side of basket_pair_edges; with the degree-oriented
+# triangles on top for the triangle queries. PAIRS_ORACLE_CTE
+# (pagerank.py) is the customer-part twin.
+BASKET_PAIRS_ORACLE_CTES = """bk AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     pairs AS (
         SELECT a.l_partkey AS pa, b.l_partkey AS pb
         FROM bk a JOIN bk b
           ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
         GROUP BY 1, 2
-    ),
+    )"""
+TRIANGLE_ORACLE_CTES = BASKET_PAIRS_ORACLE_CTES + """,
     deg AS (
         SELECT node, CAST(count(*) AS BIGINT) AS d
         FROM (SELECT pa AS node FROM pairs UNION ALL SELECT pb FROM pairs)
@@ -200,7 +202,13 @@ def basket_pair_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ori e1
         JOIN ori e2 ON e1.v = e2.u
         JOIN ori e3 ON e3.u = e1.u AND e3.v = e2.v
-    ),
+    )"""
+
+
+@query(
+    "graph_triangle_count",
+    oracle=f"""
+    WITH {TRIANGLE_ORACLE_CTES},
     nodes AS (
         SELECT a AS node FROM tri
         UNION ALL SELECT b FROM tri
@@ -355,31 +363,7 @@ CC_TOP = 25
 @query(
     "graph_clustering_coefficient",
     oracle=f"""
-    WITH bk AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM bk a JOIN bk b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-    ),
-    deg AS (
-        SELECT node, CAST(count(*) AS BIGINT) AS d
-        FROM (SELECT pa AS node FROM pairs UNION ALL SELECT pb FROM pairs)
-        GROUP BY 1
-    ),
-    ori AS (
-        SELECT CASE WHEN (da.d, pa) < (db.d, pb) THEN pa ELSE pb END AS u,
-               CASE WHEN (da.d, pa) < (db.d, pb) THEN pb ELSE pa END AS v
-        FROM pairs
-        JOIN deg da ON pa = da.node
-        JOIN deg db ON pb = db.node
-    ),
-    tri AS (
-        SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        FROM ori e1
-        JOIN ori e2 ON e1.v = e2.u
-        JOIN ori e3 ON e3.u = e1.u AND e3.v = e2.v
-    ),
+    WITH {TRIANGLE_ORACLE_CTES},
     tcnt AS (
         SELECT node, CAST(count(*) AS BIGINT) AS t
         FROM (

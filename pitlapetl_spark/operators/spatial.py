@@ -147,6 +147,25 @@ _SLAT = _ORACLE_LAT.format(k="s_suppkey")
 _SLON = _ORACLE_LON.format(k="s_suppkey")
 
 
+def _customer_supplier_points(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Customers as (p_key, lat, lon) and suppliers as (b_key, lat,
+    lon) points, placed by their keys: the two sides of
+    cell_radius_join."""
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("p_key"),
+        _lat(F.col("c_custkey")).alias("lat"),
+        _lon(F.col("c_custkey")).alias("lon"),
+    )
+    supp = load_table(spark, sf_dir, "supplier").select(
+        F.col("s_suppkey").alias("b_key"),
+        _lat(F.col("s_suppkey")).alias("lat"),
+        _lon(F.col("s_suppkey")).alias("lon"),
+    )
+    return cust, supp
+
+
 @query(
     "geo_cell_radius_join",
     oracle=f"""
@@ -163,16 +182,7 @@ def geo_cell_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-join + filter — same result set, quadratic plan the Spark
     side exists to avoid (plan-gated: no CartesianProduct,
     tests/test_plan_hygiene.py)."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("p_key"),
-        _lat(F.col("c_custkey")).alias("lat"),
-        _lon(F.col("c_custkey")).alias("lon"),
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("b_key"),
-        _lat(F.col("s_suppkey")).alias("lat"),
-        _lon(F.col("s_suppkey")).alias("lon"),
-    )
+    cust, supp = _customer_supplier_points(spark, sf_dir)
     return (
         cell_radius_join(cust, supp)
         .select(
@@ -213,16 +223,7 @@ def geo_nearest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery as the radius join plus one per-customer window;
     ordering fences on the 3-decimal distance with the supplier key
     as the total-order tiebreak, identical on both engines."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("p_key"),
-        _lat(F.col("c_custkey")).alias("lat"),
-        _lon(F.col("c_custkey")).alias("lon"),
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("b_key"),
-        _lat(F.col("s_suppkey")).alias("lat"),
-        _lon(F.col("s_suppkey")).alias("lon"),
-    )
+    cust, supp = _customer_supplier_points(spark, sf_dir)
     from pyspark.sql import Window
 
     pairs = cell_radius_join(cust, supp)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 from ..registry import query
 from ..sources import load_table, register_views
+from .aggregates import ols_fit
 
 
 @query(
@@ -575,6 +576,23 @@ def anomaly_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------- closed-form linear fit
 
 
+def _qty_price_moments(li: DataFrame) -> DataFrame:
+    """Per l_returnflag, the moment sums ``n, sx, sy, sxx, sxy, syy``
+    of x = l_quantity and y = l_extendedprice in decimal(18,2): both
+    inputs have 2 decimal places, so the products are exact and the
+    sums order-independent."""
+    x = F.col("l_quantity").cast("decimal(18,2)")
+    y = F.col("l_extendedprice").cast("decimal(18,2)")
+    return li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * x).alias("sxx"),
+        F.sum(x * y).alias("sxy"),
+        F.sum(y * y).alias("syy"),
+    )
+
+
 @query(
     "ml_linear_fit_closed_form",
     oracle="""
@@ -625,33 +643,14 @@ def ml_linear_fit_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregate on the group key; moments are
     mergeable, so this fits incremental/MV maintenance too
     (incremental.py's pattern)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(18,2)")
-    y = F.col("l_extendedprice").cast("decimal(18,2)")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(y * y).alias("syy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    denx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    deny = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    sxd = F.col("sx").cast("double")
-    syd = F.col("sy").cast("double")
-    # degenerate groups go NULL, never divide-by-zero (hypothesis
-    # found the constant-y case: deny = 0 -> r2 is 0/0, undefined;
-    # constant-x additionally undefines the slope) — nullif on BOTH
-    # engines, identical semantics
-    denx_nz = F.nullif(denx, F.lit(0.0))
+    s = _qty_price_moments(load_table(spark, sf_dir, "lineitem"))
+    slope, intercept, r2 = ols_fit()
     return s.select(
         "l_returnflag",
         F.col("n").cast("long").alias("n"),
-        F.round(num / denx_nz, 6).alias("slope"),
-        F.round((syd - num / denx_nz * sxd) / F.col("n"), 6).alias("intercept"),
-        F.round(num * num / F.nullif(denx * deny, F.lit(0.0)), 6).alias("r2"),
+        slope.alias("slope"),
+        intercept.alias("intercept"),
+        r2.alias("r2"),
     )
 
 
@@ -1106,17 +1105,7 @@ def anomaly_mahalanobis_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber", "l_returnflag",
         "l_quantity", "l_extendedprice",
     )
-    dec = "decimal(18,2)"
-    xd = F.col("l_quantity").cast(dec)
-    yd = F.col("l_extendedprice").cast(dec)
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(xd).alias("sx"),
-        F.sum(yd).alias("sy"),
-        F.sum(xd * xd).alias("sxx"),
-        F.sum(xd * yd).alias("sxy"),
-        F.sum(yd * yd).alias("syy"),
-    )
+    s = _qty_price_moments(li)
     m = s.select(
         "l_returnflag",
         (F.col("sx").cast("double") / F.col("n")).alias("mx"),

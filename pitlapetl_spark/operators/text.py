@@ -12,7 +12,7 @@ pruning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -21,11 +21,13 @@ from ..functions.text import (
     norm_text,
     oracle_hash_bucket,
     shingles,
+    sql_in,
     stopword_count,
     tokens,
 )
 from ..registry import query
 from ..sources import load_table
+from .aggregates import ols_fit
 
 # BPE-ish word/number/symbol tokenizer (lowercase alpha runs, digit
 # runs, single non-alnum symbols) — the "token counting" regex path
@@ -33,10 +35,6 @@ _WORD_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 _ORACLE_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _ORACLE_TOKS = f"string_split({_ORACLE_NORM}, ' ')"
-
-
-def _sql_in(words: tuple[str, ...]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
 
 
 @query(
@@ -75,6 +73,45 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def quality_signals(docs: DataFrame, *carry: str) -> DataFrame:
+    """``doc_id, *carry, norm, n_tokens, n_stop, n_chars, n_punct,
+    n_distinct`` per document: the counts the heuristic quality score
+    reads, over the normalized text ``norm``. One narrow map stage;
+    text_quality_score and text_filters.gate_scored both build on it."""
+    t = docs.select(
+        "doc_id",
+        *carry,
+        norm_text(F.col("text")).alias("norm"),
+        tokens(F.col("text")).alias("toks"),
+    )
+    return t.select(
+        "doc_id",
+        *carry,
+        "norm",
+        F.size("toks").alias("n_tokens"),
+        stopword_count(F.col("toks"), STOPWORDS["en"]).alias("n_stop"),
+        F.length("norm").alias("n_chars"),
+        (
+            F.length("norm")
+            - F.length(F.regexp_replace("norm", "[^a-z0-9 ]", ""))
+        ).alias("n_punct"),
+        F.size(F.array_distinct("toks")).alias("n_distinct"),
+    )
+
+
+def quality_score() -> Column:
+    """The composite ``quality_score`` in [0,1] over quality_signals'
+    counts: equal weights on length (saturating at 100 tokens),
+    stopword presence, non-punctuation share and token diversity."""
+    return F.round(
+        0.25 * F.least(F.col("n_tokens") / 100.0, F.lit(1.0))
+        + 0.25 * F.least(F.col("n_stop") * 5.0 / F.col("n_tokens"), F.lit(1.0))
+        + 0.25 * (1.0 - F.col("n_punct") / F.col("n_chars"))
+        + 0.25 * (F.col("n_distinct") / F.col("n_tokens")),
+        6,
+    ).alias("quality_score")
+
+
 @query(
     "text_quality_score",
     oracle=f"""
@@ -83,7 +120,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), m AS (
         SELECT doc_id,
                len(toks) AS n_tokens,
-               len(list_filter(toks, x -> x IN ({_sql_in(STOPWORDS["en"])}))) AS n_stop,
+               len(list_filter(toks, x -> x IN ({sql_in(STOPWORDS["en"])}))) AS n_stop,
                length(norm) AS n_chars,
                length(norm) - length(regexp_replace(norm, '[^a-z0-9 ]', '', 'g')) AS n_punct,
                len(list_distinct(toks)) AS n_distinct
@@ -105,36 +142,14 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document quality: length, stopword ratio, punctuation
     density, token diversity -> composite score in [0,1]. The exact
     filter a pre-training pipeline runs before expensive stages."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        norm_text(F.col("text")).alias("norm"),
-        tokens(F.col("text")).alias("toks"),
-    )
-    m = t.select(
-        "doc_id",
-        F.size("toks").alias("n_tokens"),
-        stopword_count(F.col("toks"), STOPWORDS["en"]).alias("n_stop"),
-        F.length("norm").alias("n_chars"),
-        (
-            F.length("norm")
-            - F.length(F.regexp_replace("norm", "[^a-z0-9 ]", ""))
-        ).alias("n_punct"),
-        F.size(F.array_distinct("toks")).alias("n_distinct"),
-    )
+    m = quality_signals(load_table(spark, sf_dir, "documents"))
     return m.select(
         "doc_id",
         F.col("n_tokens").cast("int").alias("n_tokens"),
         F.round(F.col("n_stop") / F.col("n_tokens"), 6).alias("stopword_ratio"),
         F.round(F.col("n_punct") / F.col("n_chars"), 6).alias("punct_ratio"),
         F.round(F.col("n_distinct") / F.col("n_tokens"), 6).alias("distinct_ratio"),
-        F.round(
-            0.25 * F.least(F.col("n_tokens") / 100.0, F.lit(1.0))
-            + 0.25 * F.least(F.col("n_stop") * 5.0 / F.col("n_tokens"), F.lit(1.0))
-            + 0.25 * (1.0 - F.col("n_punct") / F.col("n_chars"))
-            + 0.25 * (F.col("n_distinct") / F.col("n_tokens")),
-            6,
-        ).alias("quality_score"),
+        quality_score(),
     )
 
 
@@ -148,7 +163,7 @@ _LANGS = ("en", "de", "es", "fr")
     s AS (
         SELECT doc_id, len(toks) AS n,
                {", ".join(
-                   f"len(list_filter(toks, x -> x IN ({_sql_in(STOPWORDS[lang])}))) AS s_{lang}"
+                   f"len(list_filter(toks, x -> x IN ({sql_in(STOPWORDS[lang])}))) AS s_{lang}"
                    for lang in _LANGS
                )}
         FROM t
@@ -861,6 +876,21 @@ def pipeline_rag_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZIPF_MAX_RANK = 1000  # fit over the top-K vocabulary slice (bounded window)
 
 
+def _log_moments(r: DataFrame) -> DataFrame:
+    """The ``n, sx, sy, sxx, sxy, syy`` moment sums of the (x, y)
+    log-log points in ``r``, summed in decimal(28,12) so that the
+    accumulation order cannot move a double (ols_fit's input)."""
+    dec = "decimal(28,12)"
+    return r.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("x").cast(dec)).alias("sx"),
+        F.sum(F.col("y").cast(dec)).alias("sy"),
+        F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
+        F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
+        F.sum((F.col("y") * F.col("y")).cast(dec)).alias("syy"),
+    )
+
+
 @query(
     "text_zipf_fit",
     oracle=f"""
@@ -939,26 +969,12 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.row_number().over(rankw).cast("double")).alias("x"),
         F.log(F.col("cnt").cast("double")).alias("y"),
     )
-    dec = "decimal(28,12)"
-    s = r.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast(dec)).alias("sx"),
-        F.sum(F.col("y").cast(dec)).alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
-        F.sum((F.col("y") * F.col("y")).cast(dec)).alias("syy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    denx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    deny = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    sxd = F.col("sx").cast("double")
-    syd = F.col("sy").cast("double")
-    denx_nz = F.nullif(denx, F.lit(0.0))
-    return s.select(
+    slope, intercept, r2 = ols_fit()
+    return _log_moments(r).select(
         F.col("n").cast("long").alias("n_ranks"),
-        F.round(num / denx_nz, 6).alias("slope"),
-        F.round((syd - num / denx_nz * sxd) / F.col("n"), 6).alias("intercept"),
-        F.round(num * num / F.nullif(denx * deny, F.lit(0.0)), 6).alias("r2"),
+        slope.alias("slope"),
+        intercept.alias("intercept"),
+        r2.alias("r2"),
     )
 
 
@@ -1146,32 +1162,16 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("n").cast("double")).alias("x"),
         F.log(F.col("v").cast("double")).alias("y"),
     )
-    dec = "decimal(28,12)"
-    s = r.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast(dec)).alias("sx"),
-        F.sum(F.col("y").cast(dec)).alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast(dec)).alias("sxy"),
-        F.sum((F.col("y") * F.col("y")).cast(dec)).alias("syy"),
-    )
     tot = cum.agg(
         F.max("n").cast("long").alias("total_tokens"),
         F.max("v").cast("long").alias("total_vocab"),
     )
-    n = F.col("n")
-    num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    denx = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    deny = (n * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    slope = num / F.nullif(denx, F.lit(0.0))
-    return s.crossJoin(F.broadcast(tot)).select(
-        n.alias("n_points"),
-        F.round(slope, 6).alias("beta"),
-        F.round(
-            (F.col("sy").cast("double") - slope * F.col("sx").cast("double")) / n,
-            6,
-        ).alias("log_k"),
-        F.round(num * num / F.nullif(denx * deny, F.lit(0.0)), 6).alias("r2"),
+    beta, log_k, r2 = ols_fit()
+    return _log_moments(r).crossJoin(F.broadcast(tot)).select(
+        F.col("n").alias("n_points"),
+        beta.alias("beta"),
+        log_k.alias("log_k"),
+        r2.alias("r2"),
         "total_tokens",
         "total_vocab",
     )
@@ -1203,7 +1203,7 @@ BM25_B = 0.75
 BM25_QUERY = ("vector", "stream", "hash")
 BM25_TOP = 20
 
-_BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY)
+_BM25_TERMS_SQL = sql_in(BM25_QUERY)
 
 _BM25_SQL = f"""
     WITH toks AS (

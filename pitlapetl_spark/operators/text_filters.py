@@ -18,13 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import STOPWORDS, norm_text, stopword_count, tokens
+from ..functions.text import STOPWORDS, norm_text, sql_in, stopword_count, tokens
 from ..registry import query
 from ..sources import load_table
+from .text import quality_score, quality_signals
 
 _ORACLE_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _ORACLE_TOKS = f"string_split({_ORACLE_NORM}, ' ')"
-_EN_IN = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
+_EN_IN = sql_in(STOPWORDS["en"])
 
 # Gopher-style rule thresholds (arbitrary but fixed; the operator shape
 # is the point — real pipelines tune these per corpus)
@@ -285,37 +286,24 @@ def gate_scored(docs: DataFrame) -> DataFrame:
     score, one scan + one window shuffle on the uniform fp key.
     Shared by the gate verdict query and the composed to-shards
     pipeline (training_prep)."""
-    t = docs.select(
-        "doc_id",
-        "lang",
-        norm_text(F.col("text")).alias("norm"),
-        tokens(F.col("text")).alias("toks"),
-    )
-    m = t.select(
+    # fp is a named column before the window: an md5 inside
+    # partitionBy would plan as a separate `_w0` projection
+    m = quality_signals(docs, "lang").select(
         "doc_id",
         "lang",
         F.md5("norm").alias("fp"),
-        F.size("toks").alias("n_tokens"),
-        stopword_count(F.col("toks"), STOPWORDS["en"]).alias("n_stop"),
-        F.length("norm").alias("n_chars"),
-        (
-            F.length("norm")
-            - F.length(F.regexp_replace("norm", "[^a-z0-9 ]", ""))
-        ).alias("n_punct"),
-        F.size(F.array_distinct("toks")).alias("n_distinct"),
+        "n_tokens",
+        "n_stop",
+        "n_chars",
+        "n_punct",
+        "n_distinct",
     )
     return m.select(
         "doc_id",
         "lang",
         "n_tokens",
         F.min("doc_id").over(Window.partitionBy("fp")).alias("keeper"),
-        F.round(
-            0.25 * F.least(F.col("n_tokens") / 100.0, F.lit(1.0))
-            + 0.25 * F.least(F.col("n_stop") * 5.0 / F.col("n_tokens"), F.lit(1.0))
-            + 0.25 * (1.0 - F.col("n_punct") / F.col("n_chars"))
-            + 0.25 * (F.col("n_distinct") / F.col("n_tokens")),
-            6,
-        ).alias("quality_score"),
+        quality_score(),
     )
 
 

@@ -21,6 +21,7 @@ from operator import and_
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.breadth7d import _WILSON_Z, wilson_bounds
 from ..registry import query
 from ..session import run_in_driver_threads
 from ..sources import load_table
@@ -235,12 +236,8 @@ def stream_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a watermark (runtime.error_rate_wilson_stream; test_streaming
 # asserts bit-equality stream vs batch). The day-grain twin of the
 # date-keyed batch query, keyed on the streaming F.window instead of
-# the calendar string so late data merges into the right pane.
-
-# single source for the z constant: the batch audit's module
-# (review catch: a copy-pasted twin constant can be retuned on one
-# side only, silently breaking the documented twin relationship)
-from ..operators.breadth7d import _WILSON_Z as _WILSON_Z_STREAM
+# the calendar string so late data merges into the right pane. The
+# interval columns are breadth7d.wilson_bounds, the batch query's own.
 
 
 def wilson_error_rate_agg(events: DataFrame) -> DataFrame:
@@ -249,24 +246,16 @@ def wilson_error_rate_agg(events: DataFrame) -> DataFrame:
     counts + post-agg projection — streaming-supported with no custom
     state; the watermark (added by the stream caller) bounds pane
     state."""
-    z = _WILSON_Z_STREAM
     agged = events.groupBy(F.window("ts", "1 day").alias("w")).agg(
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("event_type") == "error", 1)).alias("k"),
     )
-    p = F.col("k").cast("double") / F.col("n")
-    n = F.col("n")
-    center = p + z * z / (2 * n)
-    half = z * F.sqrt(p * (1 - p) / n + z * z / (4.0 * n * n))
-    denom = 1 + z * z / n
     return agged.select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
         "n",
         "k",
-        F.round(p, 6).alias("error_rate"),
-        F.round((center - half) / denom, 6).alias("wilson_lo"),
-        F.round((center + half) / denom, 6).alias("wilson_hi"),
+        *wilson_bounds(),
     )
 
 
@@ -286,20 +275,20 @@ def wilson_error_rate_agg(events: DataFrame) -> DataFrame:
            n, k,
            round(CAST(k AS DOUBLE) / n, 6) AS error_rate,
            round((CAST(k AS DOUBLE) / n
-                  + {_WILSON_Z_STREAM} * {_WILSON_Z_STREAM} / (2 * n)
-                  - {_WILSON_Z_STREAM} * sqrt(CAST(k AS DOUBLE) / n
+                  + {_WILSON_Z} * {_WILSON_Z} / (2 * n)
+                  - {_WILSON_Z} * sqrt(CAST(k AS DOUBLE) / n
                         * (1 - CAST(k AS DOUBLE) / n) / n
-                        + {_WILSON_Z_STREAM} * {_WILSON_Z_STREAM}
+                        + {_WILSON_Z} * {_WILSON_Z}
                           / (4.0 * n * n)))
-                 / (1 + {_WILSON_Z_STREAM} * {_WILSON_Z_STREAM} / n), 6)
+                 / (1 + {_WILSON_Z} * {_WILSON_Z} / n), 6)
                AS wilson_lo,
            round((CAST(k AS DOUBLE) / n
-                  + {_WILSON_Z_STREAM} * {_WILSON_Z_STREAM} / (2 * n)
-                  + {_WILSON_Z_STREAM} * sqrt(CAST(k AS DOUBLE) / n
+                  + {_WILSON_Z} * {_WILSON_Z} / (2 * n)
+                  + {_WILSON_Z} * sqrt(CAST(k AS DOUBLE) / n
                         * (1 - CAST(k AS DOUBLE) / n) / n
-                        + {_WILSON_Z_STREAM} * {_WILSON_Z_STREAM}
+                        + {_WILSON_Z} * {_WILSON_Z}
                           / (4.0 * n * n)))
-                 / (1 + {_WILSON_Z_STREAM} * {_WILSON_Z_STREAM} / n), 6)
+                 / (1 + {_WILSON_Z} * {_WILSON_Z} / n), 6)
                AS wilson_hi
     FROM d
     """,

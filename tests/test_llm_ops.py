@@ -4,6 +4,7 @@ approximation quality and bounded-range contracts."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pitlapetl_spark import registry
@@ -177,34 +178,96 @@ def test_winnowing_fast_matches_md5_pair_set(spark, sf_dir):
     assert len(fast) >= 0.85 * len(full)
 
 
-def test_winnowing_fast_equals_oracle_on_near_duplicate_corpus(spark, tmp_path):
-    """Regression: on the benchmark generator's seeded near-duplicate
-    corpus ``dedup_winnowing_fast`` returns exactly its DuckDB oracle's
-    rows under the contract's canonicalization. An xxhash64-hashed
-    variant returned 458 rows here against the oracle's 451: which
-    k-gram a window elects depends on the hash, and the DF cap and
-    shared-fingerprint floor turn that into different pairs."""
+# Queries run against their DuckDB oracles on the benchmark generator's
+# data, beyond the fixed sf0.01 fixture: every query built on a shared
+# statistical device (life table, quality scorer, Wilson interval, OLS
+# tail and moment sums, HLL registers, split counts and Gini, urgent
+# order values, daily value series, co-purchase oracle CTEs, points,
+# baskets, SQL in-lists), plus dedup_winnowing_fast. An xxhash64-hashed
+# winnowing variant returned 458 rows on seed 1 against the oracle's
+# 451: which k-gram a window elects depends on the hash, and the DF cap
+# and shared-fingerprint floor turn that into different pairs.
+GENERATED_PARITY_QUERIES = (
+    "survival_kaplan_meier",
+    "survival_nelson_aalen",
+    "dq_error_rate_wilson",
+    "stream_error_rate_wilson",
+    "text_quality_score",
+    "pipeline_pretrain_filter",
+    "pipeline_pretrain_to_shards",
+    "curriculum_quality_order",
+    "pipeline_release_waterfall",
+    "text_zipf_fit",
+    "text_heaps_law_fit",
+    "ml_linear_fit_closed_form",
+    "agg_hll_distinct",
+    "agg_hll_set_operations",
+    "window_hll_sliding_distinct",
+    "graph_triangle_count",
+    "graph_clustering_coefficient",
+    "graph_degree_assortativity",
+    "ml_decision_stump_gini",
+    "ml_cross_validation_stump",
+    "geo_cell_radius_join",
+    "geo_nearest_supplier",
+    "market_basket_pairs",
+    "rec_item_item_cosine",
+    "text_lang_id",
+    "text_bm25_search",
+    "text_phrase_search",
+    "ml_cohens_kappa_langid",
+    "analytics_woe_iv",
+    "stats_qq_deciles",
+    "ts_exp_smoothing",
+    "ts_holt_linear_trend",
+    "anomaly_mahalanobis_2d",
+    "dedup_winnowing_fast",
+)
+
+
+@pytest.fixture(scope="module")
+def generated_dir(tmp_path_factory):
+    """seed -> directory holding ``star_schema(seed, 0.01)`` and
+    ``corpus(seed, 300)`` from perfbench/gen.py, written once per seed."""
     import importlib.util
     import sys
-
-    import duckdb
 
     from tests.conftest import REPO
 
     spec = importlib.util.spec_from_file_location("perfbench_gen", REPO / "perfbench" / "gen.py")
     gen = sys.modules[spec.name] = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gen)
-    sys.path.insert(0, str(REPO / "tools"))
+    dirs: dict[int, str] = {}
+
+    def get(seed: int) -> str:
+        if seed not in dirs:
+            out = tmp_path_factory.mktemp(f"gen_seed{seed}")
+            gen.write_tables(gen.star_schema(seed, 0.01) | gen.corpus(seed, 300), str(out))
+            dirs[seed] = str(out)
+        return dirs[seed]
+
+    return get
+
+
+@pytest.mark.parametrize("seed", (1, 2))
+@pytest.mark.parametrize("name", GENERATED_PARITY_QUERIES)
+def test_query_equals_oracle_on_generated_data(spark, generated_dir, name, seed):
+    """The query returns exactly its non-empty DuckDB oracle's rows
+    under the contract's canonicalization, on generated data."""
+    import sys
+
+    from tests.conftest import REPO
+    from tests.oracle_harness import duckdb_connection
+
+    if str(REPO / "tools") not in sys.path:
+        sys.path.insert(0, str(REPO / "tools"))
     from contract_canon import canon_hash
 
-    gen.write_tables(gen.corpus(1, 300), str(tmp_path))
-    got = registry.QUERIES["dedup_winnowing_fast"](spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
+    data = generated_dir(seed)
+    got = registry.QUERIES[name](spark, data).toPandas()
+    con = duckdb_connection(data)
     try:
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
-        )
-        want = con.execute(registry.ORACLES["dedup_winnowing_fast"]).df()
+        want = con.execute(registry.ORACLES[name]).df()
     finally:
         con.close()
     assert len(want) > 0
@@ -655,7 +718,8 @@ def test_cv_stump_folds_are_leakage_safe_and_sane(spark):
     holdout sizes must partition the order count exactly, accuracies
     must be real probabilities, and every chosen split must be one of
     the candidate deciles."""
-    from pitlapetl_spark.operators.breadth8 import CV_CUTS, CV_FOLDS
+    from pitlapetl_spark.operators.breadth7 import STUMP_CUTS
+    from pitlapetl_spark.operators.breadth8 import CV_FOLDS
     from pitlapetl_spark.sources import load_table
 
     rows = Q["ml_cross_validation_stump"](spark, SF_SMOKE).collect()
@@ -664,7 +728,7 @@ def test_cv_stump_folds_are_leakage_safe_and_sane(spark):
     assert sum(r.n_holdout for r in rows) == n
     for r in rows:
         assert 0.0 <= r.holdout_accuracy <= 1.0
-        assert 1 <= r.cut_idx <= CV_CUTS
+        assert 1 <= r.cut_idx <= STUMP_CUTS
         assert r.left_label in (0, 1) and r.right_label in (0, 1)
 
 

@@ -1,0 +1,20 @@
+"""Print the sha256 of the registered query names and of the oracle map.
+
+Two trees have the same driver contract when both digests match; no
+Spark session is started.
+
+    python tools/contract_digest.py
+"""
+import hashlib, json, sys
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+from pitlapetl_spark.registry import all_oracles, all_queries
+
+
+def _sha(obj) -> str:
+    return hashlib.sha256(json.dumps(obj).encode()).hexdigest()
+
+
+print(f"queries {len(all_queries())} {_sha(list(all_queries()))}")
+print(f"oracles {len(all_oracles())} {_sha(list(all_oracles().items()))}")
