@@ -328,7 +328,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     aggregation carrying the 16-hash signature and the shingle count.
     The shared signature builder for whole-corpus LSH, incremental
     batch dedup, and the streaming ingest sink — one narrow row per
-    document, the thing a production signature STORE persists."""
+    document, whose hash slots the sink's band rows carry."""
     sh = shingle_rows(docs)
     return (
         sh.select("doc_id", *minhash_base_cols(F.col("s")))
@@ -337,8 +337,8 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def _band_rows(sig: DataFrame) -> DataFrame:
-    """LSH band rows (doc_id, band_idx, band_val) from a minhash
+def _band_rows(sig: DataFrame, *carry: str) -> DataFrame:
+    """LSH band rows (doc_id, *carry, band_idx, band_val) from a minhash
     signature frame: each band hashes its ROWS_PER_BAND signature
     slots into one bucket value."""
     band_structs = [
@@ -353,8 +353,25 @@ def _band_rows(sig: DataFrame) -> DataFrame:
         for k in range(N_BANDS)
     ]
     return sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select("doc_id", "band.band_idx", "band.band_val")
+        "doc_id", *carry, F.explode(F.array(*band_structs)).alias("band")
+    ).select("doc_id", *carry, "band.band_idx", "band.band_val")
+
+
+def band_join(
+    a: DataFrame, b: DataFrame, band: str = "band_idx", ordered: bool = False
+) -> DataFrame:
+    """The band-candidate equi-join of every banded near-dup path, minhash
+    and pHash, batch query and ingest sink alike: the rows of ``a`` and
+    ``b`` (aliased ``a`` and ``b``) that share a ``(band, band_val)``
+    bucket. ``ordered`` keeps only ``a.doc_id < b.doc_id``, the one pair
+    per unordered doc pair of a self-join. Callers broadcast the small
+    side and verify and select from the two aliases."""
+    on = (F.col(f"a.{band}") == F.col(f"b.{band}")) & (
+        F.col("a.band_val") == F.col("b.band_val")
+    )
+    if ordered:
+        on &= F.col("a.doc_id") < F.col("b.doc_id")
+    return a.alias("a").join(b.alias("b"), on)
 
 
 @query("dedup_minhash_lsh", oracle=_oracle_minhash_lsh())
@@ -387,15 +404,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = minhash_signatures(docs).localCheckpoint(eager=True)
     sizes = sig.select("doc_id", "n")
     bands = _band_rows(sig)
-    a = bands.alias("a")
-    b = bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        band_join(bands, bands, ordered=True)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
@@ -407,14 +417,14 @@ query("dedup_minhash_lsh_preagg", oracle=_oracle_minhash_lsh())(dedup_minhash_ls
 
 # ------------------------------------------------- incremental minhash
 # A 100-TB training pipeline does not re-dedup the whole corpus per
-# crawl: it keeps a SIGNATURE STORE (doc_id -> minhash signature +
-# band buckets, a narrow table bucketed on band_val) and dedups each
+# crawl: it keeps a BAND STORE (one row per (doc_id, band) carrying
+# the band bucket and the minhash signature) and dedups each
 # incoming batch against it. Incremental cost is O(batch + band
 # collisions) — the corpus-side store is only probed on the band key,
 # never re-shingled. The query below models the split determinis-
 # tically (doc_id % INCR_MOD == INCR_REM is "today's batch") so the
 # DuckDB oracle can replay it; in production the corpus side is
-# `spark.read` of the signature table and the batch side is the only
+# `spark.read` of the band store and the batch side is the only
 # text that gets shingled.
 
 INCR_MOD = 5
@@ -471,20 +481,13 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with a table read — the plan downstream of `sig` is identical
     sig = minhash_signatures(docs).localCheckpoint(eager=True)
     bands = _band_rows(sig)
-    batch_bands = bands.filter(is_batch)
-    corpus_bands = bands.filter(~is_batch)
     cand = (
-        corpus_bands.alias("c")
-        .join(
-            # the batch is the small side by construction — broadcast
-            # it so the corpus band store is probed in place, one
-            # scan, zero shuffle of the big side
-            F.broadcast(batch_bands.alias("n")),
-            (F.col("c.band_idx") == F.col("n.band_idx"))
-            & (F.col("c.band_val") == F.col("n.band_val")),
-        )
+        # the batch is the small side by construction — broadcast it
+        # so the corpus band store is probed in place, one scan, zero
+        # shuffle of the big side
+        band_join(bands.filter(~is_batch), F.broadcast(bands.filter(is_batch)))
         .select(
-            F.col("n.doc_id").alias("doc_new"), F.col("c.doc_id").alias("dup_of")
+            F.col("b.doc_id").alias("doc_new"), F.col("a.doc_id").alias("dup_of")
         )
         .distinct()
     )

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from ..registry import query
 from ..sources import load_table
+from .dedup import band_join
 
 FRAME_BYTES = 64  # bytes per pseudo-frame of a 'video' payload
 FRAME_STRIDE = 4  # sample every 4th frame
@@ -349,22 +350,14 @@ def mm_phash_hamming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB that is the decode pass twice; guide §4: the opaque
     # Python stage defeats Spark's subtree reuse)
     bands = phash_band_rows(h).localCheckpoint(eager=False)
-    a = bands.select(
-        F.col("band_id").alias("bi"),
-        F.col("band_val").alias("bv"),
-        F.col("doc_id").alias("doc_a"),
-        F.col("phash").alias("ph_a"),
-    )
-    b = bands.select(
-        F.col("band_id").alias("bi"),
-        F.col("band_val").alias("bv"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("phash").alias("ph_b"),
-    )
     cand = (
-        a.join(b, ["bi", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ph_a", "ph_b")
+        band_join(bands, bands, "band_id", ordered=True)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.phash").alias("ph_a"),
+            F.col("b.phash").alias("ph_b"),
+        )
         .distinct()
     )
     return cand.select(

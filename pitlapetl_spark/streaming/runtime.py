@@ -686,6 +686,60 @@ def read_documents_stream(
     return _parquet_stream(spark, DOCUMENTS, path, max_files_per_trigger)
 
 
+def _banded_ingest_batch(
+    store_path: str,
+    corpus_path: str,
+    compact_every: int,
+    band_rows,
+    band: str,
+    verify,
+):
+    """The per-micro-batch body of both banded near-dup ingest sinks,
+    minhash and pHash. ``band_rows(batch)`` builds one row per (doc,
+    band) carrying the doc's hash; ``verify`` is the pair test over the
+    ``a.``/``b.`` columns of ``band_join``. (b) A batch doc drops when a
+    lower-id batch doc shares a band with it and passes ``verify``;
+    (c) a kept doc drops when an earlier-arrived store row shares a
+    band with it and passes ``verify``; (d) the survivors' corpus rows
+    and band rows are written, so the next batch probes them too. The
+    band rows carry the hash, so the verify reads the very store rows
+    the candidate join matched."""
+    from ..operators.dedup import band_join
+
+    store = BatchStore(store_path)
+
+    def dropped(pairs: DataFrame) -> DataFrame:
+        return pairs.filter(verify).select(F.col("b.doc_id").alias("doc_id")).distinct()
+
+    def kernel(batch_df: DataFrame, batch_id: int) -> None:
+        # lazy lineage cuts (each frame has 2+ consumers): the frames
+        # materialize once inside the survivors job instead of as
+        # separate eager jobs per micro-batch
+        batch = batch_df.localCheckpoint(eager=False)
+        bands = band_rows(batch).localCheckpoint(eager=False)
+        kept = bands.join(
+            dropped(band_join(bands, bands, band, ordered=True)), "doc_id", "left_anti"
+        )
+        survivors = kept.select("doc_id").distinct()
+        earlier = store.earlier(batch_df.sparkSession, batch_id)
+        if earlier is not None:
+            # the kept batch bands are micro-batch-bounded: broadcast
+            # them so the store is probed in place and never shuffled
+            probe = band_join(earlier, F.broadcast(kept), band)
+            survivors = survivors.join(dropped(probe), "doc_id", "left_anti")
+        keep = F.broadcast(survivors.localCheckpoint(eager=True))
+        # the writes are independent given `keep` (eager) plus the
+        # batch/bands lazy checkpoints, all materialized inside the
+        # survivors job
+        write(
+            batch_id,
+            (corpus_path, batch.join(keep, "doc_id", "left_semi")),
+            (store, bands.join(keep, "doc_id", "left_semi")),
+        )
+
+    return batch_body(kernel, store, compact_every)
+
+
 def _dedup_ingest_batch(
     store_path: str,
     corpus_path: str,
@@ -699,124 +753,16 @@ def _dedup_ingest_batch(
     function to foreachBatch."""
     from ..operators.dedup import N_HASHES, _band_rows, minhash_signatures
 
-    sigs = BatchStore(store_path)
-    band_store = BatchStore(f"{store_path}_bands")
-
-    def _est(left_prefix: str, right_prefix: str):
-        return sum(
-            F.when(
-                F.col(f"{left_prefix}{j}") == F.col(f"{right_prefix}{j}"), 1
-            ).otherwise(0)
-            for j in range(N_HASHES)
-        ) / F.lit(N_HASHES)
-
-    def kernel(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # lazy lineage cuts (each frame has 2+ consumers): the frames
-        # materialize once inside their first consumer's job instead
-        # of as three separate eager jobs per micro-batch
-        batch = batch_df.localCheckpoint(eager=False)
-        sig = minhash_signatures(batch).localCheckpoint(eager=False)
-        bands = _band_rows(sig).localCheckpoint(eager=False)
-
-        # (b) intra-batch dedup: keep the lowest doc_id of every
-        # estimated-dup pair inside the batch (band self-join — the
-        # batch side is small, the pair space band-bounded)
-        a, b = bands.alias("a"), bands.alias("b")
-        cand_in = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("keep"), F.col("b.doc_id").alias("dup")
-            )
-            .distinct()
-        )
-        s1 = sig.select(
-            F.col("doc_id").alias("keep"),
-            *[F.col(f"h{j}").alias(f"kh{j}") for j in range(N_HASHES)],
-        )
-        s2 = sig.select(
-            F.col("doc_id").alias("dup"),
-            *[F.col(f"h{j}").alias(f"dh{j}") for j in range(N_HASHES)],
-        )
-        # the signature sides are micro-batch-bounded (one narrow row
-        # per batch doc) — broadcast them so the pair verify never
-        # shuffles (guide §3.1)
-        in_dups = (
-            cand_in.join(F.broadcast(s1), "keep")
-            .join(F.broadcast(s2), "dup")
-            .filter(_est("kh", "dh") >= DEDUP_INGEST_EST_THRESHOLD)
-            .select(F.col("dup").alias("doc_id"))
-            .distinct()
-        )
-        sig_kept = sig.join(in_dups, "doc_id", "left_anti")
-
-        # (c) probe the earlier-arrived band rows — band values were
-        # computed once at append time, nothing store-side re-hashes.
-        # No earlier rows in either store means no earlier batch
-        # committed (each batch writes both), so nothing to probe.
-        store = sigs.earlier(spark, batch_id)
-        store_bands = band_store.earlier(spark, batch_id)
-        if store is None or store_bands is None:
-            survivors = sig_kept.select("doc_id")
-        else:
-            cand = (
-                store_bands.alias("c")
-                .join(
-                    F.broadcast(bands.alias("x")),
-                    (F.col("c.band_idx") == F.col("x.band_idx"))
-                    & (F.col("c.band_val") == F.col("x.band_val")),
-                )
-                .select(
-                    F.col("x.doc_id").alias("doc_new"),
-                    F.col("c.doc_id").alias("dup_of"),
-                )
-                .distinct()
-            )
-            bsig = sig_kept.select(
-                F.col("doc_id").alias("doc_new"),
-                *[F.col(f"h{j}").alias(f"bh{j}") for j in range(N_HASHES)],
-            )
-            ssig = store.select(
-                F.col("doc_id").alias("dup_of"),
-                *[F.col(f"h{j}").alias(f"sh{j}") for j in range(N_HASHES)],
-            )
-            # attach the batch-side signatures to the (bounded)
-            # candidate set first, then probe the STORE signature
-            # scan with the result broadcast — the old join order
-            # (cand ⋈ ssig on dup_of) shuffled the full store
-            # signature table on the candidate key, violating the
-            # sink family's store-never-shuffled contract (guide
-            # §8: audit how decisions re-attach to the payload)
-            dups = (
-                ssig.join(
-                    F.broadcast(cand.join(F.broadcast(bsig), "doc_new")),
-                    "dup_of",
-                )
-                .filter(_est("bh", "sh") >= DEDUP_INGEST_EST_THRESHOLD)
-                .select("doc_new")
-                .distinct()
-            )
-            survivors = sig_kept.select("doc_id").join(
-                dups.withColumnRenamed("doc_new", "doc_id"), "doc_id", "left_anti"
-            )
-        keep = F.broadcast(survivors.localCheckpoint(eager=True))
-
-        # (d) the three writes are independent given `keep` (eager)
-        # plus the batch/sig/bands lazy checkpoints, all already
-        # materialized inside the survivors job
-        write(
-            batch_id,
-            (corpus_path, batch.join(keep, "doc_id", "left_semi")),
-            (sigs, sig.join(keep, "doc_id", "left_semi")),
-            (band_store, bands.join(keep, "doc_id", "left_semi")),
-        )
-
-    return batch_body(kernel, (sigs, band_store), compact_every)
+    hs = [f"h{j}" for j in range(N_HASHES)]
+    agree = sum(F.when(F.col(f"a.{h}") == F.col(f"b.{h}"), 1).otherwise(0) for h in hs)
+    return _banded_ingest_batch(
+        store_path,
+        corpus_path,
+        compact_every,
+        lambda batch: _band_rows(minhash_signatures(batch), *hs),
+        "band_idx",
+        agree / F.lit(N_HASHES) >= DEDUP_INGEST_EST_THRESHOLD,
+    )
 
 
 def run_dedup_ingest_sink(
@@ -829,32 +775,33 @@ def run_dedup_ingest_sink(
     """Streaming crawl ingest with incremental near-dup dedup — the
     recurring production shape behind ``dedup_incremental_minhash``
     run continuously: every micro-batch (a) computes its minhash
-    signatures, (b) dedups WITHIN the batch (band self-join,
-    keep-lowest-doc_id), (c) probes the persisted BAND TABLE with the
-    (broadcast-small) batch bands and drops batch docs whose
-    signature-estimated Jaccard against any stored doc clears the
-    threshold, then (d) writes the survivors' rows, signatures, and
-    band rows, so the next batch dedups against them too.
+    signatures and band rows, (b) dedups WITHIN the batch (band
+    self-join, keep-lowest-doc_id), (c) probes the persisted band
+    store with the (broadcast-small) kept batch bands and drops batch
+    docs whose signature-estimated Jaccard against any stored doc
+    clears the threshold, then (d) writes the survivors' rows and band
+    rows, so the next batch dedups against them too
+    (``_banded_ingest_batch``, shared with the pHash sink).
 
     The dedup decision is the SIGNATURE ESTIMATE (fraction of
     agreeing minhash slots — the standard unbiased Jaccard
-    estimator), not an exact-shingle verify: the store persists O(1)
-    signature + band rows per doc, never shingle sets. Per-batch
-    store-side cost is one scan of the band table (equi-join on the
-    precomputed band key — nothing is re-hashed per batch) plus one
-    scan of the signature table for the estimate join; a point-lookup
-    KV store would cut those scans to O(collisions), which is the
-    stated migration path at corpus sizes where the scans dominate.
+    estimator), not an exact-shingle verify: the store persists one
+    row per (doc, band) carrying the band key and the signature
+    ``h0..h15``, never shingle sets. Per-batch store-side cost is one
+    scan of that store (equi-join on the precomputed band key, the
+    estimate read from the matched row — nothing is re-hashed per
+    batch); a point-lookup KV store would cut the scan to
+    O(collisions), which is the stated migration path at corpus sizes
+    where the scan dominates.
 
     Exactly-once, crash and provenance semantics are the
     batch-scoped store's (store.py). The probe compares a batch doc
     with every earlier-arrived row, so a re-delivered doc_id with
     edited text dedups against its own earlier version like any other
-    row. The signature store and its ``<store>_bands`` sibling fold
-    into generations once ``compact_every`` committed partitions
-    accumulate; the CORPUS is deliberately left un-compacted: its
-    batch layout is a downstream consumer contract, and it is never
-    scanned by the ingest path."""
+    row. The store folds into generations once ``compact_every``
+    committed partitions accumulate; the CORPUS is deliberately left
+    un-compacted: its batch layout is a downstream consumer contract,
+    and it is never scanned by the ingest path."""
     return start(
         docs, _dedup_ingest_batch(store_path, corpus_path, compact_every), checkpoint
     )
@@ -873,60 +820,14 @@ def _phash_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         phash_frame,
     )
 
-    store = BatchStore(store_path)
-
-    def ham(a, b):
-        return F.bit_count(a.bitwiseXOR(b))
-
-    def kernel(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint(eager=True)
-        bands = phash_band_rows(
-            phash_frame(batch.select("doc_id", "text"))
-        ).localCheckpoint(eager=True)
-
-        # (b) intra-batch dedup
-        a, b = bands.alias("a"), bands.alias("b")
-        in_dups = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .filter(ham(F.col("a.phash"), F.col("b.phash")) <= PHASH_HAM_MAX)
-            .select(F.col("b.doc_id").alias("doc_id"))
-            .distinct()
-        )
-        kept = bands.join(in_dups, "doc_id", "left_anti")
-
-        # (c) probe the earlier-arrived band rows
-        earlier = store.earlier(batch_df.sparkSession, batch_id)
-        survivors = kept.select("doc_id").distinct()
-        if earlier is not None:
-            dups = (
-                earlier.alias("c")
-                .join(
-                    F.broadcast(kept.alias("x")),
-                    (F.col("c.band_id") == F.col("x.band_id"))
-                    & (F.col("c.band_val") == F.col("x.band_val")),
-                )
-                .filter(
-                    ham(F.col("c.phash"), F.col("x.phash")) <= PHASH_HAM_MAX
-                )
-                .select(F.col("x.doc_id").alias("doc_id"))
-                .distinct()
-            )
-            survivors = survivors.join(dups, "doc_id", "left_anti")
-        keep = F.broadcast(survivors.localCheckpoint(eager=True))
-
-        # (d) survivors' rows and band rows
-        write(
-            batch_id,
-            (corpus_path, batch.join(keep, "doc_id", "left_semi")),
-            (store, bands.join(keep, "doc_id", "left_semi")),
-        )
-
-    return batch_body(kernel, (store,), compact_every)
+    return _banded_ingest_batch(
+        store_path,
+        corpus_path,
+        compact_every,
+        lambda batch: phash_band_rows(phash_frame(batch.select("doc_id", "text"))),
+        "band_id",
+        F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash"))) <= PHASH_HAM_MAX,
+    )
 
 
 def run_media_phash_ingest_sink(
@@ -937,17 +838,15 @@ def run_media_phash_ingest_sink(
     compact_every: int = DEDUP_INGEST_COMPACT_EVERY,
 ) -> StreamingQuery:
     """Streaming MEDIA ingest with hamming-space near-dup dedup — the
-    multimodal twin of ``run_dedup_ingest_sink``: every micro-batch
-    (a) computes block-mean perceptual hashes for its payloads
-    (``phash_frame`` — the only Python, Arrow-batched), (b) dedups
-    within the batch (band self-join + exact hamming verify,
-    keep-lowest-doc_id), (c) probes the persisted BAND STORE with the
-    broadcast-small batch bands and drops docs whose hamming distance
-    to any stored hash is <= PHASH_HAM_MAX, then (d) writes survivors'
-    rows and band rows. Unlike the minhash sink the band rows CARRY
-    the full hash (32 bits rides free next to the band key), so there
-    is no separate signature table — the verify join reads the same
-    store rows the candidate join matched.
+    multimodal twin of ``run_dedup_ingest_sink`` on the same banded
+    kernel (``_banded_ingest_batch``): every micro-batch (a) computes
+    block-mean perceptual hashes for its payloads (``phash_frame`` —
+    the only Python, Arrow-batched), (b) dedups within the batch (band
+    self-join + exact hamming verify, keep-lowest-doc_id), (c) probes
+    the persisted band store with the broadcast-small kept batch bands
+    and drops docs whose hamming distance to any stored hash is <=
+    PHASH_HAM_MAX, then (d) writes survivors' rows and band rows,
+    which carry the full hash next to the band key.
 
     Exactly-once, crash and provenance semantics are the batch-scoped
     store's (store.py). Per-batch cost: O(batch) hashing + one
@@ -1203,7 +1102,7 @@ def _semantic_ingest_batch(
             ),
         )
 
-    return batch_body(kernel, (store,), compact_every)
+    return batch_body(kernel, store, compact_every)
 
 
 def run_semantic_ingest_sink(
@@ -1307,23 +1206,13 @@ def _url_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
             .drop("_mn")
             .localCheckpoint(eager=False)
         )
-        # (d) cross-batch: earlier-arrived store rows only; the
-        # store side is scanned with a BROADCAST semi-join on the
-        # batch's (small) url set, then the at-most-|batch| matches
+        # (d) cross-batch: earlier-arrived store rows only
+        # (``BatchStore.seen``), then the at-most-|batch| matches
         # broadcast back for the anti-join — the store is never
         # shuffled (block comment). ``seen`` is consumed exactly once
         # by the broadcast build, so it needs no checkpoint.
-        earlier = store.earlier(batch_df.sparkSession, batch_id)
-        if earlier is not None:
-            seen = (
-                earlier.join(
-                    F.broadcast(kept.select("url_canon")),
-                    "url_canon",
-                    "left_semi",
-                )
-                .select("url_canon")
-                .distinct()
-            )
+        seen = store.seen(batch_df.sparkSession, batch_id, kept, "url_canon")
+        if seen is not None:
             kept = kept.join(F.broadcast(seen), "url_canon", "left_anti")
             kept = kept.localCheckpoint(eager=False)
         # (e) both writes share the lazy checkpoint
@@ -1333,7 +1222,7 @@ def _url_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
             (store, kept.select("url_canon", "site", "doc_id")),
         )
 
-    return batch_body(kernel, (store,), compact_every)
+    return batch_body(kernel, store, compact_every)
 
 
 def run_url_ingest_sink(
@@ -1425,20 +1314,11 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
         firsts = grams.groupBy("g").agg(
             F.min(F.struct("doc_id", "pos")).alias("f")
         )
-        # cross-batch: grams the store has already seen — broadcast
-        # the batch's (bounded) distinct gram keys against the store,
-        # broadcast the matches back; the store is never shuffled.
-        earlier = store.earlier(batch_df.sparkSession, batch_id)
-        if earlier is not None:
-            seen = (
-                earlier.join(
-                    F.broadcast(firsts.select("g")),
-                    "g",
-                    "left_semi",
-                )
-                .select("g")
-                .distinct()
-            )
+        # cross-batch: grams the store has already seen
+        # (``BatchStore.seen``), broadcast back; the store is never
+        # shuffled.
+        seen = store.seen(batch_df.sparkSession, batch_id, firsts, "g")
+        if seen is not None:
             firsts = firsts.join(
                 F.broadcast(seen.withColumn("_seen", F.lit(True))),
                 "g",
@@ -1489,7 +1369,7 @@ def _span_ingest_batch(store_path: str, corpus_path: str, compact_every: int):
             (store, new_firsts),
         )
 
-    return batch_body(kernel, (store,), compact_every)
+    return batch_body(kernel, store, compact_every)
 
 
 def run_span_dedup_ingest_sink(
@@ -1716,7 +1596,7 @@ def _run_monitor(
     def kernel(batch_df: DataFrame, batch_id: int) -> None:
         write(batch_id, (store, partial(batch_df).coalesce(1)))
 
-    return start(df, batch_body(kernel, (store,), compact_every), checkpoint, "update")
+    return start(df, batch_body(kernel, store, compact_every), checkpoint, "update")
 
 
 def run_cms_sink(

@@ -15,12 +15,12 @@ GENERATION partitions with negative ids (``batch=-1``, ``-2``, ...).
 Every store row carries its origin batch id in a ``src_batch`` column,
 an INT stamped with ``F.lit(batch_id)`` at write time and kept verbatim
 through every fold. A corpus (the sink's output, never probed) is
-written in the same per-batch layout without the stamp. Sink-specific
-siblings keep their names: the minhash ``<store>_bands`` store, the
+written in the same per-batch layout without the stamp. Each sink
+keeps one store, which ``batch_body`` folds. Next to it live only the
 semantic sink's ``<store>/_quantizer/qbatch=<id>`` quantizer versions
-(the underscore hides them from partition discovery), and the monitors'
-``cur/`` and ``days/`` stores next to their one-off ``ref`` and
-``vocab`` frames.
+(the underscore hides them from partition discovery) and the one-off
+``ref`` and ``vocab`` frames beside the monitors' ``cur/`` or ``days/``
+store.
 
 Exactly-once. Structured Streaming replays at most the one batch whose
 commit is missing from the checkpoint. A replayed batch recomputes
@@ -68,6 +68,11 @@ write-then-delete order is the portable part.
 
 Every store row carries ``src_batch`` (``write`` stamps it, every fold
 keeps it), and a store without the column is not one this module reads.
+Likewise the banded sinks' store rows (minhash and pHash) carry the
+band key and the hash, one row per (doc, band). A store written by the
+earlier two-store minhash layout (signature rows, with the band rows in
+a ``<store>_bands`` sibling) has no band columns: the probe fails on it
+with an unresolved-column error rather than reading it as empty.
 """
 
 from __future__ import annotations
@@ -98,15 +103,16 @@ def start(
     )
 
 
-def batch_body(kernel, stores=(), compact_every: int = 0):
+def batch_body(kernel, store: BatchStore | None = None, compact_every: int = 0):
     """The per-batch wrapper of every sink: skip an empty batch, fold
-    each store's committed partitions (so this batch already probes
-    the compacted layout), then call ``kernel(batch_df, batch_id)``."""
+    the sink's store's committed partitions (so this batch already
+    probes the compacted layout), then call ``kernel(batch_df,
+    batch_id)``."""
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        for store in stores:
+        if store is not None:
             store.compact(batch_df.sparkSession, batch_id, compact_every)
         kernel(batch_df, batch_id)
 
@@ -150,6 +156,22 @@ class BatchStore:
         rows = _cached_schema_read(spark, self.root, self._schemas)
         return rows.filter(
             (F.col("batch") < batch_id) & (F.col("src_batch") < batch_id)
+        )
+
+    def seen(
+        self, spark: SparkSession, batch_id: int, keys: DataFrame, col: str
+    ) -> DataFrame | None:
+        """The distinct ``col`` values of ``keys`` that an earlier batch
+        already stored: the earlier rows left-semi-joined with the
+        broadcast batch keys, so the store is scanned in place and never
+        shuffled. None when the store does not exist yet."""
+        earlier = self.earlier(spark, batch_id)
+        if earlier is None:
+            return None
+        return (
+            earlier.join(F.broadcast(keys.select(col)), col, "left_semi")
+            .select(col)
+            .distinct()
         )
 
     def fold(self, spark: SparkSession, keys) -> DataFrame:

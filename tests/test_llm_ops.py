@@ -183,10 +183,12 @@ def test_winnowing_fast_matches_md5_pair_set(spark, sf_dir):
 # statistical device (life table, quality scorer, Wilson interval, OLS
 # tail and moment sums, HLL registers, split counts and Gini, urgent
 # order values, daily value series, co-purchase oracle CTEs, points,
-# baskets, SQL in-lists), plus dedup_winnowing_fast. An xxhash64-hashed
-# winnowing variant returned 458 rows on seed 1 against the oracle's
-# 451: which k-gram a window elects depends on the hash, and the DF cap
-# and shared-fingerprint floor turn that into different pairs.
+# baskets, SQL in-lists), the three batch queries on the shared
+# band-candidate join (``band_join``), plus dedup_winnowing_fast. An
+# xxhash64-hashed winnowing variant returned 458 rows on seed 1 against
+# the oracle's 451: which k-gram a window elects depends on the hash,
+# and the DF cap and shared-fingerprint floor turn that into different
+# pairs.
 GENERATED_PARITY_QUERIES = (
     "survival_kaplan_meier",
     "survival_nelson_aalen",
@@ -222,6 +224,9 @@ GENERATED_PARITY_QUERIES = (
     "ts_holt_linear_trend",
     "anomaly_mahalanobis_2d",
     "dedup_winnowing_fast",
+    "dedup_minhash_lsh",
+    "dedup_incremental_minhash",
+    "mm_phash_hamming_near_dup",
 )
 
 

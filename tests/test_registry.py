@@ -115,3 +115,30 @@ def test_coverage_totals_match_artifacts():
         f"COVERAGE.md says {m.group(2)} driver-verified ever, "
         f"artifacts say {ever} — rerun tools/gen_coverage.py"
     )
+
+
+# the driver contract: registered names in order, and every (name,
+# oracle SQL) pair in order, as tools/contract_digest.py prints them.
+# A change that means to change the contract updates these lines.
+PINNED_CONTRACT = [
+    "queries 355 bbb82c19a00830a8af803cc85ef65e38fef22d404fda514adcaf9d8d958ee1bb",
+    "oracles 355 4b2d71360ad27259e1dc5709724de10827cac0cc1bf8d142ea58395e046fc6f2",
+]
+
+
+def test_contract_digest_is_pinned():
+    """A refactor that must not change the driver contract keeps both
+    digests byte-identical; checking that by hand is what this pins.
+    The script runs in a fresh process, as a driver imports the
+    contract: registration order is import order, and this test
+    process has imported operator modules in its own order."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, str(repo / "tools" / "contract_digest.py")],
+        capture_output=True, text=True, check=True,
+    ).stdout
+    assert out.splitlines() == PINNED_CONTRACT

@@ -482,7 +482,7 @@ def test_tws_user_profile_matches_batch(spark, events_stream):
 
 def test_dedup_ingest_sink_drops_store_dups_and_grows_store(spark, tmp_path):
     """Two micro-batch rounds of the streaming crawl-ingest dedup:
-    batch 1 bootstraps the signature store; batch 2 contains one
+    batch 1 bootstraps the band store; batch 2 contains one
     exact dup and one prefix-shifted near-dup of stored docs plus two
     fresh docs — the dups must be dropped, the fresh docs appended to
     BOTH the corpus and the store, and a third round containing a dup
@@ -622,10 +622,13 @@ def test_dedup_ingest_replay_and_intra_batch(spark, tmp_path):
     internal dup pair keeps only the lowest doc_id (intra-batch
     dedup); (2) a FULL source replay (fresh checkpoint — the
     upper bound of any crash-recovery replay) overwrites the same
-    batch-scoped directories and leaves corpus, store, and band table
-    row-identical."""
+    batch-scoped directories and leaves corpus and store
+    row-identical. The store is the one band store: no ``_bands``
+    sibling, and its rows carry the band key and the signature."""
+    import os
     import random
 
+    from pitlapetl_spark.operators.dedup import N_BANDS, N_HASHES
     from pitlapetl_spark.streaming.runtime import (
         read_documents_stream,
         run_dedup_ingest_sink,
@@ -663,9 +666,36 @@ def test_dedup_ingest_replay_and_intra_batch(spark, tmp_path):
     def snap(path):
         return sorted(tuple(r) for r in spark.read.parquet(path).collect())
 
-    before = (snap(corpus), snap(store), snap(store + "_bands"))
+    assert not os.path.exists(store + "_bands")
+    cols = set(spark.read.parquet(store).columns)
+    assert {"doc_id", "band_idx", "band_val", "src_batch"} <= cols, cols
+    assert {f"h{j}" for j in range(N_HASHES)} <= cols, cols
+    assert spark.read.parquet(store).count() == N_BANDS * len(ids)
+
+    before = (snap(corpus), snap(store))
     run("ck2")  # full replay with a fresh checkpoint
-    assert (snap(corpus), snap(store), snap(store + "_bands")) == before
+    assert (snap(corpus), snap(store)) == before
+
+
+def test_dedup_ingest_probe_fails_on_a_two_store_layout(spark, tmp_path):
+    """A store written by the earlier two-store minhash layout holds
+    signature rows without band columns (its band rows lived in a
+    ``<store>_bands`` sibling). The one-store probe must raise on it,
+    never read it as an empty store and keep every batch doc."""
+    from pyspark.errors import AnalysisException
+
+    from pitlapetl_spark.operators.dedup import minhash_signatures
+    from pitlapetl_spark.streaming.runtime import _dedup_ingest_batch
+
+    store = str(tmp_path / "store")
+    docs = sources.load_table(spark, SF_SMOKE, "documents").limit(4)
+    minhash_signatures(docs).withColumn("src_batch", F.lit(0)).write.parquet(
+        f"{store}/batch=0"
+    )
+    body = _dedup_ingest_batch(store, str(tmp_path / "corpus"), 10**6)
+    with pytest.raises(AnalysisException, match="band_idx"):
+        body(docs, 1)
+    assert not (tmp_path / "corpus").exists()
 
 
 def test_streaming_csv_ingest_preserves_micros_and_batches(spark):
@@ -1490,7 +1520,7 @@ def _batch_parts(path):
 def test_dedup_ingest_compaction_folds_store_and_keeps_dedup_exact(
     spark, tmp_path
 ):
-    """With compact_every=2 the signature/band stores must fold
+    """With compact_every=2 the band store must fold
     committed batch partitions into negative generation partitions
     (bounding per-batch scan cost — VERDICT r7 item 4) WITHOUT
     changing any dedup decision: a later doc that duplicates one whose
@@ -1531,17 +1561,16 @@ def test_dedup_ingest_compaction_folds_store_and_keeps_dedup_exact(
     run("compacted", 2, "ck_c")
     run("plain", 10**9, "ck_p")  # control: compaction never triggers
 
-    def snap(root, suffix=""):
+    def snap(root):
         return sorted(
             tuple(r)
-            for r in spark.read.parquet(
-                str(tmp_path / root / f"store{suffix}")
-            ).drop("batch").collect()
+            for r in spark.read.parquet(str(tmp_path / root / "store"))
+            .drop("batch")
+            .collect()
         )
 
     # identical dedup outcome and store row set, compacted or not
-    for suffix in ("", "_bands"):
-        assert snap("compacted", suffix) == snap("plain", suffix)
+    assert snap("compacted") == snap("plain")
     corpus_ids = {
         r.doc_id
         for r in spark.read.parquet(str(tmp_path / "compacted/corpus")).collect()
@@ -1602,9 +1631,9 @@ def test_dedup_ingest_compaction_replay_safe_from_shared_checkpoint(
             tuple(r) for r in spark.read.parquet(path).drop("batch").collect()
         )
 
-    before = (snap(corpus), snap(store), snap(store + "_bands"))
+    before = (snap(corpus), snap(store))
     run()  # same checkpoint, nothing new
-    assert (snap(corpus), snap(store), snap(store + "_bands")) == before
+    assert (snap(corpus), snap(store)) == before
 
     # new batch after restart: dup of doc 1 (folded into a generation
     # by now) must be dropped, fresh doc kept
@@ -1956,7 +1985,7 @@ def test_dedup_ingest_reprocess_after_compaction_no_self_drop(spark, tmp_path):
     """Fresh-checkpoint reprocess against a COMPACTED store (the
     disaster-recovery path): the generation partition is negative, so
     it passes the partition-level probe filter and holds the replayed
-    batches' own signature/band rows — without the row-level
+    batches' own band rows — without the row-level
     ``src_batch < current`` provenance filter every doc would match
     its own stored signature (estimate 1.0) and the reprocess would
     empty the corpus. The reprocess must converge to the identical
@@ -2005,9 +2034,6 @@ def test_dedup_ingest_reprocess_after_compaction_no_self_drop(spark, tmp_path):
     assert got.count(b0[1][0]) == 1
     # fold ALL committed batches into one generation, then reprocess
     _compact_partition_store(spark, store, current_batch=10**6, threshold=1)
-    _compact_partition_store(
-        spark, f"{store}_bands", current_batch=10**6, threshold=1
-    )
     assert sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(store)

@@ -1,7 +1,7 @@
 """Print the sha256 of the registered query names and of the oracle map.
 
 Two trees have the same driver contract when both digests match; no
-Spark session is started.
+Spark session is started. ``tests/test_registry.py`` pins both lines.
 
     python tools/contract_digest.py
 """
@@ -16,5 +16,14 @@ def _sha(obj) -> str:
     return hashlib.sha256(json.dumps(obj).encode()).hexdigest()
 
 
-print(f"queries {len(all_queries())} {_sha(list(all_queries()))}")
-print(f"oracles {len(all_oracles())} {_sha(list(all_oracles().items()))}")
+def contract_digest() -> list[str]:
+    """The two digest lines: registered names in order, then every
+    (name, oracle SQL) pair in order."""
+    return [
+        f"queries {len(all_queries())} {_sha(list(all_queries()))}",
+        f"oracles {len(all_oracles())} {_sha(list(all_oracles().items()))}",
+    ]
+
+
+if __name__ == "__main__":
+    print("\n".join(contract_digest()))
