@@ -24,11 +24,11 @@ ships. The decisive design points:
   relational, engine-exact apply step.
 - **Non-overlap makes the apply two windows**: hit(p) = (s[p], s[p+1])
   equals the winner; drop row p+1 where hit(p); concatenate at p.
-- **Every round ends in a localCheckpoint** (the iterative-operator
-  lineage discipline) and the DuckDB oracle pins each round's
-  relation with AS MATERIALIZED — the k-core re-inlining lesson
-  (SCALE.md): each round is referenced more than once and would
-  otherwise re-expand exponentially.
+- **The symbol table is the round state of the shared ``fixpoint``
+  driver**, cut once per round, and the DuckDB oracle pins each
+  round's relation with AS MATERIALIZED — the k-core re-inlining
+  lesson (SCALE.md): each round is referenced more than once and
+  would otherwise re-expand exponentially.
 
 Determinism: everything is integer counts and string equality; the
 winner is total-ordered by (count DESC, left ASC, right ASC).
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .fixpoint import fixpoint
 
 BPE_MERGES = 8
 
@@ -139,11 +140,11 @@ def _run_merges(
     syms = wt.select(
         "w", "freq", F.posexplode(F.split("w", "")).alias("pos", "s")
     ).filter(F.col("s") != "")
-    syms = syms.localCheckpoint(eager=False)
 
     wseq = Window.partitionBy("w").orderBy("pos")
     merges = []
-    for k in range(1, BPE_MERGES + 1):
+
+    def merge(syms: DataFrame) -> DataFrame:
         pairs = (
             syms.select(
                 "freq",
@@ -157,11 +158,11 @@ def _run_merges(
         best = (
             pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
             .limit(1)
-            .localCheckpoint()  # one row; eager — consumed 3 times below
+            .localCheckpoint()  # eager: its 3 readers would each redo the count
         )
         merges.append(
             best.select(
-                F.lit(k).cast("int").alias("merge_rank"),
+                F.lit(len(merges) + 1).cast("int").alias("merge_rank"),
                 F.col("a").alias("left_sym"),
                 F.col("b").alias("right_sym"),
                 F.col("cnt").alias("pair_freq"),
@@ -179,7 +180,7 @@ def _run_merges(
             .select("w", "freq", "pos", "s", "bb", hit.alias("hit"))
         )
         marked = hframe.withColumn("prev_hit", F.lag("hit").over(wseq))
-        syms = (
+        return (
             marked.filter(~F.coalesce(F.col("prev_hit"), F.lit(False)))
             .select(
                 "w",
@@ -192,9 +193,9 @@ def _run_merges(
                 .otherwise(F.col("s"))
                 .alias("s"),
             )
-            .localCheckpoint(eager=False)
         )
 
+    syms, _ = fixpoint(syms, merge, BPE_MERGES)
     return merges, syms
 
 

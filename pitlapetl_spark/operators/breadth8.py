@@ -9,7 +9,7 @@ accumulated double.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import hash_bucket, oracle_hash_bucket, sql_in
@@ -24,6 +24,7 @@ from .breadth7 import (
     split_gini,
     urgent_value_rows,
 )
+from .fixpoint import fixpoint, gradient_fit, gradient_fit_ctes, linear
 
 # ------------------------- heavy hitters, gated two-pass (count-min)
 #
@@ -332,15 +333,12 @@ def agg_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # linear regression of an UPPER QUANTILE — "what does the 75th-
 # percentile price look like as a function of quantity and discount"
 # — trained by full-batch subgradient descent on the pinball loss.
-# Same engine discipline as ml_logreg_gradient_descent (stats.py):
-# one map-side-combinable aggregate per iteration, gradient components
-# summed in EXACT DECIMAL (order-independent), weights updated
-# driver-side (3 doubles) and round(12)-ed, the oracle an unrolled CTE
-# chain. One device FEWER than logreg: the pinball subgradient is a
-# pure comparison — grad = (1-tau) if y <= yhat else -tau — so there
-# is no exp()/round-9 step anywhere; every per-row quantity is either
-# exact (+-tau with tau = 0.75 a dyadic rational) or the same IEEE
-# double on both engines.
+# Same step loop as ml_logreg_gradient_descent (``gradient_fit``), the
+# oracle an unrolled CTE chain. One device FEWER than logreg: the
+# pinball subgradient is a pure comparison — grad = (1-tau) if
+# y <= yhat else -tau — so there is no exp()/round-9 step anywhere;
+# every per-row quantity is either exact (+-tau with tau = 0.75 a
+# dyadic rational) or the same IEEE double on both engines.
 
 QREG_TAU = 0.75
 QREG_ITERS = 8
@@ -359,28 +357,7 @@ def _qreg_grad_sql(w: str) -> str:
 
 def _qreg_oracle() -> str:
     dec = "DECIMAL(28,12)"
-    ctes = [
-        f"f AS ({_QREG_FEATS_SQL})",
-        "nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f)",
-        "w0 AS (SELECT CAST(0.0 AS DOUBLE) AS a, CAST(0.0 AS DOUBLE) AS b,"
-        " CAST(0.0 AS DOUBLE) AS c)",
-    ]
-    for i in range(QREG_ITERS):
-        g = _qreg_grad_sql("w")
-        ctes.append(
-            f"""g{i} AS (
-                SELECT sum(CAST({g} AS {dec})) AS s0,
-                       sum(CAST({g} * x1 AS {dec})) AS s1,
-                       sum(CAST({g} * x2 AS {dec})) AS s2
-                FROM f CROSS JOIN w{i} w)"""
-        )
-        ctes.append(
-            f"""w{i + 1} AS (
-                SELECT round(w.a - {QREG_LR} * CAST(g.s0 AS DOUBLE) / nn.n, 12) AS a,
-                       round(w.b - {QREG_LR} * CAST(g.s1 AS DOUBLE) / nn.n, 12) AS b,
-                       round(w.c - {QREG_LR} * CAST(g.s2 AS DOUBLE) / nn.n, 12) AS c
-                FROM w{i} w CROSS JOIN g{i} g CROSS JOIN nn)"""
-        )
+    ctes = gradient_fit_ctes(_QREG_FEATS_SQL, _qreg_grad_sql("w"), QREG_LR, QREG_ITERS)
     yhat = "(w.a + w.b * x1 + w.c * x2)"
     pin = (
         f"CASE WHEN y - {yhat} >= 0 THEN {QREG_TAU} * (y - {yhat}) "
@@ -413,24 +390,15 @@ def ml_quantile_regression_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_discount") * 10).alias("x2"),
         (F.col("l_extendedprice") / 10000).alias("y"),
     )
-    n = feats.count()  # bounded driver scalar (the logreg discipline)
-    dec = "decimal(28,12)"
-    w = [0.0, 0.0, 0.0]
-    for _ in range(QREG_ITERS):
-        yhat = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-        g = F.when(F.col("y") <= yhat, F.lit(1 - QREG_TAU)).otherwise(
+
+    def pinball_grad(w: list[float]) -> Column:
+        return F.when(F.col("y") <= linear(w), F.lit(1 - QREG_TAU)).otherwise(
             F.lit(-QREG_TAU)
         )
-        row = feats.agg(
-            F.sum(g.cast(dec)).alias("s0"),
-            F.sum((g * F.col("x1")).cast(dec)).alias("s1"),
-            F.sum((g * F.col("x2")).cast(dec)).alias("s2"),
-        ).collect()[0]
-        w = [
-            round(w[j] - QREG_LR * float(row[j]) / n, 12)
-            for j in range(3)
-        ]
-    yhat = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
+
+    feats, w, n = gradient_fit(feats, pinball_grad, QREG_LR, QREG_ITERS)
+    dec = "decimal(28,12)"
+    yhat = linear(w)
     e = F.col("y") - yhat
     pin = F.when(e >= 0, F.lit(QREG_TAU) * e).otherwise(F.lit(QREG_TAU - 1) * e)
     return feats.agg(
@@ -1106,10 +1074,9 @@ def ml_cross_validation_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cells are two orders denser than noise cells everywhere.
 #
 # The component step is min-label propagation on the dense-cell frame
-# (a few hundred rows): driver loop, localCheckpoint per round,
-# RAISES past the round cap instead of silently truncating (the
-# dedup_cluster_components discipline); the oracle computes true components with
-# a recursive-CTE reachability closure.
+# (a few hundred rows) on the shared ``fixpoint`` driver, which raises
+# past the round cap instead of silently truncating; the oracle
+# computes true components with a recursive-CTE reachability closure.
 
 DBSCAN_CELL = 1.0  # degrees
 DBSCAN_MAX_ROUNDS = 20
@@ -1206,7 +1173,6 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense = cells.filter(F.col("n") >= mp).withColumn(
         "cell_id", (F.col("cx") + 500) * 1_000_000 + (F.col("cy") + 500)
     )
-    dense = dense.localCheckpoint(eager=True)
     # min-label propagation over the 8-neighborhood until fixpoint.
     # Neighbor candidates come from a 9-offset EXPLODE + equi-join on
     # the shifted cell key (the grid-join family device) — never a
@@ -1218,8 +1184,8 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             for dx in (-1, 0, 1) for dy in (-1, 0, 1)
         ) + ")"
     )
-    lab = dense.select("cx", "cy", "cell_id", F.col("cell_id").alias("lbl"))
-    for _ in range(DBSCAN_MAX_ROUNDS):
+
+    def propagate(lab: DataFrame) -> DataFrame:
         nb = (
             lab.select("cx", "cy", F.col("lbl").alias("nlbl"))
             .withColumn("o", F.explode(offsets))
@@ -1229,24 +1195,24 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "nlbl",
             )
         )
-        prop = (
+        return (
             lab.join(
                 nb,
                 (F.col("cx") == F.col("nx")) & (F.col("cy") == F.col("ny")),
             )
-            .groupBy("cx", "cy", "cell_id", "lbl")
-            .agg(F.min("nlbl").alias("new_lbl"))
+            .groupBy("cx", "cy", "cell_id")
+            .agg(F.min("nlbl").alias("lbl"))
         )
-        changed = prop.filter(F.col("new_lbl") != F.col("lbl")).count()
-        lab = prop.select(
-            "cx", "cy", "cell_id", F.col("new_lbl").alias("lbl")
-        ).localCheckpoint(eager=True)
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"grid DBSCAN did not converge in {DBSCAN_MAX_ROUNDS} rounds"
-        )
+
+    # labels only fall (each cell takes the min over a neighborhood
+    # that includes itself), so their sum repeats exactly when a round
+    # changed no label
+    lab, _ = fixpoint(
+        dense.select("cx", "cy", "cell_id", F.col("cell_id").alias("lbl")),
+        propagate,
+        DBSCAN_MAX_ROUNDS,
+        lambda lab: lab.agg(F.sum("lbl")).collect()[0][0],
+    )
     labeled = dense.select("cx", "cy", "n", "cell_id").join(
         lab.select("cell_id", F.col("lbl").alias("cluster_id")), "cell_id"
     )

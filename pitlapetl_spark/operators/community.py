@@ -17,8 +17,8 @@ Spark-first iterative shape: each round is ONE src-key edge join +
 TWO hash aggregates — (dst, label) counts, then per-dst argmax via a
 struct max (max_by semantics with the tie-break encoded as
 (count, -label), so NO per-dst sort window) — all map-side-combinable.
-Labels are one row per node; lineage cut per round (labels frame is
-O(nodes), cheap to materialize; contrast PageRank's cadence note).
+Labels are one row per node, the round state of the shared
+``fixpoint`` driver, cut once per round.
 
 100-TB shape: identical to PageRank's Pregel cost model — edges
 shuffle once per round on the src key, label frames are node-sized,
@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
-from .pagerank import PAIRS_ORACLE_CTE, copurchase_edges_cached
+from .fixpoint import fixpoint
+from .pagerank import PAIRS_ORACLE_CTE, _maybe_bcast, copurchase_edges_cached
 
 LPA_ROUNDS = 3
 
@@ -89,22 +90,18 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)  # size gate below + round-1 join
     )
-    # The label frame is one (long, long) row per node — the same
-    # node-count-sized frame PageRank broadcasts (PR_BROADCAST_MAX_
-    # NODES discipline). Broadcasting it makes each round's edge join
-    # map-side against the stationary edge frame; the only exchange
-    # left per round is the map-side-combined (dst, label) count —
-    # the old plan shuffled the full edge frame every round.
-    LPA_BROADCAST_MAX_NODES = 1_000_000
-    n_nodes = labels.count()
-    for _ in range(LPA_ROUNDS):
-        lside = (
-            F.broadcast(labels)
-            if n_nodes <= LPA_BROADCAST_MAX_NODES
-            else labels
-        )
+    size = {}
+
+    def step(labels: DataFrame) -> DataFrame:
+        # The label frame (two longs per node) broadcasts under the
+        # node-count gate, so the only exchange per round is the map-
+        # side-combined (dst, label) count, not the full edge frame.
+        # Rounds keep the node set: count once, on the cut initial
+        # frame, which that count also stores.
+        if "n" not in size:
+            size["n"] = labels.count()
+        lside = _maybe_bcast(labels, size["n"])
         counted = (
             edges.join(lside, edges.src == lside.node)
             .groupBy(F.col("dst").alias("n2"), "label")
@@ -113,7 +110,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-node argmax with total tie-break as ONE struct max —
         # maximize (cnt, -label) => highest count, then smallest label;
         # max_by-equivalent, no per-node sort window
-        labels = (
+        return (
             counted.groupBy("n2")
             .agg(
                 F.max(
@@ -123,8 +120,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 F.col("n2").alias("node"), (-F.col("m.neg")).alias("label")
             )
-            .localCheckpoint(eager=False)
         )
+
+    labels, _ = fixpoint(labels, step, LPA_ROUNDS)
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum((F.col("node") % 2 == 1).cast("long")).alias("n_parts"),
@@ -285,9 +283,6 @@ def _triangle_node_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set is <= distinct (order, part) <= |lineitem|
     n_deg_bound = parquet_row_count(f"{sf_dir}/part.parquet")
     n_edges_bound = parquet_row_count(f"{sf_dir}/lineitem.parquet")
-
-    def _maybe_bcast(df, bound, gate):
-        return F.broadcast(df) if bound <= gate else df
 
     deg = basket_degrees(spark, sf_dir)
     da = deg.select(F.col("node").alias("pa"), F.col("d").alias("da"))

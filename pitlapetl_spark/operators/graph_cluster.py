@@ -12,9 +12,9 @@ the component's diameter. That matters for dedup graphs, whose shape
 the corpus decides: a chain of mirrors of mirrors is a long path, and
 propagating the minimum label one hop per round would need as many
 rounds as the chain is long. Each iteration is a few joins and
-aggregates over the edge list, cut with ``localCheckpoint`` so the
-plan does not grow; convergence is an edge-set fingerprint, and the
-loop RAISES if it has not converged after MAX_ROUNDS_FAST iterations
+aggregates over the edge list, run on the shared ``fixpoint`` driver:
+the edge list is the round state, convergence is an edge-set
+fingerprint, and the loop raises after MAX_ROUNDS_FAST iterations
 rather than return unconverged labels.
 
 The oracle replays the fixpoint with a recursive CTE (transitive
@@ -29,8 +29,9 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from .dedup import _PAIR_JACCARD_SQL, dedup_ngram_jaccard
+from .fixpoint import fixpoint
 
-MAX_ROUNDS_FAST = 40  # ~2 log2(n) alternating iterations suffice; assert, not truncate
+MAX_ROUNDS_FAST = 40  # ~2 log2(n) alternating iterations suffice; raise, not truncate
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -95,14 +96,9 @@ def _alternating_star(pairs: DataFrame, a: str, b: str) -> tuple[DataFrame, int]
         pairs.select(F.col(a).alias("doc_id"))
         .unionByName(pairs.select(F.col(b).alias("doc_id")))
         .distinct()
-        .localCheckpoint()
     )
-    edges = _canon(
-        pairs.select(F.col(a).alias("x"), F.col(b).alias("y"))
-    ).localCheckpoint()
-    # fingerprint = (edge count, order-independent hash xor): ONE
-    # cheap action per iteration decides convergence (xor, not sum —
-    # summing xxhash64 longs overflows under ANSI mode)
+    # fingerprint: (edge count, xor of edge hashes) — xor, not sum:
+    # summing xxhash64 longs overflows under ANSI mode
     def fp(e: DataFrame):
         r = e.agg(
             F.count(F.lit(1)).alias("n"),
@@ -110,21 +106,12 @@ def _alternating_star(pairs: DataFrame, a: str, b: str) -> tuple[DataFrame, int]
         ).collect()[0]
         return (r["n"], r["h"])
 
-    cur = fp(edges)
-    rounds = 0
-    for _ in range(MAX_ROUNDS_FAST):
-        edges = _small_star(_large_star(edges)).localCheckpoint()
-        rounds += 1
-        nxt = fp(edges)
-        if nxt == cur:
-            break
-        cur = nxt
-    else:
-        raise RuntimeError(
-            f"alternating-star did not converge in {MAX_ROUNDS_FAST} "
-            f"iterations — not a diameter problem (that is the point "
-            f"of this algorithm); investigate the edge data"
-        )
+    edges, rounds = fixpoint(
+        _canon(pairs.select(F.col(a).alias("x"), F.col(b).alias("y"))),
+        lambda e: _small_star(_large_star(e)),
+        MAX_ROUNDS_FAST,
+        fp,
+    )
     # fixpoint edges are (child=hi, root=lo) stars rooted at the
     # component minimum; isolated-in-pair-graph roots label themselves
     parents = edges.groupBy(F.col("x").alias("doc_id")).agg(

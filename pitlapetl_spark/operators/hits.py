@@ -15,8 +15,8 @@ frame is the SHARED memoized co-purchase build (one exchange per
 iteration on the join key); each round is two edge joins + two
 aggregates, and the O(nodes) score frames are the only per-round
 state. Normalization totals are exact decimal sums folded back as
-one-row broadcast scalars. Fixed HITS_ITERS unrolled rounds — the
-plan-stability rule every iterative operator here follows.
+one-row broadcast scalars. Fixed HITS_ITERS unrolled rounds on the
+shared ``fixpoint`` driver, which cuts the hub frame once per round.
 
 Determinism contract: per-edge contributions round(12) →
 DECIMAL(28,12) exact sums; the L1 normalizer divides two identical
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from .fixpoint import fixpoint
 from .pagerank import PAIRS_ORACLE_CTE, copurchase_edges_cached
 
 HITS_ITERS = 3
@@ -102,39 +103,36 @@ def _oracle() -> str:
     return head + its + tail
 
 
+def _normalized(joined: DataFrame, key: str, score: str, out: str) -> DataFrame:
+    """(key, out): ``score`` summed per ``key`` over the edge join, divided
+    by its exact decimal total folded back as a one-row broadcast."""
+    raw = joined.groupBy(key).agg(
+        F.sum(F.round(score, 12).cast(_DEC)).cast("double").alias(out)
+    )
+    total = raw.agg(F.sum(F.round(out, 12).cast(_DEC)).cast("double").alias("s"))
+    return raw.crossJoin(F.broadcast(total)).select(
+        key, F.round(F.col(out) / F.col("s"), 12).alias(out)
+    )
+
+
 @query("graph_hits_authorities", oracle=_oracle())
 def graph_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-HITS_TOP authority parts after HITS_ITERS normalized
     hub/authority rounds (module docstring)."""
     pairs = _purchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
     hub = pairs.select("c").distinct().withColumn("h", F.lit(1.0))
-    auth = None
-    for _ in range(HITS_ITERS):
-        araw = (
-            pairs.join(hub, "c")
-            .groupBy("p")
-            .agg(F.sum(F.round("h", 12).cast(_DEC)).cast("double").alias("a"))
-        )
-        anorm = araw.agg(
-            F.sum(F.round("a", 12).cast(_DEC)).cast("double").alias("s")
-        )
-        auth = araw.crossJoin(F.broadcast(anorm)).select(
-            "p", F.round(F.col("a") / F.col("s"), 12).alias("a")
-        )
-        # cut each round's lineage: the score frames are O(nodes)
-        auth = auth.localCheckpoint(eager=True)
-        hraw = (
-            pairs.join(auth, "p")
-            .groupBy("c")
-            .agg(F.sum(F.round("a", 12).cast(_DEC)).cast("double").alias("h"))
-        )
-        hnorm = hraw.agg(
-            F.sum(F.round("h", 12).cast(_DEC)).cast("double").alias("s")
-        )
-        hub = hraw.crossJoin(F.broadcast(hnorm)).select(
-            "c", F.round(F.col("h") / F.col("s"), 12).alias("h")
-        )
-        hub = hub.localCheckpoint(eager=True)
+
+    def authorities(hub: DataFrame) -> DataFrame:
+        return _normalized(pairs.join(hub, "c"), "p", "h", "a")
+
+    # the last hub update feeds nothing the query returns: HITS_ITERS - 1
+    # full rounds, then the last authority update off the final hub
+    hub, _ = fixpoint(
+        hub,
+        lambda hub: _normalized(pairs.join(authorities(hub), "p"), "c", "a", "h"),
+        HITS_ITERS - 1,
+    )
+    auth = authorities(hub)
     return (
         auth.select(F.col("p").alias("partkey"), F.col("a").alias("authority"))
         .orderBy(F.desc("authority"), F.asc("partkey"))

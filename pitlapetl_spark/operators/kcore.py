@@ -14,14 +14,10 @@ Spark-first iterative shape: the edge frame is built ONCE
 (``copurchase_edges_cached``, shared with PageRank/LPA — the staged-MV
 move from SCALE.md round-6) and each round is two semi-joins of edges
 against the O(nodes) alive set plus ONE map-side-combinable count
-aggregate. The alive frame is localCheckpoint-ed per round (it is the
-only thing that changes; the big edge frame's lineage never grows).
-Convergence = alive-count stability — one cheap driver-side long per
-round, the same fingerprint discipline as
-``dedup_cluster_components``; KCORE_MAX_ROUNDS bounds the loop and the
-engine RAISES (never silently truncates — a capped loop that returns
-its last state hands back an unconverged answer) if the fixpoint isn't
-reached.
+aggregate, on the shared ``fixpoint`` driver: the alive frame is the
+round state, and its count is the convergence fingerprint; the loop
+raises past KCORE_MAX_ROUNDS instead of returning an unconverged
+core.
 
 100-TB notes: per round the edge scan is the dominant cost; edges
 shuffle (or broadcast-probe while the alive set fits — at web scale
@@ -46,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .pagerank import PAIRS_ORACLE_CTE, copurchase_edges_cached
+from .fixpoint import fixpoint
+from .pagerank import PAIRS_ORACLE_CTE, _maybe_bcast, copurchase_edges_cached
 
 KCORE_K = 20
 # Spark raises past this; the oracle unrolls exactly this many rounds.
@@ -54,53 +51,36 @@ KCORE_K = 20
 KCORE_MAX_ROUNDS = 10
 
 
-class KCoreNotConverged(RuntimeError):
-    """Peeling did not reach a fixed point within KCORE_MAX_ROUNDS."""
-
-
 def kcore_nodes(spark: SparkSession, sf_dir: str, k: int = KCORE_K) -> DataFrame:
     """(node, core_deg) for the k-core of the co-purchase graph —
-    library surface over the shared long-encoded edge frame."""
+    library surface over the shared long-encoded edge frame. Raises
+    ``NotConverged`` past KCORE_MAX_ROUNDS peeling rounds."""
     edges = copurchase_edges_cached(spark, sf_dir)
-    # round 0: plain degree
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    alive = deg.filter(F.col("deg") >= k).select("src").localCheckpoint()
-    n_alive = alive.count()
-    # The alive set is one LONG per surviving node — node-count-sized,
-    # exactly the frame PageRank already broadcasts. Broadcasting it
-    # into both semi-joins makes every peeling round map-side against
-    # the stationary edge frame: the only exchange left per round is
-    # the partial-aggregated degree count, where the old plan shuffled
-    # the full edge frame TWICE per round (src then dst key). The gate
-    # is the same node-count discipline as PR_BROADCAST_MAX_NODES;
-    # past it (web-scale graphs) the shuffle semi-joins below are the
-    # Pregel shape the module docstring describes.
-    KCORE_BROADCAST_MAX_NODES = 1_000_000
-    for _ in range(KCORE_MAX_ROUNDS):
-        aside = (
-            F.broadcast(alive) if n_alive <= KCORE_BROADCAST_MAX_NODES else alive
-        )
-        surv = (
-            edges.join(aside, "src", "left_semi")
-            .join(
-                aside.select(F.col("src").alias("dst")), "dst", "left_semi"
-            )
+    # The alive set (one LONG per node) broadcasts into both semi-joins
+    # under the node-count gate, on the size the last round counted: the
+    # only exchange per round is then the partial degree count, where a
+    # shuffle plan moves the edge frame twice (src then dst key).
+    size = {}
+
+    def count(core: DataFrame) -> int:
+        size["n"] = core.count()
+        return size["n"]
+
+    def peel(core: DataFrame) -> DataFrame:
+        alive = _maybe_bcast(core.select("src"), size["n"])
+        return (
+            edges.join(alive, "src", "left_semi")
+            .join(alive.select(F.col("src").alias("dst")), "dst", "left_semi")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
         )
-        nxt = surv.filter(F.col("deg") >= k).select("src").localCheckpoint()
-        n_next = nxt.count()
-        if n_next == n_alive:
-            # fixed point: every surviving node already has deg >= k
-            # within the surviving set
-            return surv.filter(F.col("deg") >= k).select(
-                F.col("src").alias("node"), F.col("deg").alias("core_deg")
-            )
-        alive, n_alive = nxt, n_next
-    raise KCoreNotConverged(
-        f"k-core (k={k}) did not converge in {KCORE_MAX_ROUNDS} rounds; "
-        "raise KCORE_MAX_ROUNDS (and ORACLE unroll) together"
-    )
+
+    # round 0: plain degree; a round that keeps every node is the
+    # fixpoint, each survivor's deg then being its in-core degree
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    core, _ = fixpoint(deg.filter(F.col("deg") >= k), peel, KCORE_MAX_ROUNDS, count)
+    return core.select(F.col("src").alias("node"), F.col("deg").alias("core_deg"))
 
 
 def _oracle() -> str:

@@ -19,12 +19,10 @@ Scale shape (the MLlib/Spark-canonical one): each assignment is a
 broadcast of the K x D centroid relation (model-sized, tiny) against
 one narrow pass over N vectors — no shuffle of the embedding table
 ever; each update is one (cluster, dim) aggregate. The K-row centroid
-relation is materialized between iterations (localCheckpoint) so the
-plan does not grow multiplicatively with iteration count — the same
-reason every iterative-on-Spark algorithm (GraphX Pregel,
-graph_cluster.py here) truncates lineage per round. Unrolled to
-KMEANS_ITERS fixed iterations: convergence-based stopping would make
-the plan (and the oracle) data-dependent.
+relation is the round state of the shared ``fixpoint`` driver, cut
+once per round. Unrolled to KMEANS_ITERS fixed iterations:
+convergence-based stopping would make the plan (and the oracle)
+data-dependent.
 """
 
 from __future__ import annotations
@@ -34,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .fixpoint import fixpoint
 
 KMEANS_K = 8
 KMEANS_ITERS = 2  # (assign, update) rounds before the final assignment
@@ -141,15 +140,12 @@ def kmeans_lloyd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    # one lazy lineage cut: the narrow (vec_id, v) frame feeds every
-    # assignment pass (KMEANS_ITERS + the final one) plus the init —
-    # without it each pass re-scans the parquet and re-runs the
-    # double-cast transform (guide §1.2: pay the scan once per
-    # invocation, not once per iteration)
+    # the narrow (vec_id, v) frame feeds the init and every assignment
+    # pass: cut once, so no pass re-scans the parquet and re-runs the
+    # double cast (guide §1.2: pay the scan once per invocation)
     emb = emb.localCheckpoint(eager=False)
-    cent = _centroid_init(emb).localCheckpoint(eager=False)
-    for _ in range(KMEANS_ITERS):
-        assigned = _assign(emb, cent)
-        cent = _update(assigned).localCheckpoint(eager=False)
+    cent, _ = fixpoint(
+        _centroid_init(emb), lambda cent: _update(_assign(emb, cent)), KMEANS_ITERS
+    )
     final = _assign(emb, cent)
     return final.select("vec_id", F.col("cid").cast("int").alias("cluster"))

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .fixpoint import fixpoint
 
 # Parameters re-chosen in round 7 from a measured recall sweep
 # (SCALE.md "ANN recall ladder"): the original M=4 x Ks=8, 1 Lloyd
@@ -209,12 +210,11 @@ def _pq_index_cached(
             F.transform("embedding", lambda x: x.cast("double")).alias("v"),
         )
         sub = _subvectors(emb)
-        cb = _codebook_init(sub).localCheckpoint(eager=False)
-        for _ in range(PQ_ITERS):
-            cb = _update_codebook(_assign_codes(sub, cb)).localCheckpoint(
-                eager=False
-            )
-        return cb
+        return fixpoint(
+            _codebook_init(sub),
+            lambda cb: _update_codebook(_assign_codes(sub, cb)),
+            PQ_ITERS,
+        )[0]
 
     cb = cached_frame(spark, sf_dir, "pq_codebook", ("embeddings",), build_cb)
 

@@ -13,6 +13,7 @@ from ..functions.text import tokens
 from ..registry import query
 from ..sources import load_table, register_views
 from .aggregates import ols_fit
+from .fixpoint import gradient_fit, gradient_fit_ctes, linear
 
 
 @query(
@@ -679,29 +680,9 @@ def _logreg_train_ctes() -> list[str]:
     """The unrolled training chain (features, n, w0..w{ITERS}) —
     shared by the trainer's oracle and the scoring query's oracle so
     the two replay the IDENTICAL fit."""
-    ctes = [
-        f"f AS ({_LOGREG_FEATS_SQL})",
-        "nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f)",
-        "w0 AS (SELECT CAST(0.0 AS DOUBLE) AS a, CAST(0.0 AS DOUBLE) AS b,"
-        " CAST(0.0 AS DOUBLE) AS c)",
-    ]
-    for i in range(LOGREG_ITERS):
-        p = _logreg_p_sql("w")
-        ctes.append(
-            f"""g{i} AS (
-                SELECT sum(CAST(({p} - y) AS DECIMAL(28,12))) AS s0,
-                       sum(CAST(({p} - y) * x1 AS DECIMAL(28,12))) AS s1,
-                       sum(CAST(({p} - y) * x2 AS DECIMAL(28,12))) AS s2
-                FROM f CROSS JOIN w{i} w)"""
-        )
-        ctes.append(
-            f"""w{i + 1} AS (
-                SELECT round(w.a - {LOGREG_LR} * CAST(g.s0 AS DOUBLE) / nn.n, 12) AS a,
-                       round(w.b - {LOGREG_LR} * CAST(g.s1 AS DOUBLE) / nn.n, 12) AS b,
-                       round(w.c - {LOGREG_LR} * CAST(g.s2 AS DOUBLE) / nn.n, 12) AS c
-                FROM w{i} w CROSS JOIN g{i} g CROSS JOIN nn)"""
-        )
-    return ctes
+    return gradient_fit_ctes(
+        _LOGREG_FEATS_SQL, f"({_logreg_p_sql('w')} - y)", LOGREG_LR, LOGREG_ITERS
+    )
 
 
 def _logreg_oracle() -> str:
@@ -741,38 +722,19 @@ def _logreg_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _logreg_p(w: list[float]):
     """round-9 sigmoid under literal weights — the Spark twin of
     ``_logreg_p_sql``, identical expression tree on both consumers."""
-    z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-    return F.round(1.0 / (1.0 + F.exp(-z)), 9)
+    return F.round(1.0 / (1.0 + F.exp(-linear(w))), 9)
 
 
 def _logreg_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[float], int]:
-    """Run the full-batch GD fit; returns (features frame, final
-    weights, n). The model state crossing the driver per iteration is
-    3 doubles (bounded-driver-data discipline)."""
-    feats = _logreg_feats(spark, sf_dir)
-    # one lazy lineage cut: the narrow 4-column feature frame is
-    # aggregated LOGREG_ITERS + 1 times (each GD step + the accuracy
-    # pass) — without it every iteration re-scans the documents
-    # parquet and recomputes the feature expressions (guide §1.2);
-    # the n count below doubles as the materializing action
-    feats = feats.localCheckpoint(eager=False)
-    n = feats.count()
-    w = [0.0, 0.0, 0.0]
-    dec = "decimal(28,12)"
-    for _ in range(LOGREG_ITERS):
-        p = _logreg_p(w)
-        row = feats.agg(
-            F.sum((p - F.col("y")).cast(dec)).alias("s0"),
-            F.sum(((p - F.col("y")) * F.col("x1")).cast(dec)).alias("s1"),
-            F.sum(((p - F.col("y")) * F.col("x2")).cast(dec)).alias("s2"),
-        ).collect()[0]
-        w = [
-            round(w[j] - LOGREG_LR * float(row[f"s{j}"]) / n, 12)
-            for j in range(3)
-        ]
-    return feats, w, n
+    """(cut features, final weights, n) of the logistic fit."""
+    return gradient_fit(
+        _logreg_feats(spark, sf_dir),
+        lambda w: _logreg_p(w) - F.col("y"),
+        LOGREG_LR,
+        LOGREG_ITERS,
+    )
 
 
 @query("ml_logreg_gradient_descent", oracle=_logreg_oracle())
@@ -780,13 +742,12 @@ def ml_logreg_gradient_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary logistic regression trained by full-batch gradient
     descent as pure DataFrame aggregates — the iterative-ML twin of
     ``ml_linear_fit_closed_form`` for models with NO closed form.
-    Each of LOGREG_ITERS iterations is ONE aggregate pass: per-row
-    sigmoid under the current weights (narrow JVM expressions), the
-    three gradient components summed in EXACT DECIMAL
-    (order-independent — double accumulation would diverge between
-    engines and runs), and a driver-side scalar update of the three
-    weights (the same bounded-driver-data discipline as PageRank's
-    node count). Features: doc length and words-per-char; label:
+    Each of LOGREG_ITERS iterations is one pass of the shared
+    ``gradient_fit`` step loop: per-row sigmoid under the current
+    weights, the three gradient components summed in EXACT DECIMAL
+    (double accumulation would diverge between engines and runs), and
+    a driver-side update of the three weights. Features: doc length
+    and words-per-char; label:
     lang = 'en'; output = final weights + train accuracy.
 
     Cross-engine determinism: the sigmoid is round-9-ed before the

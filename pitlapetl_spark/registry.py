@@ -85,6 +85,11 @@ _MODULES = (
 )
 
 _loaded = False
+# the _MODULES entry each query registered under: the one load_all was
+# importing (dedup imports similarity while it loads), else its own
+# module. Contract order follows it, whatever a driver imported first.
+_ROOTS: dict[str, str] = {}
+_loading: str | None = None
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -94,30 +99,48 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = fn
+        _ROOTS[name] = _loading or fn.__module__
         if oracle is not None:
             ORACLES[name] = oracle
+        if _loaded:
+            _contract_order()
         return fn
 
     return deco
 
 
 def load_all() -> None:
-    """Import every operator module (idempotent), populating the registry."""
-    global _loaded
-    if _loaded:
+    """Import every operator module (idempotent), populating the
+    registry, and put it in contract order: by the position of each
+    query's module in ``_MODULES``, then by registration order."""
+    global _loaded, _loading
+    if _loaded or _loading:
         return
-    for mod in _MODULES:
-        import_module(mod)
+    try:
+        for mod in _MODULES:
+            _loading = mod
+            import_module(mod)
+    finally:
+        _loading = None
+    _contract_order()
     _loaded = True
 
 
+def _contract_order() -> None:
+    rank = {m: i for i, m in enumerate(_MODULES)}
+    for reg in (QUERIES, ORACLES):
+        entries = sorted(reg.items(), key=lambda kv: rank.get(_ROOTS.get(kv[0]), len(rank)))
+        reg.clear()
+        reg.update(entries)
+
+
 def all_queries() -> dict[str, QueryFn]:
-    """A copy of the registry, in registration order."""
+    """A copy of the registry, in contract order."""
     load_all()
     return dict(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
-    """A copy of the oracle map, in registration order."""
+    """A copy of the oracle map, in contract order."""
     load_all()
     return dict(ORACLES)

@@ -2,25 +2,26 @@
 
 For every registered query with an oracle, run the Spark plan and the
 DuckDB SQL on the same parquet tables and compare: row count, column
-names, and an order-insensitive canonical value comparison. Used by
-tests/test_oracle_parity.py so oracle drift is caught locally before
-the driver's per-round verify.
+names, and the rows under the contract's one canonicalization
+(``tools/contract_canon.canon_rows``: floats rounded to 9 dp, no
+tolerance beyond that), the rule the driver and the benchmark's gate
+apply. Used by tests/test_oracle_parity.py so oracle drift is caught
+locally before the driver's verify.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Any
+import sys
+from pathlib import Path
 
 import duckdb
-import pandas as pd
 
 from pitlapetl_spark.sources import TABLES
 
-# exact comparison is the goal; this tolerance only forgives the last
-# ulp of double accumulation differences that rounding already bounds
-REL_TOL = 1e-9
-ABS_TOL = 1e-9
+_TOOLS = str(Path(__file__).resolve().parent.parent / "tools")
+if _TOOLS not in sys.path:
+    sys.path.insert(0, _TOOLS)
+from contract_canon import canon_rows  # noqa: E402
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -30,38 +31,6 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con
-
-
-def _canon_cell(v: Any) -> Any:
-    if v is None or (isinstance(v, float) and math.isnan(v)):
-        return None
-    if isinstance(v, float):
-        return round(v, 9)
-    if isinstance(v, pd.Timestamp):
-        return v.tz_localize(None) if v.tzinfo else v
-    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-        return tuple(_canon_cell(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _canon_cell(x)) for k, x in v.items()))
-    if hasattr(v, "asDict"):  # pyspark Row
-        return tuple(sorted((k, _canon_cell(x)) for k, x in v.asDict().items()))
-    if isinstance(v, (pd.Timedelta,)):
-        return v.total_seconds()
-    if type(v).__name__ in ("int64", "int32", "int16", "int8", "uint64"):
-        return int(v)
-    if type(v).__name__ in ("float64", "float32"):
-        return round(float(v), 9)
-    if type(v).__name__ == "bool_":
-        return bool(v)
-    return v
-
-
-def canonical_rows(df: pd.DataFrame) -> list[tuple]:
-    cols = sorted(df.columns)
-    rows = [
-        tuple(_canon_cell(df.iloc[i][c]) for c in cols) for i in range(len(df))
-    ]
-    return sorted(rows, key=repr)
 
 
 def compare_query(name: str, spark, sf_dir: str, query_fn, oracle: str) -> list[str]:
@@ -81,28 +50,13 @@ def compare_query(name: str, spark, sf_dir: str, query_fn, oracle: str) -> list[
         problems.append(f"{name}: rowcount spark={len(sdf)} oracle={len(odf)}")
         return problems
 
-    srows, orows = canonical_rows(sdf), canonical_rows(odf)
-    n_bad = 0
-    for i, (a, b) in enumerate(zip(srows, orows)):
-        if a == b:
-            continue
-        if not _row_close(a, b):
-            n_bad += 1
-            if n_bad <= 3:
-                problems.append(f"{name}: row {i} spark={a!r} oracle={b!r}")
-    if n_bad > 3:
-        problems.append(f"{name}: ... {n_bad} mismatched rows total")
+    bad = [
+        (i, a, b)
+        for i, (a, b) in enumerate(zip(canon_rows(sdf), canon_rows(odf)))
+        if a != b
+    ]
+    for i, a, b in bad[:3]:
+        problems.append(f"{name}: row {i} spark={a} oracle={b}")
+    if len(bad) > 3:
+        problems.append(f"{name}: ... {len(bad)} mismatched rows total")
     return problems
-
-
-def _row_close(a: tuple, b: tuple) -> bool:
-    if len(a) != len(b):
-        return False
-    for x, y in zip(a, b):
-        if x == y:
-            continue
-        if isinstance(x, float) and isinstance(y, float):
-            if math.isclose(x, y, rel_tol=REL_TOL, abs_tol=ABS_TOL):
-                continue
-        return False
-    return True

@@ -184,7 +184,8 @@ def test_winnowing_fast_matches_md5_pair_set(spark, sf_dir):
 # tail and moment sums, HLL registers, split counts and Gini, urgent
 # order values, daily value series, co-purchase oracle CTEs, points,
 # baskets, SQL in-lists), the three batch queries on the shared
-# band-candidate join (``band_join``), plus dedup_winnowing_fast. An
+# band-candidate join (``band_join``), the iterative operators on the
+# shared fixpoint driver, plus dedup_winnowing_fast. An
 # xxhash64-hashed winnowing variant returned 458 rows on seed 1 against
 # the oracle's 451: which k-gram a window elects depends on the hash,
 # and the DF cap and shared-fingerprint floor turn that into different
@@ -227,6 +228,20 @@ GENERATED_PARITY_QUERIES = (
     "dedup_minhash_lsh",
     "dedup_incremental_minhash",
     "mm_phash_hamming_near_dup",
+    # the iterative operators on the shared fixpoint driver
+    "graph_pagerank_copurchase",
+    "graph_pagerank_personalized",
+    "graph_hits_authorities",
+    "graph_kcore_decomposition",
+    "dedup_cluster_components",
+    "kmeans_lloyd_clusters",
+    "sim_topk_pq_adc",
+    "graph_label_propagation",
+    "geo_dbscan_grid",
+    "text_bpe_train_merges",
+    "text_bpe_encode",
+    "ml_quantile_regression_gd",
+    "ml_logreg_gradient_descent",
 )
 
 

@@ -480,19 +480,12 @@ def test_featurizer_two_doc_shuffles_no_pivot(spark):
 
 
 def test_pagerank_unroll_is_bounded_by_checkpoint_cadence(spark):
-    """PageRank cuts lineage every PR_CHECKPOINT_EVERY rounds, so the
-    final plan's join chain is bounded by the cadence (2 joins per
-    uncut round + the prep join), never by the total iteration
-    count."""
-    from pitlapetl_spark.operators.pagerank import (
-        PR_CHECKPOINT_EVERY,
-        PR_ITERS,
-    )
-
+    """PageRank cuts lineage every round (the shared fixpoint driver),
+    so the final plan's join chain is one round's (2 joins + the prep
+    join), never the total iteration count's."""
     plan = _plan(Q["graph_pagerank_copurchase"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
-    uncut = PR_ITERS % PR_CHECKPOINT_EVERY or PR_CHECKPOINT_EVERY
-    assert plan.count("Join") <= 2 * uncut + 1, plan.count("Join")
+    assert plan.count("Join") <= 3, plan.count("Join")
 
 
 def test_q2_argmin_broadcasts_min_no_cartesian(spark):

@@ -142,3 +142,26 @@ def test_contract_digest_is_pinned():
         capture_output=True, text=True, check=True,
     ).stdout
     assert out.splitlines() == PINNED_CONTRACT
+
+
+def test_contract_order_is_independent_of_import_order():
+    """A driver that imports an operator module before the contract
+    gets the pinned contract. dedup imports similarity while it
+    registers, so importing similarity first used to move its queries
+    ahead of dedup's and change both digests."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    code = (
+        "import sys; sys.path[:0] = sys.argv[1:]; "
+        "import pitlapetl_spark.operators.similarity; "
+        "from contract_digest import contract_digest; "
+        "print(chr(10).join(contract_digest()))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(repo / "tools"), str(repo)],
+        capture_output=True, text=True, check=True,
+    ).stdout
+    assert out.splitlines() == PINNED_CONTRACT
