@@ -21,10 +21,12 @@ Spark-first restatement over parquet:
   where neither rename has happened is recoverable from the ``__old``
   directory), deliberately improving on the reference's
   delete-then-insert failure mode (SURVEY.md §2.2 K3 note).
-- ``merge_upsert`` -> row-level MERGE emulation (anti-join + union)
-  for keys that don't align with a partition boundary; the staged
-  ``merge_upsert_write`` form is the ``foreachBatch`` body for
-  streaming upserts (§2.12).
+- ``merge_upsert`` -> row-level MERGE emulation for keys that don't
+  align with a partition boundary: one pass over the union of the
+  table and the updates, one window per key, and a duplicate update
+  key fails the write itself. It is the one plan behind
+  ``merge_upsert_write`` (the ``foreachBatch`` body for streaming
+  upserts, §2.12) and ``merge_upsert_partition_scoped``.
 
 At 100 TB the honest answer for row-level MERGE is an OSS table format
 (Delta/Iceberg): real MERGE INTO, snapshot isolation, concurrent-writer
@@ -42,13 +44,16 @@ fast (``StaleDebrisError``) instead of compounding it.
 from __future__ import annotations
 
 import contextlib
+import functools
 import glob as _glob
+import operator
 import os
+import re
 import shutil
 import time as _time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -306,26 +311,58 @@ def overwrite(df: DataFrame, path: str) -> None:
     staged_swap(df, path)
 
 
+# a duplicate update key fails the MERGE plan with this message, key
+# as JSON between the two parts; the sinks re-raise it as ValueError
+_DUP_KEY = "MERGE updates contain duplicate key "
+_DUP_END = " (aggregate the batch to one row per key before merging)"
+_DUP_RE = re.compile(f"{re.escape(_DUP_KEY)}.*?{re.escape(_DUP_END)}")
+
+
 def merge_upsert(
     existing: DataFrame | None, updates: DataFrame, key_cols: list[str]
 ) -> DataFrame:
     """Row-level MERGE: rows of ``existing`` whose key appears in
     ``updates`` are replaced; new keys are inserted. Returns the merged
-    DataFrame (caller writes it). Implemented as left-anti join +
-    union — the standard MERGE emulation without a Delta/Iceberg table
-    format (module docstring).
+    DataFrame (caller writes it) — the one MERGE plan of every sink.
 
-    ``updates`` must carry ONE row per key (the Delta MERGE rule:
-    a source matching the same target row twice is an error, not an
-    arbitrary pick) — enforced in ``merge_upsert_write``/the sinks
-    that persist, where the one extra small aggregate per batch is
-    cheap; this lazy builder leaves the plan unmodified."""
-    if existing is None:
-        return updates
-    kept = existing.join(
-        updates.select(*key_cols).distinct(), on=key_cols, how="left_anti"
+    One pass: the ``existing`` rows (tagged 0) and the ``updates`` rows
+    (tagged 1) are unioned, and one window over ``key_cols`` counts the
+    update rows per key. Every update row is kept; an existing row is
+    kept when no update carries its key, or when any of its key columns
+    is null (a null key never matches, as in an equi-join). So
+    ``updates`` and its inputs are scanned once.
+
+    ``updates`` must carry ONE row per non-null key (the Delta MERGE
+    rule: a source matching the same target row twice is an error, not
+    an arbitrary pick). A key with more than one update row fails the
+    job that evaluates the plan through ``raise_error``; the persisting
+    sinks turn that failure into a ``ValueError`` naming the key, after
+    their staged write has been removed."""
+    src, n = F.col("__merge_src"), F.col("__merge_n")
+    tagged = updates.withColumn("__merge_src", F.lit(1))
+    if existing is not None:
+        tagged = existing.withColumn("__merge_src", F.lit(0)).unionByName(tagged)
+    null_key = functools.reduce(operator.or_, [F.col(k).isNull() for k in key_cols])
+    dup = F.concat(F.lit(_DUP_KEY), F.to_json(F.struct(*key_cols)), F.lit(_DUP_END))
+    keep = F.when((n > 1) & ~null_key, F.raise_error(dup)).otherwise(
+        (src == 1) | (n == 0) | null_key
     )
-    return kept.unionByName(updates)
+    tagged = tagged.withColumn("__merge_n", F.sum(src).over(Window.partitionBy(*key_cols)))
+    return tagged.filter(keep).drop("__merge_src", "__merge_n")
+
+
+@contextlib.contextmanager
+def _duplicate_keys_as_value_error():
+    """Re-raise the executor-side duplicate-key failure of a
+    ``merge_upsert`` plan as a ``ValueError`` carrying its message;
+    any other failure passes through unchanged."""
+    try:
+        yield
+    except Exception as exc:
+        found = _DUP_RE.search(str(exc))
+        if found is None:
+            raise
+        raise ValueError(found.group(0)) from None
 
 
 def merge_upsert_write(updates: DataFrame, path: str, key_cols: list[str]) -> None:
@@ -333,30 +370,13 @@ def merge_upsert_write(updates: DataFrame, path: str, key_cols: list[str]) -> No
     result through ``rewrite_table`` (the merged plan lazily reads
     ``path``, so the write must go to a staging dir — overwriting in
     place would read the table being deleted; the lease covers the
-    read). Rejects duplicate keys in ``updates`` up front: the
-    anti-join+union emulation would insert ALL copies, silently
-    breaking the one-row-per-key invariant the table's consumers rely
-    on."""
-    spark = updates.sparkSession
-    dup = (
-        updates.groupBy(*key_cols)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"merge_upsert_write: updates contain duplicate key(s), "
-            f"e.g. {tuple(dup[0][k] for k in key_cols)} — aggregate the "
-            f"batch to one row per key before merging"
-        )
-    rewrite_table(
-        spark,
-        path,
-        lambda existing: merge_upsert(existing, updates, key_cols),
-        schema=updates.schema,
-    )
+    read). Duplicate keys in ``updates`` fail the staged write itself
+    (``merge_upsert``), which leaves the table as it was and raises
+    ``ValueError``: inserting every copy would silently break the
+    one-row-per-key invariant the table's consumers rely on."""
+    with _duplicate_keys_as_value_error():
+        merged = functools.partial(merge_upsert, updates=updates, key_cols=key_cols)
+        rewrite_table(updates.sparkSession, path, merged, schema=updates.schema)
 
 
 def merge_upsert_partition_scoped(
@@ -370,29 +390,30 @@ def merge_upsert_partition_scoped(
     but O(table) I/O per call. Here the merge cost is O(touched
     partitions): the distinct ``part_col`` values of ``updates`` are
     collected driver-side (bounded by partitions-touched-per-batch, the
-    same listing bound a Delta commit carries), the anti-join reads the
-    table pruned to exactly those directory partitions, and the merged
+    same listing bound a Delta commit carries), the one-pass merge reads
+    the table pruned to exactly those directory partitions, and the merged
     result is staged then swapped in per-partition by rename. Old
     partition data is moved OUTSIDE the table root during the swap so a
     concurrent reader never sees a phantom ``<v>__old`` partition
     value. Constraints (standard hive-partition MERGE): ``part_col``
     values must be non-null filesystem-safe scalars, and a row's
-    partition value must be immutable (a key changing partitions is an
-    insert in the new one, not a delete from the old — same as every
-    partition-scoped MERGE emulation). Single-writer, like every sink
-    here. Returns the list of partition values rewritten."""
+    partition value must be immutable: rows match on ``part_col`` and
+    ``key_cols`` together, so a key changing partitions is an insert in
+    the new one, never a delete from the old — same as every
+    partition-scoped MERGE emulation — and one key in two partitions is
+    two rows, not a duplicate. Single-writer, like every sink here.
+    Returns the list of partition values rewritten."""
 
     def build(scoped: DataFrame | None) -> DataFrame:
         if scoped is not None:
             # hive partition-type inference may read the partition
             # column back as a different type: realign to the updates
-            scoped = scoped.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in updates.schema.fields]
-            )
-        return merge_upsert(scoped, updates, key_cols)
+            scoped = scoped.select(*[F.col(f.name).cast(f.dataType) for f in updates.schema])
+        return merge_upsert(scoped, updates, list(dict.fromkeys([part_col, *key_cols])))
 
     vals = _partition_values(updates, part_col)
-    return _rewrite_partitions(updates.sparkSession, path, part_col, vals, build)
+    with _duplicate_keys_as_value_error():
+        return _rewrite_partitions(updates.sparkSession, path, part_col, vals, build)
 
 
 def _rewrite_partitions(
@@ -626,15 +647,15 @@ def read_or_none(spark: SparkSession, path: str, schema=None) -> DataFrame | Non
     transient read error were swallowed into None (the pre-fix
     behavior), one corrupt footer or Py4J hiccup would silently
     replace a whole table with the current batch, deleting every key
-    not in it."""
+    not in it. A file that fails to read later fails the staged write
+    consuming the frame, which leaves the table as it was, so no probe
+    job runs here."""
     if not os.path.exists(path):
         return None
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    df = reader.parquet(path)
-    df.head(1)  # surface read errors HERE, not mid-merge
-    return df
+    return reader.parquet(path)
 
 
 def write_sized_files(

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sinks import merge_upsert_write
+from ..sinks import merge_upsert_partition_scoped, merge_upsert_write
 from ..sources import (
     DOCUMENTS,
     EMBEDDINGS,
@@ -373,9 +373,10 @@ def run_upsert_sink(
     checkpoint: str,
 ) -> StreamingQuery:
     """K1 keyed upsert as a streaming sink: every micro-batch MERGEs
-    into the target table (anti-join existing on ``key_cols`` + union,
-    staged-swap write) — idempotent on replay, which together with the
-    checkpoint gives end-to-end exactly-once table state.
+    into the target table (``sinks.merge_upsert``'s one-pass plan on
+    ``key_cols``, staged-swap write) — idempotent on replay, which
+    together with the checkpoint gives end-to-end exactly-once table
+    state.
 
     MERGE, not dynamic partition overwrite: in ``update`` output mode a
     micro-batch carries only the (window, key) rows that CHANGED, so
@@ -388,19 +389,16 @@ def run_upsert_sink(
     output grain (e.g. ``["window_start", "event_type"]``) for
     replaced rows to line up one-to-one."""
 
-    return _merge_stream(
-        df, checkpoint, lambda b: merge_upsert_write(b, path, key_cols)
-    )
+    return _merge_stream(df, checkpoint, lambda b: merge_upsert_write(b, path, key_cols))
 
 
 def _merge_stream(df: DataFrame, checkpoint: str, merge_batch) -> StreamingQuery:
     """Shared update-mode foreachBatch skeleton for the MERGE sinks.
-    The micro-batch is PERSISTED across the multiple actions a merge
-    takes (emptiness probe, the scoped sink's driver-side partition
-    listing, the anti-join + write): without it the upstream stateful
-    aggregation recomputes per action — 3x batch latency on exactly
-    the heavy streams these sinks exist for (the multi-action
-    foreachBatch pattern Spark's own docs prescribe)."""
+    The micro-batch is PERSISTED across the actions a merge takes
+    (emptiness probe, the scoped sink's driver-side partition listing,
+    the one-pass merge write that also checks for duplicate keys):
+    without it the upstream stateful aggregation recomputes per action
+    (the multi-action foreachBatch pattern Spark's own docs prescribe)."""
 
     guarded = batch_body(lambda b, _batch_id: merge_batch(b))
 
@@ -436,12 +434,8 @@ def run_upsert_sink_scoped(
     re-merging an already-absorbed batch rewrites its partitions to
     the same bytes-equivalent state, so checkpoint + replay keeps
     exactly-once table semantics."""
-    from ..sinks import merge_upsert_partition_scoped
-
     return _merge_stream(
-        df,
-        checkpoint,
-        lambda b: merge_upsert_partition_scoped(b, path, key_cols, part_col),
+        df, checkpoint, lambda b: merge_upsert_partition_scoped(b, path, key_cols, part_col)
     )
 
 

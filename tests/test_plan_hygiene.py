@@ -1053,3 +1053,33 @@ def test_url_gate_single_exchange_no_join(spark):
     )
     assert n_exchanges == 1, f"expected the single window exchange, got {n_exchanges}:\n{plan}"
     assert "Window" in plan
+
+
+def test_merge_upsert_scans_updates_once(spark):
+    """The keyed MERGE is one pass: for file-backed ``updates`` its
+    plan scans the updates' source exactly once (one union under one
+    window), so a sink's job query is computed once per write."""
+    import shutil
+    import tempfile
+
+    from pitlapetl_spark.sinks import merge_upsert
+
+    tmp = tempfile.mkdtemp(prefix="pitlap_merge_")
+    try:
+        spark.createDataFrame([(1, 10.0), (2, 20.0)], "k int, v double").write.parquet(
+            f"{tmp}/existing"
+        )
+        spark.createDataFrame([(2, 99.0), (3, 30.0)], "k int, v double").write.parquet(
+            f"{tmp}/updates"
+        )
+        plan = _plan(
+            merge_upsert(
+                spark.read.parquet(f"{tmp}/existing"),
+                spark.read.parquet(f"{tmp}/updates"),
+                ["k"],
+            )
+        )
+        scans = [ln for ln in plan.splitlines() if "FileScan" in ln and f"{tmp}/updates" in ln]
+        assert len(scans) == 1, plan
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -41,6 +41,55 @@ def test_merge_upsert_equals_dict_union(existing, updates):
     assert got == want
 
 
+null_key_rows = st.lists(
+    st.tuples(st.one_of(st.none(), st.integers(0, 8)), st.integers(-100, 100)),
+    max_size=8,
+)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(existing=rows, existing_nulls=st.lists(st.integers(-100, 100), max_size=3),
+       updates=null_key_rows)
+def test_merge_upsert_write_null_keys_and_duplicates(existing, existing_nulls, updates):
+    """The persisted MERGE with null keys, driven through
+    ``merge_upsert_write``: on non-null keys the table becomes
+    ``{**existing, **updates}``, every null-key row of either side is
+    kept (a null key never matches), and a non-null key carried by
+    two update rows raises and leaves the table as it was."""
+    import os
+    import tempfile
+
+    from pitlapetl_spark.sinks import merge_upsert_write
+
+    spark = _get_spark()
+    schema = "k INT, v INT"
+    path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
+    table = list(existing.items()) + [(None, v) for v in existing_nulls]
+    if table:  # an empty side leaves the table missing: the bootstrap path
+        spark.createDataFrame(table, schema=schema).write.parquet(path)
+
+    def snapshot():
+        if not os.path.exists(path):
+            return None
+        return sorted((tuple(r) for r in spark.read.schema(schema).parquet(path).collect()), key=repr)
+
+    before = snapshot()
+    update_keys = [k for k, _ in updates if k is not None]
+    udf_ = spark.createDataFrame(updates or [], schema=schema)
+    if len(update_keys) != len(set(update_keys)):
+        with pytest.raises(ValueError, match="duplicate key"):
+            merge_upsert_write(udf_, path, ["k"])
+        assert snapshot() == before
+        return
+    merge_upsert_write(udf_, path, ["k"])
+    nulls = [(None, v) for v in existing_nulls] + [r for r in updates if r[0] is None]
+    want = sorted(
+        list({**existing, **{k: v for k, v in updates if k is not None}}.items()) + nulls,
+        key=repr,
+    )
+    assert snapshot() == want
+
+
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(
     secs=st.lists(

@@ -227,6 +227,81 @@ def test_merge_upsert_write_rejects_duplicate_update_keys(spark):
         merge_upsert_write(dup, path, ["k"])
 
 
+def _file_bytes(path):
+    """Every file under ``path`` by relative name, with its bytes."""
+    import os
+
+    out = {}
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def test_merge_upsert_write_duplicate_keys_leave_existing_table(spark):
+    """Against an existing table the duplicate-key check runs inside
+    the staged write: the call raises, the table's files stay
+    byte-identical, and no stage directory is left behind."""
+    import glob
+
+    from pitlapetl_spark.sinks import merge_upsert_write
+
+    path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
+    spark.createDataFrame([(1, 10.0), (3, 30.0)], "k int, v double").write.parquet(path)
+    before = _file_bytes(path)
+    dup = spark.createDataFrame([(2, 1.0), (3, 2.0), (3, 3.0)], "k int, v double")
+    with pytest.raises(ValueError, match=r"duplicate key.*3"):
+        merge_upsert_write(dup, path, ["k"])
+    assert _file_bytes(path) == before
+    assert not glob.glob(f"{path}__stage_*")
+
+
+def test_merge_upsert_write_unreadable_table_fails_inside_stage(spark):
+    """A table file that cannot be read fails the staged MERGE write
+    itself (no read probe runs first): the call raises, the table's
+    files stay byte-identical, and no stage directory is left."""
+    import glob
+
+    from pitlapetl_spark.sinks import merge_upsert_write
+
+    path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
+    spark.createDataFrame([(1, 10.0)], "k int, v double").coalesce(1).write.parquet(path)
+    (part,) = glob.glob(f"{path}/part-*.parquet")
+    with open(part, "wb") as fh:
+        fh.write(b"not a parquet file")
+    before = _file_bytes(path)
+    with pytest.raises(Exception):
+        merge_upsert_write(
+            spark.createDataFrame([(2, 20.0)], "k int, v double"), path, ["k"]
+        )
+    assert _file_bytes(path) == before
+    assert not glob.glob(f"{path}__stage_*")
+
+
+def test_merge_partition_scoped_rejects_duplicate_update_keys(spark):
+    """The partition-scoped MERGE (and the scoped streaming sink on
+    it) refuses duplicate update keys like the whole-table one: it
+    used to insert every copy. The touched partition stays
+    byte-identical and the stage is removed."""
+    import glob
+
+    from pitlapetl_spark.sinks import merge_upsert_partition_scoped
+
+    path = tempfile.mkdtemp(prefix="pitlap_t_") + "/t"
+    base = spark.createDataFrame([("d1", 1, 1.0)], "day string, k int, v double")
+    merge_upsert_partition_scoped(base, path, ["k"], "day")
+    before = _file_bytes(path)
+    dup = spark.createDataFrame(
+        [("d1", 2, 1.0), ("d1", 2, 2.0)], "day string, k int, v double"
+    )
+    with pytest.raises(ValueError, match="duplicate key"):
+        merge_upsert_partition_scoped(dup, path, ["k"], "day")
+    assert _file_bytes(path) == before
+    assert not glob.glob(f"{path}__merge*")
+
+
 def test_merge_partition_scoped_midswap_failure_recovers(spark, monkeypatch):
     """A crash mid-swap (old partition already displaced into trash,
     later rename fails) must roll the table back to its pre-merge
